@@ -4,7 +4,8 @@ package graft
 /** Benchmark main — runs every SparkEntry query against
   * `SPARK_GRAFT_SF_DIR` and prints one JSON line:
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},
-  *   "cold_sec":N,"sf":...}`.
+  *   "cold_sec":N,"sf":...}`, then, last, the same totals without the
+  * per-query map (`"queries_n":N` instead). Numbers use `Locale.ROOT`.
   *
   * Queries are forced with a noop-format write so the full plan executes
   * (count() would let Catalyst prune every column and skip work a real
@@ -148,12 +149,15 @@ object Bench {
       dropBlocks()
       r
     }
-    val qs = results.map { case (k, (v, _)) => "\"" + k + f"\":$v%.3f" }
+    // JSON numbers under Locale.ROOT: f"%.3f" follows the JVM locale, which
+    // writes a decimal comma under e.g. de_DE and breaks every parser
+    def num(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+    val qs = results.map { case (k, (v, _)) => "\"" + k + "\":" + num(v) }
       .mkString("{", ",", "}")
     val total = results.map(_._2._1).sum
     val coldTotal = results.map(_._2._2).sum
     val errs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val line = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"cold_sec":$coldTotal%.3f,"errors":$errs,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":${num(total)},"unit":"sec","queries":$qs,"cold_sec":${num(coldTotal)},"errors":$errs,"sf":"$sfDir"}"""
     println(line)
     // persist the per-query record (driver BENCH files truncate the tail)
     // so the next round's >3x prior guard sees every row for this sf.
@@ -165,7 +169,7 @@ object Bench {
         case (k, (v, _)) if !failed.contains(k) => k -> v }
       val old = if (fullFile.exists()) parseBench(fullFile) else Map.empty[String, Double]
       val merged = (old ++ good).toSeq.sortBy(_._1)
-        .map { case (k, v) => "\"" + k + f"\":$v%.3f" }
+        .map { case (k, v) => "\"" + k + "\":" + num(v) }
         .mkString("""{"queries":{""", ",", s"""},"sf":"$sfDir"}""")
       val w = new java.io.PrintWriter(fullFile); try w.println(merged) finally w.close()
     } catch { case e: Throwable => System.err.println(s"[bench] could not write ${fullFile.getName}: ${e.getMessage}") }
@@ -186,11 +190,12 @@ object Bench {
     // the artifact writes above: a write-failure stack trace or sbt footer
     // must never displace it from a log tail (13 rounds of the driver's
     // BENCH capture recorded `parsed: null` because the only copy sat
-    // ~4 KB above the tail window). The compact line first — a complete,
-    // parseable JSON object with the totals even when a short tail window
-    // cuts the head off the full per-query line that follows it.
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","cold_sec":$coldTotal%.3f,"errors":$errs,"sf":"$sfDir","queries_n":${results.size}}""")
+    // ~4 KB above the tail window). The full per-query line first, then
+    // the compact line LAST: a reader that parses the final line gets a
+    // complete JSON object with the totals even when a short tail window
+    // cuts the head off the ~4 KB per-query line above it.
     println(line)
+    println(s"""{"metric":"total","value":${num(total)},"unit":"sec","cold_sec":${num(coldTotal)},"errors":$errs,"sf":"$sfDir","queries_n":${results.size}}""")
     spark.stop()
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.internal.StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES
 
 /** Session bootstrap: SQL function registration + scale-oriented defaults.
   * Call [[Graft.init]] on any session before using graft SQL functions;
@@ -38,6 +39,7 @@ object Graft {
         spark.experimental.extraStrategies =
           spark.experimental.extraStrategies :+ graft.plans.GraftStrategies
     }
+    warnIfSmallCodegenCache(spark)
     spark
   }
 
@@ -58,53 +60,53 @@ object Graft {
   def registerCaggRewrite(cagg: graft.streaming.ContinuousAggregate): Unit =
     graft.plans.CaggRewrite.register(cagg)
 
-  /** Shared session builder for the measurement tools (Bench, Profile,
-    * PlanDump): one config block — including the env-overridable scan-split
-    * and AQE knobs — so profiles and plan dumps are captured under exactly
-    * the session configuration the bench measures (a profile taken with
-    * SPARK_GRAFT_AQE_* set must not silently run different AQE settings
-    * than the bench it is evidence for).
+  /** Entries graft asks Spark's generated-code cache to hold
+    * (`spark.sql.codegen.cache.maxEntries`, Spark's default 100). The cache
+    * is keyed by (class loader, code body), so in local mode each body
+    * takes two entries, one for the driver and one for the executor's
+    * class loader. A dashboard page of five panel queries has a working
+    * set of 82 bodies (164 keys), and an LLM-data curation pass recompiled
+    * about 100 bodies per pass at Spark's default: every repeated query
+    * recompiled its whole-stage code (README "Session defaults").
     */
-  def toolSession(cpus: String): SparkSession =
-    init(SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
+  val CodegenCacheEntries: Int = 1000
+
+  private val codegenCacheWarned = new java.util.concurrent.atomic.AtomicBoolean(false)
+
+  /** The cap is static and JVM-wide: the session active when the JVM first
+    * compiles generated code fixes it. A session built elsewhere with a
+    * smaller cap is warned about once, since it slows every repeated query.
+    */
+  private def warnIfSmallCodegenCache(spark: SparkSession): Unit = {
+    val cap = spark.sessionState.conf.getConf(CODEGEN_CACHE_MAX_ENTRIES)
+    if (cap < CodegenCacheEntries && codegenCacheWarned.compareAndSet(false, true))
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        s"${CODEGEN_CACHE_MAX_ENTRIES.key}=$cap is below graft's default of $CodegenCacheEntries: " +
+          "repeated queries whose generated code does not fit recompile it on " +
+          "every run. The setting is static; set it before the JVM's first " +
+          "SparkSession starts (builder config, -D or spark-defaults).")
+  }
+
+  /** The configuration every graft session starts from; [[session]] and
+    * [[toolSession]] add only the master, app name and shuffle partitions.
+    */
+  private def defaults(b: SparkSession.Builder,
+      shufflePartitions: String): SparkSession.Builder = {
+    val b1 = b.withExtensions(new GraftExtensions)
       // NOT set: fs.file.impl=RawLocalFileSystem (checksum-free local FS).
       // Measured r14 A/B on the machinery subset (q62/q72/q73/q75/q76/
       // q100): 11.53 s (LocalFileSystem) vs 11.67 s (RawLocal) — the .crc
       // sidecar savings are repaid by RawLocal's fork-per-getFileStatus
       // permission loading; the r13 nio fast path already removed the
       // checksum cost where it mattered (graft's own metadata files).
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "8m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE coalescing knobs, env-overridable for A/B and deployments —
-      // kept at Spark defaults locally (see Bench for the measured A/B)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_ADVISORY", "64m"))
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
-
-  /** Local session with the defaults every graft entry point uses. */
-  def session(appName: String = "graft", master: String = "local[*]",
-      shufflePartitions: Int = 32): SparkSession = {
-    init(SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .appName(appName)
-      .master(master)
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      // Scan split sizing, unified with Bench (the bench must measure the
-      // library's real default, not a bench-only config): single-file
-      // fixture-scale tables split near row-group granularity so a plain
-      // scan-agg parallelizes; a many-file 100 TB layout is unaffected in
-      // practice (files ≥ the split size parallelize naturally) and
-      // deployments override via env or a builder config.
+      .config("spark.sql.shuffle.partitions", shufflePartitions)
+      // Scan split size, shared with Bench so the bench measures the
+      // library's real default. Spark splits EVERY file larger than this,
+      // not only small tables: a 1 GB file becomes ~128 tasks instead of
+      // ~8 at Spark's 128m default (16x the tasks). The fixture-scale
+      // single-file tables gain a parallel scan-agg from it; deployments
+      // with large files should raise it (the env var, or spark.conf.set:
+      // it is a runtime conf).
       .config("spark.sql.files.maxPartitionBytes",
         sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "8m"))
       .config("spark.sql.session.timeZone", "UTC")
@@ -127,6 +129,25 @@ object Graft {
       // partitioned writes with many chunk dirs
       .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
       .config("spark.ui.enabled", "false")
-      .getOrCreate())
+    // a value the deployment set (-D, or spark-defaults through
+    // spark-submit, which arrive as system properties) wins
+    if (sys.props.contains(CODEGEN_CACHE_MAX_ENTRIES.key)) b1
+    else b1.config(CODEGEN_CACHE_MAX_ENTRIES.key, CodegenCacheEntries.toLong)
   }
+
+  /** Shared session builder for the measurement tools (Bench, Profile,
+    * PlanDump): the same [[defaults]] as [[session]] — including the
+    * env-overridable scan-split and AQE knobs — so profiles and plan dumps
+    * are captured under exactly the session configuration the bench
+    * measures.
+    */
+  def toolSession(cpus: String): SparkSession =
+    init(defaults(SparkSession.builder().master(s"local[$cpus]"), cpus)
+      .getOrCreate())
+
+  /** Local session with the defaults every graft entry point uses. */
+  def session(appName: String = "graft", master: String = "local[*]",
+      shufflePartitions: Int = 32): SparkSession =
+    init(defaults(SparkSession.builder().appName(appName).master(master),
+      shufflePartitions.toString).getOrCreate())
 }

@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Optimization-round profiler (guide §1): runs ONE query from
   * [[SparkEntry.queries]] through the same warmup + steady-state protocol
@@ -8,7 +10,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * (keyed by job description / callsite). Prints a per-job breakdown of
   * the steady-state run plus the driver-side residue (steady wall minus
   * sum of job spans) — the residue is catalog/FS/planning work that never
-  * becomes a job, which at sf0.1 is where machinery rows hide their cost.
+  * becomes a job, which at sf0.1 is where machinery rows hide their cost —
+  * and the steady run's generated-code compiles (count and time), which
+  * are residue too and read 0 when the codegen cache holds the query.
   *
   * Usage: SPARK_GRAFT_PROFILE=q72 sbt "runMain graft.Profile"
   */
@@ -102,9 +106,15 @@ object Profile {
       }
     }, "graft-profile-sampler")
     sampler.setDaemon(true); sampler.start()
+    // Janino compiles in the steady run: a warmed query whose code bodies
+    // all fit Spark's codegen cache compiles none (Graft.CodegenCacheEntries)
+    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val compileNs0 = CodeGenerator.compileTime
     val t0 = System.nanoTime()
     run()
     val steady = (System.nanoTime() - t0) / 1e9
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+    val compileMs = (CodeGenerator.compileTime - compileNs0) / 1e6
     sampling = false
     recording = false
     Thread.sleep(300) // let the listener bus drain
@@ -112,7 +122,7 @@ object Profile {
     import scala.jdk.CollectionConverters._
     val recs = jobs.values.asScala.toSeq.sortBy(_.started)
     val totalJobMs = recs.map(r => math.max(0L, r.ended - r.started)).sum
-    println(f"\n[profile] $name steady=${steady}%.3f s, jobs=${recs.size}, sum(job spans)=${totalJobMs / 1000.0}%.3f s, driver residue≈${steady - totalJobMs / 1000.0}%.3f s")
+    println(f"\n[profile] $name steady=${steady}%.3f s, jobs=${recs.size}, sum(job spans)=${totalJobMs / 1000.0}%.3f s, driver residue≈${steady - totalJobMs / 1000.0}%.3f s, codegen compiles=$compiles ($compileMs%.1f ms)")
     // group by description
     val byDesc = recs.groupBy(_.desc).map { case (d, rs) =>
       (d, rs.size, rs.map(r => math.max(0L, r.ended - r.started)).sum)

@@ -501,10 +501,12 @@ class Hypertable private (
     // actions, and the range is measured on exactly the rows written, so
     // the expensive-input persist that existed only to pin a second
     // action's view of a non-deterministic pipeline is unnecessary too.
-    val observeStats = tsRoots.isEmpty &&
-      (needStats || caggs.nonEmpty || Hypertable.streamLogEnabled(fs, path)) &&
-      !Hypertable.streamLogEnabled(fs, path) &&
-      spark.conf.get("spark.graft.write.observeStats", "true").toBoolean
+    // probed once: the stream-log pre-listing below needs the chunk set
+    // BEFORE the job, which observed metrics only give after it, so both
+    // decisions must see the same answer
+    val streamLog = Hypertable.streamLogEnabled(fs, path)
+    val observeStats = tsRoots.isEmpty && (needStats || caggs.nonEmpty) &&
+      !streamLog && spark.conf.get("spark.graft.write.observeStats", "true").toBoolean
     if (expensiveInput && !observeStats)
       routed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val statsObs =
@@ -580,7 +582,7 @@ class Hypertable private (
     }
     var streamJournal: Path = null
     val streamLogPre: Option[(Map[Long, Path], Map[Long, Set[String]])] =
-      if (!Hypertable.streamLogEnabled(fs, path)) None
+      if (!streamLog) None
       else {
         // crashed earlier batches' journaled entries first, so their
         // files surface to tailing streams before this batch's diff
@@ -1579,21 +1581,41 @@ class Hypertable private (
       .drop(Hypertable.GEN)
   }
 
-  def between(startMicros: Long, endMicros: Long): DataFrame = withReaderEpoch {
+  def between(startMicros: Long, endMicros: Long): DataFrame =
+    between(startMicros, endMicros, inlineEnd = true)
+
+  /** [[between]]; with `inlineEnd = false` the end bound is a
+    * [[graft.expressions.ReferencedConstant]] instead of a literal, so
+    * scans that differ only in the end share one compiled code body. For
+    * an end that moves with every append (the table's probed max): the
+    * end then prunes no row group, only rows.
+    */
+  private[graft] def between(startMicros: Long, endMicros: Long,
+      inlineEnd: Boolean): DataFrame = withReaderEpoch {
     val all = showChunks()
     val hits = all
       .filter(c => c.startMicros < endMicros && c.endMicros > startMicros)
+    def end(literal: Column, value: Any, dt: org.apache.spark.sql.types.DataType) =
+      if (inlineEnd) literal
+      else org.apache.spark.sql.GraftShims.toColumn(
+        graft.expressions.ReferencedConstant(value, dt))
     val rowFilter = timeKind match {
-      case "bigint" => col(timeCol) >= lit(startMicros) && col(timeCol) < lit(endMicros)
+      case "bigint" => col(timeCol) >= lit(startMicros) &&
+        col(timeCol) < end(lit(endMicros), endMicros,
+          org.apache.spark.sql.types.LongType)
       case "uuidv7" =>
         // boundary v7 uuids (zero random bits) are the smallest uuid of
         // their timestamp, and v7 strings sort by time: plain string-range
         // predicates — pushed down to parquet — bound the embedded time
+        val hi = boundaryUuid(endMicros)
         col(timeCol) >= lit(boundaryUuid(startMicros)) &&
-          col(timeCol) < lit(boundaryUuid(endMicros))
+          col(timeCol) < end(lit(hi),
+            org.apache.spark.unsafe.types.UTF8String.fromString(hi),
+            org.apache.spark.sql.types.StringType)
       case _ =>
         col(timeCol) >= timestamp_micros(lit(startMicros)) &&
-          col(timeCol) < timestamp_micros(lit(endMicros))
+          col(timeCol) < end(timestamp_micros(lit(endMicros)), endMicros,
+            org.apache.spark.sql.types.TimestampType)
     }
     // a window covering EVERY chunk (the full-range refresh shape) gains
     // nothing from per-dir enumeration — one root discovery (plus the

@@ -1560,7 +1560,9 @@ class ContinuousAggregate(
     val live = source match {
       case h: Hypertable if wmMicros > Long.MinValue / 2 =>
         h.timeBounds match {
-          case Some((_, hi)) => h.between(wmMicros, hi + 1)
+          // the probed max moves with every append: kept out of the
+          // generated code, or each fresh read would compile anew
+          case Some((_, hi)) => h.between(wmMicros, hi + 1, inlineEnd = false)
           case None => h.read().where(toUs(col(h.timeCol)) >= wmMicros)
         }
       case s0 => s0.read().where(toUs(col(s0.timeCol)) >= wmMicros)

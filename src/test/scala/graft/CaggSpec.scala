@@ -318,6 +318,33 @@ class CaggSpec extends AnyFunSuite {
     assert(cagg.materialized.where($"bucket" >= Timestamp.valueOf("2024-01-15 00:00:00")).count() === 0)
   }
 
+  test("a held realtime view sees no rows above its probed max; fresh " +
+      "reads after appends reuse the live branch's compiled code") {
+    val (ht, cagg) = freshCagg()
+    cagg.refresh(us("2024-01-01 00:00:00"), us("2024-01-15 00:00:00"))
+    def appendAfterMax(id: Long): Unit = {
+      val hi = new Timestamp(ht.timeBounds.get._2 / 1000L + 1000L)
+      ht.write(Seq((id, hi, 1L, "click", 1.0, "{}"))
+        .toDF("event_id", "ts", "user_id", "event_type", "value", "props"))
+    }
+    val held = cagg.realtime
+    val before = held.collect().toSet
+    appendAfterMax(900001L)
+    assert(held.collect().toSet === before)
+    def rows(df: org.apache.spark.sql.DataFrame): Long =
+      df.agg(sum($"n")).head().getLong(0)
+    assert(rows(cagg.realtime) === rows(held) + 1)
+    // the live branch's end bound moves with every append; it must not be
+    // part of the generated code
+    appendAfterMax(900002L)
+    val fresh = cagg.realtime
+    val c0 = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val n = rows(fresh)
+    val c1 = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    assert(n === rows(held) + 2)
+    assert(c1 - c0 === 0L, s"a fresh realtime read compiled ${c1 - c0} code bodies")
+  }
+
   test("refresh policy runs batched, offset-windowed refreshes") {
     import graft.streaming.CaggRefreshPolicy
     val (ht, cagg) = freshCagg()

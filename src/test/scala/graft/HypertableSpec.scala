@@ -377,6 +377,8 @@ class HypertableSpec extends AnyFunSuite {
     val got = h.between(lo, hi).count()
     val expected = src.where(col("ts_us") >= lo && col("ts_us") < hi).count()
     assert(got === expected)
+    // the end bound as a referenced constant (the cagg realtime live branch)
+    assert(h.between(lo, hi, inlineEnd = false).count() === expected)
     // re-open keeps the dimension kind
     assert(Hypertable.at(spark, s"$d/ht").timeKind === "bigint")
   }
@@ -395,6 +397,7 @@ class HypertableSpec extends AnyFunSuite {
     val expected = src.where(col("ts") >= timestamp_micros(lit(lo)) &&
       col("ts") < timestamp_micros(lit(hi))).count()
     assert(got === expected)
+    assert(h.between(lo, hi, inlineEnd = false).count() === expected)
   }
 
   test("runtime chunk exclusion: partition-column join triggers dynamic partition pruning") {
