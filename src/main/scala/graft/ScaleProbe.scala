@@ -79,26 +79,15 @@ object ScaleProbe {
       val (tRead1, _) = timed { h.read().where(col("v") === mid).count() }
       val (tRead2, _) = timed { h.read().where(col("v") === mid + 1L).count() }
       println(f"""[scale] {"probe":"catalog_$mode","chunks":$n,"write_sec":$tw%.2f,"show_first_sec":$tFirst%.3f,"show_repeat_sec":$tRepeat%.3f,"pruned_count_sec":$tQuery%.3f,"read_first_sec":$tRead1%.2f,"read_repeat_sec":$tRead2%.2f,"rows":$cnt}""")
-      // stream-START cost at width (round 9): the graft-side additions
-      // are ~flat (schema inference reads ONE chunk dir, the dead-at-
-      // start walk touches only the maintenance backlog) — the measured
-      // residual is Spark's own FileStreamSource construction, which
-      // builds a file index over the glob: the same O(files) listing the
-      // source re-pays every micro-batch, inherent to file tailing
-      // (measured 14.2 s at 10,080 chunks; the one-chunk inference
-      // removed the ~20 s full-root discovery the pre-r9 code added on
-      // top of it)
+      // stream-START cost at width: construction + the real query-start
+      // work (createSource: snapshot enumeration via parallel
+      // manifest-resolved listings + first getOffset). `latest` start —
+      // the tail-a-hot-table deployment shape; `earliest` pays the same
+      // one-time listing and then emits it as batch 0. Per-TRIGGER cost
+      // afterwards is O(new files) (log tail), not a re-listing.
       if (mode == "table") {
-        val (tStream, si) = timed { h.readStreamWithInfo() }
-        println(f"""[scale] {"probe":"stream_start","chunks":$n,"start_sec":$tStream%.3f,"filtered":${si._2.filtered},"dead_files":${si._2.deadFiles}}""")
-        // catalog-backed source (round 10): construction + the real query-
-        // start work (createSource: snapshot enumeration via parallel
-        // manifest-resolved listings + first getOffset). `latest` start —
-        // the tail-a-hot-table deployment shape; `earliest` pays the same
-        // one-time listing and then emits it as batch 0. Per-TRIGGER cost
-        // afterwards is O(new files) (log tail), not a re-listing.
         val (tCat, _) = timed {
-          h.readStreamCatalog(startingPosition = "latest") // plan + schema
+          h.readStream(startingPosition = "latest") // plan + schema
           val prov = new org.apache.spark.sql.graftstream.GraftStreamSourceProvider()
           val src = prov.createSource(spark.sqlContext,
             s"$base/_probe_ckpt_$mode", None, "graft-hypertable",

@@ -102,44 +102,22 @@ object Dedup {
     val banded = Spread.byKey(df, col(idCol)).select(col(idCol),
         explode(lshBands(sig, bands, rows)).as("bb"))
       .select(col(idCol), col("bb.band"), col("bb.bucket"))
-    val pairGen = df.sparkSession.conf
-      .get("spark.graft.dedup.pairGen", "group")
-    if (pairGen == "group") {
-      // per-bucket pair GENERATION instead of a bucket self-join: one
-      // exchange groups each (band, bucket) onto a task, the cap filters
-      // on the collected size (same semantics as the window form — an
-      // oversized bucket is dropped whole), and pairs come from a
-      // nested generate over the sorted id list (sorted so a < b matches
-      // the join form's `id_a < id_b` under the column's own ordering).
-      // Per-bucket memory is the id list the cap admits — versus the
-      // window+self-join form whose every surviving row rides TWO join
-      // inputs and whose pair output is the same n²/2. slice() is
-      // 1-based: ids after 0-based position i start at i+2.
-      banded.groupBy(col("band"), col("bucket"))
-        .agg(sort_array(collect_list(col(idCol))).as("_ids"))
-        .where(size(col("_ids")) >= 2 && size(col("_ids")) <= maxBucketSize)
-        .select(posexplode(col("_ids")).as(Seq("_i", s"${idCol}_a")), col("_ids"))
-        .select(col(s"${idCol}_a"), explode(
-          expr(s"slice(_ids, _i + 2, size(_ids) - _i - 1)")).as(s"${idCol}_b"))
-        .distinct()
-    } else {
-      // cap pathological buckets (boilerplate text) before the self-join.
-      // Kept even when maxBucketSize = Int.MaxValue (a provably-no-op
-      // filter): the window's exchange is the join's shared
-      // materialization point — skipping it measured q93 3.6 → 5.2 s at
-      // sf0.1 (the planner then broadcasts one side and re-computes the
-      // whole banding subtree per side instead of reusing one exchange).
-      val capped = banded.withColumn("_sz",
-          count(lit(1)).over(Window.partitionBy(col("band"), col("bucket"))))
-        .where(col("_sz") <= maxBucketSize).drop("_sz")
-      val a = capped.as("a")
-      val b = capped.as("b")
-      a.join(b, col(s"a.band") === col(s"b.band") &&
-          col(s"a.bucket") === col(s"b.bucket") &&
-          col(s"a.$idCol") < col(s"b.$idCol"))
-        .select(col(s"a.$idCol").as(s"${idCol}_a"), col(s"b.$idCol").as(s"${idCol}_b"))
-        .distinct()
-    }
+    // per-bucket pair GENERATION instead of a bucket self-join: one
+    // exchange groups each (band, bucket) onto a task, and pairs come from
+    // a nested generate over the sorted, de-duplicated id list (sorted so
+    // a < b under the column's own ordering; de-duplicated so a doc id
+    // repeated in the input yields no (x, x) self-pair). The WHOLE bucket
+    // is buffered before the `maxBucketSize` filter drops an oversized
+    // one, so a hot bucket's id list must fit in one task's memory; the
+    // pair output is n²/2 per admitted bucket. slice() is 1-based: ids
+    // after 0-based position i start at i+2.
+    banded.groupBy(col("band"), col("bucket"))
+      .agg(sort_array(collect_set(col(idCol))).as("_ids"))
+      .where(size(col("_ids")) >= 2 && size(col("_ids")) <= maxBucketSize)
+      .select(posexplode(col("_ids")).as(Seq("_i", s"${idCol}_a")), col("_ids"))
+      .select(col(s"${idCol}_a"), explode(
+        expr(s"slice(_ids, _i + 2, size(_ids) - _i - 1)")).as(s"${idCol}_b"))
+      .distinct()
   }
 
   /** Exact n-gram Jaccard similarity of two shingle arrays. */

@@ -437,8 +437,8 @@ class Hypertable private (
     // the pre-round-9 route-to-primary + rename-into-place relocation
     // left a window where a running stream's listing missed the renamed
     // files entirely — silent loss; a direct write is atomic at job
-    // commit, so readStream's per-root sources see every acked row
-    // exactly once. ATOMICITY BOUNDARY: each ROOT's job commit is the
+    // commit, and the stream-log entry names every acked file at its
+    // final root. ATOMICITY BOUNDARY: each ROOT's job commit is the
     // atomic unit, not the batch — with attached tablespaces a crash
     // between the primary-root commit and a tablespace-root commit
     // leaves the committed roots' rows visible (unacked partial batch),
@@ -1246,67 +1246,45 @@ class Hypertable private (
     }
   }
 
-  /** Read the hypertable as a Structured Streaming source: files appended
-    * to chunk directories (by another writer's [[write]], COPY ingest, a
-    * backfill job) become micro-batches — the change-stream view of the
-    * table that feeds downstream streaming caggs or CDC-style pipelines.
+  /** Read the hypertable as a Structured Streaming source — the change
+    * stream of the table, feeding downstream streaming caggs or CDC-style
+    * pipelines ([[org.apache.spark.sql.graftstream.GraftStreamSource]]).
     *
-    * Spark's file source tracks seen FILES in the checkpoint, so each file
-    * is delivered once; new `_chunk=`/`_space=` directories are discovered
-    * as they appear (partition columns come from the provided schema +
-    * basePath). `maxFilesPerTrigger` bounds micro-batch size (per storage
-    * root) — size it so one batch ≈ executors × a few input splits at the
-    * target scale.
+    * The source tails the `_graft_stream_log/` append feed: every
+    * [[write]] batch and every [[attachChunk]] appends one entry naming
+    * exactly the files it committed, so per-trigger discovery is O(new
+    * files), independent of table width (SCALE.md §16). Calling this
+    * enables the log; writers log only while it exists, and the source
+    * re-checks, so a batch written between the snapshot and the first
+    * trigger cannot be missed.
     *
-    * EVERY storage root is covered: the stream is a union of one file
-    * source per attached tablespace root plus the primary, and appends
-    * write directly into the owning root, so rows of tablespace-resident
-    * chunks emit exactly once like any others. Tablespaces attached AFTER
-    * the stream started need a stream restart to be seen.
+    * `startingPosition`: `"earliest"` emits the table's live snapshot as
+    * batch 0 — resolved from the catalog, so grace-retained superseded
+    * generations and dropped chunks never enter it — then every later
+    * append; `"latest"` streams only appends after the start. Either way
+    * a new checkpoint starts past every log entry written before its
+    * snapshot (an earlier stream's), so none of them is replayed. Each
+    * file is delivered exactly once per checkpoint. Files of every
+    * storage root stream, tablespaces included.
     *
-    * APPEND-ONLY contract: a chunk REWRITE (deleteWhere/updateWhere,
-    * compress/decompress, merge/split) produces new part files whose rows
-    * were already delivered, and the file source re-emits them. Run
-    * compaction/DML on chunks only after their consumers are drained and
-    * past them (e.g. compress behind the same lag a cagg's refresh policy
-    * uses), or deduplicate downstream — the same contract every
-    * file-tailing CDC pipeline has.
+    * What streams: `write()` batches, `attachChunk` and the start
+    * snapshot. What does not: rewrites (compress/decompress, merge/split,
+    * DML) — their rows were already delivered, so maintenance never
+    * re-emits — nor `moveChunk`, nor files placed in chunk dirs outside
+    * `write()`/`attachChunk`. On flat tables (`catalog="list"`) a rewrite
+    * swaps files in place, and a checkpoint replay still reads the files
+    * its batch recorded: run compaction and DML on chunks only after
+    * their consumers have drained past them. Gen-layout tables keep the
+    * superseded generation for `gc.graceMs`.
     *
-    * `schema`: required before the first chunk exists (parquet cannot infer
-    * a schema from an empty table); afterwards it defaults to the table's
-    * own files. The catalog marker files (`_graft_*`) are never matched:
-    * the glob requires the `_chunk=` partition-dir prefix, and Spark's
-    * file index ignores `_`-prefixed files inside the dirs.
+    * `schema`: required before the first chunk exists (parquet cannot
+    * infer one from an empty table); otherwise inferred from one chunk.
+    * The stream surfaces `_chunk` (and `_space*`), never `_gen`. Setup
+    * pays one manifest resolve, the one-chunk inference read (~2 s at
+    * 10k chunks) and, on a fresh checkpoint, the one-time snapshot
+    * listing — amortized by a standing stream.
     */
-  def readStream(maxFilesPerTrigger: Int = 1000,
-      schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame =
-    readStreamWithInfo(maxFilesPerTrigger, schema)._1
-
-  /** Catalog-backed streaming source
-    * ([[org.apache.spark.sql.graftstream.GraftStreamSource]]): tails the
-    * `_graft_stream_log/` per-batch append feed instead of re-listing the
-    * table's files every micro-batch — per-trigger discovery is O(new
-    * files) instead of FileStreamSource's O(all files) (the 14 s/10k-chunk
-    * start + per-batch cliff in SCALE.md §16), and the one-time initial
-    * snapshot resolves from the MANIFEST, so graced/dead generations are
-    * excluded by construction (no dead-set filter riding the stream).
-    * Rewrites never enter the log, so compaction/DML can overlap a
-    * running stream without re-emission — a stronger contract than
-    * [[readStream]]'s append-only one. `startingPosition`: `"earliest"`
-    * (snapshot emitted as batch 0) or `"latest"` (only post-start
-    * appends). Writers log batches only while the log dir exists —
-    * calling this enables it, so batches written BEFORE the first call
-    * but after the snapshot cannot be missed (the source re-checks).
-    *
-    * Stream SETUP cost: each stream's first start pays one fresh-handle
-    * manifest resolve + a one-chunk schema-inference read (~2 s at 10k
-    * chunks) plus the one-time snapshot listing. A standing stream — the
-    * design target — amortizes this over its lifetime; a driver churning
-    * many short-lived streams of one wide table pays it per stream
-    * (pass an explicit `schema` to skip the inference read).
-    */
-  def readStreamCatalog(
-      schema: Option[org.apache.spark.sql.types.StructType] = None,
+  def readStream(schema: Option[org.apache.spark.sql.types.StructType] = None,
       startingPosition: String = "earliest"): DataFrame = {
     assertLayoutCurrent()
     Hypertable.enableStreamLog(fs, path)
@@ -1316,220 +1294,6 @@ class Hypertable private (
       .option("startingPosition", startingPosition)
     schema.foreach(s => r = r.schema(s))
     r.load()
-  }
-
-  /** [[readStream]] plus the stream-start filter's state, so a pipeline
-    * can ASSERT its exactly-once start instead of scraping driver logs:
-    * `filtered` — the dead-at-start filter engaged (vacuously true when
-    * nothing was dead); `deadFiles` — grace-retained files excluded from
-    * the start; `degraded` — the dead set exceeded
-    * `spark.graft.stream.deadSetMax`, so the stream starts UNFILTERED
-    * (grace-retained duplicates may emit once, never loss).
-    */
-  def readStreamWithInfo(maxFilesPerTrigger: Int = 1000,
-      schema: Option[org.apache.spark.sql.types.StructType] = None)
-      : (DataFrame, Hypertable.StreamStartInfo) = {
-    // a stale flat handle's glob would discover both `_gen=` generations
-    // of a migrated table as data (double emits, graced-drop resurrection)
-    // — refuse loudly, like read()/showChunks()/withMutation
-    assertLayoutCurrent()
-    val s = schema.getOrElse {
-      val cs = showChunks()
-      require(cs.nonEmpty,
-        "hypertable has no chunks yet — pass an explicit schema to " +
-          "readStream (parquet cannot infer one from an empty table)")
-      // infer from ONE chunk dir against its storage root: same fidelity
-      // as a whole-root read (parquet inference reads one footer either
-      // way, and basePath surfaces the same partition columns) without
-      // the O(all chunks) partition discovery — and it works when every
-      // chunk lives in a tablespace and the primary root is bare
-      val c = new Path(cs.head.path)
-      spark.read
-        .option("basePath", Hypertable.storageRootOf(c).toString)
-        .parquet(c.toString).schema
-    }
-    // one file source per STORAGE ROOT: appends write DIRECTLY into the
-    // root their chunk lives in (see write()'s tablespace routing), so a
-    // primary-only glob would never see rows of tablespace-resident
-    // chunks — silent loss. Roots snapshot at stream start;
-    // attach_tablespace during a running stream needs a stream restart
-    // (the same contract moveChunk mid-stream already has).
-    // `maxFilesPerTrigger` applies per root.
-    val roots = new Path(path) +: tablespaceTableDirs
-    roots.drop(1).foreach { r => // primary exists; a ts dir may not yet
-      val rfs = r.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!rfs.exists(r)) rfs.mkdirs(r)
-    }
-    def sourceFor(root: Path): DataFrame = spark.readStream
-      .schema(s)
-      .option("basePath", root.toString)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(s"$root/$CHUNK=*")
-    // gen layout: files sit one `_gen=` level down; the glob still
-    // matches the chunk dirs and the source lists them recursively, the
-    // generation just surfaces as one more discovered partition column —
-    // physical metadata, dropped (no-op on flat tables). A rewrite's new
-    // generation re-emits its rows like any rewrite under the
-    // append-only contract above. A stream STARTED during a GC grace
-    // window would additionally list grace-retained files — a superseded
-    // generation (every rewritten chunk's rows emitted TWICE at start) or
-    // a dropped-but-graced chunk (deleted rows emitted once) — so the
-    // rows of the dead-at-START data FILES are filtered out below.
-    //
-    // The filter keys on FILE PATH SUFFIXES (`_chunk=K/_gen=G[/...]/name`),
-    // not (chunk, generation): a chunk dir fully GC'd and later
-    // re-created restarts at _gen=0, and a (chunk, gen) predicate baked
-    // at start would silently drop those acked rows forever — while the
-    // re-created generation's FILES carry a fresh write-job UUID in
-    // their names, so the start-time suffix set can never shadow them.
-    // (The name ALONE is not enough the other way: one ingest job's
-    // dynamic-partition write reuses the same part-file name in EVERY
-    // chunk dir it touches.) Rows a LATER rewrite publishes still
-    // re-emit (new suffixes) — the running-stream contract above is
-    // untouched — and a tombstoned chunk's RE-INGESTED rows (rebirth
-    // generations above the tombstone's recorded max) still emit, as
-    // acked new data must.
-    //
-    // Walk cost: the LIVE set comes from the memoized catalog; only
-    // chunks with a rewrite history (live gen > 0) or absent from the
-    // live set (tombstoned/awaiting GC) get per-dir listings — the
-    // maintenance BACKLOG, not the chunk count. One root listing per
-    // storage root on top (the stream source itself re-lists every
-    // micro-batch, so this adds nothing asymptotic). Every probe rides
-    // out concurrent GC (FNF = the dir resolved itself — skip it).
-    // `spark.graft.stream.skipDeadAtStart=false` restores the raw glob.
-    val (deadSet, degraded) =
-      if (!genLayout ||
-        !spark.conf.get("spark.graft.stream.skipDeadAtStart", "true").toBoolean)
-        (Seq.empty[String], false)
-      else {
-        // stream start is RARE: re-probe catalog freshness (one
-        // getFileStatus per storage root) so the live-gen map reflects
-        // every publish COMPLETED before this start — including one whose
-        // manifest sync never ran (the publish bumps the content stamp
-        // BEFORE its commit stamp, so a crash between them still reads
-        // stale here). Without this, the gen-0 fast path below would
-        // leave such a publish's superseded files in the start set. Only
-        // a publish racing the start itself can still re-emit — the same
-        // window the running-stream rewrite contract already covers.
-        if (catalogMode == "table" && !catalogFresh()) {
-          catalogValidated = false
-          cachedCatalog = None
-        }
-        val liveGen: Map[String, Int] = showChunks().map { c =>
-          val p = new Path(c.path)
-          Hypertable.chunkDirOf(p).getName.stripPrefix(s"$CHUNK=") ->
-            Hypertable.genOf(p)
-        }.toMap
-        val dead = scala.collection.mutable.ArrayBuffer.empty[String]
-        // collect the `_chunk=...`-rooted suffix of every data file under
-        // the dir (recursing through `_space=` levels)
-        def deadFilesOf(rfs: FileSystem, genDir: Path): Unit =
-          try rfs.listStatus(genDir).foreach { f =>
-            val n = f.getPath.getName
-            if (f.isDirectory && !n.startsWith(".") && n.contains("="))
-              deadFilesOf(rfs, f.getPath)
-            else if (f.isFile && !n.startsWith(".") && !n.startsWith("_")) {
-              val full = f.getPath.toString
-              val i = full.indexOf(s"/$CHUNK=")
-              if (i >= 0) dead += full.substring(i + 1)
-            }
-          } catch { case _: java.io.FileNotFoundException => () } // GC won
-        roots.foreach { r =>
-          val rfs = r.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val sts =
-            try rfs.listStatus(r).toSeq
-            catch { case _: java.io.FileNotFoundException => Nil }
-          sts.filter(st => st.isDirectory &&
-              st.getPath.getName.startsWith(s"$CHUNK="))
-            .foreach { st =>
-              val ck = st.getPath.getName.stripPrefix(s"$CHUNK=")
-              try liveGen.get(ck) match {
-                case Some(0) => () // born-fresh chunk: nothing below gen 0.
-                  // Trustworthy WITHOUT a per-dir probe (which would
-                  // reintroduce the O(chunks) walk) because the catalog
-                  // freshness re-probe above already caught any publish
-                  // completed before this start — a completed publish
-                  // always bumps the content stamp first
-                case Some(g) =>
-                  // single-live-generation invariant: everything below
-                  // the live generation is superseded. Gens AT or ABOVE
-                  // g still get a fresh on-disk isSuperseded probe (we
-                  // are already listing this dir): the memoized catalog
-                  // may lag one unsynced publish, and its g would then
-                  // understate the dead set
-                  Hypertable.listGenDirs(rfs, st.getPath).foreach {
-                    case (gg, d) =>
-                      if (gg < g || Hypertable.isSuperseded(rfs, d))
-                        deadFilesOf(rfs, d)
-                  }
-                case None =>
-                  // not live: tombstoned (dead ≤ recorded max; rebirth
-                  // gens above it are acked re-ingests) or fully
-                  // superseded awaiting GC (stamped gens are dead).
-                  // The generations are listed BEFORE the tombstone is
-                  // read: the write path normalizes an unreadable
-                  // tombstone under the write lock BEFORE routing
-                  // rebirth rows, so a rebirth generation present in
-                  // the listing implies the LATER tombstone read sees
-                  // the normalized (parsable) value — list-first makes
-                  // the crashed-drop fallback below race-free. An
-                  // unreadable tombstone then re-checks existence: a
-                  // VANISHED one (rebirth heal committed in between)
-                  // must not classify the now-live generation as dead;
-                  // a present-but-unparsable one is a crashed drop,
-                  // where no rebirth generation can be in our listing,
-                  // so everything listed is the dropped data.
-                  val gens = Hypertable.listGenDirs(rfs, st.getPath)
-                  val deadMax = Hypertable.readTombMax(rfs, st.getPath) match {
-                    case Some(m) => m
-                    case None =>
-                      if (Hypertable.isTombstoned(rfs, st.getPath))
-                        Int.MaxValue
-                      else -1
-                  }
-                  gens.foreach { case (g, d) =>
-                    if (g <= deadMax || Hypertable.isSuperseded(rfs, d))
-                      deadFilesOf(rfs, d)
-                  }
-              } catch { case _: java.io.FileNotFoundException => () }
-            }
-        }
-        val ds = dead.distinct
-        val cap = spark.conf
-          .get("spark.graft.stream.deadSetMax", "100000").toInt
-        if (ds.size > cap) {
-          // a mass retention drop or compaction sweep inside the grace
-          // window can make the file-level set huge — an In-literal of
-          // millions of strings would ship with every task of every
-          // micro-batch. Degrade to the pre-filter behavior (duplicates
-          // possible, never loss) rather than bloat the plan; raise
-          // spark.graft.stream.deadSetMax or start the stream after the
-          // sweep's grace window to keep the filter. The degradation is
-          // ALSO surfaced on the returned StreamStartInfo, not just here.
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            s"dead-at-start set has ${ds.size} files " +
-              s"(> deadSetMax=$cap); stream starts UNFILTERED — " +
-              "grace-retained duplicates may emit once")
-          (ds, true)
-        } else (ds, false)
-      }
-    // the dead-file predicate keys on `_metadata.file_path` — a per-
-    // relation pseudo-column, so it must apply on each root's source
-    // BEFORE the union
-    val streams = roots.map { r =>
-      val src = sourceFor(r)
-      if (deadSet.isEmpty || degraded) src
-      else src.where(!regexp_extract(
-        col("_metadata")("file_path"), s"/($CHUNK=.+)$$", 1)
-        .isInCollection(deadSet))
-    }
-    val skipOn = genLayout &&
-      spark.conf.get("spark.graft.stream.skipDeadAtStart", "true").toBoolean
-    (streams.reduceLeft(_ unionByName _).drop(GEN),
-      Hypertable.StreamStartInfo(
-        filtered = skipOn && !degraded, deadFiles = deadSet.size,
-        degraded = degraded))
   }
 
   private lazy val qualifiedPath: String =
@@ -2816,25 +2580,30 @@ class Hypertable private (
     val target =
       if (genLayout) { fs.mkdirs(chunkDir); new Path(chunkDir, s"${Hypertable.GEN}=0") }
       else chunkDir
-    require(fs.rename(new Path(srcPath), target), s"rename $srcPath -> $target failed")
-    if (genLayout) {
-      // adopted data files get FRESH unique names (metadata-only renames,
-      // same order of cost as the footer validation above): the stream's
-      // dead-at-start filter keys on `_chunk=K/_gen=G/name` suffixes,
-      // whose uniqueness Spark-written files get from their write-job
-      // UUID — an adoption that PRESERVED source names could reproduce a
-      // dead suffix (detach → drop → GC → re-attach of a same-named
-      // file) and have a running stream silently drop the re-attached
-      // acked rows
-      val stamp = java.lang.Long.toHexString(System.nanoTime())
-      fs.listStatus(target).filter(_.isFile)
-        .map(_.getPath).filterNot(p =>
-          p.getName.startsWith(".") || p.getName.startsWith("_"))
-        .zipWithIndex.foreach { case (p, i) =>
-          val fresh = new Path(target, s"adopt-$stamp-$i-${p.getName}")
-          require(fs.rename(p, fresh), s"rename $p -> $fresh failed")
-        }
-    }
+    // adopted data files get FRESH unique names (metadata-only renames,
+    // same order of cost as the footer validation above): a stream
+    // dedups delivered files by path, and a re-attach that PRESERVED the
+    // names of a previously streamed, detached chunk would have every
+    // running stream silently drop the re-attached rows. Renamed in the
+    // source dir, so the chunk never shows a name that is about to change.
+    val src = new Path(srcPath)
+    val stamp = java.lang.Long.toHexString(System.nanoTime())
+    fs.listStatus(src).filter(_.isFile)
+      .map(_.getPath).filterNot(p =>
+        p.getName.startsWith(".") || p.getName.startsWith("_"))
+      .zipWithIndex.foreach { case (p, i) =>
+        val fresh = new Path(src, s"adopt-$stamp-$i-${p.getName}")
+        require(fs.rename(p, fresh), s"rename $p -> $fresh failed")
+      }
+    // tailing streams get the adopted rows as one log entry, like a
+    // write() batch; journaled first, so a crash before the entry is
+    // appended heals forward (the next logging batch or stream start
+    // lists the target and emits it)
+    val streamJournal =
+      if (Hypertable.streamLogEnabled(fs, path))
+        Some(Hypertable.journalStreamLog(fs, path, Seq(target), Set.empty))
+      else None
+    require(fs.rename(src, target), s"rename $srcPath -> $target failed")
     // an adopted dir may carry a frozen sentinel (e.g. re-attaching a
     // previously frozen+detached chunk's data) — keep the root catalog,
     // which the insert guard reads, in sync with it
@@ -2846,6 +2615,12 @@ class Hypertable private (
     refreshColumnStats(Seq(target.toString))
     invalidateCaggs(startMicros, endMicros) // new raw rows appeared
     syncChunkCatalog()
+    streamJournal.foreach { j =>
+      Hypertable.crashPoint("attach.streamlog.before_entry")
+      Hypertable.appendStreamLog(spark, fs, path,
+        Hypertable.listDataFilesRec(fs, target))
+      MutationGate.removeMarker(fs, j)
+    }
     ChunkInfo(startMicros, endMicros, target.toString)
   }
 
@@ -3023,9 +2798,11 @@ class Hypertable private (
     * file then delete (at cluster scale that copy would be a distributed
     * job; the sequential fallback here covers the local/test filesystems).
     * The chunk stays fully live: reads, DML, compression and policies all
-    * resolve it through the catalog at its new location. `readStream`
-    * tails only the primary root — move chunks past the streaming
-    * consumers' watermark, the same contract compaction has.
+    * resolve it through the catalog at its new location. The moved files
+    * do not enter the stream log (a running [[readStream]] already
+    * delivered their rows, and its checkpoint replay reads the old
+    * paths) — move chunks past the streaming consumers' watermark, the
+    * same contract compaction has.
     */
   def moveChunk(startMicros: Long, destRoot: Option[String]): ChunkInfo =
       withSealedMutation(Seq(Some(startMicros))) {
@@ -3563,16 +3340,6 @@ object Hypertable {
   // (i.e. an uncommitted rewrite) and is rolled back by GC. Drops write a
   // `.graft_dropped` tombstone instead of deleting, with the same grace.
 
-  /** One stream start's dead-at-start filter state (see
-    * [[Hypertable.readStreamWithInfo]]): `filtered` — the filter engaged
-    * (exactly-once start; vacuously true when nothing was dead);
-    * `deadFiles` — grace-retained files excluded; `degraded` — the set
-    * overflowed `spark.graft.stream.deadSetMax` and the stream starts
-    * unfiltered (duplicates possible, never loss).
-    */
-  case class StreamStartInfo(filtered: Boolean, deadFiles: Int,
-      degraded: Boolean)
-
   private[sources] val SUPERSEDED = ".graft_superseded"
   private[sources] val DROP_TOMB = ".graft_dropped"
   // rewrite-intent markers at the PRIMARY root (multi-step merge/split
@@ -3972,15 +3739,15 @@ object Hypertable {
   private[sources] def crashPoint(name: String): Unit = crashHook(name)
 
   // ------------------------------------------------------ stream log
-  // The catalog-backed streaming source (graft.streaming.readStreamCatalog
-  // / GraftStreamSource) tails per-batch append entries instead of
-  // re-listing the whole table's files every micro-batch (Spark's
-  // FileStreamSource is O(files) per trigger — the measured 14 s/10k-chunk
-  // scale cliff in SCALE.md §16). write() appends one entry per batch
-  // listing EXACTLY the files its job committed (pre/post listing diff of
-  // only the touched chunk dirs), but only while the log dir exists — the
-  // first catalog-backed stream enables it; tables nobody tails pay one
-  // `exists` per batch and nothing else.
+  // The streaming source (Hypertable.readStream / GraftStreamSource)
+  // tails per-batch append entries instead of re-listing the whole
+  // table's files every micro-batch (Spark's FileStreamSource is O(files)
+  // per trigger — the measured 14 s/10k-chunk scale cliff in SCALE.md
+  // §16). write() appends one entry per batch listing EXACTLY the files
+  // its job committed (pre/post listing diff of only the touched chunk
+  // dirs), and attachChunk one entry with the adopted files, but only
+  // while the log dir exists — the first stream enables it; tables nobody
+  // tails pay one `exists` per batch and nothing else.
 
   private[graft] val STREAM_LOG = "_graft_stream_log"
 
@@ -4007,12 +3774,6 @@ object Hypertable {
     out.toSeq
   }
 
-  /** Pre-round-12 hourly bucket width — readers still understand the
-    * legacy `t<epochHour>/` layout (and the round-10 root-flat one) until
-    * the first round-12 write folds them into sequence buckets.
-    */
-  private[graft] val STREAM_LOG_BUCKET_MS = 3600000L
-
   /** Entries bucket by SEQUENCE into `s<seq/512>/` subdirs. The sequence
     * is the load-bearing change of round 12: entries used to be named and
     * floored by each WRITER's wall clock, so an appender host skewed more
@@ -4031,7 +3792,7 @@ object Hypertable {
   private[graft] def streamLogBucketOf(seq: Long): String =
     s"s${seq / STREAM_LOG_BUCKET_SEQS}"
 
-  /** `s<idx>` → idx; anything else (legacy `t` buckets, dot dirs) → -1. */
+  /** `s<idx>` → idx; anything else (dot dirs) → -1. */
   private[graft] def streamBucketIdxOf(name: String): Long =
     if (name.length > 1 && name.charAt(0) == 's' &&
         name.drop(1).forall(_.isDigit)) name.drop(1).toLong
@@ -4053,12 +3814,6 @@ object Hypertable {
   private[graft] def streamEntryTs(name: String): Long =
     scala.util.Try(name.split('_')(2).toLong).getOrElse(-1L)
 
-  /** The wall clock a LEGACY entry name embeds (`e_<ts>_<rand>`). */
-  private[graft] def legacyEntryTs(name: String): Long = {
-    val s = name.stripPrefix("e_").takeWhile(_.isDigit)
-    if (s.isEmpty || !name.startsWith("e_")) -1L else s.toLong
-  }
-
   private[graft] def streamLogRetainMs(spark: SparkSession): Long =
     spark.conf.get("spark.graft.stream.logRetainMs", "604800000").toLong
 
@@ -4079,13 +3834,50 @@ object Hypertable {
     -1L
   }
 
+  /** Highest seq ever allocated in the log: the max of the visible
+    * entries and the pruning-surviving high-water, -1 for an empty log.
+    * Every entry at or below it was written after the files it names were
+    * committed. Writers allocate the next seq from it (under the seq
+    * claim); a fresh stream reads it before its snapshot listing and
+    * starts its floor there, so its snapshot stands in for those entries.
+    *
+    * The same listing warns once per table and JVM about pre-sequence
+    * entries (root-flat `e_<ts>_*` files, `t<hour>` buckets): readers
+    * ignore them, so a checkpoint that had not consumed them must restart
+    * fresh to get their rows (from its snapshot).
+    */
+  private[graft] def streamLogHighSeq(fs: FileSystem, tablePath: String): Long = {
+    val logDir = new Path(tablePath, STREAM_LOG)
+    val top =
+      try fs.listStatus(logDir).toSeq
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
+    val preSeq = top.exists { st =>
+      val n = st.getPath.getName
+      if (st.isDirectory) n.length > 1 && n.charAt(0) == 't' && n.drop(1).forall(_.isDigit)
+      else n.startsWith("e_")
+    }
+    if (preSeq && preSequenceLogWarned.add(fs.makeQualified(logDir).toString))
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        s"$logDir holds pre-sequence stream-log entries, which no stream " +
+          "reads any more: restart streams whose checkpoint predates the " +
+          "sequence layout with a fresh checkpoint, whose snapshot covers " +
+          "those files.")
+    val sIdxs = top.filter(_.isDirectory)
+      .map(s => streamBucketIdxOf(s.getPath.getName)).filter(_ >= 0)
+    math.max(maxStreamSeq(fs, logDir, sIdxs), readStreamHw(fs, logDir))
+  }
+
+  private val preSequenceLogWarned =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
   /** Pruning-surviving seq high-water (`_hw` in the log dir): without it,
     * a table idle past retention would have ALL its buckets GC'd, the
     * next writer would restart the sequence at 0, and a standing reader's
     * floor (still at the old high seq) would silently skip every future
-    * entry. Read at allocation (seq base = max(maxVisible, hw)); written
-    * MONOTONICALLY after the claim verify; raised by the GC before a
-    * bucket delete. All accesses happen under the `.seq_claim` hold.
+    * entry. Read at allocation (seq base = max(maxVisible, hw)) and by a
+    * fresh stream's start; written MONOTONICALLY after the claim verify;
+    * raised by the GC before a bucket delete. All writes happen under the
+    * `.seq_claim` hold.
     */
   private def readStreamHw(fs: FileSystem, logDir: Path): Long =
     try readSmallFile(fs, new Path(logDir, "_hw")).trim.toLong
@@ -4095,56 +3887,6 @@ object Hypertable {
     if (seq > readStreamHw(fs, logDir))
       try writeSmallFile(fs, new Path(logDir, "_hw"), seq.toString)
       catch { case _: java.io.IOException => () }
-
-  /** Fold pre-round-12 layouts into sequence buckets — once, under the
-    * seq claim, on the first round-12 write (round-11 verdict item 4:
-    * legacy entries used to be re-listed every trigger until retention
-    * aged them out). Root-flat `e_<ts>_*` files (round 10) and hourly
-    * `t<hour>/` entries (round 11) are RENAMED into seq buckets in
-    * entry-ts order, keeping their original ts for retention. A reader
-    * that already processed them by NAME re-lists them under the new
-    * names and dedups by file path: the seen set's retention+skew age-out
-    * strictly outlives any legacy entry's log lifetime. Returns the new
-    * max seq.
-    */
-  private def migrateLegacyStreamEntries(fs: FileSystem, logDir: Path,
-      top: Seq[org.apache.hadoop.fs.FileStatus], startSeq: Long): Long = {
-    val rootEntries = top.filter(s =>
-      s.isFile && s.getPath.getName.startsWith("e_")).map(_.getPath)
-    val tDirs = top.filter(s =>
-      s.isDirectory && s.getPath.getName.startsWith("t") &&
-        s.getPath.getName.drop(1).forall(_.isDigit)).map(_.getPath)
-    if (rootEntries.isEmpty && tDirs.isEmpty) return startSeq
-    val tEntries = tDirs.flatMap { d =>
-      try fs.listStatus(d).toSeq.filter(_.isFile).map(_.getPath)
-        .filter(_.getName.startsWith("e_"))
-      catch { case _: java.io.FileNotFoundException => Nil }
-    }
-    var seq = startSeq
-    (rootEntries ++ tEntries)
-      .sortBy(p => (legacyEntryTs(p.getName), p.getName)).foreach { p =>
-        // Advance seq ONLY when the rename lands ("the entry itself IS the
-        // allocation"): a failed rename (the reader's legacy retention
-        // prune deletes legacy entries without the seq claim, racing this
-        // migrator) would otherwise permanently consume a seq with no
-        // entry, and the reader's contiguous floor stalls below that gap
-        // until the bucket is retention-pruned.
-        val ts = math.max(legacyEntryTs(p.getName), 0L)
-        val next = seq + 1
-        val dest = new Path(logDir, streamLogBucketOf(next))
-        val renamed =
-          try {
-            fs.mkdirs(dest)
-            fs.rename(p, new Path(dest, streamEntryName(next, ts)))
-          } catch { case _: java.io.IOException => false } // racer/pruned
-        if (renamed) seq = next
-      }
-    tDirs.foreach { d =>
-      try fs.delete(d, false) // non-recursive: only if emptied
-      catch { case _: java.io.IOException => () }
-    }
-    seq
-  }
 
   /** Whole-bucket retention GC, lowest bucket first, stopping at the
     * first bucket holding a young entry (buckets fill in seq order, so
@@ -4289,8 +4031,7 @@ object Hypertable {
     * sequence's bucket. The allocation protocol (all inside the
     * `.seq_claim` exclusive hold):
     *
-    *  1. list the log root's `s*` buckets; fold any legacy layout in
-    *     ([[migrateLegacyStreamEntries]], one-time);
+    *  1. list the log root's `s*` buckets;
     *  2. `seq = maxVisibleSeq + 1` — the entry itself IS the allocation
     *     (no counter file to clobber);
     *  3. write the entry (tmp+rename, atomic appearance);
@@ -4400,16 +4141,7 @@ object Hypertable {
         // heartbeated — a leaked one from a thrown exception would block
         // every other appender for this JVM's lifetime)
         try {
-          val seq = cached.getOrElse {
-            val top =
-              try fs.listStatus(logDir).toSeq
-              catch { case _: java.io.FileNotFoundException => Seq.empty }
-            val sIdxs = top.filter(_.isDirectory)
-              .map(s => streamBucketIdxOf(s.getPath.getName)).filter(_ >= 0)
-            migrateLegacyStreamEntries(fs, logDir, top,
-              math.max(maxStreamSeq(fs, logDir, sIdxs),
-                readStreamHw(fs, logDir))) + 1
-          }
+          val seq = cached.getOrElse(streamLogHighSeq(fs, tablePath) + 1)
           writeSmallFile(fs,
             new Path(new Path(logDir, streamLogBucketOf(seq)),
               streamEntryName(seq, System.currentTimeMillis())),

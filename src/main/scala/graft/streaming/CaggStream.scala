@@ -31,39 +31,21 @@ object CaggStream {
       .start()
   }
 
-  /** [[attach]] fed directly from the cagg's raw hypertable, surfacing the
-    * raw stream's start state ([[graft.sources.Hypertable.StreamStartInfo]])
-    * so a streaming-cagg pipeline can ASSERT its exactly-once start —
-    * `filtered` (dead-at-start filter engaged), `deadFiles`, `degraded` —
-    * instead of scraping driver logs, the same introspection
-    * `readStreamWithInfo` gives raw-table consumers.
-    */
-  def attachFromHypertable(cagg: ContinuousAggregate,
-      ht: graft.sources.Hypertable, checkpointLocation: String,
-      maxFilesPerTrigger: Int = 1000, refreshEachBatch: Boolean = false)
-      : (StreamingQuery, graft.sources.Hypertable.StreamStartInfo) = {
-    val (df, info) = ht.readStreamWithInfo(maxFilesPerTrigger)
-    // the raw stream surfaces physical partition columns (`_chunk`,
-    // `_space*`) — ingest re-routes rows itself, so strip them
-    val clean = df.drop("_chunk")
-      .drop(df.columns.filter(_.startsWith("_space")).toIndexedSeq: _*)
-    (attach(cagg, clean, checkpointLocation, refreshEachBatch), info)
-  }
-
-  /** [[attachFromHypertable]] over the CATALOG-BACKED source
-    * ([[graft.sources.Hypertable.readStreamCatalog]]): per-trigger
-    * discovery tails the stream log (O(new files), no re-listing), dead
-    * generations are excluded by construction (no StreamStartInfo needed
-    * — there is no dead-set filter to assert), and REWRITES never
+  /** [[attach]] fed directly from the cagg's raw hypertable through
+    * [[graft.sources.Hypertable.readStream]]: per-trigger discovery tails
+    * the stream log (O(new files), no re-listing), the start snapshot
+    * excludes dead generations by construction, and REWRITES never
     * re-emit, so the raw table's compression/retention policies can run
     * while the cagg pipeline streams — the shape a standing 100 TB
     * ingest actually needs.
     */
-  def attachFromHypertableCatalog(cagg: ContinuousAggregate,
+  def attachFromHypertable(cagg: ContinuousAggregate,
       ht: graft.sources.Hypertable, checkpointLocation: String,
       startingPosition: String = "earliest",
       refreshEachBatch: Boolean = false): StreamingQuery = {
-    val df = ht.readStreamCatalog(startingPosition = startingPosition)
+    val df = ht.readStream(startingPosition = startingPosition)
+    // the raw stream surfaces physical partition columns (`_chunk`,
+    // `_space*`) — ingest re-routes rows itself, so strip them
     val clean = df.drop("_chunk")
       .drop(df.columns.filter(_.startsWith("_space")).toIndexedSeq: _*)
     attach(cagg, clean, checkpointLocation, refreshEachBatch)

@@ -6,8 +6,9 @@ import org.apache.spark.sql.types.StructType
 
 import graft.sources.Hypertable
 
-/** Catalog/log plumbing for the catalog-backed streaming source
-  * ([[org.apache.spark.sql.graftstream.GraftStreamSource]] — that class
+/** Catalog/log plumbing for the hypertable streaming source
+  * ([[Hypertable.readStream]] /
+  * [[org.apache.spark.sql.graftstream.GraftStreamSource]] — that class
   * lives under the `org.apache.spark.sql` package tree for access to
   * Spark's `private[sql]` V1 streaming SPI; everything graft-specific is
   * HERE, where `private[graft]` members are reachable).
@@ -31,11 +32,10 @@ import graft.sources.Hypertable
   * reader actually processed). The one-time
   * initial snapshot (earliest start) enumerates live chunks from the
   * MANIFEST — dead/graced generations and tombstoned dirs are never
-  * listed, so the dead-at-start filtering readStream needs a file-path
-  * blocklist for comes free here.
+  * listed, so a stream started inside a GC grace window needs no
+  * dead-file filter.
   * Rewrites (compress/merge/DML) never appear in the log, so their
-  * re-encoded files never re-emit — a STRONGER contract than the
-  * file-tailing append-only one (readStream's scaladoc).
+  * re-encoded files never re-emit.
   */
 object CatalogStreamCore {
 
@@ -61,14 +61,11 @@ object CatalogStreamCore {
   def enableLog(spark: SparkSession, tablePath: String): Unit =
     Hypertable.enableStreamLog(fsOf(spark, tablePath), tablePath)
 
-  /** (output schema, relation schema, partition column names). The
-    * relation schema feeds the per-root parquet relation (includes the
-    * `_gen` physical column on gen layouts); the output schema is what
-    * the stream emits (matches `readStream`: data + `_chunk` [+ `_space`],
-    * no `_gen`).
-    */
   /** (output schema, relation schema, partition cols, the opened handle —
     * reuse it for the snapshot; each fresh open re-resolves the manifest).
+    * The relation schema feeds the per-root parquet relation (includes
+    * the `_gen` physical column on gen layouts); the output schema is
+    * what the stream emits: data + `_chunk` [+ `_space`], no `_gen`.
     */
   def schemas(spark: SparkSession, tablePath: String,
       userSchema: Option[StructType], handle: Option[Hypertable] = None)
@@ -89,7 +86,7 @@ object CatalogStreamCore {
         val cs = ht.showChunks()
         require(cs.nonEmpty,
           "hypertable has no chunks yet — pass an explicit schema to " +
-            "readStreamCatalog (parquet cannot infer one from an empty table)")
+            "readStream (parquet cannot infer one from an empty table)")
         val c = new Path(cs.head.path)
         val root = Hypertable.storageRootOf(c)
         val rel = spark.read.option("basePath", root.toString)
@@ -100,6 +97,12 @@ object CatalogStreamCore {
         (out, rel, parts, ht)
     }
   }
+
+  /** The log's highest allocated seq (-1 when empty): a fresh stream's
+    * starting floor, read before [[snapshotFiles]].
+    */
+  def logHighSeq(spark: SparkSession, tablePath: String): Long =
+    Hypertable.streamLogHighSeq(fsOf(spark, tablePath), tablePath)
 
   /** One-time initial snapshot: every LIVE chunk's data files, resolved
     * from the manifest (graced/tombstoned generations never listed) —
@@ -146,14 +149,10 @@ object CatalogStreamCore {
     * buckets are descended into. Within a listed bucket, entries with
     * seq ≤ floorSeq or in `processedSeqs` are skipped.
     *
-    * Round 13 DELETED the legacy reader branches (root-flat round-10
-    * entries, `t<hour>` round-11 buckets — re-listed every pass with
-    * name-keyed dedup): the fold-on-first-write
-    * ([[Hypertable]].migrateLegacyStreamEntries, shipped round 12) moves
-    * any legacy entries into seq buckets before a new entry can land, a
-    * NEW checkpoint's initial snapshot covers their files regardless, and
-    * retention ages out what remains — the reader-first upgrade ordering
-    * (SCALE.md §16) already governs the mixed-version window.
+    * Only `s<idx>` buckets are read: pre-sequence log layouts (root-flat
+    * `e_<ts>_*` entries, `t<hour>` buckets) are ignored by readers and
+    * writers alike; a NEW checkpoint's initial snapshot covers their
+    * files.
     */
   def newLogEntries(spark: SparkSession, tablePath: String,
       floorSeq: Long, processedSeqs: java.util.Set[java.lang.Long])

@@ -53,11 +53,12 @@ import graft.streaming.CatalogStreamCore
   *    retained log once.
   *  - rewrites (compress/decompress/merge/split/DML) never enter the log,
   *    so their re-encoded files never re-emit — streams and maintenance
-  *    can overlap, unlike the file-tailing `readStream` contract.
+  *    can overlap (on flat tables, only past the files a checkpoint
+  *    replay still reads; see `Hypertable.readStream`).
   *  - each getOffset drains EVERYTHING new since the last trigger into one
-  *    batch (`maxFilesPerTrigger` is accepted but advisory here — batch
-  *    size is bounded by arrival rate between triggers; AvailableNow
-  *    latches a single target offset, which this satisfies in one pass).
+  *    batch — batch size is bounded by arrival rate between triggers;
+  *    AvailableNow latches a single target offset, which this satisfies
+  *    in one pass.
   *  - a stream down longer than `spark.graft.stream.logRetainMs` (7 days
   *    default) can miss pruned entries — restart with a fresh checkpoint
   *    to resnapshot.
@@ -139,7 +140,7 @@ class GraftStreamSource(spark: classic.SparkSession, table: String,
       CatalogStreamCore.floorSkewMs(spark))
 
   // make sure writers start logging from now on, even before the first
-  // trigger (readStreamCatalog also enables eagerly at plan time)
+  // trigger (Hypertable.readStream also enables eagerly at plan time)
   CatalogStreamCore.enableLog(spark, table)
 
   // one reader-side GC + journal-heal pass at START (round-12 advisor
@@ -223,27 +224,38 @@ class GraftStreamSource(spark: classic.SparkSession, table: String,
     // snapshot decision is persisted: a `latest` start's skipped baseline
     // must survive restarts as the seen-set floor, or a restart would
     // re-mark post-start appends as "pre-start" and silently drop them.
+    //
+    // The floor starts at the log's high seq, read BEFORE the snapshot
+    // listing: every entry at or below it names files committed before
+    // the listing, so the snapshot stands in for them — live files are in
+    // it, and files since rewritten or dropped (still on disk through a
+    // gen layout's grace window) must not be replayed from an older
+    // stream's entries. The marker carries that floor for restarts that
+    // come before any persisted batch.
     val snapMarker = new Path(metaDir, "snapshot")
     if (latestCompact.isEmpty && existing.isEmpty &&
         !metaFs.exists(snapMarker)) {
+      floorSeq = CatalogStreamCore.logHighSeq(spark, table)
       val snap = CatalogStreamCore.snapshotFiles(spark, table, handle)
       if (startingPosition == "latest") {
-        CatalogStreamCore.writeText(metaFs, snapMarker, snap.mkString("\n"))
+        CatalogStreamCore.writeText(metaFs, snapMarker,
+          (s"#seq=$floorSeq" +: snap).mkString("\n"))
         val now = System.currentTimeMillis()
         snap.foreach(f => seen.put(f, now))
       } else {
-        CatalogStreamCore.writeText(metaFs, snapMarker, "")
+        // batch 0 before the marker: a crash between the two leaves a
+        // batch (no re-snapshot, nothing lost), never a bare marker
         if (snap.nonEmpty) { persistBatch(0L, snap); batchId = 0L }
+        CatalogStreamCore.writeText(metaFs, snapMarker, s"#seq=$floorSeq")
       }
     } else if (metaFs.exists(snapMarker)) {
-      // `latest`-start baseline: files of the pre-start snapshot. Their
-      // log entries (if any) predate the stream, so age is irrelevant —
-      // pin with current time and let compaction age them out with the
-      // log's own retention.
-      val now = System.currentTimeMillis()
-      try CatalogStreamCore.readText(metaFs, snapMarker)
-        .linesIterator.filter(_.nonEmpty).foreach(f => seen.put(f, now))
+      // start floor, plus the `latest`-start baseline: files of the
+      // pre-start snapshot. Their log entries (if any) predate the
+      // stream, so age is irrelevant — pin with current time and let
+      // compaction age them out with the log's own retention.
+      try readState(snapMarker, System.currentTimeMillis())
       catch { case _: java.io.IOException => () }
+      processedSeqs.removeIf(_ <= floorSeq)
     }
   }
 

@@ -387,12 +387,12 @@ class CaggSpec extends AnyFunSuite {
     assert(cagg.materialized.collect().toSet === directAgg(ht).collect().toSet)
   }
 
-  test("attachFromHypertable surfaces StreamStartInfo: a q100-shaped " +
-    "pipeline asserts its exactly-once start, dead files excluded") {
+  test("attachFromHypertable: a q100-shaped pipeline started during a GC " +
+    "grace window ingests each row exactly once, dead files excluded") {
     import graft.sources.Columnstore
     // FEED table with a rewrite history: a compressed chunk leaves its
-    // superseded generation grace-retained — a raw glob at stream start
-    // would emit those rows TWICE into the cagg
+    // superseded generation grace-retained — a stream start that listed
+    // it would emit those rows TWICE into the cagg
     val dir = Files.createTempDirectory("graft_cagg_sinfo").toString
     val feed = Hypertable.create(spark, s"$dir/feed", "ts",
       chunkWidth = "7 days", catalog = "table")
@@ -403,16 +403,10 @@ class CaggSpec extends AnyFunSuite {
     val ht = Hypertable.create(spark, s"$dir/ht", "ts", chunkWidth = "7 days")
     val cagg = ContinuousAggregate.create(spark, s"$dir/cagg", ht, defn)
     val ckpt = Files.createTempDirectory("graft_ckpt_sinfo").toString
-    val (q, info) = CaggStream.attachFromHypertable(cagg, feed, ckpt,
+    val q = CaggStream.attachFromHypertable(cagg, feed, ckpt,
       refreshEachBatch = true)
-    try {
-      // the pipeline can ASSERT its exactly-once start instead of
-      // scraping logs: the dead-at-start filter engaged, non-degraded
-      assert(info.filtered && !info.degraded)
-      assert(info.deadFiles > 0,
-        "the compressed chunk's superseded generation must be in the dead set")
-      q.processAllAvailable()
-    } finally q.stop()
+    try q.processAllAvailable()
+    finally q.stop()
     // exactly-once in the RESULT: the cagg equals the direct aggregation
     // over the feed — the graced dead generation was not double-ingested
     assert(ht.read().count() === events.count())
@@ -433,12 +427,12 @@ class CaggSpec extends AnyFunSuite {
     feed.write(early)
     val ht = Hypertable.create(spark, s"$dir/ht", "ts", chunkWidth = "7 days")
     val cagg = ContinuousAggregate.create(spark, s"$dir/cagg", ht, defn)
-    val q = CaggStream.attachFromHypertableCatalog(cagg, feed,
+    val q = CaggStream.attachFromHypertable(cagg, feed,
       Files.createTempDirectory("graft_ckpt_catsrc").toString,
       refreshEachBatch = true)
     try {
       q.processAllAvailable()
-      // maintenance on the FEED while the stream runs: the file-tailing
+      // maintenance on the FEED while the stream runs: a file-tailing
       // source would re-emit the compressed chunk's rows into the cagg
       Columnstore.compressChunk(spark, feed.showChunks().head.path,
         Columnstore.Options(orderBy = Seq("ts")))

@@ -358,7 +358,7 @@ class RealProcessIsolationSpec extends AnyFunSuite {
   }
 
   test("catalog stream across processes: this process TAILS " +
-    "readStreamCatalog while a second process appends — every batch " +
+    "readStream while a second process appends — every batch " +
     "arrives exactly once") {
     // the stream log's whole point is cross-process tailing: the child
     // appender writes the log entries, this process's source consumes
@@ -368,7 +368,7 @@ class RealProcessIsolationSpec extends AnyFunSuite {
       chunkWidth = "7 days", catalog = "table")
     ht.write(events.where(pmod(col("event_id"), lit(5)) === 4).limit(1))
     Hypertable.releaseMutatorLease(spark, s"$dir/ht")
-    val stream = ht.readStreamCatalog() // enables the log BEFORE the child
+    val stream = ht.readStream() // enables the log BEFORE the child
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     val q = stream.writeStream
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
@@ -405,7 +405,7 @@ class RealProcessIsolationSpec extends AnyFunSuite {
       chunkWidth = "7 days", catalog = "table")
     ht.write(events.where(pmod(col("event_id"), lit(5)) === 4))
     Hypertable.releaseMutatorLease(spark, s"$dir/ht")
-    val stream = ht.readStreamCatalog() // enables the log BEFORE the children
+    val stream = ht.readStream() // enables the log BEFORE the children
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     val q = stream.writeStream
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>

@@ -260,6 +260,16 @@ class TrainingOpsSpec extends AnyFunSuite {
     }
   }
 
+  test("lshCandidatePairs: an id repeated in the input yields no self-pair") {
+    val base = docs.where($"doc_id" < 50)
+    val twice = base.unionByName(base.where($"doc_id" === 0))
+    val pairs = Dedup.lshCandidatePairs(twice, "doc_id", "text")
+    assert(pairs.where($"doc_id_a" === $"doc_id_b").isEmpty,
+      "a duplicated id must not pair with itself")
+    assert(pairs.collect().toSet ===
+      Dedup.lshCandidatePairs(base, "doc_id", "text").collect().toSet)
+  }
+
   test("lshPairs matches brute-force pairs exactly and plans as an equi-join") {
     val emb = Tables.table(spark, "/root/testdata/sf0.001", "embeddings")
     val lsh = Similarity.lshPairs(emb, "vec_id", "embedding", 0.45)

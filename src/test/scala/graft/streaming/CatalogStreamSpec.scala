@@ -9,8 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.{Columnstore, Hypertable}
 import graft.Tables
 
-/** [[Hypertable.readStreamCatalog]] — the catalog-backed streaming source
-  * (GraftStreamSource): per-trigger discovery tails `_graft_stream_log/`
+/** [[Hypertable.readStream]]'s stream-log mechanics (GraftStreamSource):
+  * per-trigger discovery tails `_graft_stream_log/`
   * entries (O(new files), not FileStreamSource's O(all files) re-listing),
   * the initial snapshot resolves from the manifest (dead generations
   * excluded by construction), and REWRITES never re-emit — maintenance
@@ -25,7 +25,7 @@ class CatalogStreamSpec extends AnyFunSuite {
   private def drainTo(ht: Hypertable, ckpt: String,
       seen: java.util.Queue[Long], sawCols: StringBuilder = new StringBuilder,
       startingPosition: String = "earliest"): Unit = {
-    val q = ht.readStreamCatalog(startingPosition = startingPosition)
+    val q = ht.readStream(startingPosition = startingPosition)
       .writeStream
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
         if (sawCols.isEmpty) { sawCols ++= df.columns.mkString(","); () }
@@ -50,7 +50,7 @@ class CatalogStreamSpec extends AnyFunSuite {
     val ckpt = s"$dir/ckpt"
     drainTo(ht, ckpt, seen, cols)
     assert(cols.toString.contains("_chunk"),
-      s"stream must surface the partition column like readStream: $cols")
+      s"stream must surface the partition column: $cols")
     assert(!cols.toString.contains("_gen"))
     assert(seen.toArray(Array.empty[java.lang.Long]).map(_.toLong).sorted.toSeq
       === early.select("event_id").collect().map(_.getLong(0)).sorted.toSeq)
@@ -92,8 +92,8 @@ class CatalogStreamSpec extends AnyFunSuite {
     drainTo(ht, ckpt, seen)
     val afterFirst = seen.size
     // rewrite machinery between drains: every one of these produces NEW
-    // part files whose rows were already delivered — the file-tailing
-    // readStream would re-emit them all; the catalog source must not
+    // part files whose rows were already delivered — a file-tailing
+    // source would re-emit them all; the log tail must not
     val opts = Columnstore.Options(orderBy = Seq("ts"))
     val cs = ht.showChunks().sortBy(_.startMicros)
     Columnstore.compressChunk(spark, cs.head.path, opts)
@@ -170,7 +170,7 @@ class CatalogStreamSpec extends AnyFunSuite {
         events.where(pmod(col("event_id"), lit(5)) === 0)
           .select("event_id").collect().map(_.getLong(0)).toIndexedSeq: _*)
       val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-      val q = ht.readStreamCatalog()
+      val q = ht.readStream()
         .writeStream
         .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
           df.select("event_id").collect().foreach(r => seen.add(r.getLong(0)))
@@ -317,9 +317,8 @@ class CatalogStreamSpec extends AnyFunSuite {
   }
 
   test("seq-bucketed log layout: entries land in s<seq/512> subdirs with " +
-    "consecutive seqs; a root-flat legacy entry is ignored by the reader " +
-    "(round 13 deleted the legacy branches — fold-on-write owns legacy " +
-    "delivery) and folded by the next write") {
+    "consecutive seqs; a root-flat pre-sequence entry is ignored by reader " +
+    "and writer") {
     val dir = Files.createTempDirectory("graft_catstream_bucket").toString
     val ht = Hypertable.create(spark, s"$dir/ht", "ts",
       chunkWidth = "7 days", catalog = "table")
@@ -341,9 +340,8 @@ class CatalogStreamSpec extends AnyFunSuite {
       Hypertable.streamEntrySeq(st.getPath.getName)).sorted.toSeq
     assert(seqs === (0L until seqs.size).toSeq,
       s"verified entries must be consecutive from 0: $seqs")
-    // a legacy (pre-seq) flat entry with the SAME file list: the reader
-    // IGNORES it (its branches were deleted round 13); the next write
-    // folds it into a seq bucket, where path-dedup absorbs the overlap
+    // a pre-sequence root-flat entry with the SAME file list: only seq
+    // buckets are read or allocated from, so it changes nothing
     val body = graft.streaming.CatalogStreamCore.readText(fs,
       entries.last.getPath)
     graft.streaming.CatalogStreamCore.writeText(fs,
@@ -352,19 +350,22 @@ class CatalogStreamSpec extends AnyFunSuite {
     drainTo(ht, ckpt, seen)
     assert(fs.listStatus(logDir).exists(s =>
       s.isFile && s.getPath.getName.startsWith("e_")),
-      "the reader must leave the legacy entry for the fold, not consume it")
-    // the fold needs a fresh-listing write: drop any held claim first
+      "the reader must not consume a pre-sequence entry")
+    // a fresh-listing write (no held claim) allocates the next seq from
+    // the buckets alone
     spark.conf.set("spark.graft.stream.seqClaimHoldMs", "0")
     try ht.write(late.limit(1)
       .withColumn("event_id", col("event_id") + 2000000))
     finally spark.conf.unset("spark.graft.stream.seqClaimHoldMs")
-    assert(!fs.listStatus(logDir).exists(s =>
-      s.isFile && s.getPath.getName.startsWith("e_")),
-      "the next write must fold the legacy entry into a seq bucket")
+    val seqsAfter = fs.listStatus(logDir).filter(s =>
+        s.isDirectory && Hypertable.streamBucketIdxOf(s.getPath.getName) >= 0)
+      .flatMap(b => fs.listStatus(b.getPath))
+      .map(st => Hypertable.streamEntrySeq(st.getPath.getName)).sorted.toSeq
+    assert(seqsAfter === (0L to seqs.size.toLong).toSeq,
+      s"the next entry must take the next seq: $seqsAfter")
     drainTo(ht, ckpt, seen)
     val got = seen.toArray(Array.empty[java.lang.Long]).map(_.toLong)
-    assert(got.length === got.distinct.length,
-      "folded legacy-entry overlap must dedup by path")
+    assert(got.length === got.distinct.length, "rows re-emitted")
     assert(got.sorted.toSeq === (events.select("event_id").collect()
       .map(_.getLong(0)).toSeq :+
       (late.select("event_id").limit(1).head().getLong(0) + 2000000))
@@ -401,60 +402,6 @@ class CatalogStreamSpec extends AnyFunSuite {
     assert(got.sorted.toSeq === events.select("event_id").collect()
       .map(_.getLong(0)).sorted.toSeq,
       "a clock-skewed writer's batch was floored out of the stream")
-  }
-
-  test("legacy layouts fold into seq buckets on the FIRST write (round-11 " +
-    "verdict item 4): the root and t<hour> dirs empty out, overlapping " +
-    "migrated entries dedup by path, nothing is lost") {
-    val dir = Files.createTempDirectory("graft_catstream_migrate").toString
-    val ht = Hypertable.create(spark, s"$dir/ht", "ts",
-      chunkWidth = "7 days", catalog = "table")
-    // per-batch claims: this test retro-writes LEGACY entries between two
-    // writes — production legacy state predates any held claim (the fold
-    // happens on a claim session's first, fresh-listing write)
-    spark.conf.set("spark.graft.stream.seqClaimHoldMs", "0")
-    try {
-    def slice(k: Int) = events.where(pmod(col("event_id"), lit(3)) === k)
-    ht.write(slice(0))
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    val ckpt = s"$dir/ckpt"
-    drainTo(ht, ckpt, seen) // snapshot covers slice 0; log enabled
-    // recreate the pre-round-12 on-disk state: write slice 1 (one v2
-    // entry), then demote that entry into BOTH legacy layouts — a
-    // root-flat round-10 entry and a t<hour> round-11 bucket entry with
-    // the same file list (concurrent-appender overlap was legal then)
-    ht.write(slice(1))
-    val fs = fsOf(s"$dir/ht")
-    val logDir = logDirOf(s"$dir/ht")
-    val v2entry = fs.listStatus(logDir)
-      .filter(d => d.isDirectory &&
-        Hypertable.streamBucketIdxOf(d.getPath.getName) >= 0)
-      .flatMap(d => fs.listStatus(d.getPath)).filter(_.isFile)
-      .map(_.getPath).head
-    val body = graft.streaming.CatalogStreamCore.readText(fs, v2entry)
-    val now = System.currentTimeMillis()
-    graft.streaming.CatalogStreamCore.writeText(fs,
-      new org.apache.hadoop.fs.Path(logDir, s"e_${now}_r10leg"), body)
-    graft.streaming.CatalogStreamCore.writeText(fs,
-      new org.apache.hadoop.fs.Path(logDir,
-        s"t${now / Hypertable.STREAM_LOG_BUCKET_MS}/e_${now}_r11leg"), body)
-    fs.delete(v2entry, false)
-    fs.delete(new org.apache.hadoop.fs.Path(logDir, "_hw"), false)
-    // the first round-12 write migrates, then appends its own entry
-    ht.write(slice(2))
-    val top = fs.listStatus(logDir).toSeq
-    assert(!top.exists(s => s.isFile && s.getPath.getName.startsWith("e_")),
-      "root-flat legacy entries must fold into seq buckets on first write")
-    assert(!top.exists(s => s.isDirectory && s.getPath.getName.startsWith("t") &&
-      s.getPath.getName.drop(1).forall(_.isDigit)),
-      "emptied t<hour> dirs must be removed")
-    drainTo(ht, ckpt, seen)
-    val got = seen.toArray(Array.empty[java.lang.Long]).map(_.toLong)
-    assert(got.length === got.distinct.length,
-      "migrated twin entries must dedup by path")
-    assert(got.sorted.toSeq === events.select("event_id").collect()
-      .map(_.getLong(0)).sorted.toSeq)
-    } finally spark.conf.unset("spark.graft.stream.seqClaimHoldMs")
   }
 
   test("restart reaps compaction-crash orphans: b/c files at/below the " +
@@ -653,7 +600,7 @@ class CatalogStreamSpec extends AnyFunSuite {
       def slice(k: Int) = events.where(pmod(col("event_id"), lit(9)) === k)
       ht.write(slice(0))
       val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-      val q = ht.readStreamCatalog()
+      val q = ht.readStream()
         .writeStream
         .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
           df.select("event_id").collect().foreach(r => seen.add(r.getLong(0)))
@@ -866,7 +813,7 @@ class CatalogStreamSpec extends AnyFunSuite {
       events.schema.fields :+
         org.apache.spark.sql.types.StructField("_chunk",
           org.apache.spark.sql.types.LongType))
-    val stream = ht.readStreamCatalog(schema = Some(withChunk))
+    val stream = ht.readStream(schema = Some(withChunk))
     ht.write(events.limit(50))
     val q = stream.writeStream.format("memory").queryName("cat_empty_sink")
       .trigger(Trigger.AvailableNow()).start()
