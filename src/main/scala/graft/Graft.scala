@@ -12,6 +12,12 @@ object Graft {
   /** Register graft SQL functions + optimizer rules on an existing
     * session. Idempotent. (New sessions can instead be built with
     * `withExtensions(new GraftExtensions)` / `spark.sql.extensions`.)
+    *
+    * Physical rules are not registered here: Spark accepts post-planner
+    * rules only through `SparkSessionExtensions`, so a session that only
+    * ran `init` does not plan small hypertable scans as one task
+    * ([[graft.plans.SmallScan]]). [[session]], [[toolSession]] and
+    * `graft.Verify` build with the extensions and do.
     */
   def init(spark: SparkSession): SparkSession = {
     val reg = spark.sessionState.functionRegistry

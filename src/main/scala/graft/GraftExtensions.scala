@@ -12,7 +12,9 @@ import graft.expressions._
   * of the reference's planner-hook installation
   * (`src/planner/planner.c:2165-2168`): SQL functions plus the
   * sort-transform optimizer rule land on every session built with it.
-  * [[Graft.init]] applies the same registrations to an existing session.
+  * [[Graft.init]] applies the same registrations to an existing session,
+  * except the physical [[graft.plans.SmallScan]] rule, which Spark accepts
+  * only here.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -40,6 +42,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => graft.plans.CaggRewrite)
     ext.injectOptimizerRule(_ => graft.plans.ChunkExclusion)
     ext.injectPlannerStrategy(_ => graft.plans.GraftStrategies)
+    // physical: small hypertable scans plan as one task (AQE plans only)
+    ext.injectQueryPostPlannerStrategyRule(graft.plans.SmallScan)
   }
 }
 

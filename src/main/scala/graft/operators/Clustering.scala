@@ -59,23 +59,24 @@ object Clustering {
 
     var converged = false
     var round = 0
-    // edge count of the current set — a cheap scan of checkpointed blocks.
-    // Used twice: to dispatch tiny graphs to the driver, and to GATE the
-    // exact convergence diff below (different counts cannot be equal sets,
-    // so most rounds skip the full-outer-join check entirely).
-    var eCount = e.count()
     // Size-gated dispatch (same pattern as Similarity.blockedPairs and the
     // SkipScan dictionary collect): a deduped edge list under the threshold
     // (default 100k edges ≈ 1.6 MB) is union-find on the driver in
     // milliseconds, where the iterative loop would pay ~10 scheduler
     // round-trips for the same answer. At 100 TB the near-dup edge list is
     // billions of rows and takes the distributed loop; the threshold bounds
-    // driver memory explicitly. Results are bit-identical (specs assert).
-    if (eCount <= driverThreshold) {
-      val out = driverUnionFind(e)
+    // driver memory explicitly: one capped collect both decides and feeds
+    // the small arm. Results are bit-identical (specs assert).
+    val head = e.limit((driverThreshold + 1).min(Int.MaxValue).toInt).collect()
+    if (head.length <= driverThreshold) {
+      val out = driverUnionFind(head, e)
       eBlocks.unpersist(blocking = false)
       return out
     }
+    // edge count of the current set — a cheap scan of checkpointed blocks,
+    // GATING the exact convergence diff below (different counts cannot be
+    // equal sets, so most rounds skip the full-outer-join check entirely)
+    var eCount = e.count()
     while (!converged && round < maxRounds) {
       // large-star(u): m = min(N(u) ∪ {u}); connect every neighbor w > u
       // to m. Neighborhoods come from the symmetric edge view; the min is
@@ -126,12 +127,14 @@ object Clustering {
       .distinct()
   }
 
-  /** Driver-side min-id union-find over an already-canonicalized (u < v,
-    * deduped) edge list — the small-graph arm of [[connectedComponents]]'s
-    * dispatch. Same contract as the distributed loop: one row per node
-    * appearing in the edges, component = minimum reachable id.
+  /** Driver-side min-id union-find over the collected `rows` of an
+    * already-canonicalized (u < v, deduped) edge list `e` — the small-graph
+    * arm of [[connectedComponents]]'s dispatch. Same contract as the
+    * distributed loop: one row per node appearing in the edges,
+    * component = minimum reachable id.
     */
-  private def driverUnionFind(e: DataFrame): DataFrame = {
+  private def driverUnionFind(rows: Array[org.apache.spark.sql.Row],
+      e: DataFrame): DataFrame = {
     val dt = e.schema("u").dataType
     def lt(a: Any, b: Any): Boolean = (a, b) match {
       case (x: java.lang.Long, y: java.lang.Long) => x < y
@@ -148,7 +151,6 @@ object Clustering {
       while (cur != root) { val nxt = parent.get(cur); parent.put(cur, root); cur = nxt }
       root
     }
-    val rows = e.collect()
     rows.foreach { r =>
       val (ra, rb) = (find(r.get(0)), find(r.get(1)))
       if (ra != rb) { if (lt(ra, rb)) parent.put(rb, ra) else parent.put(ra, rb) }

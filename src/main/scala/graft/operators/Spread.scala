@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Parallelism guard for heavy per-row compute over small inputs (guide
   * §2.5 "input skew": one small file = one scan task; §1.2 fix the
@@ -23,8 +23,7 @@ import org.apache.spark.sql.{Column, DataFrame}
   * through: never insert a full-corpus shuffle on a guess.
   */
 private[graft] object Spread {
-  def smallInputBytes(df: DataFrame): Long = {
-    val spark = df.sparkSession
+  def smallInputBytes(spark: SparkSession): Long = {
     val conf = spark.sessionState.conf
     conf.getConfString("spark.graft.spread.smallInputBytes",
       (spark.sparkContext.defaultParallelism.toLong *
@@ -33,7 +32,7 @@ private[graft] object Spread {
 
   def byKey(df: DataFrame, key: Column): DataFrame = {
     val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (est <= BigInt(smallInputBytes(df)))
+    if (est <= BigInt(smallInputBytes(df.sparkSession)))
       df.repartition(df.sparkSession.sparkContext.defaultParallelism, key)
     else df
   }

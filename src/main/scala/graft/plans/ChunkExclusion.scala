@@ -45,33 +45,7 @@ object ChunkExclusion extends Rule[LogicalPlan] {
       case hfs: HadoopFsRelation => hfs.location.rootPaths
       case _                     => return f
     }
-    if (roots.isEmpty) return f
-    // a catalog-driven DIRECT chunk-dir scan (Hypertable.readChunkDirs:
-    // between / whereTimeIn / the realtime live side) has `_chunk=K` dirs
-    // as its roots — map them back to the owning table so exclusion still
-    // narrows FURTHER predicates layered on the pruned scan. All roots
-    // must share one table parent (tablespace-split scans are separate
-    // unioned relations, each matched here on its own root).
-    // a gen-layout scan's roots are `_chunk=K/_gen=N` dirs — one level
-    // deeper than the flat layout's `_chunk=K`; both map to the chunk
-    // dir's parent (the storage root the table registered). A cagg
-    // materialization scan has the same two shapes with the mat store's
-    // column names (`_mat_chunk=K[/_mat_gen=TS]` — round 12's
-    // grace-retained generations).
-    def chunkRootOf(r: org.apache.hadoop.fs.Path): Option[org.apache.hadoop.fs.Path] = {
-      val cd = if (r.getName.startsWith("_gen=") ||
-        r.getName.startsWith("_mat_gen=")) r.getParent else r
-      if (cd != null && (cd.getName.startsWith("_chunk=") ||
-          cd.getName.startsWith("_mat_chunk="))) Option(cd.getParent)
-      else None
-    }
-    val reg = (if (roots.size == 1) Hypertable.lookupExclusion(roots.head.toString)
-      else None).orElse {
-        val parents = roots.flatMap(chunkRootOf).distinct
-        if (parents.size == 1 && roots.forall(r => chunkRootOf(r).isDefined))
-          Hypertable.lookupExclusion(parents.head.toString)
-        else None
-      }.getOrElse(return f)
+    val reg = registeredTable(roots).getOrElse(return f)
 
     val timeIn = timeFilter(cond, rel, reg)
     val spaceIn = spaceFilter(cond, rel, reg)
@@ -79,6 +53,38 @@ object ChunkExclusion extends Rule[LogicalPlan] {
     if (timeIn.isEmpty && spaceIn.isEmpty && statsIn.isEmpty) return f
     Filter((timeIn.toSeq ++ spaceIn.toSeq ++ statsIn.toSeq :+ cond).reduceLeft(And),
       rel)
+  }
+
+  /** The registered table (hypertable or cagg materialization) a file
+    * scan's roots belong to, or None for a scan graft does not own. A
+    * catalog-driven DIRECT chunk-dir scan (Hypertable.readChunkDirs:
+    * between / whereTimeIn / the realtime live side) has `_chunk=K` dirs
+    * as its roots — they map back to the owning table. All roots must
+    * share one table parent (tablespace-split scans are separate unioned
+    * relations, each matched on its own root). A gen-layout scan's roots
+    * are `_chunk=K/_gen=N` dirs — one level deeper than the flat layout's
+    * `_chunk=K`; both map to the chunk dir's parent (the storage root the
+    * table registered). A cagg materialization scan has the same two
+    * shapes with the mat store's column names (`_mat_chunk=K[/_mat_gen=TS]`
+    * — round 12's grace-retained generations).
+    */
+  private[plans] def registeredTable(roots: Seq[org.apache.hadoop.fs.Path])
+      : Option[Hypertable.ExclusionInfo] = {
+    if (roots.isEmpty) return None
+    def chunkRootOf(r: org.apache.hadoop.fs.Path): Option[org.apache.hadoop.fs.Path] = {
+      val cd = if (r.getName.startsWith("_gen=") ||
+        r.getName.startsWith("_mat_gen=")) r.getParent else r
+      if (cd != null && (cd.getName.startsWith("_chunk=") ||
+          cd.getName.startsWith("_mat_chunk="))) Option(cd.getParent)
+      else None
+    }
+    (if (roots.size == 1) Hypertable.lookupExclusion(roots.head.toString)
+      else None).orElse {
+        val parents = roots.flatMap(chunkRootOf).distinct
+        if (parents.size == 1 && roots.forall(r => chunkRootOf(r).isDefined))
+          Hypertable.lookupExclusion(parents.head.toString)
+        else None
+      }
   }
 
   /** `_chunk IN (...)` from range predicates on chunk-skipping columns —
