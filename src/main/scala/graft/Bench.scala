@@ -26,10 +26,9 @@ object Bench {
     // shared measurement-session config (Graft.toolSession): the fixture
     // tables are SINGLE parquet files, so the 8 MB split default keeps a
     // plain scan-agg parallel (measured: q01 at sf1-equivalent
-    // 1.83 -> 0.74 s, no sf0.1 regression); AQE coalescing knobs stay at
-    // Spark defaults per the measured r13 A/B (size-driven coalescing
-    // traded ~5% on write rows for ~6% against read rows whose
-    // window/sort stages then run single-task). Both env-overridable.
+    // 1.83 -> 0.74 s, no sf0.1 regression); AQE coalescing keeps Spark's
+    // defaults (the r13 A/B: size-driven coalescing traded ~5% on write
+    // rows for ~6% against read rows whose stages then run single-task).
     val spark = Graft.toolSession(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // warm the session (JVM/codegen/parquet-reader init) so the first

@@ -106,26 +106,14 @@ object Graft {
       // permission loading; the r13 nio fast path already removed the
       // checksum cost where it mattered (graft's own metadata files).
       .config("spark.sql.shuffle.partitions", shufflePartitions)
-      // Scan split size, shared with Bench so the bench measures the
-      // library's real default. Spark splits EVERY file larger than this,
-      // not only small tables: a 1 GB file becomes ~128 tasks instead of
-      // ~8 at Spark's 128m default (16x the tasks). The fixture-scale
-      // single-file tables gain a parallel scan-agg from it; deployments
-      // with large files should raise it (the env var, or spark.conf.set:
-      // it is a runtime conf).
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "8m"))
+      // Scan split size, shared with Bench. Spark splits EVERY file larger
+      // than this: a 1 GB file is ~128 tasks instead of ~8 at Spark's 128m
+      // default. Fixture-scale single-file tables gain a parallel scan from
+      // it; deployments with large files raise it (a runtime conf, which
+      // graft.Sizing reads per decision).
+      .config("spark.sql.files.maxPartitionBytes", "8m")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
-      // AQE coalescing knobs, env-overridable (see Bench for the sf0.1
-      // A/B: size-driven coalescing traded write-row gains for read-row
-      // single-task serialization — kept at Spark defaults locally;
-      // clusters that oversize shuffle.partitions flip parallelismFirst
-      // per the optimization guide §2.2/§9 without touching code)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_ADVISORY", "64m"))
       .config("spark.sql.parquet.filterPushdown", "true")
       // INT96 timestamps carry no parquet min/max stats — micros keep
       // row-group skipping and footer-stats queries working on time columns
@@ -142,10 +130,9 @@ object Graft {
   }
 
   /** Shared session builder for the measurement tools (Bench, Profile,
-    * PlanDump): the same [[defaults]] as [[session]] — including the
-    * env-overridable scan-split and AQE knobs — so profiles and plan dumps
-    * are captured under exactly the session configuration the bench
-    * measures.
+    * PlanDump): the same [[defaults]] as [[session]], so profiles and
+    * plan dumps are captured under exactly the session configuration the
+    * bench measures.
     */
   def toolSession(cpus: String): SparkSession =
     init(defaults(SparkSession.builder().master(s"local[$cpus]"), cpus)

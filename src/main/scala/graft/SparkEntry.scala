@@ -1742,7 +1742,10 @@ object SparkEntry {
       catch { case _: Exception =>
         java.nio.file.Files.copy(java.nio.file.Paths.get(s"$dir/events.parquet"), link)
       }
-      val raw = s.readStream.schema(schema).parquet(streamDir.toString)
+      // a clone of `s` whose state width follows the input: 2.02 -> 1.45 s
+      // at sf0.1 against the session's 32 near-empty state stores
+      val ss = Sizing.stateSession(s, fixRel)
+      val raw = ss.readStream.schema(schema).parquet(streamDir.toString)
       val ev =
         if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
           raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -1753,31 +1756,13 @@ object SparkEntry {
           expr("CAST(SUM(CAST(value AS DECIMAL(28,8))) AS DOUBLE)").as("sum_value"))
       val qname = "graft_q62_" + java.util.UUID.randomUUID().toString.replace("-", "")
       val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_q").toString
-      // Stateful-operator width for this FRESH checkpoint, sized to the
-      // input like a scan wave (≈ one state task per input split) instead
-      // of the session shuffle width: the state-partition count is latched
-      // into the checkpoint at first start and each partition pays state
-      // store open/commit/file I/O EVERY micro-batch, so 32 near-empty
-      // stores over a one-split stream are pure fixed cost (measured
-      // 2.02 -> 1.45 s at sf0.1); a 100 TB stream derives the full session
-      // width. Scale-adaptive (plan-estimated bytes), env-overridable;
-      // the session conf is restored right after the latch.
-      val prevSp = s.conf.get("spark.sql.shuffle.partitions")
-      val derivedSp = {
-        val est = fixRel.queryExecution.optimizedPlan.stats.sizeInBytes
-        val split = BigInt(s.sessionState.conf.filesMaxPartitionBytes)
-        ((est + split - 1) / split).max(1).min(BigInt(prevSp.toInt)).toString
-      }
-      s.conf.set("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE_PARTITIONS", derivedSp))
-      val query = try agg.writeStream.format("memory").queryName(qname)
+      agg.writeStream.format("memory").queryName(qname)
         .outputMode("complete")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .option("checkpointLocation", ckpt)
         .start()
-      finally s.conf.set("spark.sql.shuffle.partitions", prevSp)
-      query.awaitTermination()
-      s.table(qname)
+        .awaitTermination()
+      ss.table(qname)
         .select(col("w.start").as("ws"), col("event_type"), col("n"), col("sum_value"))
         .orderBy("ws", "event_type")
     }),

@@ -190,26 +190,24 @@ object Similarity {
     } finally if (cached) train.unpersist()
   }
 
+  private val LocalTrainCells = 1L << 22
+
   /** Driver-local training gate: k-means over a few thousand sampled
     * vectors pays a full Spark job + shuffle PER Lloyd iteration on the
     * distributed path — pure scheduling overhead at that size. When the
-    * sample's cell count (rows × dim) is at or below
-    * `spark.graft.ann.localTrainCells` (default 2²² ≈ 32 MB of doubles —
-    * bounded driver memory by construction, the same budget class as the
-    * centroid/codebook arrays already collected), the vectors are
-    * collected ONCE and iterated in memory; larger samples keep the
-    * one-job-per-iteration distributed loop. Returns None above the gate.
+    * sample's cell count (rows × dim) is at or below [[LocalTrainCells]]
+    * (2²² ≈ 32 MB of doubles — bounded driver memory by construction, the
+    * same budget class as the centroid/codebook arrays already collected),
+    * the vectors are collected ONCE and iterated in memory; larger samples
+    * keep the one-job-per-iteration distributed loop. None above the gate.
     */
   private def localTrainVectors(train: DataFrame, vecCol: String,
       dim: Int): Option[Array[Array[Double]]] = {
-    val spark = train.sparkSession
-    val gate = spark.conf.get("spark.graft.ann.localTrainCells",
-      (1L << 22).toString).toLong
     if (dim <= 0) return None
     // ONE bounded collect decides: fetch at most maxRows+1 vectors — if
     // the limit overflows the sample is too big and the distributed loop
     // runs (the discarded fetch is itself gate-bounded)
-    val maxRows = (gate / dim).toInt
+    val maxRows = (LocalTrainCells / dim).toInt
     if (maxRows <= 0) return None
     val rows = train.select(col(vecCol).cast("array<double>"))
       .limit(maxRows + 1).collect()

@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
+
+import graft.Sizing
 
 /** Parallelism guard for heavy per-row compute over small inputs (guide
   * §2.5 "input skew": one small file = one scan task; §1.2 fix the
@@ -13,27 +15,15 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * at sf0.1.
   *
   * [[byKey]] hash-repartitions by `key` to the session's default
-  * parallelism BEFORE the compute, but only when the plan-estimated input
-  * size is at or below `spark.graft.spread.smallInputBytes` (default:
-  * defaultParallelism × maxPartitionBytes — "smaller than one scan wave",
-  * so the added exchange moves less than every core's first split and is
-  * repaid by the parallel compute). Larger inputs — the 100 TB path,
-  * already thousands of splits — pass through untouched and pay nothing.
-  * Unknown size estimates (Long.MaxValue for RDD-backed frames) also pass
-  * through: never insert a full-corpus shuffle on a guess.
+  * parallelism BEFORE the compute when the input is at most one scan wave
+  * ([[graft.Sizing.waveBytes]]): the exchange then moves less than every
+  * core's first split and the parallel compute repays it. Larger inputs
+  * (the 100 TB path, already thousands of splits) and inputs of unknown
+  * size pass through: never a full-corpus shuffle on a guess.
   */
 private[graft] object Spread {
-  def smallInputBytes(spark: SparkSession): Long = {
-    val conf = spark.sessionState.conf
-    conf.getConfString("spark.graft.spread.smallInputBytes",
-      (spark.sparkContext.defaultParallelism.toLong *
-        conf.filesMaxPartitionBytes).toString).toLong
-  }
-
-  def byKey(df: DataFrame, key: Column): DataFrame = {
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (est <= BigInt(smallInputBytes(df.sparkSession)))
+  def byKey(df: DataFrame, key: Column): DataFrame =
+    if (Sizing.estimate(df).exists(_ <= Sizing.waveBytes(df.sparkSession)))
       df.repartition(df.sparkSession.sparkContext.defaultParallelism, key)
     else df
-  }
 }

@@ -19,9 +19,9 @@ import org.apache.spark.util.SerializableConfiguration
   *    metadata → parquet column statistics in the footer.
   *
   * Footers are read on the EXECUTORS (files are parallelized) once the
-  * file count exceeds `spark.graft.stats.footerLocalThreshold` (default
-  * 32), so this scales to 100 TB tables with millions of files: the
-  * driver only ships paths and collects one (count, min, max) per file.
+  * file count exceeds [[FooterLocalFiles]] (32), so this scales to 100 TB
+  * tables with millions of files: the driver only ships paths and
+  * collects one (count, min, max) per file.
   * Below the threshold the driver reads the footers itself — bounded
   * metadata I/O beats a Spark job's scheduling floor by ~30× there.
   */
@@ -41,23 +41,16 @@ object Stats {
     if (fs.getFileStatus(p).isFile) Seq(path) else walk(p)
   }
 
-  /** Footer map-reduce, scale-adaptive: at or below
-    * `spark.graft.stats.footerLocalThreshold` files (default 32) the
-    * footers are read on the DRIVER — one footer is ~1 ms of metadata
-    * I/O while even an empty Spark job costs tens of ms of scheduling —
-    * above it the file list is parallelized to the executors (the
-    * 100 TB path: the driver ships paths and sees only the merged
-    * value). Driver work stays bounded by the threshold.
+  /** Footers the driver reads itself: one is ~1 ms of metadata I/O, an
+    * empty Spark job tens of ms of scheduling.
     */
-  private[graft] def localThreshold(spark: SparkSession): Int = spark.conf
-    .get("spark.graft.stats.footerLocalThreshold", "32").toInt
+  private[graft] val FooterLocalFiles = 32
 
   private def footerFold[T: scala.reflect.ClassTag](spark: SparkSession,
       files: Seq[String], zero: T)(read: (Configuration, String) => T)(
       merge: (T, T) => T): T = {
     val conf0 = spark.sparkContext.hadoopConfiguration
-    val threshold = localThreshold(spark)
-    if (files.size <= threshold)
+    if (files.size <= FooterLocalFiles)
       files.foldLeft(zero)((acc, f) => merge(acc, read(conf0, f)))
     else {
       val conf = new SerializableConfiguration(conf0)
@@ -280,7 +273,7 @@ object Stats {
     }
     val groups: Map[Int, Seq[(Long, Long)]] =
       (if (files.isEmpty) Seq.empty[(Int, (Long, Long))]
-      else if (files.size <= localThreshold(ht.spark))
+      else if (files.size <= FooterLocalFiles)
         files.flatMap(perFile(ht.spark.sparkContext.hadoopConfiguration, _))
       else ht.spark.sparkContext
         .parallelize(files, math.max(1, math.min(files.size, 64)))

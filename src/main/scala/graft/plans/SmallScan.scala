@@ -37,7 +37,7 @@ private[graft] case class SmallInput(bytes: Long, files: Long) {
   *    default): Spark's own estimate of the bytes scannable in the time
   *    one file open takes, so splitting them cannot buy back a task;
   *  - Σ(length + openCost) fits in one scan wave,
-  *    [[graft.operators.Spread.smallInputBytes]]: many tiny files keep
+  *    [[graft.Sizing.waveBytes]]: many tiny files keep
   *    their splits, since their opens are the cost.
   *
   * Only scans graft owns are touched, resolved the way [[ChunkExclusion]]
@@ -57,7 +57,7 @@ case class SmallScan(spark: SparkSession) extends Rule[SparkPlan] {
     if (plan.exists(spreadsWrite)) plan
     else {
       val openCost = conf.filesOpenCostInBytes
-      val wave = graft.operators.Spread.smallInputBytes(spark)
+      val wave = graft.Sizing.waveBytes(spark)
       def fits(in: SmallInput) =
         in.bytes <= openCost && in.bytes + in.files * openCost <= wave
       def single(in: SmallInput, p: SparkPlan): SparkPlan = {

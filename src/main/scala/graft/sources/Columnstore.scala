@@ -746,7 +746,7 @@ object Columnstore {
             // under the same encoding gates as SkipScan, else the
             // distributed distinct runs as before.
             val local =
-              if (newPaths.length <= graft.operators.Stats.localThreshold(spark))
+              if (newPaths.length <= graft.operators.Stats.FooterLocalFiles)
                 graft.operators.SkipScan.localIntegralDistinct(conf, newPaths, seg)
               else None
             val raw: Array[Any] = local.map(_.toArray).getOrElse(

@@ -392,26 +392,18 @@ class Hypertable private (
     // hyperspace write measured 1.3 → 3.1 s when coalesced. Pin those
     // writes at a non-coalescible width (REPARTITION_BY_NUM); time-only
     // tables keep the coalescible form (few dirs per chunk — fewer,
-    // fuller files is the right outcome there). The pinned width is
-    // scale-adaptive, not the session constant (r13 pinned every such
-    // write at the full shuffle width and a small mid-ingest batch paid
-    // 32 near-empty writer tasks — q69 regressed 11%): one task per
-    // `pinTargetBytes` of plan-estimated input, floored at the space
-    // fan-out (each task starts ≈1 dir's file even when the bytes are
-    // tiny — the q67 case) and capped at the session width (a 100 TB
-    // batch pins at full width exactly as before).
+    // fuller files is the right outcome there). The pinned width follows
+    // the batch (a full-width pin cost q69 11% in 32 near-empty writer
+    // tasks): graft.Sizing.tasksFor, floored at the space fan-out (each
+    // task starts ≈1 dir's file — the q67 case), capped at the session
+    // width (a 100 TB or unsized batch pins at full width).
     def rep(exprs: Seq[org.apache.spark.sql.Column]) =
       if (spaceDims.nonEmpty) {
         val nSP = spark.sessionState.conf.numShufflePartitions
-        val target = BigInt(spark.conf
-          .get("spark.graft.write.pinTargetBytes",
-            spark.sessionState.conf.filesMaxPartitionBytes.toString).toLong)
-        val est = out.queryExecution.optimizedPlan.stats.sizeInBytes
         val spaceFan = spaceDims.map(_._2.toLong).product
           .min(nSP.toLong).max(1L).toInt
-        val width = ((est + target - 1) / target)
-          .max(BigInt(spaceFan)).min(BigInt(nSP)).toInt
-        out.repartition(width, exprs: _*)
+        out.repartition(graft.Sizing.tasksFor(spark,
+          graft.Sizing.estimate(out), spaceFan, nSP), exprs: _*)
       } else out.repartition(exprs: _*)
     val routed =
       if (filesPerChunk > 1) // deterministic row-hash salt (shuffle exprs can't be nondeterministic)
@@ -505,8 +497,7 @@ class Hypertable private (
     // BEFORE the job, which observed metrics only give after it, so both
     // decisions must see the same answer
     val streamLog = Hypertable.streamLogEnabled(fs, path)
-    val observeStats = tsRoots.isEmpty && (needStats || caggs.nonEmpty) &&
-      !streamLog && spark.conf.get("spark.graft.write.observeStats", "true").toBoolean
+    val observeStats = tsRoots.isEmpty && (needStats || caggs.nonEmpty) && !streamLog
     if (expensiveInput && !observeStats)
       routed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val statsObs =
@@ -545,7 +536,7 @@ class Hypertable private (
     // read the persisted `routed` instead so their pipeline still runs
     // once. Lazy: batches needing none of the three consumers (no stream
     // log, no skip columns, no caggs) never run it. This is the fallback
-    // when `observeStats` is off (stream log / multi-root / kill switch).
+    // when `observeStats` is off (stream log / multi-root).
     lazy val batchChunkStats: Seq[(Long, Long, Long)] = {
       val tm = timeMicrosExpr(col(timeCol))
       val src = if (expensiveInput && !observeStats) routed else out
@@ -1615,12 +1606,28 @@ class Hypertable private (
     * ground truth the "table" catalog snapshots. Gen layout: a torn
     * multi-step merge/split (crash between its publishes) is resolved to
     * a CONSISTENT view via its intent marker before the listing is served.
+    * A merge or split run entirely INSIDE the listing leaves no marker:
+    * retry (8 times at most) while the markers or a root's content counter,
+    * which every publish bumps, moved across the listing.
     */
   private def listAllChunks(): Seq[ChunkInfo] = {
     val roots = new Path(path) +: tablespaceTableDirs
-    val all = roots.flatMap(listChunksUnder).sortBy(_.startMicros)
-    if (genLayout) applyRewriteIntents(all) else all
+    def list() = roots.flatMap(listChunksUnder).sortBy(_.startMicros)
+    if (!genLayout) return list()
+    def stamp() = (rewriteIntents(), roots.map(r => Hypertable.readContentCounter(
+      r.getFileSystem(spark.sparkContext.hadoopConfiguration), r)))
+    var (before, all, after, attempts) = (stamp(), list(), stamp(), 1)
+    while (after != before && attempts < 8) {
+      before = after; all = list(); after = stamp(); attempts += 1
+    }
+    applyRewriteIntents(all, after._1)
   }
+
+  /** Rewrite-intent markers with their bodies: (isMerge, start, lines). */
+  private def rewriteIntents(): Seq[(Boolean, Long, Seq[String])] =
+    rewriteIntentMarkers().map { case (isMerge, start, p) => (isMerge, start,
+      try Hypertable.readSmallFile(fs, p).linesIterator.toSeq
+      catch { case _: java.io.IOException => Nil }) } // completed meanwhile
 
   /** Rewrite-intent markers at the primary root: (isMerge, start, path). */
   private def rewriteIntentMarkers(): Seq[(Boolean, Long, Path)] =
@@ -1650,14 +1657,10 @@ class Hypertable private (
     * may not mutate) get a consistent snapshot too; mutators additionally
     * complete or roll back via [[healRewriteIntents]].
     */
-  private def applyRewriteIntents(all: Seq[ChunkInfo]): Seq[ChunkInfo] = {
-    val markers = rewriteIntentMarkers()
-    if (markers.isEmpty) return all
+  private def applyRewriteIntents(all: Seq[ChunkInfo],
+      intents: Seq[(Boolean, Long, Seq[String])] = rewriteIntents()): Seq[ChunkInfo] = {
     var out = all
-    markers.foreach { case (isMerge, start, p) =>
-      val body =
-        try Hypertable.readSmallFile(fs, p).linesIterator.toSeq
-        catch { case _: java.io.IOException => Nil } // completed meanwhile
+    intents.foreach { case (isMerge, start, body) =>
       if (isMerge) body match {
         case endS +: absorbed if absorbed.nonEmpty =>
           val mergedEnd = scala.util.Try(endS.trim.toLong).getOrElse(-1L)
@@ -2141,6 +2144,7 @@ class Hypertable private (
         data.map { d =>
           val end = Hypertable.readRangeFile(dfs, d)
             .getOrElse(defaultChunkEnd(start))
+          Hypertable.listingHook()
           ChunkInfo(start, end, d.toString)
         }
       }
@@ -3737,6 +3741,9 @@ object Hypertable {
   private[graft] final class InjectedCrash(val point: String)
     extends RuntimeException(s"injected crash at $point")
   private[sources] def crashPoint(name: String): Unit = crashHook(name)
+  // Test-only pause after each live chunk a listing resolves (apart from
+  // crashHook, whose calls the crash-point fuzz counts).
+  @volatile private[graft] var listingHook: () => Unit = () => ()
 
   // ------------------------------------------------------ stream log
   // The streaming source (Hypertable.readStream / GraftStreamSource)

@@ -316,9 +316,6 @@ private[graft] object MutationGate {
     active
   }
 
-  /** Tests: force the next [[foreignActive]] probe to re-read disk. */
-  private[graft] def resetActivityCache(): Unit = activityCache.clear()
-
   // ------------------------------------------------ exclusive marker claim
 
   /** Does this store give an ATOMIC create-exclusive? Local POSIX

@@ -175,15 +175,6 @@ private[graft] class ReaderEpochs(val DIR: String, confPrefix: String) {
     sweepNow()
   }
 
-  /** Tests: forget an attached holder without waiting for the collector. */
-  private[graft] def dropHolder(holder: AnyRef): Unit = {
-    val it = registry.values().iterator()
-    while (it.hasNext) {
-      val set = it.next()
-      set.entries.synchronized { set.entries.remove(holder); () }
-    }
-  }
-
   @volatile private var sweeperStarted = false
   private def startSweeper(): Unit =
     if (!sweeperStarted) synchronized {

@@ -29,6 +29,10 @@ object GraftShims {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** `spark`'s conf and catalog in a session of its own (`private[sql]`). */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
+
   /** Drain the listener bus so `observe()` metrics delivered through a
     * QueryExecutionListener are visible (the bus is `private[spark]`).
     */

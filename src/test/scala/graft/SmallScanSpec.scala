@@ -11,7 +11,7 @@ import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{DistinctOn, Gapfill, Spread}
+import graft.operators.{DistinctOn, Gapfill}
 import graft.plans.SingleTaskExec
 import graft.sources.Hypertable
 import graft.streaming.{CaggDef, ContinuousAggregate}
@@ -199,7 +199,7 @@ class SmallScanSpec extends AnyFunSuite {
 
     test(s"many tiny files whose open cost exceeds one wave keep their splits (catalog=$catalog)") {
       val openCost = spark.sessionState.conf.filesOpenCostInBytes
-      val files = (Spread.smallInputBytes(spark) / openCost).toInt + 2
+      val files = (Sizing.waveBytes(spark) / openCost).toInt + 2
       val tiny = Hypertable.create(spark, s"$dir/tiny-$catalog", "ts", chunkWidth = "1 day",
         catalog = catalog)
       // each write adds one file to the one chunk
@@ -217,7 +217,7 @@ class SmallScanSpec extends AnyFunSuite {
     test(s"a union of small roots is judged on its total (catalog=$catalog)") {
       val openCost = spark.sessionState.conf.filesOpenCostInBytes
       // more one-file chunks than one wave of open costs holds
-      val n = (Spread.smallInputBytes(spark) / openCost).toInt + 1
+      val n = (Sizing.waveBytes(spark) / openCost).toInt + 1
       val many = table("many", catalog, rows(n).coalesce(1))
       def day(i: Int) = many.between(T0 + i * DayUs, T0 + (i + 1) * DayUs)
       def perDevice(df: DataFrame) = df.groupBy("device").agg(count(lit(1)).as("n"))
