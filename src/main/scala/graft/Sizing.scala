@@ -7,8 +7,9 @@ import org.apache.spark.sql.internal.SQLConf
   * reference asks its planner cost model once, SURVEY §3.1). Every gate
   * reads the same estimate in the same unit, with the same rule for a
   * size Spark does not know: [[graft.operators.Spread.byKey]],
-  * [[graft.plans.SmallScan]], the space-partitioned write's fan-out pin
-  * and a stateful stream's state width ([[stateSession]]).
+  * [[graft.plans.SmallScan]], the space-partitioned write's fan-out pin,
+  * a stateful stream's state width ([[stateSession]]) and the one-task
+  * near-duplicate arm of [[graft.operators.Clustering]].
   */
 private[graft] object Sizing {
 

@@ -1603,16 +1603,17 @@ object SparkEntry {
       val tmp = java.nio.file.Files.createTempDirectory("graft_cagg_win").toString
       val ht = Hypertable.create(s, s"$tmp/ht", "ts", chunkWidth = "7 days")
       ht.write(t(s, dir, "events"), filesPerChunk = 8)
-      s.conf.set("spark.graft.enable_cagg_window_functions", "true")
-      val cagg =
-        try ContinuousAggregate.create(s, s"$tmp/cagg", ht,
+      // the experimental flag is set on a clone: the shared session's conf
+      // never holds it, also not while this query runs
+      val ws = org.apache.spark.sql.GraftShims.cloneSession(s)
+      ws.conf.set("spark.graft.enable_cagg_window_functions", "true")
+      val cagg = ContinuousAggregate.create(ws, s"$tmp/cagg", ht,
           CaggDef("1 day", Seq("event_type"),
             aggs = Seq(count(lit(1)).as("n")),
             windowCols = Seq(
               rank().over(Window.partitionBy("bucket")
                 .orderBy(desc("n"), col("event_type"))).cast("long").as("rnk"),
               sum("n").over(Window.partitionBy("bucket")).as("day_total"))))
-        finally s.conf.unset("spark.graft.enable_cagg_window_functions")
       val day = 86400000000L
       val (tmin, tmax) = timeRange(s, s"$tmp/ht", "ts")
       val lo = graft.expressions.TimeBucketUtil.bucketMicros(tmin, day,

@@ -33,22 +33,7 @@ case class JaccardSortedLongs(left: Expression, right: Expression)
     }
 
   /** Public bridge for generated code (and the interpreted path). */
-  def compute(av: ArrayData, bv: ArrayData): Any = {
-    val na = av.numElements()
-    val nb = bv.numElements()
-    var i = 0
-    var j = 0
-    var inter = 0
-    while (i < na && j < nb) {
-      val x = av.getLong(i)
-      val y = bv.getLong(j)
-      if (x == y) { inter += 1; i += 1; j += 1 }
-      else if (x < y) i += 1
-      else j += 1
-    }
-    val union = na + nb - inter
-    if (union == 0) null else java.lang.Double.valueOf(inter.toDouble / union.toDouble)
-  }
+  def compute(av: ArrayData, bv: ArrayData): Any = JaccardSortedLongs.compute(av, bv)
 
   override def nullSafeEval(a: Any, b: Any): Any =
     compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
@@ -77,4 +62,27 @@ case class JaccardSortedLongs(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
+}
+
+object JaccardSortedLongs {
+
+  /** The merge walk, also called on arrays outside an expression tree
+    * ([[graft.plans.SmallDedup]]).
+    */
+  def compute(av: ArrayData, bv: ArrayData): Any = {
+    val na = av.numElements()
+    val nb = bv.numElements()
+    var i = 0
+    var j = 0
+    var inter = 0
+    while (i < na && j < nb) {
+      val x = av.getLong(i)
+      val y = bv.getLong(j)
+      if (x == y) { inter += 1; i += 1; j += 1 }
+      else if (x < y) i += 1
+      else j += 1
+    }
+    val union = na + nb - inter
+    if (union == 0) null else java.lang.Double.valueOf(inter.toDouble / union.toDouble)
+  }
 }

@@ -1,7 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftShims}
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, ByteType, IntegerType, LongType, NumericType, ShortType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.Sizing
+import graft.plans.{GraftStrategies, SmallDedup}
 
 /** Graph clustering for dedup pipelines: given near-duplicate candidate
   * PAIRS (from [[Dedup.nearDuplicatePairs]], [[Similarity.lshPairs]], or
@@ -136,12 +142,28 @@ object Clustering {
   private def driverUnionFind(rows: Array[org.apache.spark.sql.Row],
       e: DataFrame): DataFrame = {
     val dt = e.schema("u").dataType
-    def lt(a: Any, b: Any): Boolean = (a, b) match {
-      case (x: java.lang.Long, y: java.lang.Long) => x < y
-      case (x: String, y: String) => x < y
-      case _ => throw new IllegalStateException(s"unexpected id types: $a / $b")
-    }
-    val parent = new java.util.HashMap[Any, Any]()
+    val uf = new MinIdUnionFind
+    rows.foreach(r => uf.union(r.get(0), r.get(1)))
+    val nodes = new java.util.LinkedHashSet[Any]()
+    rows.foreach { r => nodes.add(r.get(0)); nodes.add(r.get(1)) }
+    val out = new scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row](nodes.size)
+    nodes.forEach(n => out += org.apache.spark.sql.Row(n, uf.find(n)))
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("node", dt),
+      org.apache.spark.sql.types.StructField("component", dt)))
+    e.sparkSession.createDataFrame(
+      e.sparkSession.sparkContext.parallelize(out.toSeq, 1), schema)
+  }
+
+  /** Union-find whose root is the smallest id of its set, under Spark's
+    * order of the id column: ids are `Long`s, or strings (`String` on the
+    * driver, `UTF8String` in a task) compared byte-wise as UTF-8, as
+    * `min`/`least` compare them in the distributed loop. Shared by
+    * [[driverUnionFind]] and [[graft.plans.SmallDedup]].
+    */
+  private[graft] final class MinIdUnionFind {
+    private val parent = new java.util.HashMap[Any, Any]()
+
     def find(x: Any): Any = {
       var root = x
       var p = parent.get(root)
@@ -151,19 +173,20 @@ object Clustering {
       while (cur != root) { val nxt = parent.get(cur); parent.put(cur, root); cur = nxt }
       root
     }
-    rows.foreach { r =>
-      val (ra, rb) = (find(r.get(0)), find(r.get(1)))
-      if (ra != rb) { if (lt(ra, rb)) parent.put(rb, ra) else parent.put(ra, rb) }
+
+    def union(a: Any, b: Any): Unit = {
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { if (MinIdUnionFind.less(ra, rb)) parent.put(rb, ra) else parent.put(ra, rb) }
     }
-    val nodes = new java.util.LinkedHashSet[Any]()
-    rows.foreach { r => nodes.add(r.get(0)); nodes.add(r.get(1)) }
-    val out = new scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row](nodes.size)
-    nodes.forEach(n => out += org.apache.spark.sql.Row(n, find(n)))
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node", dt),
-      org.apache.spark.sql.types.StructField("component", dt)))
-    e.sparkSession.createDataFrame(
-      e.sparkSession.sparkContext.parallelize(out.toSeq, 1), schema)
+  }
+
+  private[graft] object MinIdUnionFind {
+    def less(a: Any, b: Any): Boolean = (a, b) match {
+      case (x: java.lang.Long, y: java.lang.Long) => x < y
+      case (x: UTF8String, y: UTF8String) => x.compareTo(y) < 0
+      case (x: String, y: String) => UTF8String.fromString(x).compareTo(UTF8String.fromString(y)) < 0
+      case _ => throw new IllegalStateException(s"unexpected id types: $a / $b")
+    }
   }
 
   /** Eagerly localCheckpoint `df`, returning the checkpointed frame AND a
@@ -184,21 +207,75 @@ object Clustering {
     * `threshold` → connected components → (idCol, cluster_id), where
     * cluster_id = min doc id of the duplicate cluster (docs with no
     * near-duplicate get their own id). Exact duplicates land in the same
-    * cluster (jaccard 1 ≥ any threshold ≤ 1).
+    * cluster (jaccard 1 ≥ any threshold ≤ 1). A small `df` runs as one
+    * plan ([[smallArm]]); any other takes the distributed arm.
     */
   def clusterAssignments(df: DataFrame, idCol: String, textCol: String,
       threshold: Double, shingleN: Int = 3, numHashes: Int = 32,
-      bands: Int = 32, maxBucketSize: Int = Int.MaxValue): DataFrame = {
+      bands: Int = 32, maxBucketSize: Int = Int.MaxValue): DataFrame =
+    smallArm(df, idCol, textCol, threshold, None, shingleN, numHashes, bands,
+      maxBucketSize).getOrElse(distributedAssignments(df, idCol, textCol,
+      threshold, shingleN, numHashes, bands, maxBucketSize))
+
+  private def distributedAssignments(df: DataFrame, idCol: String,
+      textCol: String, threshold: Double, shingleN: Int, numHashes: Int,
+      bands: Int, maxBucketSize: Int): DataFrame = {
     val pairs = Dedup.nearDuplicatePairs(df, idCol, textCol, threshold,
       shingleN, numHashes, bands, maxBucketSize)
     val cc = connectedComponents(pairs, s"${idCol}_a", s"${idCol}_b")
-    val isNumeric =
-      df.schema(idCol).dataType.isInstanceOf[org.apache.spark.sql.types.NumericType]
+    val isNumeric = df.schema(idCol).dataType.isInstanceOf[NumericType]
     val cid = coalesce(col("component"), col(idCol))
     df.select(col(idCol))
       .join(cc, col(idCol) === col("node"), "left")
       .select(col(idCol),
         (if (isNumeric) cid.cast("long") else cid).as("cluster_id"))
+  }
+
+  /** The near-dup arm for an input small enough for one task, chosen here
+    * and nowhere else: `df`'s plan estimate is known and at most one scan
+    * split ([[graft.Sizing.splitBytes]]), so the single task holds no more
+    * input than one scan task already does. An unknown or larger estimate
+    * returns None and takes the distributed arm (`nearDuplicatePairs` →
+    * [[connectedComponents]]), which never gathers the corpus in one
+    * task. Ids must be integral or strings (the distributed arm's key
+    * cast folds other numeric ids), and the session must plan graft's
+    * nodes ([[graft.Graft.init]] or `GraftExtensions`).
+    *
+    * The plan is lazy, with no checkpoint, collect, limit or broadcast:
+    * [[Spread.byKey]] spreads the documents, one projection computes the
+    * id, quality, band buckets (the same `lshBands(minhashFast(...))`
+    * expressions as [[Dedup.lshCandidatePairs]]) and shingle hashes in
+    * parallel, and [[graft.plans.SmallDedup]] does the rest in one task.
+    * `quality` given = keep-best output (id, cluster_id, kept); otherwise
+    * (id, cluster_id).
+    */
+  private def smallArm(df: DataFrame, idCol: String, textCol: String,
+      threshold: Double, quality: Option[Column], shingleN: Int,
+      numHashes: Int, bands: Int, maxBucketSize: Int): Option[DataFrame] = {
+    val spark = df.sparkSession
+    val split = Sizing.splitBytes(spark)
+    val idType = df.schema(idCol).dataType
+    val plannable = (idType match {
+      case ByteType | ShortType | IntegerType | LongType | StringType => true
+      case _ => false
+    }) && spark.sessionState.planner.strategies.contains(GraftStrategies)
+    Sizing.estimate(df).filter(est => plannable && est <= split).map { est =>
+      val rows = Dedup.rowsPerBand(numHashes, bands)
+      val sig = Dedup.minhashFast(col(textCol), shingleN, numHashes)
+      val in = Spread.byKey(df, col(idCol)).select(Seq(col(idCol)) ++
+        quality.map(_.as("_graft_q")) ++ Seq(
+        transform(Dedup.lshBands(sig, bands, rows), _.getField("bucket")).as("_graft_buckets"),
+        Dedup.shingleHashes(col(textCol), shingleN).as("_graft_sh")): _*)
+      val plan = in.queryExecution.analyzed
+      val attrs = plan.output
+      val out = Seq(
+        AttributeReference(idCol, idType, attrs.head.nullable)(),
+        AttributeReference("cluster_id", if (idType == StringType) StringType else LongType)()) ++
+        quality.map(_ => AttributeReference("kept", BooleanType, nullable = false)())
+      GraftShims.ofRows(spark, SmallDedup(attrs.head, quality.map(_ => attrs(1)),
+        attrs(attrs.size - 2), attrs.last, threshold, maxBucketSize, est, split,
+        out, plan))
+    }
   }
 
   /** Fuzzy-dedup RETENTION: given per-row duplicate-cluster assignments,
@@ -228,17 +305,19 @@ object Clustering {
   /** End-to-end fuzzy dedup with quality-aware retention: near-dup
     * clusters at `threshold`, then keep the best row of each cluster by
     * `quality` (ties → smallest id). Returns (id, cluster_id, kept) for
-    * every input row.
+    * every input row. A small `df` runs as one plan ([[smallArm]]).
     */
   def dedupKeepBest(df: DataFrame, idCol: String, textCol: String,
       threshold: Double, quality: Column, shingleN: Int = 3,
-      numHashes: Int = 32, bands: Int = 32): DataFrame = {
-    val assign = clusterAssignments(df, idCol, textCol, threshold,
-      shingleN, numHashes, bands)
-    val q = df.select(col(idCol).as("_graft_qid"), quality.as("_graft_q"))
-    keepBestPerCluster(
-        assign.join(q, col(idCol) === col("_graft_qid")),
-        idCol, "cluster_id", col("_graft_q"))
-      .select(col(idCol), col("cluster_id"), col("kept"))
-  }
+      numHashes: Int = 32, bands: Int = 32): DataFrame =
+    smallArm(df, idCol, textCol, threshold, Some(quality), shingleN, numHashes,
+      bands, Int.MaxValue).getOrElse {
+      val assign = distributedAssignments(df, idCol, textCol, threshold,
+        shingleN, numHashes, bands, Int.MaxValue)
+      val q = df.select(col(idCol).as("_graft_qid"), quality.as("_graft_q"))
+      keepBestPerCluster(
+          assign.join(q, col(idCol) === col("_graft_qid")),
+          idCol, "cluster_id", col("_graft_q"))
+        .select(col(idCol), col("cluster_id"), col("kept"))
+    }
 }

@@ -84,18 +84,31 @@ object Dedup {
       struct(lit(b).as("band"),
         hash(slice(sig, b * rowsPerBand + 1, rowsPerBand)).as("bucket"))): _*)
 
+  /** Hashes per band; `bands` must divide `numHashes`. */
+  private[graft] def rowsPerBand(numHashes: Int, bands: Int): Int = {
+    // bands > numHashes would slice empty bands (every doc in ONE bucket —
+    // total recall loss after the cap, or an n² join without it); a
+    // non-dividing count would silently ignore trailing hashes
+    require(bands >= 1 && bands <= numHashes && numHashes % bands == 0,
+      s"bands ($bands) must divide numHashes ($numHashes)")
+    numHashes / bands
+  }
+
+  /** `collect_set` that stops at `limit + 1` distinct values
+    * ([[graft.expressions.BoundedCollectSet]]): the whole set when it has
+    * at most `limit` values, otherwise `limit + 1` of them.
+    */
+  private[graft] def boundedCollectSet(c: Column, limit: Int): Column =
+    org.apache.spark.sql.GraftShims.toColumn(graft.expressions.BoundedCollectSet(
+      org.apache.spark.sql.GraftShims.toExpression(c), limit).toAggregateExpression())
+
   /** Candidate near-dup pairs: docs sharing any LSH band bucket.
     * Returns (idCol+"_a", idCol+"_b") with a < b, distinct.
     */
   def lshCandidatePairs(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, numHashes: Int = 32, bands: Int = 8,
       maxBucketSize: Int = 1000): DataFrame = {
-    // bands > numHashes would slice empty bands (every doc in ONE bucket —
-    // total recall loss after the cap, or an n² join without it); a
-    // non-dividing count would silently ignore trailing hashes
-    require(bands >= 1 && bands <= numHashes && numHashes % bands == 0,
-      s"bands ($bands) must divide numHashes ($numHashes)")
-    val rows = numHashes / bands
+    val rows = rowsPerBand(numHashes, bands)
     val sig = minhashFast(col(textCol), shingleN, numHashes)
     // minhash costs ~0.5 ms/doc — spread a small (few-split) corpus before
     // computing it, or the whole signature pass runs in one scan task
@@ -106,13 +119,14 @@ object Dedup {
     // exchange groups each (band, bucket) onto a task, and pairs come from
     // a nested generate over the sorted, de-duplicated id list (sorted so
     // a < b under the column's own ordering; de-duplicated so a doc id
-    // repeated in the input yields no (x, x) self-pair). The WHOLE bucket
-    // is buffered before the `maxBucketSize` filter drops an oversized
-    // one, so a hot bucket's id list must fit in one task's memory; the
-    // pair output is n²/2 per admitted bucket. slice() is 1-based: ids
-    // after 0-based position i start at i+2.
+    // repeated in the input yields no (x, x) self-pair). The id set is
+    // bounded: every partial and merged buffer stops at `maxBucketSize + 1`
+    // distinct ids, which is enough to tell an oversized bucket, so a hot
+    // bucket never has its whole id list in memory. The pair output is
+    // n²/2 per admitted bucket. slice() is 1-based: ids after 0-based
+    // position i start at i+2.
     banded.groupBy(col("band"), col("bucket"))
-      .agg(sort_array(collect_set(col(idCol))).as("_ids"))
+      .agg(sort_array(boundedCollectSet(col(idCol), maxBucketSize)).as("_ids"))
       .where(size(col("_ids")) >= 2 && size(col("_ids")) <= maxBucketSize)
       .select(posexplode(col("_ids")).as(Seq("_i", s"${idCol}_a")), col("_ids"))
       .select(col(s"${idCol}_a"), explode(

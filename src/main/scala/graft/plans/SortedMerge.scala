@@ -52,6 +52,9 @@ object GraftStrategies extends org.apache.spark.sql.execution.SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case DeclareOrdered(order, child) =>
       DeclareOrderedExec(order, planLater(child)) :: Nil
+    case d: SmallDedup =>
+      SmallDedupExec(d.docId, d.quality, d.buckets, d.shingles, d.threshold,
+        d.maxBucketSize, d.estimate, d.split, d.output, planLater(d.child)) :: Nil
     case _ => Nil
   }
 }

@@ -1834,9 +1834,13 @@ object ContinuousAggregate {
     // reference parity (`tsl/src/continuous_aggs/common.c:665-695`): window
     // functions in the defining query are rejected at CREATE unless the
     // experimental GUC is on; when on, the reference elogs a WARNING —
-    // mirrored here on the session log
+    // mirrored here on the session log. Both toggles are read from
+    // `spark`'s own conf, not the thread's active session: a caller may
+    // enable them on a clone and leave its shared session alone.
+    def toggle(on: => Boolean) =
+      org.apache.spark.sql.internal.SQLConf.withExistingConf(spark.sessionState.conf)(on)
     if (defn.windowCols.nonEmpty) {
-      if (!graft.plans.Toggles.caggWindowFunctions)
+      if (!toggle(graft.plans.Toggles.caggWindowFunctions))
         throw new IllegalArgumentException(
           "invalid continuous aggregate query: window function support not " +
             "enabled — enable experimental window function support by " +
@@ -1851,7 +1855,7 @@ object ContinuousAggregate {
       // partition spec lacks the bucket column, so values depend on which
       // refresh window recomputed them — is statically detectable here.
       // Reject at CREATE unless explicitly overridden.
-      if (!graft.plans.Toggles.caggWindowAllowUnpartitioned) {
+      if (!toggle(graft.plans.Toggles.caggWindowAllowUnpartitioned)) {
         import org.apache.spark.sql.catalyst.expressions._
         import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
         // case-INSENSITIVE like Spark's default column resolution (and the

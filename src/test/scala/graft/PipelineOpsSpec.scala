@@ -64,6 +64,19 @@ class PipelineOpsSpec extends AnyFunSuite {
       Map("a" -> "a", "b" -> "a", "c" -> "a"))
   }
 
+  test("driver union-find orders string ids by UTF-8 bytes, as the loop does") {
+    // UTF-16 puts the surrogate pair of U+1F600 before U+FB01; UTF-8 bytes
+    // (Spark's min) put U+FB01 first
+    val (hi, emoji) = ("\uFB01", "\uD83D\uDE00")
+    val edges = Seq((emoji, hi)).toDF("a", "b")
+    val viaDriver = Clustering.connectedComponents(edges, "a", "b")
+      .as[(String, String)].collect().toMap
+    val viaLoop = Clustering.connectedComponents(edges, "a", "b", driverThreshold = 0)
+      .as[(String, String)].collect().toMap
+    assert(viaLoop === Map(hi -> hi, emoji -> hi))
+    assert(viaDriver === viaLoop)
+  }
+
   test("cluster assignment groups exact+near duplicates, singletons keep own id") {
     val d0 = docs.where($"doc_id" === 0).select($"text").as[String].head()
     val perturbed = d0.split(" ").zipWithIndex

@@ -6,6 +6,7 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
 import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
@@ -94,6 +95,34 @@ class SessionDefaultsSpec extends AnyFunSuite {
     assert(seen.synchronized(seen.toList).forall(_ == before), seen)
     assert(df.sparkSession ne spark)
     assert(shuffleWidth(df.sparkSession) === stateWidth.toString)
+  }
+
+  test("q97 enables cagg window functions on a clone, never on the shared session") {
+    val key = "spark.graft.enable_cagg_window_functions"
+    // a watcher reads the shared conf for as long as q97 runs
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val held = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val reads = new java.util.concurrent.atomic.AtomicLong(0)
+    val watcher = new Thread(() =>
+      while (!done.get) {
+        if (spark.conf.getOption(key).isDefined) held.set(true)
+        reads.incrementAndGet()
+      })
+    watcher.setDaemon(true)
+    watcher.start()
+    val got = try SparkEntry.queries("q97_cagg_window")(spark, fixture).collect().toSeq
+      finally { done.set(true); watcher.join() }
+    assert(!held.get && reads.get > 0)
+    assert(spark.conf.getOption(key).isEmpty)
+    // the answer: daily counts per type, ranked within the day
+    val byDay = events.groupBy(date_trunc("day", col("ts")).as("bucket"), col("event_type"))
+      .agg(count(lit(1)).as("n"))
+    val day = Window.partitionBy("bucket")
+    val want = byDay.select(col("bucket"), col("event_type"), col("n"),
+        rank().over(day.orderBy(desc("n"), col("event_type"))).cast("long").as("rnk"),
+        sum("n").over(day).as("day_total"))
+      .orderBy("bucket", "event_type").collect().toSeq
+    assert(got.map(_.toSeq) === want.map(_.toSeq))
   }
 
   test("a stream on Sizing's session reports Sizing's state width") {

@@ -270,6 +270,32 @@ class TrainingOpsSpec extends AnyFunSuite {
       Dedup.lshCandidatePairs(base, "doc_id", "text").collect().toSet)
   }
 
+  test("lshCandidatePairs: a bucket one over the cap yields no pairs, one at the cap all") {
+    // the same text under n ids: one bucket per band holding all n ids
+    val text = docs.where($"doc_id" === 0).select($"text").as[String].head()
+    def pairs(n: Int, cap: Int) = Dedup.lshCandidatePairs(
+      (1L to n).map(i => (i, text)).toDF("doc_id", "text"), "doc_id", "text",
+      maxBucketSize = cap).count()
+    assert(pairs(6, 5) === 0)
+    assert(pairs(5, 5) === 10)
+  }
+
+  test("boundedCollectSet holds at most limit + 1 values, never the whole group") {
+    // 4 input partitions, so partial buffers are merged; 200 values per key
+    val in = spark.range(0, 400, 1, 4).select(($"id" % 2).as("k"), ($"id" / 2).cast("long").as("v"))
+    val sets = in.groupBy($"k").agg(Dedup.boundedCollectSet($"v", 5).as("s"),
+        collect_set($"v").as("all"))
+      .as[(Long, Seq[Long], Seq[Long])].collect()
+    assert(sets.length === 2)
+    sets.foreach { case (_, s, all) =>
+      assert(s.size === 6 && s.toSet.subsetOf(all.toSet) && all.size === 200)
+    }
+    // at or under the limit: the whole set, as collect_set gives it
+    val whole = in.groupBy($"k").agg(sort_array(Dedup.boundedCollectSet($"v", 200)).as("s"),
+        sort_array(collect_set($"v")).as("all"))
+    assert(whole.where($"s" =!= $"all").isEmpty)
+  }
+
   test("lshPairs matches brute-force pairs exactly and plans as an equi-join") {
     val emb = Tables.table(spark, "/root/testdata/sf0.001", "embeddings")
     val lsh = Similarity.lshPairs(emb, "vec_id", "embedding", 0.45)
