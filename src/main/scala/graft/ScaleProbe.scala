@@ -99,7 +99,7 @@ object ScaleProbe {
       }
       // maintenance-sweep shape at width (SPARK_GRAFT_CATALOG_SWEEP=K):
       // compress K chunks one by one — each publish is a per-chunk
-      // generation rename + an INCREMENTAL manifest entry patch, so
+      // generation stamp + an INCREMENTAL manifest entry patch, so
       // per-chunk cost must stay FLAT in table width (a full refresh per
       // chunk would make the sweep O(chunks²) in small-file I/O)
       sys.env.get("SPARK_GRAFT_CATALOG_SWEEP").map(_.toInt).foreach { k =>

@@ -217,18 +217,23 @@ object Clustering {
       maxBucketSize).getOrElse(distributedAssignments(df, idCol, textCol,
       threshold, shingleN, numHashes, bands, maxBucketSize))
 
+  /** (id, cluster_id) per input row, plus `_graft_q` when `quality` is
+    * given — carried through the same projection, so every input row
+    * comes out once even when its id repeats.
+    */
   private def distributedAssignments(df: DataFrame, idCol: String,
       textCol: String, threshold: Double, shingleN: Int, numHashes: Int,
-      bands: Int, maxBucketSize: Int): DataFrame = {
+      bands: Int, maxBucketSize: Int, quality: Option[Column] = None): DataFrame = {
     val pairs = Dedup.nearDuplicatePairs(df, idCol, textCol, threshold,
       shingleN, numHashes, bands, maxBucketSize)
     val cc = connectedComponents(pairs, s"${idCol}_a", s"${idCol}_b")
     val isNumeric = df.schema(idCol).dataType.isInstanceOf[NumericType]
     val cid = coalesce(col("component"), col(idCol))
-    df.select(col(idCol))
+    df.select(col(idCol) +: quality.map(_.as("_graft_q")).toSeq: _*)
       .join(cc, col(idCol) === col("node"), "left")
-      .select(col(idCol),
-        (if (isNumeric) cid.cast("long") else cid).as("cluster_id"))
+      .select(Seq(col(idCol),
+        (if (isNumeric) cid.cast("long") else cid).as("cluster_id")) ++
+        quality.map(_ => col("_graft_q")): _*)
   }
 
   /** The near-dup arm for an input small enough for one task, chosen here
@@ -304,8 +309,9 @@ object Clustering {
 
   /** End-to-end fuzzy dedup with quality-aware retention: near-dup
     * clusters at `threshold`, then keep the best row of each cluster by
-    * `quality` (ties → smallest id). Returns (id, cluster_id, kept) for
-    * every input row. A small `df` runs as one plan ([[smallArm]]).
+    * `quality` (ties → smallest id). Returns (id, cluster_id, kept) once
+    * for every input row; a null id is in no cluster and never kept. A
+    * small `df` runs as one plan ([[smallArm]]).
     */
   def dedupKeepBest(df: DataFrame, idCol: String, textCol: String,
       threshold: Double, quality: Column, shingleN: Int = 3,
@@ -313,11 +319,9 @@ object Clustering {
     smallArm(df, idCol, textCol, threshold, Some(quality), shingleN, numHashes,
       bands, Int.MaxValue).getOrElse {
       val assign = distributedAssignments(df, idCol, textCol, threshold,
-        shingleN, numHashes, bands, Int.MaxValue)
-      val q = df.select(col(idCol).as("_graft_qid"), quality.as("_graft_q"))
-      keepBestPerCluster(
-          assign.join(q, col(idCol) === col("_graft_qid")),
-          idCol, "cluster_id", col("_graft_q"))
-        .select(col(idCol), col("cluster_id"), col("kept"))
+        shingleN, numHashes, bands, Int.MaxValue, Some(quality))
+      keepBestPerCluster(assign, idCol, "cluster_id", col("_graft_q"))
+        .select(col(idCol), col("cluster_id"),
+          (col("kept") && col(idCol).isNotNull).as("kept"))
     }
 }

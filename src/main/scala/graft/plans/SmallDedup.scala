@@ -100,11 +100,9 @@ object SmallDedup {
     *    pair already in one cluster is not verified: its edge could not
     *    change the clusters;
     *  - the cluster is the smallest reachable id;
-    *  - keep-best ranks by quality descending, nulls last, then id, and
-    *    emits each row once per row of its id (the distributed arm joins
-    *    the quality back on the id); a null id has no row there. Without
-    *    keep-best, every row is emitted once, a null id with a null
-    *    cluster.
+    *  - keep-best ranks by quality descending, nulls last, then id.
+    *  - every row is emitted once; a null id has a null cluster and is
+    *    never kept.
     */
   private[graft] final case class Run(idOrd: Int, idType: DataType,
       quality: Option[(Int, DataType)], bucketsOrd: Int, shinglesOrd: Int,
@@ -187,17 +185,14 @@ object SmallDedup {
             new GenericInternalRow(Array(a.quality, a.key)),
             new GenericInternalRow(Array(b.quality, b.key))) < 0
           val best = mutable.HashMap.empty[Any, Doc]
-          val rowsOf = mutable.HashMap.empty[Any, Int].withDefaultValue(0)
           docs.foreach { d =>
             val c = uf.find(d.key)
             if (best.get(c).forall(better(d, _))) best(c) = d
-            rowsOf(d.key) += 1
           }
-          docs.iterator.flatMap { d =>
+          docs.iterator.map { d =>
             val c = uf.find(d.key)
-            val keep = best(c) eq d
-            Iterator.tabulate(rowsOf(d.key))(i => row(d.id, c, keep && i == 0))
-          }
+            row(d.id, c, best(c) eq d)
+          } ++ Iterator.fill(nullIds)(row(null, null, false))
       }
     }
   }

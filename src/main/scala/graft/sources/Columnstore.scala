@@ -343,26 +343,18 @@ object Columnstore {
     } finally rl.unlock()
   }
 
-  /** Staging dir for a whole-chunk rewrite of `chunkP`: inside the chunk
-    * identity dir for gen paths (unique per chunk — parallel per-chunk
-    * sweeps share the storage root), next to the dir for flat ones (whose
-    * in-place swap deletes the dir itself).
+  /** Staging dir for a whole-chunk rewrite of `chunkP`, registered in
+    * flight so a concurrent catalog sync's GC cannot reap it while the
+    * rewrite runs (the dir's mtime is the Spark job's START, not its
+    * progress): the chunk's next generation for gen paths (see
+    * [[Hypertable.publishChunkRewrite]]), a dot-prefixed dir next to the
+    * chunk for flat ones (whose in-place swap deletes the dir itself).
     */
-  private def rewriteTmp(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, chunkP: Path,
+  private def rewriteTmp(fs: org.apache.hadoop.fs.FileSystem, chunkP: Path,
       tag: String): Path =
-    // registered in flight so a concurrent catalog sync's stale-tmp GC
-    // cannot reap the staging dir of a still-running rewrite (the dir's
-    // mtime is the Spark job's START, not its progress). Direct publish
-    // mode stages IN the final generation dir — see
-    // [[Hypertable.publishMode]] (object stores without atomic dir
-    // rename).
-    if (Hypertable.isGenPath(chunkP) &&
-        Hypertable.publishMode(spark) == "direct")
-      Hypertable.stageGenDir(fs, chunkP.getParent)
+    if (Hypertable.isGenPath(chunkP)) Hypertable.stageGenDir(fs, chunkP.getParent)
     else Hypertable.registerRewriteTmp(fs,
-      if (Hypertable.isGenPath(chunkP)) new Path(chunkP.getParent, s".${tag}_tmp")
-      else new Path(chunkP.getParent, "." + chunkP.getName + s"_${tag}_tmp"))
+      new Path(chunkP.getParent, "." + chunkP.getName + s"_${tag}_tmp"))
 
   private[sources] val DEFAULT_FILE_BYTES = 128L << 20
 
@@ -415,11 +407,11 @@ object Columnstore {
     if (Hypertable.isGenPath(chunkP)) {
       // generation-copy compact: stage a COMPLETE next generation —
       // oversized leaves rewritten compact, everything else (untouched
-      // leaves' files, sidecars) byte-copied across — then publish with
-      // one rename. Pinned readers keep the old generation; the copy of
+      // leaves' files, sidecars) byte-copied across — then publish by
+      // stamp. Pinned readers keep the old generation; the copy of
       // the untouched files is the price of the snapshot (compact targets
       // fragmented chunks, where the rewrite dominates anyway).
-      val tmp = rewriteTmp(spark, fs, chunkP, "compact")
+      val tmp = rewriteTmp(fs, chunkP, "compact")
       fs.delete(tmp, true)
       fs.mkdirs(tmp)
       // leaf paths come from fs listings (scheme-qualified); the caller's
@@ -506,8 +498,9 @@ object Columnstore {
 
   /** Rewrite one chunk directory into columnstore layout. Returns row count.
     * Safe to re-run (idempotent); concurrent readers of the same chunk see
-    * either the old or the new files, not a mix (dot-prefixed tmp dir is
-    * invisible to Spark's file index while in flight, then a rename swap).
+    * either the old or the new files, not a mix (a generation chunk stages
+    * its next generation and commits by stamp; a flat chunk stages in a
+    * dot-prefixed dir, invisible to Spark's file index, then swaps).
     * The chunk's `_graft_range` catalog file (non-default range written by
     * merge/split) survives the rewrite.
     */
@@ -567,7 +560,7 @@ object Columnstore {
         // defeating both)
         df.repartitionByRange(segs.map(col): _*)
     }).sortWithinPartitions((opts.segmentBy ++ opts.orderBy).map(col): _*)
-    val tmp = rewriteTmp(spark, fs, chunkP, "compress")
+    val tmp = rewriteTmp(fs, chunkP, "compress")
     var w = arranged.write.mode("overwrite")
       .option("compression", "zstd")
       .option("parquet.block.size", opts.rowGroupBytes.toString)
@@ -578,9 +571,9 @@ object Columnstore {
     w.parquet(tmp.toString)
     // row count from the freshly written footers — no data re-read
     val n = graft.operators.Stats.rowCount(spark, tmp.toString)
-    // sidecars land in the TMP dir before the publish: the single rename
-    // is the whole visibility step (a crash can no longer strand a chunk
-    // without its range/layout/marker records)
+    // sidecars land in the TMP dir before the publish: the single publish
+    // step is the whole visibility step (a crash can no longer strand a
+    // chunk without its range/layout/marker records)
     Hypertable.readRangeFile(fs, chunkP)
       .foreach(end => Hypertable.writeRangeFile(fs, tmp, end))
     // the space-layout stamp must survive like the range file: rows keep
@@ -664,7 +657,7 @@ object Columnstore {
     val out =
       if (nParts <= df.rdd.getNumPartitions) df.coalesce(nParts)
       else df.repartition(nParts)
-    val tmp = rewriteTmp(spark, fs, chunkP, "decompress")
+    val tmp = rewriteTmp(fs, chunkP, "decompress")
     var w = out.write.mode("overwrite")
     if (spacePart.nonEmpty) w = w.partitionBy(spacePart: _*)
     w.parquet(tmp.toString)

@@ -65,33 +65,29 @@ class Hypertable private (
       * the single-count fast path with zero extra metadata I/O.
       */
     val repartitioned: Boolean = false,
-    /** Chunk-set discovery mode (SCALE.md cliff #1). "list" (default):
-      * every `showChunks` lists the `_chunk=` dirs and reads each one's
-      * `_range` marker — O(chunks) metadata I/O per QUERY, which at 10⁵
-      * chunks on an object store is the dominant planning cost. "table":
-      * the chunk set persists in ONE `_graft_chunks.json` catalog file
-      * (the reference's `_timescaledb_catalog.chunk` analogue), refreshed
-      * at the end of each mutating operation — queries read one file;
-      * the O(chunks) listing runs only when the chunk set actually
-      * changes (ingest batches, maintenance), where it amortizes.
-      * The "table" mode's crash self-heal keys off storage-root directory
-      * mtimes — see [[catalogFresh]] for the object-store caveat (call
-      * `refreshChunkCatalog()` after a writer crash on S3-like stores).
-      */
-    val catalogMode: String = "list",
-    /** True for catalog="table" tables created from round 8 on: chunk
-      * content is versioned in `_gen=` subdirs so rewrites never delete
-      * what a pinned reader planned against — see the generational-layout
-      * note on the companion object. False = the flat pre-round-8 layout
-      * with in-place rewrite swaps (and their documented swap windows).
+    /** True for catalog="table" tables: chunk content is versioned in
+      * `_gen=` subdirs so rewrites never delete what a pinned reader
+      * planned against — see the generational-layout note on the
+      * companion object. False = the flat layout with in-place rewrite
+      * swaps (and their documented swap windows).
       */
     val genLayout: Boolean = false) extends TimeSource {
 
   import Hypertable._
 
-  require(!genLayout || catalogMode == "table",
-    "the generational chunk layout requires the table catalog " +
-      "(readers pin a manifest version; list mode has none)")
+  /** Chunk-set discovery mode (SCALE.md cliff #1), fixed by the layout.
+    * "list" (flat layout): every `showChunks` lists the `_chunk=` dirs
+    * and reads each one's `_range` marker — O(chunks) metadata I/O per
+    * QUERY, which at 10⁵ chunks on an object store is the dominant
+    * planning cost. "table" (generation layout): the chunk set persists
+    * in a versioned manifest under `_graft_catalog/` (the reference's
+    * `_timescaledb_catalog.chunk` analogue), republished at the end of
+    * each mutating operation — queries read one file; the O(chunks)
+    * listing runs only when the chunk set actually changes. Its crash
+    * self-heal keys off storage-root mtimes or content counters — see
+    * [[catalogFresh]].
+    */
+  def catalogMode: String = if (genLayout) "table" else "list"
 
   require(extraSpace.isEmpty || spaceCol.isDefined,
     "extra closed dimensions need a primary space dimension first")
@@ -854,7 +850,7 @@ class Hypertable private (
     // per call, and on uuidv7 tables (footer stats never trusted) an
     // unmemoized probe is a real edge-chunk scan per query. List mode
     // keeps per-call probing — no cheap freshness stamp exists there.
-    if (catalogMode == "table") {
+    if (genLayout) {
       val stamp = metaStamp()
       cachedTimeBounds match {
         case Some((s, b)) if s == stamp && stamp._1 != -1L => return b
@@ -944,7 +940,7 @@ class Hypertable private (
     }
     Hypertable.writeMeta(spark, path, timeCol, timeKind, chunkWidthMicros,
       chunkMonths, spaceCol, newSpaceParts, newExtra, repartitioned = true,
-      catalog = catalogMode, genLayout = genLayout)
+      genLayout = genLayout)
     Hypertable.at(spark, path)
   }
 
@@ -1106,12 +1102,13 @@ class Hypertable private (
     * `spark.read.parquet(root)` pays O(chunks) partition discovery per
     * CALL (ScaleProbe catalog probe: 15–21 s at 10,080 chunks), and a
     * session typically issues many queries against an unchanged table.
-    * Under `catalog="table"` the snapshot file's mtime is a 1-RPC
-    * freshness stamp — every chunk-set mutation re-snapshots (and
-    * [[refreshChunkCatalog]] re-stamps), so the memo invalidates exactly
-    * when the chunk set can have changed; ALTER ADD COLUMN invalidates
-    * via the schema file's stamp. List-mode tables skip the memo (no
-    * cheap stamp — and their whole contract is per-query listing).
+    * Under `catalog="table"` the latest manifest version is the
+    * freshness stamp — every chunk-set mutation publishes a new version
+    * (and [[refreshChunkCatalog]] publishes one), so the memo invalidates
+    * exactly when the chunk set can have changed; ALTER ADD COLUMN
+    * invalidates via the schema file's stamp. List-mode tables skip the
+    * memo (no cheap stamp — and their whole contract is per-query
+    * listing).
     */
   @volatile private var cachedScan: Option[((Long, Long, Long), DataFrame)] = None
   @volatile private var cachedTimeBounds:
@@ -1175,7 +1172,7 @@ class Hypertable private (
     withReaderEpoch {
       val info = exclusionInfo
       Hypertable.registerForExclusion(info)
-      if (catalogMode == "table") {
+      if (genLayout) {
         val stamp = metaStamp()
         (cachedScan match {
           case Some((s, df)) if s == stamp && stamp._1 != -1L => Some(df)
@@ -1487,7 +1484,7 @@ class Hypertable private (
       healTablespaceMarkers()
     }
     val chunks =
-      if (catalogMode == "table") {
+      if (genLayout) {
         // crash-recovery staleness check ONCE per handle: a process that
         // died between a data commit and syncChunkCatalog() left committed
         // chunks invisible to catalog reads; the next session's first use
@@ -1586,21 +1583,16 @@ class Hypertable private (
   private def catalogDir: Path = new Path(path, Hypertable.CATALOG_DIR)
 
   /** Manifest versions currently published, ascending (empty before the
-    * first refresh / on a pre-round-8 table).
+    * first refresh).
     */
   private def manifestVersions(): Seq[(Long, Path)] =
     Hypertable.listManifests(fs, catalogDir)
 
   /** Monotonic catalog stamp: the highest manifest version (the memo key —
-    * immune to mtime granularity), falling back to the legacy single
-    * file's mtime until the first refresh migrates it. -1 = no catalog.
+    * immune to mtime granularity). -1 = no manifest yet.
     */
   private def catalogStampNow(): Long =
-    manifestVersions().lastOption.map(_._1).getOrElse {
-      try fs.getFileStatus(new Path(path, Hypertable.CHUNK_CATALOG))
-        .getModificationTime
-      catch { case _: Exception => -1L }
-    }
+    manifestVersions().lastOption.map(_._1).getOrElse(-1L)
 
   /** Every chunk by PHYSICAL dir listing across all storage roots — the
     * ground truth the "table" catalog snapshots. Gen layout: a torn
@@ -1764,13 +1756,25 @@ class Hypertable private (
         case Some(at) =>
           val parent = listed.find(c => c.startMicros == start &&
             c.endMicros > at)
-          val upperLive = listed.exists(_.startMicros == at)
-          if (parent.isDefined && upperLive) {
-            val c = parent.get
-            rewriteChunkDir(c.startMicros, at,
-              chunkRows(c).where(!atOrLaterExpr(at)),
-              forceCompressed =
-                Some(Columnstore.isCompressed(spark, c.path)))
+          // the upper half counts only when COMPLETE: its `_range` is
+          // written before its commit, so a listed upper without one is
+          // torn debris (an older version could publish a new chunk's
+          // stage before its write finished) — its rows still live in the
+          // unshrunk parent, so it is retired, never rolled forward onto
+          val upper = listed.find(_.startMicros == at).map { u =>
+            val up = new Path(u.path)
+            (up.getFileSystem(spark.sparkContext.hadoopConfiguration), up)
+          }
+          val upperDone = upper.exists { case (ufs, up) =>
+            Hypertable.readRangeFile(ufs, up).isDefined }
+          parent.foreach { c =>
+            if (upperDone)
+              rewriteChunkDir(c.startMicros, at,
+                chunkRows(c).where(!atOrLaterExpr(at)),
+                forceCompressed =
+                  Some(Columnstore.isCompressed(spark, c.path)))
+            else upper.foreach { case (ufs, up) =>
+              Hypertable.tombstoneChunk(ufs, Hypertable.chunkDirOf(up)) }
           }
           fs.delete(p, false)
         case None => fs.delete(p, false)
@@ -1797,9 +1801,9 @@ class Hypertable private (
         .map(s => s.getPath.getName.stripPrefix(s"$CHUNK=").toLong -> s.getPath)
     }
 
-  /** Snapshot the physical chunk set into `_graft_chunks.json` and return
-    * it — the "table" catalog's refresh, called by every mutator that can
-    * change the chunk set or a chunk's recorded range.
+  /** Publish the physical chunk set as the next manifest version and
+    * return it — the "table" catalog's refresh, called by every mutator
+    * that can change the chunk set or a chunk's recorded range.
     *
     * Serialized per table path within the JVM: catalog snapshots only ever
     * run on the driver (mutators and the once-per-handle crash heal), so a
@@ -1830,13 +1834,14 @@ class Hypertable private (
   private def refreshChunkCatalogLocked(): Seq[ChunkInfo] = {
     // GC piggybacks on the refresh's full listing: graced-out superseded
     // generations, tombstoned dirs, and crash-remnant generations go here
-    // (under the catalog lock, so a publish's rename+stamp never
-    // interleaves — a remnant seen here is a genuinely dead rewrite).
+    // (under the catalog lock, so a publish's stamps never interleave,
+    // and in-flight stages carry a live staging marker — a remnant seen
+    // here is a genuinely dead rewrite).
     // ONLY in the process holding the mutator lease: a pure-READER
     // process also reaches this method (the staleness heal), and its
     // catalogLock is JVM-local — letting it delete "remnants" would race
     // the real mutator's publish window cross-process (it could reap a
-    // just-renamed generation before its superseded stamp lands). Readers
+    // just-written generation before its superseded stamp lands). Readers
     // heal the manifest; only the mutator collects garbage.
     if (genLayout && Hypertable.heldLeases.containsKey(qualifiedPath)) {
       val grace = Hypertable.gcGraceMs(spark)
@@ -1880,47 +1885,38 @@ class Hypertable private (
       new Path(catalogDir, f"v$next%d.json"), o.toString)
     versions.dropRight(Hypertable.CATALOG_KEEP - 1)
       .foreach { case (_, p) => fs.delete(p, false) }
-    // migrate away the legacy single-file snapshot, if any
-    fs.delete(new Path(path, Hypertable.CHUNK_CATALOG), false)
     chunks
   }
 
   private def readChunkCatalog(): Option[Seq[ChunkInfo]] = {
-    def parse(body: String): Seq[ChunkInfo] = {
-      val tree = Hypertable.jsonMapper.readTree(body)
+    def parse(p: Path): Seq[ChunkInfo] = {
+      val tree = Hypertable.jsonMapper.readTree(Hypertable.readSmallFile(fs, p))
       import scala.jdk.CollectionConverters._
       tree.get("chunks").elements().asScala.map(n =>
         ChunkInfo(n.get("s").asLong, n.get("e").asLong, n.get("p").asText))
         .toSeq.sortBy(_.startMicros)
     }
-    manifestVersions().lastOption match {
-      case Some((_, p)) =>
-        // a concurrent refresh can GC the version between the listing and
-        // the open — re-resolve once; the caller answers a second miss by
-        // re-snapshotting
-        try Some(parse(Hypertable.readSmallFile(fs, p)))
-        catch {
-          case _: java.io.FileNotFoundException =>
-            manifestVersions().lastOption.flatMap { case (_, p2) =>
-              try Some(parse(Hypertable.readSmallFile(fs, p2)))
-              catch { case _: java.io.FileNotFoundException => None }
-            }
-        }
-      case None =>
-        // legacy single-file snapshot (pre-round-8 table): first refresh
-        // migrates it to the manifest dir
-        val p = new Path(path, Hypertable.CHUNK_CATALOG)
-        if (!fs.exists(p)) return None
-        try Some(parse(Hypertable.readSmallFile(fs, p)))
-        catch { case _: java.io.FileNotFoundException => None }
+    // a concurrent refresh can GC the version between the listing and the
+    // open — re-resolve once; the caller answers a second miss by
+    // re-snapshotting
+    manifestVersions().lastOption.flatMap { case (_, p) =>
+      try Some(parse(p))
+      catch {
+        case _: java.io.FileNotFoundException =>
+          manifestVersions().lastOption.flatMap { case (_, p2) =>
+            try Some(parse(p2))
+            catch { case _: java.io.FileNotFoundException => None }
+          }
+      }
     }
   }
 
-  /** Post-mutation hook: under the "table" catalog every chunk-set /
-    * range-changing operation re-snapshots; a no-op under "list".
+  /** Post-mutation hook: on the generation layout every chunk-set /
+    * range-changing operation publishes a manifest; a no-op on the flat
+    * layout.
     */
   private def syncChunkCatalog(): Unit =
-    if (catalogMode == "table") { refreshChunkCatalog(); () }
+    if (genLayout) { refreshChunkCatalog(); () }
 
   /** Append-path catalog sync (round 11): an append changes the chunk
     * set only by OPENING new dirs (or committing a rebirth) — existing
@@ -1950,7 +1946,7 @@ class Hypertable private (
     * lease holder's full refresh, as before).
     */
   private def syncChunkCatalogAppend(): Unit = {
-    if (catalogMode != "table") return
+    if (!genLayout) return
     Hypertable.catalogLock(qualifiedPath).synchronized {
       MutationGate.withCatalogFsLock(spark, fs, qualifiedPath) {
         val latest = manifestVersions().lastOption
@@ -1983,18 +1979,14 @@ class Hypertable private (
                       // rebirth; a tombstoned dir resolves to None)
                       val start = s.getPath.getName
                         .stripPrefix(s"$CHUNK=").toLong
-                      val data =
-                        if (genLayout) Hypertable.liveDataDir(rfs, s.getPath)
-                        else Some(s.getPath)
-                      data.map { d =>
+                      Hypertable.liveDataDir(rfs, s.getPath).map { d =>
                         ChunkInfo(start, Hypertable.readRangeFile(rfs, d)
                           .getOrElse(defaultChunkEnd(start)), d.toString)
                       }
                     }
                 }
             }.sortBy(_.startMicros)
-            val chunks =
-              if (genLayout) applyRewriteIntents(listed) else listed
+            val chunks = applyRewriteIntents(listed)
             val o = Hypertable.jsonMapper.createObjectNode()
             val arr = o.putArray("chunks")
             chunks.foreach { c =>
@@ -2069,22 +2061,17 @@ class Hypertable private (
     // mutator still re-snapshots, and the documented recovery after a
     // writer crash remains an explicit refreshChunkCatalog().
     if (!Hypertable.mtimeReliable(spark)) return catalogFreshByCounter()
+    // a version GC'd between the listing and the stat reads as "stale"
+    // (the caller re-snapshots under the catalog lock), never as an error
     val catM = manifestVersions().lastOption.map { case (_, p) =>
       try fs.getFileStatus(p).getModificationTime
       catch { case _: java.io.FileNotFoundException => return false }
-    }.getOrElse {
-      val cat = new Path(path, Hypertable.CHUNK_CATALOG)
-      if (!fs.exists(cat)) return false
-      // exists→stat race against a concurrent swap reads as "stale" (the
-      // caller re-snapshots under the catalog lock), never as a reader error
-      try fs.getFileStatus(cat).getModificationTime
-      catch { case _: java.io.FileNotFoundException => return false }
-    }
+    }.getOrElse(return false)
     val roots = new Path(path) +: tablespaceTableDirs
     roots.forall { r =>
       val rfs = r.getFileSystem(spark.sparkContext.hadoopConfiguration)
       !rfs.exists(r) || {
-        // a gen publish renames INSIDE the chunk dir (the root's own mtime
+        // a gen publish lands INSIDE the chunk dir (the root's own mtime
         // does not move) but bumps the root's content stamp before its
         // commit stamp — so a crash between a publish and its manifest
         // sync still reads as stale here and heals
@@ -2183,28 +2170,36 @@ class Hypertable private (
     // the recorded space layout survives the physical rewrite (rows keep
     // their `_space` values, so the counts that produced them still hold)
     val parts = if (repartitioned) Hypertable.readSpaceParts(fs, target) else None
-    // dot-prefixed: invisible to Spark's file index while in flight. Built
-    // COMPLETE — data and every sidecar — before the single publish step,
-    // so a crash mid-build leaves only an invisible tmp and a crash after
-    // publish leaves a fully-formed generation (gen layout) / dir (flat).
-    // Gen layout stages INSIDE the chunk identity dir (unique per chunk,
-    // and the chunk GC covers crashed leftovers); the flat layout stages
-    // next to the dir its swap deletes, as before.
-    val directMode = genLayout &&
-      Hypertable.publishMode(spark) == "direct"
+    // Built COMPLETE — data and every sidecar — before the single publish
+    // step, so a crash mid-build leaves only a never-committed stage and a
+    // crash after publish leaves a fully-formed generation (gen layout) /
+    // dir (flat). Gen layout stages IN the chunk's next generation dir
+    // (see publishChunkRewrite); the flat layout stages in a dot-prefixed
+    // dir, invisible to Spark's file index, next to the dir its swap
+    // deletes.
     val tmp =
-      if (directMode) // stage IN the final generation dir (publishMode doc)
-        Hypertable.stageGenDir(fs, Hypertable.chunkDirOf(target))
-      else if (genLayout) {
-        fs.mkdirs(Hypertable.chunkDirOf(target))
-        Hypertable.registerRewriteTmp(fs,
-          new Path(Hypertable.chunkDirOf(target), s".tmp_chunk_$startMicros"))
+      if (genLayout) {
+        val chunkDir = Hypertable.chunkDirOf(target)
+        // a NEW chunk (split's upper half, a range with no live chunk) has
+        // no live generation to hide its stage behind: the write job
+        // creates `_gen=` as it starts, and listing liveness ("lowest
+        // unstamped") would serve the partial stage as a chunk — and a
+        // torn split's roll-forward would shrink the parent onto it. Stage
+        // behind a tombstone instead (a dropped dir already has one); the
+        // commit below lifts it. A crash leaves a tombstoned dir the next
+        // append normalizes dead and GC reaps.
+        if (existing.isEmpty && !Hypertable.isTombstoned(fs, chunkDir)) {
+          fs.mkdirs(chunkDir)
+          Hypertable.tombstoneChunk(fs, chunkDir)
+        }
+        Hypertable.stageGenDir(fs, chunkDir)
       } else Hypertable.registerRewriteTmp(fs,
         new Path(target.getParent, s".tmp_chunk_$startMicros"))
     var w = df.write.mode(SaveMode.Overwrite)
     if (compressed) w = w.option("compression", "zstd")
     if (spaceDims.nonEmpty) w = w.partitionBy(spaceDims.map(_._3): _*)
     w.parquet(tmp.toString)
+    Hypertable.crashPoint("rewrite.staged")
     Hypertable.writeRangeFile(fs, tmp, endMicros)
     parts.foreach(Hypertable.writeSpaceParts(fs, tmp, _))
     if (compressed) Columnstore.markCompressed(fs, tmp)
@@ -2215,41 +2210,24 @@ class Hypertable private (
       case Some(cur) =>
         Hypertable.publishChunkRewrite(spark, fs, cur, tmp).getOrElse(cur)
       case None if genLayout =>
-        // new chunk — but its identity dir may be a dropped/merged-away
-        // dir still holding grace-retained dead generations (split after
-        // merge reuses the absorbed chunk's start; DML/merge into a
-        // dropped range likewise). Born ABOVE every dead generation: a
-        // rename onto an existing `_gen=0` would silently NEST the tmp
-        // dir inside it (Hadoop rename-into-directory semantics) and
-        // resurrect the dead data instead of publishing the new.
+        // new chunk, staged behind its tombstone above every dead
+        // generation (its identity dir may be a dropped/merged-away dir
+        // still holding grace-retained ones: split after merge reuses the
+        // absorbed chunk's start). Commit INLINE (we hold the table write
+        // lock): dead generations stamped first, tombstone off last.
+        // Deliberately NO completion marker: a crash mid-commit leaves an
+        // unmarked generation healRebirth refuses and the next append
+        // normalizes dead — the op was never acked, so the chunk staying
+        // absent (or dropped) is the correct outcome
         val chunkDir = target
-        fs.mkdirs(chunkDir)
-        // direct mode already staged in the final generation dir — the
-        // data is in place, nothing to rename
-        val (next, dst) =
-          if (directMode) (Hypertable.genOf(tmp), tmp)
-          else {
-            val n = Hypertable.listGenDirs(fs, chunkDir).map(_._1)
-              .maxOption.getOrElse(-1) + 1
-            val d = new Path(chunkDir, s"${Hypertable.GEN}=$n")
-            require(fs.rename(tmp, d), s"rename $tmp -> $d failed")
-            (n, d)
-          }
-        if (Hypertable.isTombstoned(fs, chunkDir)) {
-          // commit the rebirth INLINE (we hold the table write lock):
-          // dead generations stamped first, tombstone off last.
-          // Deliberately NO completion marker: a crash mid-commit leaves
-          // an unmarked generation healRebirth refuses and the next
-          // append normalizes dead — the op was never acked, so the
-          // drop staying in force is the correct outcome
-          Hypertable.listGenDirs(fs, chunkDir).foreach { case (g, d) =>
-            if (g < next && !Hypertable.isSuperseded(fs, d))
-              Hypertable.stampSuperseded(fs, d)
-          }
-          fs.delete(new Path(chunkDir, Hypertable.DROP_TOMB), false)
+        val next = Hypertable.genOf(tmp)
+        Hypertable.listGenDirs(fs, chunkDir).foreach { case (g, d) =>
+          if (g < next && !Hypertable.isSuperseded(fs, d))
+            Hypertable.stampSuperseded(fs, d)
         }
+        fs.delete(new Path(chunkDir, Hypertable.DROP_TOMB), false)
         Hypertable.unregisterRewriteTmp(fs, tmp)
-        dst
+        tmp
       case None =>
         require(fs.rename(tmp, target), s"rename $tmp -> $target failed")
         Hypertable.unregisterRewriteTmp(fs, tmp)
@@ -2748,12 +2726,15 @@ class Hypertable private (
     }
     Hypertable.writeMeta(spark, path, timeCol, timeKind, chunkWidthMicros,
       chunkMonths, spaceCol, spacePartitions, extraSpace, repartitioned,
-      catalog = "table", genLayout = true)
+      genLayout = true)
     val nh = new Hypertable(spark, path, timeCol, chunkWidthMicros, spaceCol,
       spacePartitions, chunkMonths = chunkMonths, timeKind = timeKind,
       extraSpace = extraSpace, repartitioned = repartitioned,
-      catalogMode = "table", genLayout = true)
+      genLayout = true)
     nh.refreshChunkCatalog()
+    // an older version's single-file chunk snapshot (a table-catalog flat
+    // table carries one): nothing reads it, the manifest supersedes it
+    fs.delete(new Path(path, "_graft_chunks.json"), false)
     fs.delete(new Path(path, Hypertable.MIGRATING), false)
     nh
   }
@@ -2922,12 +2903,12 @@ class Hypertable private (
     if (spaceCol.isEmpty)
       Hypertable.writeMeta(spark, path, timeCol, timeKind, chunkWidthMicros,
         chunkMonths, Some(column), partitions, extraSpace, repartitioned,
-        catalog = catalogMode, genLayout = genLayout)
+        genLayout = genLayout)
     else
       Hypertable.writeMeta(spark, path, timeCol, timeKind, chunkWidthMicros,
         chunkMonths, spaceCol, spacePartitions,
         extraSpace :+ (column -> partitions), repartitioned,
-        catalog = catalogMode, genLayout = genLayout)
+        genLayout = genLayout)
     Hypertable.at(spark, path)
   }
 
@@ -2951,7 +2932,7 @@ class Hypertable private (
       Hypertable.writeMeta(spark, path, timeCol, timeKind,
         updated.chunkWidthMicros, updated.chunkMonths, spaceCol,
         spacePartitions, extraSpace, repartitioned = true,
-        catalog = catalogMode, genLayout = genLayout)
+        genLayout = genLayout)
       Hypertable.at(spark, path)
     } else updated
   }
@@ -3251,12 +3232,6 @@ object Hypertable {
   val GEN = "_gen"
   private val META = "_graft_hypertable.json"
   private val RANGE = "_graft_range"
-  /** The catalog="table" chunk-set snapshot (`_timescaledb_catalog.chunk`
-    * analogue) — LEGACY single-file form; gen-layout tables use the
-    * versioned manifests under [[CATALOG_DIR]] instead.
-    */
-  private[sources] val CHUNK_CATALOG = "_graft_chunks.json"
-
   /** Table-root marker set for the duration of a flat→generational layout
     * migration ([[Hypertable!.migrateToGenLayout]]): while present the
     * table may hold a MIX of flat and `_gen=` chunk dirs, so a fresh open
@@ -3327,21 +3302,22 @@ object Hypertable {
   private[sources] val CONTENT_STAMP = "_graft_content_stamp"
 
   // ------------------------------------------------- generational chunk dirs
-  // Gen-layout tables (catalog="table" tables created from round 8 on)
-  // version each chunk's CONTENT in `_gen=<n>` partition subdirs:
+  // Gen-layout tables (catalog="table") version each chunk's CONTENT in
+  // `_gen=<n>` partition subdirs:
   //   root/_chunk=<start>/_gen=<n>[/_space=<b>]/part-*.parquet
   // A rewrite (DML copy-on-write, compress/decompress, merge/split,
-  // compact) publishes the next generation with ONE rename of a completed
-  // tmp dir, then stamps the old generation `.graft_superseded` — the
-  // COMMIT POINT — and re-snapshots the manifest. Superseded generations
-  // stay on disk for a grace window, so a reader pinned to an older
-  // manifest keeps reading exactly the files it planned — the
+  // compact) writes the next generation in place (stageGenDir), then
+  // stamps the old generation `.graft_superseded` — the COMMIT POINT —
+  // and re-snapshots the manifest (publishChunkRewrite). Superseded
+  // generations stay on disk for a grace window, so a reader pinned to an
+  // older manifest keeps reading exactly the files it planned — the
   // file-listing equivalent of the reference's MVCC snapshot
   // (`src/ts_catalog/catalog.c` consistent chunk-set reads; every
   // `test/isolation/specs/*.spec` reader relies on it). Liveness is the
-  // LOWEST unstamped generation: an unstamped dir ABOVE it is a crash
-  // remnant from the window between the publish rename and the stamp
-  // (i.e. an uncommitted rewrite) and is rolled back by GC. Drops write a
+  // LOWEST unstamped generation: an unstamped dir ABOVE it is an
+  // in-flight stage or, once its staging marker is gone or stale, the
+  // remnant of a rewrite that crashed before its stamp (never committed),
+  // which GC rolls back. Drops write a
   // `.graft_dropped` tombstone instead of deleting, with the same grace.
 
   private[sources] val SUPERSEDED = ".graft_superseded"
@@ -3711,7 +3687,7 @@ object Hypertable {
   /** The cross-process in-flight marker guarding a staged rewrite dir: a
     * heartbeated file NEXT TO the staged dir (inside it, the write job's
     * Overwrite would wipe it). [[gcChunkDir]] refuses to reap any staged
-    * dir — direct-mode `_gen=` stage or dot-tmp — whose marker is live,
+    * dir — staged `_gen=` dir or dot-tmp — whose marker is live,
     * so a FOREIGN process's GC (a takeover after this process's heartbeat
     * stalled, or any future GC-running lease class) can never delete a
     * stage mid-write on the strength of its own JVM-local
@@ -4239,34 +4215,15 @@ object Hypertable {
     }
   }
 
-  /** How a gen-layout chunk rewrite publishes (`spark.graft.publish.mode`):
-    *
-    *  - `"rename"` (default): stage in a dot-prefixed tmp dir, publish
-    *    with one ATOMIC DIRECTORY RENAME to `_gen=N+1`. Needs a
-    *    rename-atomic store (local FS, HDFS) — see SCALE.md §15.
-    *  - `"direct"`: stage IN the final `_gen=N+1` dir (registered
-    *    in-flight so no GC touches it) and COMMIT by stamping the old
-    *    generation superseded — one single-object PUT, atomic on every
-    *    store including S3/GCS. Mid-write, the partial new generation is
-    *    invisible: manifest readers resolve the old path, and listing
-    *    liveness is "lowest unstamped generation", which stays the old
-    *    one until the stamp. A crash mid-write leaves an unstamped
-    *    above-live remnant the next maintenance GC deletes (never acked);
-    *    a crash after the stamp heals forward (the staleness cue
-    *    re-lists and finds the completed generation live). This removes
-    *    the publish path's LAST atomic-rename dependency on object
-    *    stores. Flat-layout chunks always use the in-place swap
-    *    regardless of the mode (their layout has nowhere to stage).
+  /** Staging target of a gen-layout chunk rewrite: the chunk's NEXT
+    * generation dir itself (above every live or dead generation),
+    * registered in flight so no GC touches it. See
+    * [[publishChunkRewrite]] for the commit. Callers hold the per-chunk
+    * serialization (table write lock or chunk monitor), so the max-gen
+    * read is stable; appends only ever write into the LIVE (lower)
+    * generation.
     */
-  private[graft] def publishMode(spark: SparkSession): String =
-    spark.conf.get("spark.graft.publish.mode", "rename")
-
-  /** Direct-mode staging target: the chunk's NEXT generation dir itself,
-    * registered in flight. Callers hold the per-chunk serialization
-    * (table write lock or chunk monitor), so the max-gen read is stable;
-    * appends only ever write into the LIVE (lower) generation.
-    */
-  private[sources] def stageGenDir(fs: FileSystem, chunkDir: Path): Path = {
+  private[graft] def stageGenDir(fs: FileSystem, chunkDir: Path): Path = {
     fs.mkdirs(chunkDir)
     val next = listGenDirs(fs, chunkDir).map(_._1).maxOption.getOrElse(-1) + 1
     registerRewriteTmp(fs, new Path(chunkDir, s"$GEN=$next"))
@@ -4367,7 +4324,7 @@ object Hypertable {
         // crash remnant — but only when no process advertises the dir as
         // a stage in flight: the JVM-local registration covers OUR stages,
         // the heartbeated on-disk marker covers a FOREIGN process's
-        // direct-mode stage (a lease takeover's GC must not delete a
+        // stage (a lease takeover's GC must not delete a
         // zombie rewriter's stage mid-write; the remnant reaps once the
         // marker's heartbeat goes stale)
         fs.delete(d, true)
@@ -4375,7 +4332,7 @@ object Hypertable {
         catch { case _: java.io.IOException => () }
       }
     }
-    // stale publish tmp dirs (crashed before their rename). NEVER one
+    // stale dot-prefixed staging dirs (a crashed rewrite's tmp). NEVER one
     // registered as in flight (JVM set or live on-disk staging marker):
     // the age heuristic reads the dir mtime, which for a running Spark
     // write is the job START — see [[registerRewriteTmp]]
@@ -4492,25 +4449,30 @@ object Hypertable {
   }
 
   /** Publish a completed rewrite of the chunk whose CURRENT live data dir
-    * is `live`, from the fully-built tmp dir `tmp` (data + sidecars:
+    * is `live`, from the fully-built stage `tmp` (data + sidecars:
     * `_range`, `_graft_spaceparts`, columnstore marker, colstats — all
-    * written into tmp BEFORE this call, so the single publish rename is
-    * the only visibility step). Returns Some(new live path), or None when
-    * the chunk was tombstoned mid-rewrite and the drop won (the rewrite
-    * is discarded; callers must skip their stamp/manifest sync and report
-    * that nothing was published).
+    * written into the stage BEFORE this call). Returns Some(new live
+    * path), or None when the chunk was tombstoned mid-rewrite and the drop
+    * won (the rewrite is discarded; callers must skip their stamp/manifest
+    * sync and report that nothing was published).
     *
-    * Gen layout (live is a `_gen=` dir): under the table's catalog lock,
-    * rename tmp → next generation, bump the owning root's content stamp
-    * (the crash-heal cue — a publish rename inside the chunk dir does not
-    * touch the ROOT's mtime), stamp the old generation superseded (the
-    * commit point), then GC this chunk's graced-out generations. The
-    * caller re-snapshots the manifest afterwards. Crash windows: before
-    * the stamp, the old generation stays live and the new dir is a
-    * remnant GC rolls back (the rewrite never committed); after it, the
-    * next catalog heal re-points the manifest at the new generation.
+    * Gen layout (live is a `_gen=` dir) — stage-and-stamp: `tmp` is the
+    * chunk's next generation dir from [[stageGenDir]], so the data is
+    * already in place and no file or dir is renamed. Under the table's
+    * catalog lock: bump the owning root's content stamp (the crash-heal
+    * cue — a publish inside the chunk dir does not touch the ROOT's
+    * mtime), stamp the old generation superseded (the COMMIT point: one
+    * single-object PUT, atomic on every store including S3/GCS), then GC
+    * this chunk's graced-out generations. The caller re-snapshots the
+    * manifest afterwards. Mid-write the partial new generation is
+    * invisible: manifest readers resolve the old path, and listing
+    * liveness is "lowest unstamped generation", which stays the old one
+    * until the stamp. A crash before the stamp leaves an unstamped
+    * above-live remnant the next maintenance GC deletes (never acked); a
+    * crash after it heals forward (the staleness cue re-lists and finds
+    * the new generation live).
     *
-    * Flat layout: the pre-round-8 in-place delete+rename swap.
+    * Flat layout: the in-place delete+rename swap.
     */
   private[graft] def publishChunkRewrite(spark: SparkSession, fs: FileSystem,
       live: Path, tmp: Path): Option[Path] = try {
@@ -4523,11 +4485,14 @@ object Hypertable {
       Some(live)
     } else {
       val chunkDir = live.getParent
+      require(isGenPath(tmp) &&
+        fs.makeQualified(tmp.getParent) == fs.makeQualified(chunkDir),
+        s"$tmp is not a generation staged in $chunkDir (stageGenDir)")
       val primary = resolvePrimaryRoot(fs, chunkDir)
       val pfs = new Path(primary)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       catalogLock(primary).synchronized {
-      // the rename+stamp pair is the manifest's ground truth: hold the
+      // the stamps are the manifest's ground truth: hold the
       // cross-process catalog lock so a concurrent appender's full
       // refresh can never list the new generation before its
       // predecessor's superseded stamp lands (torn listing)
@@ -4545,22 +4510,11 @@ object Hypertable {
           fs.delete(tmp, true)
           return None
         }
-        // direct mode staged IN the final generation dir — the commit is
-        // the superseded stamp below, no rename needed (publishMode doc)
-        val directStaged = isGenPath(tmp) && tmp.getParent == chunkDir
         val gens = listGenDirs(fs, chunkDir)
           .filterNot(_._2.getName == tmp.getName)
-        crashPoint("publish.before_rename")
-        val dst =
-          if (directStaged) tmp
-          else {
-            val next = gens.map(_._1).max + 1
-            val d = new Path(chunkDir, s"$GEN=$next")
-            require(fs.rename(tmp, d), s"rename $tmp -> $d failed")
-            d
-          }
-        crashPoint("publish.after_rename")
+        crashPoint("publish.before_content_stamp")
         touchContentStamp(fs, chunkDir.getParent)
+        crashPoint("publish.after_content_stamp")
         // stamp EVERY unstamped generation below the new one (not just
         // the caller's handle): the commit invariant is exactly one
         // unstamped (live) generation — the caller retargets to the live
@@ -4576,7 +4530,7 @@ object Hypertable {
         gcChunkDir(fs, chunkDir, gcGraceMs(spark),
           ChunkReaderEpochs.liveFloor(spark, pfs, new Path(primary)),
           ChunkReaderEpochs.skewMs(spark))
-        Some(dst)
+        Some(tmp)
       }
       }
     }
@@ -5043,12 +4997,18 @@ object Hypertable {
         } finally in.close()
     }
 
-  /** Declare (or re-open) a hypertable rooted at `path`. Default chunk width
-    * is the reference's 7 days (`src/dimension.h:115`).
-    */
-  /** Declare (or re-open) a hypertable. `chunkWidth` is an interval string
-    * for "timestamp"/"uuidv7" dimensions, or a raw integer width (as a
-    * string, e.g. "3600000000") for a "bigint" dimension.
+  /** Declare (or re-open) a hypertable rooted at `path`. `chunkWidth` is an
+    * interval string for "timestamp"/"uuidv7" dimensions (default: the
+    * reference's 7 days, `src/dimension.h:115`), or a raw integer width (as
+    * a string, e.g. "3600000000") for a "bigint" dimension.
+    *
+    * `catalog` picks one of the two layouts of a NEW table: "list" (flat
+    * `_chunk=` dirs, chunk set listed per query, rewrites swap in place)
+    * or "table" (generations: a versioned chunk manifest, and every chunk
+    * rewrite stages its next `_gen=` dir and commits by stamping the old
+    * one superseded — see [[publishChunkRewrite]]). Re-opening an existing
+    * table keeps its layout whatever `catalog` says; a list table reaches
+    * the generation layout only through `migrateToGenLayout()`.
     */
   def create(spark: SparkSession, path: String, timeCol: String,
       chunkWidth: String = "7 days", spaceCol: Option[String] = None,
@@ -5071,26 +5031,23 @@ object Hypertable {
     require(catalog == "list" || catalog == "table",
       s"catalog must be 'list' or 'table', got '$catalog'")
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // re-opening an existing table keeps its physical layout: a flat
-    // pre-round-8 table must not silently flip to the generational layout
-    // (its chunks carry no _gen= dirs) — and a MIGRATED table must not
-    // flip back (the exception-guarded helper read also keeps a transient
-    // read failure from being mistaken for "flat" and persisted below).
-    // The layout is sticky THROUGH the catalog too: generations need the
-    // manifest catalog, so create(catalog="list") on a gen table keeps
-    // "table" — the reference's create-on-existing if_not_exists shape,
-    // which preserves the existing configuration rather than erroring.
+    // re-opening an existing table keeps its physical layout, and with it
+    // its catalog: a flat table must not silently flip to the generational
+    // layout (its chunks carry no _gen= dirs; migrateToGenLayout is the
+    // way there) — and a MIGRATED table must not flip back (the
+    // exception-guarded helper read also keeps a transient read failure
+    // from being mistaken for "flat" and persisted below). The reference's
+    // create-on-existing if_not_exists shape: the existing configuration
+    // is preserved rather than erroring.
     val gen =
       if (fs.exists(new Path(path, META))) metaSaysGenLayout(fs, path)
       else catalog == "table"
-    val cat = if (gen) "table" else catalog
     val ht = new Hypertable(spark, path, timeCol, widthMicros, spaceCol,
       spacePartitions, chunkMonths = months, timeKind = timeKind,
-      extraSpace = extraSpace, catalogMode = cat, genLayout = gen)
+      extraSpace = extraSpace, genLayout = gen)
     fs.mkdirs(new Path(path))
     writeMeta(spark, path, timeCol, timeKind, widthMicros, months, spaceCol,
-      spacePartitions, extraSpace, repartitioned = false, catalog = cat,
-      genLayout = gen)
+      spacePartitions, extraSpace, repartitioned = false, genLayout = gen)
     // complete a crashed gen-layout migration before handing out a handle
     // over the mixed layout (same hook as [[at]])
     if (fs.exists(new Path(path, MIGRATING))) healCrashedMigration(ht) else ht
@@ -5100,7 +5057,7 @@ object Hypertable {
       timeCol: String, timeKind: String, widthMicros: Long, months: Int,
       spaceCol: Option[String], spacePartitions: Int,
       extraSpace: Seq[(String, Int)], repartitioned: Boolean,
-      catalog: String = "list", genLayout: Boolean = false): Unit = {
+      genLayout: Boolean = false): Unit = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val extraJson = extraSpace
       .map { case (c, n) => "\"" + c + ":" + n + "\"" }.mkString("[", ",", "]")
@@ -5112,7 +5069,7 @@ object Hypertable {
       s""""extraSpace":$extraJson,""" +
       s""""repartitioned":$repartitioned,""" +
       s""""genLayout":$genLayout,""" +
-      s""""catalog":"$catalog"}"""
+      s""""catalog":"${if (genLayout) "table" else "list"}"}"""
     writeSmallFileDirect(fs, new Path(path, META), meta)
   }
 
@@ -5146,7 +5103,7 @@ object Hypertable {
       num("chunkWidthMicros"),
       str("spaceCol"), num("spacePartitions").toInt, months,
       str("timeKind").getOrElse("timestamp"), extra, repartitioned = repart,
-      catalogMode = str("catalog").getOrElse("list"), genLayout = gen)
+      genLayout = gen)
     // a crashed gen-layout migration left its marker: complete it before
     // anything reads the mixed layout (claims the mutator lease — refuses
     // loudly when another process holds the table; released again after

@@ -789,10 +789,10 @@ private[graft] object MutationGate {
     String, java.util.concurrent.locks.ReentrantLock]()
 
   /** Serialize MANIFEST commits (full refresh, per-chunk patch, and the
-    * gen-publish rename+stamp they index) across processes: without it a
+    * gen-publish stamps they index) across processes: without it a
     * standing appender's full refresh and the maintenance process's
-    * publish/patch could interleave — a torn listing (new generation
-    * renamed in, superseded stamp not yet visible) or a version-number
+    * publish/patch could interleave — a torn listing (content stamp
+    * bumped, superseded stamp not yet visible) or a version-number
     * collision whose last writer persists the older view. Exclusive claim
     * ([[claimExclusive]]: create-exclusive + readback + contention-gated
     * settle) on a heartbeated marker at the primary root; held only for

@@ -371,13 +371,19 @@ class CompactionSpec extends AnyFunSuite {
       catalog = "table")
     ht.write(events)
     val n = ht.showChunks().size
-    // crash debris: rewriteChunkDir died between mkdirs and its publish
+    // crash debris of a new chunk's rewrite: died between mkdirs and
+    // its tombstone (a bare shell), or mid-write behind the tombstone (an
+    // aborted job's empty `_gen=0`)
     val shell = new java.io.File(s"$dir/ht/_chunk=99999999000000")
     assert(shell.mkdirs())
-    new java.io.File(shell, ".tmp_chunk_99999999000000").mkdirs()
+    val torn = new java.io.File(s"$dir/ht/_chunk=99999998000000")
+    assert(new java.io.File(torn, "_gen=0").mkdirs())
+    java.nio.file.Files.write(new java.io.File(torn, ".graft_dropped").toPath,
+      "-1".getBytes("UTF-8"))
     ht.refreshChunkCatalog()
     assert(ht.showChunks().size === n,
       "phantom shell must not enter the manifest")
+    assert(Hypertable.at(spark, s"$dir/ht").showChunks().size === n)
     assert(ht.read().count() === events.count())
   }
 }

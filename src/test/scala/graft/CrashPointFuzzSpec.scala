@@ -8,11 +8,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.{Columnstore, Hypertable}
 
 /** Crash-POINT fuzz: seeded random maintenance/ingest sequences with a
-  * process kill injected BETWEEN publish steps (tmp write / rename /
-  * stamp / tombstone / manifest sync — the [[Hypertable.crashPoint]]
-  * boundaries), then a simulated restart (fresh handle + settle write)
-  * and a MULTISET rowset check against the only states a crash at that
-  * boundary may legally leave:
+  * process kill injected BETWEEN publish steps (staged write / content
+  * stamp / superseded stamp / tombstone / manifest sync — the
+  * [[Hypertable.crashPoint]] boundaries), then a simulated restart
+  * (fresh handle + settle write) and a MULTISET rowset check against the
+  * only states a crash at that boundary may legally leave:
   *
   *  - row-preserving rewrites (compress/decompress/merge/split): the
   *    multiset must be EXACTLY the pre-state — a crashed rewrite may
@@ -70,11 +70,9 @@ class CrashPointFuzzSpec extends AnyFunSuite {
     None
   }
 
-  private def runSeed(seed: Long, publishMode: String): Unit = {
+  private def runSeed(seed: Long): Unit = {
     val rnd = new scala.util.Random(seed)
     val dir = Files.createTempDirectory(s"graft_crashfuzz_$seed").toString
-    if (publishMode == "direct")
-      spark.conf.set("spark.graft.publish.mode", "direct")
     try {
       var ht = Hypertable.create(spark, s"$dir/ht", "ts",
         chunkWidth = "7 days", catalog = "table")
@@ -220,7 +218,7 @@ class CrashPointFuzzSpec extends AnyFunSuite {
             c.path.split('/').takeRight(2).mkString("/")}").mkString(" ")}")
         if (!fired.get() && !name.startsWith("CRASHED")) {
           assert(got == post,
-            s"[seed=$seed mode=$publishMode op#$i trace=$trace] " +
+            s"[seed=$seed op#$i trace=$trace] " +
               s"completed op diverged: ${diff(got, post)}")
           expected = post
         } else {
@@ -232,17 +230,13 @@ class CrashPointFuzzSpec extends AnyFunSuite {
             println(s"== CHUNKS ==\n${ht.showChunks().mkString("\n")}")
           }
           assert(acceptable(got),
-            s"[seed=$seed mode=$publishMode op#$i trace=$trace] " +
+            s"[seed=$seed op#$i trace=$trace] " +
               s"post-crash state is neither pre nor a legal partial: " +
               s"${diff(got, pre)} (vs pre)")
           expected = got
         }
       }
-    } finally {
-      disarm()
-      if (publishMode == "direct")
-        spark.conf.unset("spark.graft.publish.mode")
-    }
+    } finally disarm()
   }
 
   private def diff(got: Map[Long, Long], want: Map[Long, Long]): String = {
@@ -259,9 +253,7 @@ class CrashPointFuzzSpec extends AnyFunSuite {
     sys.env.getOrElse("SPARK_GRAFT_CRASH_FUZZ_SEED0", "9100").toInt
 
   test(s"crash-point fuzz: $nSeeds seeded op sequences with injected kills " +
-    "between publish steps heal to a legal rowset (rename + direct modes)") {
-    (0 until nSeeds).foreach { s =>
-      runSeed(seed0 + s, if ((seed0 + s) % 2 == 0) "rename" else "direct")
-    }
+    "between publish steps heal to a legal rowset (stage-and-stamp publish)") {
+    (0 until nSeeds).foreach(s => runSeed(seed0 + s))
   }
 }

@@ -80,9 +80,11 @@ class CrashRecoverySpec extends AnyFunSuite {
 
   test("a DML rewrite that died mid-swap leaves a dot-prefixed tmp chunk " +
     "dir: reads never see it, the next rewrite replaces it") {
+    // flat layout: its copy-on-write stages in a dot-prefixed dir next to
+    // the chunk (a generation table stages its next `_gen=` dir instead —
+    // DirectPublishSpec covers that stage's crash debris)
     val dir = Files.createTempDirectory("graft_crash_dml").toString
-    val ht = Hypertable.create(spark, s"$dir/ht", "ts",
-      chunkWidth = "7 days", catalog = "table")
+    val ht = Hypertable.create(spark, s"$dir/ht", "ts", chunkWidth = "7 days")
     ht.write(events)
     val total = events.count()
     val first = ht.showChunks().head
@@ -99,6 +101,31 @@ class CrashRecoverySpec extends AnyFunSuite {
     val deleted = ht.deleteWhere(pred)
     assert(deleted > 0 && ht.read().count() === total - deleted)
     assert(!fs.exists(tmp), "rewrite did not replace the crashed tmp dir")
+  }
+
+  test("a dot-prefixed tmp chunk dir inside a live generation chunk (an " +
+    "older version's rename-publish debris) stays invisible to reads, the " +
+    "manifest and the next DML") {
+    val dir = Files.createTempDirectory("graft_crash_dml_gen").toString
+    val ht = Hypertable.create(spark, s"$dir/ht", "ts",
+      chunkWidth = "7 days", catalog = "table")
+    ht.write(events)
+    val total = events.count()
+    val n = ht.showChunks().size
+    val first = ht.showChunks().head
+    val fs = fsOf(s"$dir/ht")
+    val tmp = new Path(Hypertable.chunkDirOf(new Path(first.path)),
+      s".tmp_chunk_${first.startMicros}")
+    fs.mkdirs(tmp)
+    Hypertable.writeSmallFile(fs, new Path(tmp, "garbage"), "not parquet")
+    assert(ht.read().count() === total)
+    assert(ht.showChunks().size === n)
+    assert(Hypertable.at(spark, s"$dir/ht").showChunks() === ht.showChunks())
+    val pred = pmod(col("event_id"), lit(11)) === 3
+    val deleted = ht.deleteWhere(pred)
+    assert(deleted > 0 && ht.read().count() === total - deleted)
+    assert(ht.showChunks().size === n)
+    assert(Hypertable.at(spark, s"$dir/ht").read().count() === total - deleted)
   }
 
   test("a crash between the data commit and the catalog snapshot heals on " +
@@ -264,7 +291,7 @@ class CrashRecoverySpec extends AnyFunSuite {
       val expected = ht.read().count()
       val c = ht.showChunks().head
       val liveP = new Path(c.path)
-      val tmp = new Path(Hypertable.chunkDirOf(liveP), ".tmp_counter_publish")
+      val tmp = Hypertable.stageGenDir(fs, Hypertable.chunkDirOf(liveP))
       // the rewrite drops 5 more rows, so healing is observable by count
       val chunkRows = spark.read.parquet(c.path)
       val victims = chunkRows.select("event_id").limit(5)

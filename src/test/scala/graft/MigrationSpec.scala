@@ -187,4 +187,58 @@ class MigrationSpec extends AnyFunSuite {
     assert(!fs.exists(new Path(s"$d/ht", "_graft_mutator_lease")),
       "reader-only healer retained the mutator lease")
   }
+
+  test("a table-catalog flat table opens as a list table: a stale " +
+    "single-file snapshot is never served, and migration still reaches " +
+    "the generation layout") {
+    val d = Files.createTempDirectory("graft_mig_tableflat").toString
+    val ht = mkFlat(d)
+    val before = ht.read().select("t", "v", "s").collect().toSet
+    val cs = ht.showChunks()
+    val fs = new Path(d).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = new Path(s"$d/ht")
+    // an older version's meta: "catalog":"table" over the flat layout,
+    // with no genLayout key at all
+    val metaP = new Path(root, "_graft_hypertable.json")
+    val meta = Hypertable.readSmallFile(fs, metaP)
+      .replace("\"genLayout\":false,", "").replace("\"catalog\":\"list\"",
+        "\"catalog\":\"table\"")
+    assert(meta.contains("\"catalog\":\"table\"") && !meta.contains("genLayout"))
+    Hypertable.writeSmallFile(fs, metaP, meta)
+    // its single-file chunk snapshot, missing the last chunk and stamped
+    // NEWER than the root — an mtime freshness cue would serve it
+    val legacy = new Path(root, "_graft_chunks.json")
+    Hypertable.writeSmallFile(fs, legacy, cs.dropRight(1).map(c =>
+      s"""{"s":${c.startMicros},"e":${c.endMicros},"p":"${c.path}"}""")
+      .mkString("""{"chunks":[""", ",", "]}"))
+    val newest = (fs.listStatus(root).map(_.getModificationTime) :+
+      fs.getFileStatus(root).getModificationTime).max
+    fs.setTimes(legacy, newest + 60000L, -1)
+
+    val opened = Hypertable.at(spark, s"$d/ht")
+    assert(!opened.genLayout && opened.catalogMode === "list")
+    assert(opened.showChunks().map(_.startMicros) === cs.map(_.startMicros),
+      "every flat chunk must be listed")
+    assert(opened.read().select("t", "v", "s").collect().toSet === before)
+    val mig = opened.migrateToGenLayout()
+    assert(mig.genLayout && mig.catalogMode === "table")
+    assert(!fs.exists(legacy), "migration removes the dead snapshot file")
+    assert(mig.showChunks().size === cs.size)
+    assert(mig.read().select("t", "v", "s").collect().toSet === before)
+    assert(Hypertable.at(spark, s"$d/ht").read().select("t", "v", "s")
+      .collect().toSet === before)
+
+    // create(catalog = "table") over an existing list table keeps it a
+    // list table rather than pairing the table catalog with flat dirs
+    val d2 = Files.createTempDirectory("graft_mig_tablecreate").toString
+    val flat = mkFlat(d2)
+    val rows = flat.read().select("t", "v", "s").collect().toSet
+    val again = Hypertable.create(spark, s"$d2/ht", "t", chunkWidth = "100",
+      timeKind = "bigint", catalog = "table")
+    for (h <- Seq(again, Hypertable.at(spark, s"$d2/ht"))) {
+      assert(!h.genLayout && h.catalogMode === "list")
+      assert(h.showChunks().size === 3)
+      assert(h.read().select("t", "v", "s").collect().toSet === rows)
+    }
+  }
 }

@@ -115,6 +115,13 @@ class SmallDedupSpec extends AnyFunSuite {
     val df = frame(in :+ in.head.copy(_3 = Some(9))).union(
       Seq((None: Option[Long], "w1 w2 w3", Some(1))).toDF("id", "text", "quality"))
     sameBothArms(df)
+    // one output row per input row: the id given twice comes out twice
+    for (d <- Seq(df, unsized(df))) {
+      val out = Clustering.dedupKeepBest(d, "id", "text", 0.5, col("quality"))
+      assert(out.count() === df.count())
+      assert(out.where(col("id") === in.head._1).count() === 2)
+      assert(out.where(col("id").isNull).collect().map(_.getBoolean(2)).toSeq === Seq(false))
+    }
   }
 
   /** Rows of `df` and the Spark jobs building and collecting it launched. */
