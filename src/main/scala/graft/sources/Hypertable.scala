@@ -220,16 +220,21 @@ class Hypertable private (
     require(mode != SaveMode.Overwrite,
       "hypertable writes are routed appends; SaveMode.Overwrite would wipe " +
         "the chunk catalog — dropChunks/deleteWhere first, then append")
-    var out = conformToSchema(normalizeTime(df, timeCol))
+    val out = conformToSchema(normalizeTime(df, timeCol))
       .withColumn(CHUNK, chunkKey(col(timeCol)))
+    // the batch's distinct chunk starts — one distinct-aggregation action,
+    // run at most once and only when a live seal or a tombstoned chunk dir
+    // needs it
+    lazy val routedStarts: Set[Long] =
+      out.select(col(CHUNK)).distinct().collect()
+        .flatMap(r => if (r.isNullAt(0)) None else Some(r.getLong(0))).toSet
     // per-batch append gate: declare the in-flight batch (intent), yield
     // to any live seal overlapping this batch's routed chunks (a rewrite
     // in progress on those chunks in ANOTHER process), then proceed. The
     // intent must outlive the batch's data commit AND catalog sync — a
     // rewriter drains intents before reading its input.
-    val intent = MutationGate.appendGate(spark, fs, qualifiedPath, () =>
-      out.select(col(CHUNK)).distinct().collect()
-        .flatMap(r => if (r.isNullAt(0)) None else Some(r.getLong(0))).toSet)
+    val intent = MutationGate.appendGate(spark, fs, qualifiedPath,
+      () => routedStarts)
     try {
       // re-verify AFTER the gate: a table-wide seal we just yielded to may
       // have been a layout migration or a drop
@@ -243,25 +248,29 @@ class Hypertable private (
       // would lose acked rows. One root listing when markers exist; the
       // marker files ride the root listing write() does anyway otherwise.
       if (genLayout && rewriteIntentMarkers().nonEmpty) healRewriteIntents()
-      writeRouted(out, mode, filesPerChunk, df)
+      writeRouted(out, mode, filesPerChunk, df, routedStarts)
     } finally MutationGate.removeMarker(fs, intent)
   }
 
   private def writeRouted(out0: DataFrame, mode: SaveMode,
-      filesPerChunk: Int, df: DataFrame): Unit = {
+      filesPerChunk: Int, df: DataFrame, routedStarts: => Set[Long]): Unit = {
     var out = out0
     // gen layout: rows append into each chunk's LIVE generation dir (new
     // chunks open at _gen=0). The lookup is a literal map of only the
     // REWRITTEN chunks (gen > 0) — bounded by maintenance history, not
     // the chunk count; the write lock holds the generations still.
-    // Tombstoned chunk dirs (dropped, grace-retained) route to a FRESH
-    // rebirth generation above every dead one — appending into _gen=0
-    // would mix new rows with the dropped data awaiting GC (or lose them
-    // to its GC); healRebirth below commits the rebirth after the append.
+    // Tombstoned chunk dirs (dropped, grace-retained) the batch routes
+    // rows into go to a FRESH rebirth generation above every dead one —
+    // appending into _gen=0 would mix new rows with the dropped data
+    // awaiting GC (or lose them to its GC); healRebirth below commits the
+    // rebirth after the append. Only those dirs: the rebirth below
+    // rewrites the tombstone, which resets its GC grace clock, so
+    // touching every tombstone on every append would keep a table under
+    // steady ingest from ever reaping a dropped chunk.
     val liveChunks: Seq[ChunkInfo] = if (genLayout) showChunks() else Nil
     val tombstoned: Seq[(Long, Path)] =
-      if (genLayout)
-        tombstonedChunkDirs(liveChunks.map { c =>
+      if (genLayout) {
+        val all = tombstonedChunkDirs(liveChunks.map { c =>
           // qualify each chunk dir with ITS OWN filesystem: a chunk
           // resident on a cross-FS tablespace would make the primary
           // root's fs.makeQualified throw "Wrong FS" (checkPath)
@@ -269,7 +278,8 @@ class Hypertable private (
           cd.getFileSystem(spark.sparkContext.hadoopConfiguration)
             .makeQualified(cd).toString
         }.toSet)
-      else Nil
+        if (all.isEmpty) all else all.filter(t => routedStarts.contains(t._1))
+      } else Nil
     // tombstoned dirs this batch will re-ingest into, start -> (dir, gen):
     // the post-write commit marks these generations complete, then heals
     var pendingRebirth = Map.empty[Long, (Path, Int)]
@@ -773,7 +783,7 @@ class Hypertable private (
         if (dfs.exists(d)) dfs.delete(d, true)
       }
       // the table is gone; stop heartbeating its (deleted) lease
-      Hypertable.heldLeases.remove(qualifiedPath); ()
+      MutationGate.disownMarker(fs, Hypertable.leasePath(qualifiedPath))
     }
   }
 
@@ -1149,7 +1159,7 @@ class Hypertable private (
       () => spacePartsCatalog(),
       () => skipColumns)
 
-  /** Wrap a public read surface in a reader epoch (ChunkReaderEpochs):
+  /** Wrap a public read surface in a reader epoch (ReaderEpochs):
     * registered at the PRIMARY root BEFORE the snapshot (manifest /
     * chunk listing) the plan resolves from is read, and tied to the
     * built plan's reachability — the GC consults the primary root's
@@ -1159,7 +1169,7 @@ class Hypertable private (
     * first read per (process, table).
     */
   private def withReaderEpoch(build: => DataFrame): DataFrame = {
-    val epoch = ChunkReaderEpochs.begin(spark, fs, new Path(path))
+    val epoch = ReaderEpochs.begin(spark, fs, new Path(path))
     val df =
       try build
       catch { case e: Throwable => epoch.cancel(); throw e }
@@ -1501,7 +1511,7 @@ class Hypertable private (
             // view over the mutator's). A reader instead heals in memory:
             // stamp first, then list, cached like a parsed manifest — the
             // next real sync bumps the stamp and takes over.
-            if (Hypertable.heldLeases.containsKey(qualifiedPath) ||
+            if (Hypertable.holdsMutatorLease(fs, qualifiedPath) ||
                 MutationGate.holdsAppendLease(qualifiedPath))
               refreshChunkCatalog()
             else {
@@ -1545,7 +1555,7 @@ class Hypertable private (
                 // would re-pay the full multi-root listing, the exact
                 // O(chunks)-per-query cost the catalog exists to remove
                 val cs =
-                  if (Hypertable.heldLeases.containsKey(qualifiedPath))
+                  if (Hypertable.holdsMutatorLease(fs, qualifiedPath))
                     refreshChunkCatalog()
                   else {
                     val s0 = catalogStampNow()
@@ -1819,7 +1829,7 @@ class Hypertable private (
       // process — readers resolve them view-only (applyRewriteIntents).
       // BEFORE the commit lock: a split roll-forward is a data JOB, and
       // the flock's contract is metadata-commit-only (never across a job)
-      if (genLayout && (Hypertable.heldLeases.containsKey(qualifiedPath) ||
+      if (genLayout && (Hypertable.holdsMutatorLease(fs, qualifiedPath) ||
           MutationGate.holdsAppendLease(qualifiedPath)))
         healRewriteIntents()
       // cross-process: a standing appender's refresh and the maintenance
@@ -1843,12 +1853,12 @@ class Hypertable private (
     // the real mutator's publish window cross-process (it could reap a
     // just-written generation before its superseded stamp lands). Readers
     // heal the manifest; only the mutator collects garbage.
-    if (genLayout && Hypertable.heldLeases.containsKey(qualifiedPath)) {
+    if (genLayout && Hypertable.holdsMutatorLease(fs, qualifiedPath)) {
       val grace = Hypertable.gcGraceMs(spark)
       // reader epochs live at the PRIMARY root wherever the chunk is
       // stored — one LIST per sweep, not per chunk
-      val floor = ChunkReaderEpochs.liveFloor(spark, fs, new Path(path))
-      val skew = ChunkReaderEpochs.skewMs(spark)
+      val floor = ReaderEpochs.liveFloor(spark, fs, new Path(path))
+      val skew = ReaderEpochs.skewMs(spark)
       (new Path(path) +: tablespaceTableDirs).foreach { r =>
         val rfs = r.getFileSystem(spark.sparkContext.hadoopConfiguration)
         if (rfs.exists(r))
@@ -3255,7 +3265,7 @@ object Hypertable {
     * mutation a reader performs).
     */
   private def healCrashedMigration(ht: Hypertable): Hypertable = {
-    val hadLease = heldLeases.containsKey(ht.qualifiedPath)
+    val hadLease = holdsMutatorLease(ht.fs, ht.qualifiedPath)
     val nh = ht.finishGenMigration()
     if (!hadLease) releaseMutatorLease(ht.spark, ht.path)
     nh
@@ -3343,55 +3353,41 @@ object Hypertable {
 
   // ---------------------------------------------- cross-process mutator lease
   // The in-JVM lock hierarchy above is complete for ONE driver process —
-  // the deployment contract (SCALE.md §14). A SECOND mutating process is
-  // out of contract, but until round 8 the failure mode was silent (two
-  // drivers' catalog swaps interleaving). The mutator lease makes it
-  // LOUD: the first mutation of a table claims `_graft_mutator_lease`
-  // (owner id + heartbeated mtime) for the process lifetime, and a
-  // different process attempting a mutation while the lease is fresh gets
-  // a clear refusal naming the holder, instead of a race. A lease whose
-  // heartbeat stopped (holder crashed) is broken by an atomic-rename
-  // takeover dance (rename to a unique name first, so of N waiters
-  // exactly one wins; the cagg refresh lock used the same dance until
-  // round 11 moved it onto MutationGate.claimExclusive).
-  //
-  // This is FENCING-BY-REFUSAL, not a distributed lock: filesystems
-  // without an atomic create-exclusive primitive (Hadoop's createNewFile
-  // is exists-then-create) cannot give mutual exclusion, so two processes
-  // claiming in the same instant can still interleave — the claim
-  // write-then-read-back narrows that to a sub-heartbeat window and every
-  // LATER mutation by the displaced process refuses. Readers never touch
-  // the lease (snapshot isolation is the manifest's job, above).
+  // the deployment contract (SCALE.md §14). A second process running
+  // rewrite-class mutations is refused LOUDLY instead of racing: the first
+  // such mutation of a table claims `_graft_mutator_lease`, a MutationGate
+  // exclusive marker (one atomic create on local FS/HDFS and on stores
+  // with a registered conditional PUT; create + read-back + settle on a
+  // blind-PUT store), held and heartbeated for the process lifetime. A
+  // different process attempting a mutation while the marker is live
+  // gets a refusal naming the holder. A crashed holder's marker goes stale
+  // after `spark.graft.gate.staleMs` and is taken over through the gate's
+  // arbitrated takeover. Readers never touch the lease (snapshot
+  // isolation is the manifest's job, above).
 
   private[sources] val MUTATOR_LEASE = "_graft_mutator_lease"
+
+  private def leasePath(qualifiedRoot: String): Path =
+    new Path(new Path(qualifiedRoot), MUTATOR_LEASE)
+
+  /** Whether THIS process holds the table's mutator lease (a map hit) —
+    * the "mutating process" test for manifest writes, heals and GC.
+    */
+  private[sources] def holdsMutatorLease(fs: FileSystem,
+      qualifiedRoot: String): Boolean =
+    MutationGate.holds(fs, leasePath(qualifiedRoot))
 
   /** Whether the store provides reliable, SETTABLE file mtimes (local FS,
     * HDFS: yes; S3A/GCS: `setTimes` is a no-op and directory "mtimes"
     * do not exist). `spark.graft.fs.mtimeReliable=false` switches the
-    * mtime-dependent primitives to content-embedded fallbacks: the
-    * content-stamp freshness cue compares a counter written INTO the
-    * stamp file against the counter recorded in the manifest, and the
-    * lease heartbeat/staleness uses a wall-clock timestamp embedded in
-    * the lease file (bounded clock skew assumed, as in any lease
-    * system). See the FS-assumption matrix in SCALE.md.
+    * content-stamp freshness cue to a counter written INTO the stamp file,
+    * compared against the counter recorded in the manifest. See the
+    * FS-assumption matrix in SCALE.md.
     */
   private[graft] def mtimeReliable(spark: SparkSession): Boolean =
     spark.conf.get("spark.graft.fs.mtimeReliable", "true").toBoolean
 
-  /** Lease file body: owner id, then the heartbeat wall-clock (the
-    * staleness clock when mtimes are unreliable; ignored otherwise).
-    */
-  private def leaseStamp(owner: String): String =
-    owner + "\n" + System.currentTimeMillis()
-  private def leaseOwnerOf(txt: String): String =
-    txt.trim.linesIterator.nextOption().getOrElse("")
-  private def leaseTsOf(txt: String): Option[Long] =
-    txt.trim.linesIterator.toSeq.lift(1)
-      .flatMap(l => scala.util.Try(l.trim.toLong).toOption)
-
-  /** This process's lease identity — one per JVM; override with
-    * `spark.graft.lease.owner` (tests / deliberate handoff).
-    */
+  /** This process's identity in every marker it writes — one per JVM. */
   private[graft] val processId: String = java.util.UUID.randomUUID().toString
 
   /** Per-process base for the committer's int-typed staging attempt id:
@@ -3405,167 +3401,37 @@ object Hypertable {
     math.abs(((h ^ (h >>> 32)).toInt) % 1000000000)
   }
 
-  /** Heartbeats older than this read as a crashed holder (takeover);
-    * younger ones refuse. Crash recovery therefore waits out this window
-    * (the price of lease fencing on a CAS-less store).
-    */
-  private[graft] def leaseStaleMs(spark: SparkSession): Long =
-    spark.conf.get("spark.graft.lease.staleMs", "600000").toLong
-
-  private def leaseOwner(spark: SparkSession): String =
-    spark.conf.get("spark.graft.lease.owner", processId)
-
-  /** Held leases: qualified primary root -> (fs, lease path, owner id,
-    * mtime-reliable mode captured at acquire — the heartbeat daemon has
-    * no session to re-read the conf from).
-    */
-  private val heldLeases = new java.util.concurrent.ConcurrentHashMap[
-    String, (FileSystem, Path, String, Boolean)]()
   private val leaseAcqLock = new Object
-  @volatile private var leaseDaemonStarted = false
 
-  /** One heartbeat pass: touch every held lease's mtime; a lease whose
-    * content is no longer ours (takeover after our heartbeat stalled past
-    * staleness) or whose table vanished is dropped from the held set, so
-    * the displaced process's NEXT mutation re-resolves — and refuses
-    * loudly. Exposed for deterministic spec coverage.
-    */
-  private[graft] def leaseHeartbeatNow(): Unit =
-    heldLeases.forEach { (root, v) =>
-      val (fs, lease, owner, mtimeOk) = v
-      try {
-        if (leaseOwnerOf(readSmallFile(fs, lease)) == owner) {
-          if (mtimeOk) fs.setTimes(lease, System.currentTimeMillis(), -1)
-          else {
-            // refresh the EMBEDDED heartbeat clock. Overwrite in place
-            // (truncate+write, not the delete+rename swap): a swap's
-            // no-file window would read as "no lease" to a concurrent
-            // claimant and hand our held table away
-            writeSmallFileDirect(fs, lease, leaseStamp(owner))
-          }
-        } else heldLeases.remove(root)
-      } catch {
-        case _: java.io.IOException => heldLeases.remove(root)
-        // a non-IO failure (object-store SDKs throw unwrapped runtime
-        // exceptions; setTimes is UnsupportedOperation on some
-        // connectors) must not escape: scheduleWithFixedDelay suppresses
-        // ALL later runs after one thrown task, which would freeze the
-        // heartbeat while heldLeases keeps answering "held" — silently
-        // disabling the fencing and letting a stale-takeover peer mutate
-        // concurrently. Drop the entry; the next mutation re-resolves.
-        case scala.util.control.NonFatal(_) => heldLeases.remove(root)
-      }
-    }
-
-  /** Lease owner read for the holder's own release paths, tolerating the
-    * heartbeat's non-atomic truncate-overwrite window (mtime-unreliable
-    * mode): a concurrent heartbeat's create(overwrite) can expose an
-    * empty/ownerless body for a moment; concluding "not ours" then skips
-    * the delete and leaks the lease until staleness expiry. An empty
-    * owner is re-read once after a short sleep — the heartbeat writes the
-    * full stamp in one small write, so the window is sub-millisecond.
-    */
-  private def leaseOwnerSettled(fs: FileSystem, lease: Path): String = {
-    val o = leaseOwnerOf(readSmallFile(fs, lease))
-    if (o.nonEmpty) o
-    else { Thread.sleep(25); leaseOwnerOf(readSmallFile(fs, lease)) }
-  }
-
-  private def ensureLeaseDaemon(): Unit =
-    if (!leaseDaemonStarted) leaseAcqLock.synchronized {
-      if (!leaseDaemonStarted) {
-        val ex = java.util.concurrent.Executors.newSingleThreadScheduledExecutor(
-          r => { val t = new Thread(r, "graft-lease-heartbeat"); t.setDaemon(true); t })
-        // belt over the per-entry catch: one thrown pass would cancel
-        // every future scheduled run. The same pass refreshes the gate
-        // markers (append leases, intents, seals — MutationGate).
-        ex.scheduleWithFixedDelay(() =>
-          try { leaseHeartbeatNow(); MutationGate.heartbeatNow() }
-          catch { case scala.util.control.NonFatal(_) => () }, 30, 30,
-          java.util.concurrent.TimeUnit.SECONDS)
-        // graceful exits hand the table off immediately; only a crash
-        // pays the staleness window
-        Runtime.getRuntime.addShutdownHook(new Thread(() => {
-          heldLeases.forEach { (_, v) =>
-            try { if (leaseOwnerSettled(v._1, v._2) == v._3) v._1.delete(v._2, false) }
-            catch { case _: java.io.IOException => () }
-          }
-          MutationGate.releaseAll()
-        }, "graft-lease-release"))
-        leaseDaemonStarted = true
-      }
-    }
-
-  /** The gate markers ride the lease daemon's heartbeat — appenders and
-    * seal holders start it without holding the exclusive lease.
-    */
-  private[graft] def ensureGateDaemon(): Unit = ensureLeaseDaemon()
-
-  /** Claim (or re-verify) the table's mutator lease for this process —
-    * called by every mutation entry point; a ConcurrentHashMap hit after
-    * the first claim. Throws with the holder's identity when another
-    * process holds a fresh lease.
+  /** Claim (or adopt) the table's mutator lease for this process — called
+    * by every rewrite-class mutation entry point; a map hit after the
+    * first claim. Throws with the holder's identity when another process
+    * holds a live lease.
     */
   private[graft] def acquireMutatorLease(spark: SparkSession, fs: FileSystem,
       qualifiedRoot: String): Unit = {
-    if (heldLeases.containsKey(qualifiedRoot)) return
+    val lease = leasePath(qualifiedRoot)
+    if (MutationGate.holds(fs, lease)) return
     leaseAcqLock.synchronized {
-      if (heldLeases.containsKey(qualifiedRoot)) return
-      val root = new Path(qualifiedRoot)
-      if (!fs.exists(root)) return // table not created yet — nothing to fence
-      val lease = new Path(root, MUTATOR_LEASE)
-      val owner = leaseOwner(spark)
-      val staleMs = leaseStaleMs(spark)
-      val mtimeOk = mtimeReliable(spark)
-      var attempts = 0
-      while (attempts < 3) {
-        val cur =
-          try {
-            val txt = readSmallFile(fs, lease)
-            val mt = fs.getFileStatus(lease).getModificationTime
-            // heartbeat clock: file mtime where reliable; otherwise the
-            // timestamp embedded by the holder's heartbeats (a legacy
-            // owner-only file falls back to mtime — the conservative
-            // direction is refusing, and takeover still works once BOTH
-            // clocks read stale)
-            val hb = if (mtimeOk) mt else leaseTsOf(txt).getOrElse(mt)
-            Some(leaseOwnerOf(txt) -> hb)
-          }
-          catch { case _: java.io.IOException => None }
-        cur match {
-          case Some((o, _)) if o == owner => // already ours — adopt
-            heldLeases.put(qualifiedRoot, (fs, lease, owner, mtimeOk))
-            ensureLeaseDaemon()
-            return
-          case Some((o, m)) if System.currentTimeMillis() - m < staleMs =>
+      if (MutationGate.holds(fs, lease)) return
+      if (!fs.exists(lease.getParent)) return // table not created yet — nothing to fence
+      if (!MutationGate.tryClaimExclusive(spark, fs, lease,
+          Some((fs, qualifiedRoot))))
+        MutationGate.readMarker(fs, lease) match {
+          case Some(m) if m.owner == processId => MutationGate.adopt(fs, m)
+          case cur =>
+            val holder = cur.map(_.owner).filter(_.nonEmpty)
+              .getOrElse("unknown")
+            val age = cur.map(m =>
+              s"${System.currentTimeMillis() - math.max(m.hb, m.mtime)} ms")
+              .getOrElse("unknown")
             throw new IllegalStateException(
               s"table $qualifiedRoot is being mutated by another process " +
-                s"(lease holder $o, heartbeat ${System.currentTimeMillis() - m} ms " +
-                s"ago) — concurrent mutating processes are out of contract " +
-                "(SCALE.md §14). Wait for the lease to expire, or have the " +
-                "holder release it (Hypertable.releaseMutatorLease / exit).")
-          case Some(_) => // crashed holder: atomic-rename takeover
-            val t = new Path(root, s".${MUTATOR_LEASE}_stale_${System.nanoTime()}")
-            try { if (fs.rename(lease, t)) fs.delete(t, false) }
-            catch { case _: java.io.IOException => () } // another waiter won
-          case None => ()
+                s"(lease holder $holder, heartbeat $age ago) — concurrent " +
+                "mutating processes are out of contract (SCALE.md §14). Wait " +
+                "for the lease to expire, or have the holder release it " +
+                "(Hypertable.releaseMutatorLease / exit).")
         }
-        // claim, then read back: of two same-instant claimants the LAST
-        // swap wins and the read-back demotes the other to a refusal
-        writeSmallFile(fs, lease, leaseStamp(owner))
-        val back =
-          try leaseOwnerOf(readSmallFile(fs, lease))
-          catch { case _: java.io.IOException => "" }
-        if (back == owner) {
-          heldLeases.put(qualifiedRoot, (fs, lease, owner, mtimeOk))
-          ensureLeaseDaemon()
-          return
-        }
-        attempts += 1
-      }
-      throw new IllegalStateException(
-        s"lost the mutator-lease claim race for $qualifiedRoot three times — " +
-          "another process is actively claiming it")
     }
   }
 
@@ -3573,34 +3439,23 @@ object Hypertable {
     * is running rewrite-class mutations right now. Consulted by the gate's
     * foreign-activity probe (claim settle) and by torn-op healers (a
     * foreign holder's in-flight markers are live work, not a crash).
-    * Missing/unreadable lease, our own lease, or a stale heartbeat = no.
     */
   private[sources] def foreignMutatorLive(spark: SparkSession, fs: FileSystem,
-      qualifiedRoot: String): Boolean = {
-    if (heldLeases.containsKey(qualifiedRoot)) return false // ours
-    val lease = new Path(new Path(qualifiedRoot), MUTATOR_LEASE)
-    try {
-      val txt = readSmallFile(fs, lease)
-      val o = leaseOwnerOf(txt)
-      val mt = fs.getFileStatus(lease).getModificationTime
-      val hb = if (mtimeReliable(spark)) mt else leaseTsOf(txt).getOrElse(mt)
-      o.nonEmpty && o != leaseOwner(spark) &&
-        System.currentTimeMillis() - hb < leaseStaleMs(spark)
-    } catch { case _: java.io.IOException => false }
-  }
+      qualifiedRoot: String): Boolean =
+    !holdsMutatorLease(fs, qualifiedRoot) &&
+      MutationGate.readMarker(fs, leasePath(qualifiedRoot)).exists(m =>
+        m.owner != processId &&
+          m.live(System.currentTimeMillis(), MutationGate.staleMs(spark)))
 
-  /** Graceful handoff: delete this process's lease (no-op when not held /
-    * already taken over) so another process can claim without waiting out
-    * staleness.
+  /** Graceful handoff: delete this process's lease (no-op when not held;
+    * only disowned when already taken over) so another process can claim
+    * without waiting out staleness.
     */
   def releaseMutatorLease(spark: SparkSession, path: String): Unit = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val key = fs.makeQualified(p).toString
-    Option(heldLeases.remove(key)).foreach { case (lfs, lease, owner, _) =>
-      try { if (leaseOwnerSettled(lfs, lease) == owner) lfs.delete(lease, false) }
-      catch { case _: java.io.IOException => () }
-    }
+    val lease = leasePath(fs.makeQualified(p).toString)
+    if (MutationGate.holds(fs, lease)) MutationGate.releaseIfOurs(fs, lease)
   }
 
   /** How long superseded generations / dropped chunk dirs stay readable
@@ -3969,22 +3824,11 @@ object Hypertable {
   private val heldSeqClaims = new java.util.concurrent.ConcurrentHashMap[
     String, (FileSystem, Path, Long, Long, Long)]()
 
-  private def releaseSeqClaimIfOurs(fs: FileSystem, claim: Path): Unit = {
-    // release only if still ours — a taken-over marker is the new
-    // holder's file and must not be deleted out from under it
-    val ours =
-      try MutationGate.parse(fs, fs.getFileStatus(claim))
-        .exists(_.owner == processId)
-      catch { case scala.util.control.NonFatal(_) => false }
-    if (ours) MutationGate.removeMarker(fs, claim)
-    else MutationGate.disownMarker(fs, claim)
-  }
-
   private def releaseIdleSeqClaims(): Unit =
     heldSeqClaims.forEach { (k, v) =>
       if (System.currentTimeMillis() - v._4 > v._5 &&
           heldSeqClaims.remove(k, v))
-        releaseSeqClaimIfOurs(v._1, v._2)
+        MutationGate.releaseIfOurs(v._1, v._2)
     }
 
   /** Tests/probes: force-release every held-across-batches seq claim now
@@ -3992,7 +3836,7 @@ object Hypertable {
     */
   private[graft] def releaseAllSeqClaims(): Unit =
     heldSeqClaims.forEach { (k, v) =>
-      if (heldSeqClaims.remove(k, v)) releaseSeqClaimIfOurs(v._1, v._2)
+      if (heldSeqClaims.remove(k, v)) MutationGate.releaseIfOurs(v._1, v._2)
     }
 
   @volatile private var seqClaimReleaserStarted = false
@@ -4084,7 +3928,7 @@ object Hypertable {
               catch { case _: java.io.FileNotFoundException => false
                       case _: java.io.IOException => true }
             }
-            if (wanted) { releaseSeqClaimIfOurs(fs, claim); None }
+            if (wanted) { MutationGate.releaseIfOurs(fs, claim); None }
             else Some(next)
         }
         if (cached.isEmpty) {
@@ -4150,7 +3994,7 @@ object Hypertable {
           } else MutationGate.disownMarker(fs, claim) // taken over: redo
         } catch {
           case t: Throwable =>
-            releaseSeqClaimIfOurs(fs, claim)
+            MutationGate.releaseIfOurs(fs, claim)
             throw t
         }
       }
@@ -4283,7 +4127,7 @@ object Hypertable {
     val now = System.currentTimeMillis()
     // `graced` gates the two deletion classes a MANIFEST READER can have
     // planned (superseded generations, tombstoned dirs): grace expired AND
-    // no live reader epoch predates the retirement (ChunkReaderEpochs —
+    // no live reader epoch predates the retirement (ReaderEpochs —
     // callers pass the primary root's liveFloor; the default MaxValue
     // keeps legacy callers grace-only). Crash remnants, stale tmps and
     // bare shells below were never manifest-live and stay age-gated.
@@ -4528,8 +4372,8 @@ object Hypertable {
         }
         crashPoint("publish.after_stamp")
         gcChunkDir(fs, chunkDir, gcGraceMs(spark),
-          ChunkReaderEpochs.liveFloor(spark, pfs, new Path(primary)),
-          ChunkReaderEpochs.skewMs(spark))
+          ReaderEpochs.liveFloor(spark, pfs, new Path(primary)),
+          ReaderEpochs.skewMs(spark))
         Some(tmp)
       }
       }
@@ -4955,10 +4799,9 @@ object Hypertable {
     }
 
   /** Plain truncate-overwrite of a small metadata file — no tmp+rename;
-    * callers that chose this form accept (or, like the lease heartbeat,
-    * REQUIRE) the in-place overwrite: a swap's no-file window would read
-    * as "no lease"/"no marker" to a concurrent observer. Same `file://`
-    * fast-path rationale as [[writeSmallFile]].
+    * callers that chose this form accept the in-place overwrite's torn
+    * window instead of a swap's no-file window. Same `file://` fast-path
+    * rationale as [[writeSmallFile]].
     */
   private[graft] def writeSmallFileDirect(fs: FileSystem, p: Path,
       s: String): Unit =
@@ -5122,7 +4965,7 @@ object Hypertable {
         spark.conf.get("spark.graft.autoMigrateOnOpen", "false").toBoolean &&
         !foreignMutatorLive(spark, fs,
           fs.makeQualified(new Path(path)).toString)) {
-      val hadLease = heldLeases.containsKey(healed.qualifiedPath)
+      val hadLease = holdsMutatorLease(fs, healed.qualifiedPath)
       // the foreignMutatorLive check above is advisory (TOCTOU: two
       // processes opening the same flat table can both pass it) — the
       // lease claim inside migrateToGenLayout is the real arbiter. The
@@ -5137,8 +4980,7 @@ object Hypertable {
       } catch {
         case e: IllegalStateException
             if e.getMessage != null &&
-              (e.getMessage.contains("being mutated by another process") ||
-                e.getMessage.contains("mutator-lease claim race")) =>
+              e.getMessage.contains("being mutated by another process") =>
           healed
       }
     } else healed

@@ -11,12 +11,13 @@ import org.apache.spark.sql.SparkSession
   * `tsl/test/isolation/specs/compression_ddl_iso.spec`).
   *
   * Three cooperating primitives, all small marker files at the table's
-  * PRIMARY root, all heartbeated by the lease daemon while held:
+  * PRIMARY root, all heartbeated by the gate daemon while held:
   *
   *  - APPEND LEASE (`_graft_append_leases/a_<owner>`): advertises a live
   *    appender process. Shared — any number may coexist, and they coexist
-  *    with the exclusive maintenance lease (`_graft_mutator_lease`, which
-  *    after the split serializes REWRITE-class processes only).
+  *    with the exclusive maintenance lease (`_graft_mutator_lease`, an
+  *    exclusive marker claimed through [[tryClaimExclusive]], which after
+  *    the split serializes REWRITE-class processes only).
   *  - APPEND INTENT (`_graft_intents/i_<owner>_<n>`): one per in-flight
   *    append batch. A rewriter drains the intents VISIBLE when its seal
   *    is in place before reading its input, so no append started before
@@ -55,10 +56,11 @@ private[graft] object MutationGate {
   private[sources] val CATALOG_FLOCK = "_graft_catalog_flock"
   private[sources] val HEAL_DIR = "_graft_healing"
 
-  /** Liveness horizon for gate markers. Shorter than the mutator lease's
-    * staleness: gate markers are per-batch/per-op, and a rewriter's drain
-    * (or an appender's yield) stalls for this long after an appender (or
-    * rewriter) crash. Must comfortably exceed the 30 s heartbeat period.
+  /** Liveness horizon for every marker, the mutator lease included: a
+    * rewriter's drain (or an appender's yield) stalls for this long after
+    * an appender (or rewriter) crash, and a crashed lease holder's table
+    * is taken over after it. Must comfortably exceed the 30 s heartbeat
+    * period.
     */
   private[graft] def staleMs(spark: SparkSession): Long =
     spark.conf.get("spark.graft.gate.staleMs", "120000").toLong
@@ -113,12 +115,51 @@ private[graft] object MutationGate {
 
   // ------------------------------------------------------- marker plumbing
 
-  /** Markers this process holds, refreshed by [[heartbeatNow]] (wired into
-    * the lease daemon's 30 s pass): qualified path -> (fs, path, owner,
-    * createdTs, payload).
+  /** Markers this process holds, refreshed by [[heartbeatNow]] every
+    * 30 s: qualified path -> (fs, path, owner, createdTs, payload).
     */
   private val held = new java.util.concurrent.ConcurrentHashMap[
     String, (FileSystem, Path, String, Long, Option[String])]()
+
+  private def hold(fs: FileSystem, p: Path, owner: String, created: Long,
+      payload: Option[String] = None): Unit = {
+    held.put(fs.makeQualified(p).toString, (fs, p, owner, created, payload))
+    ensureDaemon()
+  }
+
+  /** Whether this process holds the marker at `p` (a map hit). */
+  private[sources] def holds(fs: FileSystem, p: Path): Boolean =
+    held.containsKey(fs.makeQualified(p).toString)
+
+  /** Hold a live marker this process already owns on disk but no longer
+    * tracks (the held set dropped it), instead of refusing ourselves.
+    */
+  private[sources] def adopt(fs: FileSystem, m: Marker): Unit =
+    hold(fs, m.path, m.owner, m.created)
+
+  @volatile private var daemonStarted = false
+
+  /** The heartbeat daemon (one [[heartbeatNow]] pass every 30 s) and the
+    * shutdown hook that releases every held marker — graceful exits hand
+    * the table off immediately; only a crash pays the staleness window.
+    * Started by the first held marker.
+    */
+  private def ensureDaemon(): Unit =
+    if (!daemonStarted) synchronized {
+      if (!daemonStarted) {
+        val ex = java.util.concurrent.Executors.newSingleThreadScheduledExecutor(
+          r => { val t = new Thread(r, "graft-gate-heartbeat"); t.setDaemon(true); t })
+        // belt over the per-entry catch: one thrown pass would cancel
+        // every future scheduled run
+        ex.scheduleWithFixedDelay(() =>
+          try heartbeatNow()
+          catch { case scala.util.control.NonFatal(_) => () }, 30, 30,
+          java.util.concurrent.TimeUnit.SECONDS)
+        Runtime.getRuntime.addShutdownHook(
+          new Thread(() => releaseAll(), "graft-gate-release"))
+        daemonStarted = true
+      }
+    }
 
   private def body(owner: String, created: Long, hb: Long,
       payload: Option[String]): String =
@@ -137,6 +178,11 @@ private[graft] object MutationGate {
     def live(now: Long, stale: Long): Boolean =
       math.max(hb, mtime) > now - stale
   }
+
+  /** The marker at `p`; None when missing or unreadable. */
+  private[sources] def readMarker(fs: FileSystem, p: Path): Option[Marker] =
+    try parse(fs, fs.getFileStatus(p))
+    catch { case _: java.io.IOException => None }
 
   private[sources] def parse(fs: FileSystem,
       st: org.apache.hadoop.fs.FileStatus): Option[Marker] =
@@ -191,7 +237,7 @@ private[graft] object MutationGate {
       payload: Option[String] = None): Path = {
     val created = System.currentTimeMillis()
     writeMarker(fs, p, created, payload, overwrite = true)
-    held.put(fs.makeQualified(p).toString, (fs, p, processId, created, payload))
+    hold(fs, p, processId, created, payload)
     p
   }
 
@@ -209,8 +255,19 @@ private[graft] object MutationGate {
     held.remove(fs.makeQualified(p).toString); ()
   }
 
-  /** One heartbeat pass over every held marker (called by Hypertable's
-    * lease daemon every 30 s, and registered for shutdown cleanup there).
+  /** Release a held marker: delete it only if it still names this
+    * process — a taken-over marker is the new holder's file and must not
+    * be deleted out from under it (it is only disowned).
+    */
+  private[sources] def releaseIfOurs(fs: FileSystem, p: Path): Unit = {
+    val ours =
+      try readMarker(fs, p).exists(_.owner == processId)
+      catch { case scala.util.control.NonFatal(_) => false }
+    if (ours) removeMarker(fs, p) else disownMarker(fs, p)
+  }
+
+  /** One heartbeat pass over every held marker (the gate daemon's 30 s
+    * pass; exposed for deterministic spec coverage).
     *
     * Ownership is re-checked before each refresh: a marker whose body now
     * names ANOTHER process was taken over while this process was presumed
@@ -243,13 +300,17 @@ private[graft] object MutationGate {
       } catch { case scala.util.control.NonFatal(_) => () }
     }
 
-  /** Delete every marker this process still holds (shutdown hook belt —
-    * the per-op finally blocks are the braces).
+  /** Delete every marker this process still holds and still owns on disk
+    * (shutdown hook belt — the per-op finally blocks are the braces). A
+    * marker taken over since the last heartbeat is the new holder's and
+    * is left alone, as in [[heartbeatNow]].
     */
   private[graft] def releaseAll(): Unit =
     held.forEach { (_, v) =>
-      try v._1.delete(v._2, false)
-      catch { case scala.util.control.NonFatal(_) => () }
+      try {
+        if (readMarker(v._1, v._2).exists(_.owner == v._3))
+          v._1.delete(v._2, false)
+      } catch { case scala.util.control.NonFatal(_) => () }
     }
 
   /** Live markers under `dir` (missing dir = none). Stale markers are
@@ -274,18 +335,14 @@ private[graft] object MutationGate {
     */
   private[sources] def fileMarkerLive(spark: SparkSession, fs: FileSystem,
       p: Path): Boolean =
-    try parse(fs, fs.getFileStatus(p))
-      .exists(_.live(System.currentTimeMillis(), staleMs(spark)))
-    catch { case _: java.io.IOException => false }
+    readMarker(fs, p).exists(_.live(System.currentTimeMillis(), staleMs(spark)))
 
   /** [[fileMarkerLive]] for session-less callers (GC helpers): staleness
     * from the active session when one exists, the config default else.
     */
   private[sources] def fileMarkerLiveAny(fs: FileSystem, p: Path): Boolean = {
     val stale = SparkSession.getActiveSession.map(staleMs).getOrElse(120000L)
-    try parse(fs, fs.getFileStatus(p))
-      .exists(_.live(System.currentTimeMillis(), stale))
-    catch { case _: java.io.IOException => false }
+    readMarker(fs, p).exists(_.live(System.currentTimeMillis(), stale))
   }
 
   // ------------------------------------------ foreign-activity observation
@@ -432,9 +489,7 @@ private[graft] object MutationGate {
                 overwrite = false, owner = claimOwner); true }
               catch { case _: java.io.IOException => false }
           if (won) try {
-            val cur =
-              try parse(fs, fs.getFileStatus(p))
-              catch { case _: java.io.IOException => None }
+            val cur = readMarker(fs, p)
             // same incarnation AND still stale: a holder that resumed and
             // heartbeated between the caller's staleness read and this
             // verify keeps its marker (we re-poll and wait on it instead)
@@ -478,9 +533,7 @@ private[graft] object MutationGate {
     val me = claimOwner
     var claimed = false
     while (!claimed) {
-      val cur =
-        try parse(fs, fs.getFileStatus(p))
-        catch { case _: java.io.IOException => None }
+      val cur = readMarker(fs, p)
       val now = System.currentTimeMillis()
       cur match {
         case Some(m) if m.owner != me && m.live(now, staleMs(spark)) =>
@@ -493,8 +546,7 @@ private[graft] object MutationGate {
           val created = System.currentTimeMillis()
           if (atomic) {
             if (tryAtomicCreate(fs, p, created)) {
-              held.put(fs.makeQualified(p).toString,
-                (fs, p, me, created, None))
+              hold(fs, p, me, created)
               claimed = true
             } // lost the exclusive create: loop into the wait arm
           } else {
@@ -503,17 +555,14 @@ private[graft] object MutationGate {
                 owner = me); true }
               catch { case _: java.io.IOException => false } // exists: lost
             if (won) {
-              def mine: Boolean =
-                try parse(fs, fs.getFileStatus(p)).exists(_.owner == me)
-                catch { case _: java.io.IOException => false }
+              def mine: Boolean = readMarker(fs, p).exists(_.owner == me)
               val settle = alwaysSettle || activityRoot.exists {
                 case (afs, root) => foreignActive(spark, afs, root) }
               val confirmed = mine && {
                 if (settle) Thread.sleep(settleMs(spark)); mine
               }
               if (confirmed) {
-                held.put(fs.makeQualified(p).toString,
-                  (fs, p, me, created, None))
+                hold(fs, p, me, created)
                 claimed = true
               }
               // lost the readback: our bytes were overwritten — nothing of
@@ -536,28 +585,30 @@ private[graft] object MutationGate {
     }
   }
 
+  // Test-only pause in [[tryClaimExclusive]] after the liveness read and
+  // before the create, where a second claimant can slip in.
+  @volatile private[graft] var claimHook: Path => Unit = _ => ()
+
   /** Non-blocking [[claimExclusive]]: one attempt; false when a live
-    * foreign holder exists or the claim race is lost. Used by
-    * opportunistic work (torn-op healing) that should skip, not queue.
+    * foreign holder exists or the claim race is lost. Used by the
+    * mutator lease (refuse, not queue) and by opportunistic work
+    * (torn-op healing) that should skip.
     */
   private[graft] def tryClaimExclusive(spark: SparkSession, fs: FileSystem,
       p: Path, activityRoot: => Option[(FileSystem, String)]): Boolean = {
     val me = claimOwner
-    val cur =
-      try parse(fs, fs.getFileStatus(p))
-      catch { case _: java.io.IOException => None }
+    val cur = readMarker(fs, p)
     val now = System.currentTimeMillis()
     cur match {
       case Some(m) if m.owner != me && m.live(now, staleMs(spark)) =>
         false
       case other =>
+        claimHook(p)
         other.foreach(m => arbitrateStale(spark, fs, p, m))
         val created = System.currentTimeMillis()
         if (atomicCreateCapable(spark, fs)) {
           val won = tryAtomicCreate(fs, p, created)
-          if (won)
-            held.put(fs.makeQualified(p).toString,
-              (fs, p, me, created, None))
+          if (won) hold(fs, p, me, created)
           won
         } else {
           val won =
@@ -565,17 +616,13 @@ private[graft] object MutationGate {
               owner = me); true }
             catch { case _: java.io.IOException => false }
           won && {
-            def mine: Boolean =
-              try parse(fs, fs.getFileStatus(p)).exists(_.owner == me)
-              catch { case _: java.io.IOException => false }
+            def mine: Boolean = readMarker(fs, p).exists(_.owner == me)
             val settle = activityRoot.exists { case (afs, root) =>
               foreignActive(spark, afs, root) }
             val confirmed = mine && {
               if (settle) Thread.sleep(settleMs(spark)); mine
             }
-            if (confirmed)
-              held.put(fs.makeQualified(p).toString,
-                (fs, p, me, created, None))
+            if (confirmed) hold(fs, p, me, created)
             confirmed
           }
         }
@@ -605,7 +652,6 @@ private[graft] object MutationGate {
     val p = new Path(new Path(qualifiedRoot), s"$APPEND_DIR/a_$processId")
     createMarker(fs, p)
     heldAppendLeases.put(qualifiedRoot, p)
-    Hypertable.ensureGateDaemon()
   }
 
   private[graft] def releaseAppendLease(fs: FileSystem,
@@ -639,7 +685,6 @@ private[graft] object MutationGate {
     val root = new Path(qualifiedRoot)
     val claimed = scopes.distinct.sortBy(_.getOrElse(Long.MinValue))
       .map(s => createMarker(fs, sealPath(root, s)))
-    Hypertable.ensureGateDaemon()
     try {
       drainIntents(spark, fs, root)
       body
@@ -694,7 +739,6 @@ private[graft] object MutationGate {
     val intentP = new Path(root,
       s"$INTENT_DIR/i_${processId}_${java.util.UUID.randomUUID().toString.take(8)}")
     var intent = createMarker(fs, intentP)
-    Hypertable.ensureGateDaemon()
     val sealDir = new Path(root, SEAL_DIR)
     val deadline = System.currentTimeMillis() + timeoutMs(spark)
     var starts: Set[Long] = null
@@ -769,14 +813,8 @@ private[graft] object MutationGate {
     }
 
   private[sources] def rebirthLockLive(fs: FileSystem,
-      chunkDir: Path): Boolean = {
-    val p = new Path(chunkDir, REBIRTH_LOCK)
-    val stale = SparkSession.getActiveSession.map(staleMs)
-      .getOrElse(120000L)
-    try parse(fs, fs.getFileStatus(p))
-      .exists(_.live(System.currentTimeMillis(), stale))
-    catch { case _: java.io.IOException => false }
-  }
+      chunkDir: Path): Boolean =
+    fileMarkerLiveAny(fs, new Path(chunkDir, REBIRTH_LOCK))
 
   // --------------------------------------------- catalog commit lock (FS)
 

@@ -5,14 +5,21 @@ import org.apache.spark.sql.SparkSession
 
 /** Reader-epoch registration: makes grace-based GC of superseded content
   * EXACT for live readers instead of purely wall-clock (SCALE.md §15/§18).
-  * Two instances exist — [[graft.streaming.MatReaderEpochs]] for the cagg
-  * materialization's generation GC and [[ChunkReaderEpochs]] for the raw
-  * hypertable's superseded-generation/tombstone GC — sharing the protocol:
+  * One registry serves both generational stores, keyed by root: the raw
+  * hypertable (registered by the public read surfaces — `read`,
+  * `between`, `orderedRead`, `whereTimeIn` — in every storage root they
+  * may plan from; consulted by [[Hypertable.gcChunkDir]] before reaping a
+  * graced-out SUPERSEDED generation or tombstoned chunk dir) and the cagg
+  * materialization (registered by `ContinuousAggregate.readMatLive`;
+  * consulted by the generation GC in `syncMatCatalog`). Both GCs share
+  * the grace `spark.graft.gc.graceMs`. Crash remnants, stale tmps, bare
+  * shells and orphan mat generations were never snapshot-live and stay
+  * grace-only. The protocol:
   *
   *  - before reading the snapshot it will plan from (mat catalog / chunk
   *    manifest), a reader registers an epoch (ts = now) and — when this
   *    process had no standing epoch for the root — synchronously writes
-  *    `<root>/<dirName>/r_<processId>` whose body is the oldest active
+  *    `<root>/_graft_readers/r_<processId>` whose body is the oldest active
   *    epoch ts of this process. Order matters: the file is on disk BEFORE
   *    the snapshot read, so any dir the reader can plan (live in the
   *    snapshot it then reads) is only retired by a LATER write, whose
@@ -22,15 +29,16 @@ import org.apache.spark.sql.SparkSession
   *    be (re-)executed the epoch stands; once collected, the next sweep
   *    drops it. No explicit "read finished" signal exists for a
   *    DataFrame, and reachability is the conservative superset.
-  *  - a per-instance daemon heartbeats each registered file every
+  *  - one daemon heartbeats each registered file every
   *    [[heartbeatMs]] (rewriting it — fresh mtime, body = min active ts)
   *    and deletes it when the last epoch of a root is gone; a JVM
   *    shutdown hook best-effort deletes all files. A root deleted out
   *    from under a standing epoch (dropped table) drops the set rather
   *    than resurrecting the directory.
   *  - GC side: a retired dir is deletable only when its grace expired AND
-  *    no LIVE epoch file (mtime within `<prefix>StaleMs`) carries a ts ≤
-  *    retire-ts + `<prefix>SkewMs`. A crashed reader's file stops
+  *    no LIVE epoch file (mtime within `…StaleMs` of the
+  *    `spark.graft.gc.epoch` prefix) carries a ts ≤ retire-ts +
+  *    `…SkewMs`. A crashed reader's file stops
   *    heartbeating and goes stale, restoring the plain grace contract;
   *    the skew pad makes cross-process clock skew degrade toward
   *    over-retention, never under.
@@ -39,10 +47,13 @@ import org.apache.spark.sql.SparkSession
   * earliest ts wins), one file per (process, root). A standing process
   * holding a plan forever (e.g. a version-memoized scan of an idle
   * handle) must not block GC indefinitely, so an epoch stops protecting
-  * after `<prefix>MaxMs` (default 1 h) — past that, the documented
+  * after `…MaxMs` (default 1 h) — past that, the documented
   * contract reverts to "raise the grace above the longest read".
   */
-private[graft] class ReaderEpochs(val DIR: String, confPrefix: String) {
+private[graft] object ReaderEpochs {
+
+  private[graft] val DIR = "_graft_readers"
+  private val confPrefix = "spark.graft.gc.epoch"
 
   private[graft] def heartbeatMs: Long = 10000L
 
@@ -181,7 +192,7 @@ private[graft] class ReaderEpochs(val DIR: String, confPrefix: String) {
       if (!sweeperStarted) {
         val ex = java.util.concurrent.Executors.newSingleThreadScheduledExecutor {
           r =>
-            val t = new Thread(r, s"graft-reader-epochs-$DIR")
+            val t = new Thread(r, "graft-reader-epochs")
             t.setDaemon(true); t
         }
         ex.scheduleWithFixedDelay(() => sweepNow(),
@@ -189,7 +200,7 @@ private[graft] class ReaderEpochs(val DIR: String, confPrefix: String) {
         Runtime.getRuntime.addShutdownHook(new Thread(() => {
           val it = registry.values().iterator()
           while (it.hasNext) dropFile(it.next())
-        }, s"graft-reader-epochs-$DIR-shutdown"))
+        }, "graft-reader-epochs-shutdown"))
         sweeperStarted = true
       }
     }
@@ -197,10 +208,10 @@ private[graft] class ReaderEpochs(val DIR: String, confPrefix: String) {
   /** GC side: the oldest ts any LIVE foreign-or-local epoch file under
     * `root` protects — a retired dir with retire-ts ≥ (this − skew) must
     * be kept. `Long.MaxValue` when no live epoch exists. Also reaps
-    * long-dead epoch files (mtime older than `<prefix>MaxMs` — a live
+    * long-dead epoch files (mtime older than `…MaxMs` — a live
     * reader's file is heartbeated every [[heartbeatMs]], so nothing that
     * old can belong to one; reaping at the much-larger cap instead of
-    * `<prefix>StaleMs` keeps a delete from racing a fresh heartbeat
+    * `…StaleMs` keeps a delete from racing a fresh heartbeat
     * rewrite).
     */
   private[graft] def liveFloor(spark: SparkSession, fs: FileSystem,
@@ -234,16 +245,3 @@ private[graft] class ReaderEpochs(val DIR: String, confPrefix: String) {
     }
   }
 }
-
-/** Raw-hypertable reader epochs: registered by the public read surfaces
-  * (`read`, `between`, `orderedRead`, `whereTimeIn`) in every storage
-  * root they may plan from, consulted by [[Hypertable.gcChunkDir]] before
-  * reaping a graced-out SUPERSEDED generation or tombstoned chunk dir —
-  * the two deletion classes a manifest reader can have planned (crash
-  * remnants, stale tmps and bare shells were never manifest-live and stay
-  * grace-only). Closes the raw side of the round-12 wall-clock residual:
-  * "a query must finish within `spark.graft.gc.graceMs` of its planning"
-  * becomes exact for registered readers.
-  */
-private[graft] object ChunkReaderEpochs
-  extends ReaderEpochs("_graft_readers", "spark.graft.gc.epoch")

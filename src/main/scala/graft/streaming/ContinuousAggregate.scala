@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{functions => gf}
 import graft.expressions.TimeBucketUtil
-import graft.sources.{Columnstore, Hypertable, TimeSource}
+import graft.sources.{Columnstore, Hypertable, ReaderEpochs, TimeSource}
 
 /** Dimension join inside a cagg's view query — caggs-with-joins
   * (`tsl/test/sql/cagg_joins.sql`): the raw hypertable rows are enriched
@@ -672,7 +672,6 @@ class ContinuousAggregate(
     */
   private def withRefreshFileLock[T](body: => T): T = {
     val lock = new Path(path, "_refresh_lock")
-    graft.sources.Hypertable.ensureGateDaemon()
     graft.sources.MutationGate.claimExclusive(spark, fs, lock, None,
       alwaysSettle = true)
     try body
@@ -905,17 +904,6 @@ class ContinuousAggregate(
   /** Chunk keys (bucket-time micros / integer units) of the mat chunks. */
   def matChunks: Seq[Long] = matLiveEntries.map(_._1)
 
-  /** How long superseded mat-chunk GENERATIONS stay on disk after a newer
-    * one is published. Cross-process readers resolve file paths at plan
-    * time; the pre-round-12 swap (delete + rename at the same path) could
-    * yank those files mid-execution — a FAILED_READ in the best case, a
-    * silently missing bucket for a lister racing the delete+rename gap in
-    * the worst (found by the three-process cagg invalidation case). Must
-    * exceed the longest read that plans against the materialization.
-    */
-  private def matGraceMs: Long =
-    spark.conf.get("spark.graft.cagg.matGraceMs", "600000").toLong
-
   /** Generation subdirs of a mat chunk dir (publish-ts ascending). The
     * newest is the chunk's LIVE content; older ones are grace-retained
     * for in-flight readers; pre-round-12 chunks have none (their content
@@ -1099,9 +1087,13 @@ class ContinuousAggregate(
     * a retired dir whose grace expired is deleted from DISK first, then
     * dropped from the list in the same write — a crash between the two
     * re-deletes (idempotent) instead of leaking. A reader planned against
-    * a dir keeps at least [[matGraceMs]] from the catalog write that
-    * retired it, because readers can only plan dirs the catalog
-    * references as live.
+    * a dir keeps at least `spark.graft.gc.graceMs` (the chunk store's
+    * grace) from the catalog write that retired it, because readers can
+    * only plan dirs the catalog references as live. Superseded
+    * generations are kept at all because cross-process readers resolve
+    * file paths at plan time: the pre-round-12 swap (delete + rename at
+    * the same path) yanked them mid-execution (found by the three-process
+    * cagg invalidation case).
     */
   private def syncMatCatalog(mutate: MatCatalog => MatCatalog): MatCatalog = {
     val cur = readMatCatalog().getOrElse(listMatState(true))
@@ -1113,16 +1105,18 @@ class ContinuousAggregate(
     // collapse duplicates to the LATEST retire ts (longest grace)
     val dedup = next0.retired.filterNot(r => liveRels.contains(r.rel))
       .groupBy(r => (r.kind, r.rel)).map(_._2.maxBy(_.ts)).toSeq
-    // exact reader protection past the wall-clock grace (MatReaderEpochs):
+    // exact reader protection past the wall-clock grace (ReaderEpochs,
+    // shared with the chunk store):
     // a dir stays while any LIVE epoch file predates its retirement (the
     // reader registered before the dir was dereferenced, so it may have
     // planned it); the skew pad errs toward retention. A crashed reader's
     // epoch goes stale by mtime and stops blocking — the grace floor is
     // then the contract, exactly as before.
-    val epochFloor = MatReaderEpochs.liveFloor(spark, fs, new Path(path))
-    val skew = MatReaderEpochs.skewMs(spark)
+    val epochFloor = ReaderEpochs.liveFloor(spark, fs, new Path(path))
+    val skew = ReaderEpochs.skewMs(spark)
+    val grace = Hypertable.gcGraceMs(spark)
     val (expired, kept) = dedup.partition(r =>
-      now - r.ts > matGraceMs &&
+      now - r.ts > grace &&
         (r.kind == "o" || epochFloor > r.ts + skew))
     expired.foreach(r => deleteRetired(r, liveKeys))
     val next = next0.copy(v = cur.v + 1, retired = kept)
@@ -1137,7 +1131,7 @@ class ContinuousAggregate(
     * OTHER generation dirs present in the chunk — the caller retires any
     * of them the catalog doesn't already track (crash remnants of a
     * publish whose catalog write never landed). Deletion is entirely
-    * [[syncMatCatalog]]'s job: a dir dies only [[matGraceMs]] after the
+    * [[syncMatCatalog]]'s job: a dir dies only the grace after the
     * catalog write that dereferenced it.
     */
   private def publishMatGen(chunkDir: Path, staged: Option[Path],
@@ -1209,13 +1203,13 @@ class ContinuousAggregate(
     */
   private def readMatLive(register: Boolean = true): Option[DataFrame] = {
     if (!register) return readMatLiveInner()
-    // reader-epoch registration BEFORE the catalog read (MatReaderEpochs):
+    // reader-epoch registration BEFORE the catalog read (ReaderEpochs):
     // the epoch file is on disk first, so every dir live in the catalog
     // this read resolves can only be retired by a later catalog write,
     // which the live epoch then blocks from GC past the grace — a
-    // slower-than-matGraceMs reader keeps its planned files exactly, not
+    // slower-than-the-grace reader keeps its planned files exactly, not
     // just probabilistically (SCALE.md §18)
-    val epoch = MatReaderEpochs.begin(spark, fs, new Path(path))
+    val epoch = ReaderEpochs.begin(spark, fs, new Path(path))
     val res =
       try readMatLiveInner()
       catch { case e: Throwable => epoch.cancel(); throw e }

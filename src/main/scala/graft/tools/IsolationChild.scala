@@ -10,7 +10,7 @@ import graft.sources.Hypertable
   * isolation against a table another process owns. This is the
   * reference's `test/isolation/` model — real concurrent sessions —
   * which the same-JVM simulations in CrashRecoverySpec/ConcurrencySpec
-  * cannot fully prove (their locks and heldLeases are JVM-global).
+  * cannot fully prove (their locks and held markers are JVM-global).
   *
   * Modes (argv):
   *  - `mutate <table>` — attempt one updateWhere. Prints `MUTATED <n>`
@@ -298,7 +298,7 @@ object IsolationChild {
           }
           if (code == 0) println(s"CAGG_DROP_READS_OK $iters")
         case "slow-read" =>
-          // raw-hypertable reader-epoch exactness (ChunkReaderEpochs):
+          // raw-hypertable reader-epoch exactness (ReaderEpochs):
           // plan a read, hold it PAST the parent's gc.graceMs while the
           // parent rewrites a chunk (superseding the planned generation)
           // and runs the GC walk, then execute the plan — the epoch this
@@ -332,8 +332,8 @@ object IsolationChild {
               code = 9
           }
         case "cagg-slow-read" =>
-          // reader-epoch exactness (MatReaderEpochs): plan a materialized
-          // read, hold it PAST the parent's matGraceMs while the parent
+          // reader-epoch exactness (ReaderEpochs): plan a materialized
+          // read, hold it PAST the parent's gc.graceMs while the parent
           // refreshes (retiring the planned generations) and runs GC,
           // then execute the plan — the epoch this process registered at
           // plan time must keep every planned file on disk, so both

@@ -267,4 +267,53 @@ class ChunkOpsSpec extends AnyFunSuite {
     assert(ht.read().count() === expected,
       "refused split must leave every chunk's rows intact")
   }
+
+  test("an append routed elsewhere leaves a dropped chunk's tombstone " +
+    "untouched, so GC reaps it under steady ingest; an append into the " +
+    "dropped range still reborns it") {
+    val dir = Files.createTempDirectory("graft_tombgrace").toString
+    val ht = Hypertable.create(spark, s"$dir/ht", "ts",
+      chunkWidth = "7 days", catalog = "table")
+    ht.write(events)
+    val total = ht.read().count()
+    val cs = ht.showChunks().sortBy(_.startMicros)
+    assert(cs.size >= 3)
+    def rowsOf(c: graft.sources.ChunkInfo) =
+      events.where(col("ts") >= new Timestamp(c.startMicros / 1000) &&
+        col("ts") < new Timestamp(c.endMicros / 1000))
+    val (a, b, last) = (cs(0), cs(1), cs.last)
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val aDir = new org.apache.hadoop.fs.Path(s"$dir/ht/_chunk=${a.startMicros}")
+    val tomb = new org.apache.hadoop.fs.Path(aDir, ".graft_dropped")
+    ht.dropChunks(Some(a.endMicros), Some(a.startMicros))
+    assert(fs.exists(tomb))
+    // age the tombstone inside the default grace, so a rewrite shows
+    val aged = System.currentTimeMillis() - 5000L
+    fs.setTimes(tomb, aged, -1)
+    val body = Hypertable.readSmallFile(fs, tomb)
+    // steady ingest into ANOTHER chunk
+    val late = rowsOf(last).limit(5)
+    ht.write(late)
+    assert(Hypertable.readSmallFile(fs, tomb) === body)
+    assert(fs.getFileStatus(tomb).getModificationTime === aged,
+      "an append that routes no rows into a dropped chunk reset its grace")
+    // past a small grace, with no reader epoch, the next GC walk reaps it
+    try {
+      spark.conf.set("spark.graft.gc.graceMs", "50")
+      graft.sources.ReaderEpochs.expireAll()
+      ht.refreshChunkCatalog()
+      assert(!fs.exists(aDir), "the graced-out dropped chunk was not reaped")
+    } finally spark.conf.unset("spark.graft.gc.graceMs")
+    // an append INTO a dropped range reborns the chunk as before
+    ht.dropChunks(Some(b.endMicros), Some(b.startMicros))
+    val re = rowsOf(b).limit(20)
+    ht.write(re)
+    val bDir = new org.apache.hadoop.fs.Path(s"$dir/ht/_chunk=${b.startMicros}")
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(bDir, ".graft_dropped")),
+      "the rebirth heal must lift the tombstone")
+    assert(ht.showChunks().exists(_.startMicros == b.startMicros))
+    assert(ht.read().count() ===
+      total - rowsOf(a).count() - rowsOf(b).count() + late.count() + re.count())
+  }
 }

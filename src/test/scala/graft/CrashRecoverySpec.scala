@@ -185,7 +185,7 @@ class CrashRecoverySpec extends AnyFunSuite {
     assert(ht.read().count() === events.count())
   }
 
-  test("a crashed holder's stale lease is broken by atomic-rename takeover " +
+  test("a crashed holder's stale lease is broken by arbitrated takeover " +
     "and the next mutation proceeds as the new holder") {
     val dir = Files.createTempDirectory("graft_crash_lease2").toString
     val ht = Hypertable.create(spark, s"$dir/ht", "ts", chunkWidth = "7 days")
@@ -195,7 +195,7 @@ class CrashRecoverySpec extends AnyFunSuite {
     val lease = new Path(s"$dir/ht", "_graft_mutator_lease")
     val out = fs.create(lease, true)
     out.write("crashed-driver".getBytes("UTF-8")); out.close()
-    val staleMs = Hypertable.leaseStaleMs(spark)
+    val staleMs = graft.sources.MutationGate.staleMs(spark)
     fs.setTimes(lease, System.currentTimeMillis() - 2 * staleMs, -1)
     val n = ht.updateWhere(col("event_id") === 1, Map("value" -> lit(0.0)))
     assert(n > 0)
@@ -231,7 +231,8 @@ class CrashRecoverySpec extends AnyFunSuite {
     // the migrating process "crashes": once its lease is stale, the next
     // open takes over and completes the conversion
     fs.setTimes(lease,
-      System.currentTimeMillis() - 2 * Hypertable.leaseStaleMs(spark), -1)
+      System.currentTimeMillis() - 2 * graft.sources.MutationGate.staleMs(spark),
+      -1)
     val healed = Hypertable.at(spark, s"$dir/ht")
     assert(healed.genLayout && healed.catalogMode === "table")
     assert(healed.read().count() === total)
@@ -252,7 +253,7 @@ class CrashRecoverySpec extends AnyFunSuite {
     out.write("usurper-driver".getBytes("UTF-8")); out.close()
     // the heartbeat sees a lease that is no longer ours and drops it from
     // the held set — LATER mutations re-resolve and refuse
-    Hypertable.leaseHeartbeatNow()
+    graft.sources.MutationGate.heartbeatNow()
     val e = intercept[IllegalStateException] {
       ht.updateWhere(col("event_id") === 1, Map("value" -> lit(0.0)))
     }
@@ -306,48 +307,57 @@ class CrashRecoverySpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.fs.mtimeReliable")
   }
 
-  test("object-store mode: the lease heartbeat and staleness use the " +
-    "EMBEDDED clock, not file mtimes") {
-    spark.conf.set("spark.graft.fs.mtimeReliable", "false")
-    try {
-      val dir = Files.createTempDirectory("graft_crash_lease_ctr").toString
-      val ht = Hypertable.create(spark, s"$dir/ht", "ts", chunkWidth = "7 days")
-      ht.write(events)
-      // a rewrite-class op claims the exclusive lease:
-      // body = owner \n heartbeat-clock
-      ht.updateWhere(col("event_id") === -1L, Map("value" -> lit(0.0)))
-      val fs = fsOf(s"$dir/ht")
-      val lease = new Path(s"$dir/ht", "_graft_mutator_lease")
-      val body = Hypertable.readSmallFile(fs, lease).trim.linesIterator.toSeq
-      assert(body.head === Hypertable.processId)
-      val ts1 = body(1).toLong
-      Thread.sleep(5)
-      Hypertable.leaseHeartbeatNow()
-      val ts2 = Hypertable.readSmallFile(fs, lease).trim
-        .linesIterator.toSeq(1).toLong
-      assert(ts2 > ts1, "heartbeat must advance the embedded clock " +
-        "(setTimes is a no-op on object stores)")
-      val staleMs = Hypertable.leaseStaleMs(spark)
-      // foreign lease, STALE embedded clock, FRESH file mtime: the
-      // embedded clock governs — takeover must succeed
+  test("the lease is a gate marker: its heartbeat advances the EMBEDDED " +
+    "clock; a holder stale on both clocks is taken over, one fresh on " +
+    "either clock refuses") {
+    // the marker liveness rule (the later of the embedded heartbeat and
+    // the file mtime) holds on every store: on object stores setTimes is
+    // a no-op, so the embedded clock keeps a live holder fresh; an mtime
+    // the store refreshed on the holder's last write does the same for a
+    // holder whose embedded clock lags
+    val dir = Files.createTempDirectory("graft_crash_lease_ctr").toString
+    val ht = Hypertable.create(spark, s"$dir/ht", "ts", chunkWidth = "7 days")
+    ht.write(events)
+    // a rewrite-class op claims the exclusive lease:
+    // body = owner \n created \n heartbeat-clock
+    ht.updateWhere(col("event_id") === -1L, Map("value" -> lit(0.0)))
+    val fs = fsOf(s"$dir/ht")
+    val lease = new Path(s"$dir/ht", "_graft_mutator_lease")
+    val body = Hypertable.readSmallFile(fs, lease).trim.linesIterator.toSeq
+    assert(body.head === Hypertable.processId)
+    val ts1 = body(2).toLong
+    Thread.sleep(5)
+    graft.sources.MutationGate.heartbeatNow()
+    val ts2 = Hypertable.readSmallFile(fs, lease).trim
+      .linesIterator.toSeq(2).toLong
+    assert(ts2 > ts1, "heartbeat must advance the embedded clock " +
+      "(setTimes is a no-op on object stores)")
+    val staleMs = graft.sources.MutationGate.staleMs(spark)
+    def foreign(owner: String, hb: Long, mtime: Long): Unit = {
       Hypertable.releaseMutatorLease(spark, s"$dir/ht")
-      Hypertable.writeSmallFile(fs, lease,
-        s"crashed-peer\n${System.currentTimeMillis() - 2 * staleMs}")
-      assert(ht.updateWhere(col("event_id") === 2,
-        Map("value" -> lit(0.0))) > 0)
-      // foreign lease, FRESH embedded clock, ANCIENT mtime: must refuse
-      // (an mtime-based check would wrongly take over)
-      Hypertable.releaseMutatorLease(spark, s"$dir/ht")
-      Hypertable.writeSmallFile(fs, lease,
-        s"live-peer\n${System.currentTimeMillis()}")
-      fs.setTimes(lease, System.currentTimeMillis() - 2 * staleMs, -1)
-      val e = intercept[IllegalStateException] {
-        ht.deleteWhere(col("event_id") === 3)
-      }
-      assert(e.getMessage.contains("live-peer"))
-    } finally {
-      spark.conf.unset("spark.graft.fs.mtimeReliable")
-      // leave no foreign lease behind for later suites reusing the temp FS
+      Hypertable.writeSmallFile(fs, lease, s"$owner\n$hb\n$hb")
+      fs.setTimes(lease, mtime, -1)
     }
+    val now = System.currentTimeMillis()
+    // STALE embedded clock AND stale mtime: a crashed holder — taken over
+    foreign("crashed-peer", now - 2 * staleMs, now - 2 * staleMs)
+    assert(ht.updateWhere(col("event_id") === 2,
+      Map("value" -> lit(0.0))) > 0)
+    assert(Hypertable.readSmallFile(fs, lease).trim.linesIterator.next()
+      === Hypertable.processId)
+    // FRESH embedded clock, ANCIENT mtime (an object store): refuses
+    foreign("live-peer", System.currentTimeMillis(), now - 2 * staleMs)
+    val e = intercept[IllegalStateException] {
+      ht.deleteWhere(col("event_id") === 3)
+    }
+    assert(e.getMessage.contains("live-peer"))
+    // STALE embedded clock, FRESH mtime: refuses too
+    foreign("lagging-peer", now - 2 * staleMs, System.currentTimeMillis())
+    val e2 = intercept[IllegalStateException] {
+      ht.deleteWhere(col("event_id") === 3)
+    }
+    assert(e2.getMessage.contains("lagging-peer"))
+    // leave no foreign lease behind for later suites reusing the temp FS
+    fs.delete(lease, false)
   }
 }

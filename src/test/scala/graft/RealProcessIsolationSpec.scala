@@ -928,7 +928,7 @@ class RealProcessIsolationSpec extends AnyFunSuite {
     "the GC walk yields to the live epoch and reclaims once it is gone") {
     // the raw twin of the cagg slow-reader case below: the round-9..12
     // contract was "a query must finish within gc.graceMs of its
-    // planning, or re-plan" — ChunkReaderEpochs makes it exact for
+    // planning, or re-plan" — ReaderEpochs makes it exact for
     // registered readers. A chunk REWRITE (columnstore conversion)
     // supersedes the generation the child planned; the grace expires
     // while the child still holds; the GC walk must keep the superseded
@@ -971,7 +971,7 @@ class RealProcessIsolationSpec extends AnyFunSuite {
       try {
         spark.conf.set("spark.graft.gc.graceMs", "100")
         Thread.sleep(300) // grace EXPIRES while the reader still holds
-        graft.sources.ChunkReaderEpochs.expireAll() // only the CHILD's epoch counts
+        graft.sources.ReaderEpochs.expireAll() // only the CHILD's epoch counts
         ht.refreshChunkCatalog() // runs the GC walk under the held lease
         assert(fs.exists(oldGen),
           "GC reaped the planned generation despite the live reader epoch")
@@ -988,7 +988,7 @@ class RealProcessIsolationSpec extends AnyFunSuite {
         try fs.listStatus(rdir).foreach(st =>
           fs.setTimes(st.getPath, 1000L, 1000L))
         catch { case _: java.io.FileNotFoundException => () }
-        graft.sources.ChunkReaderEpochs.expireAll()
+        graft.sources.ReaderEpochs.expireAll()
         ht.refreshChunkCatalog()
         assert(!fs.exists(oldGen),
           "GC must reclaim the superseded generation once no live epoch remains")
@@ -998,11 +998,11 @@ class RealProcessIsolationSpec extends AnyFunSuite {
     }
   }
 
-  test("a cross-process reader SLOWER than matGraceMs keeps its planned " +
-    "generation files (reader-epoch exactness): GC past the grace yields " +
-    "to the live epoch and reclaims once the reader is gone") {
-    // the round-12 contract was wall-clock only ("raise matGraceMs above
-    // the longest read" — the Delta-vacuum class); MatReaderEpochs makes
+  test("a cross-process cagg reader SLOWER than gc.graceMs keeps its " +
+    "planned generation files (reader-epoch exactness): GC past the grace " +
+    "yields to the live epoch and reclaims once the reader is gone") {
+    // the round-12 contract was wall-clock only ("raise the grace above
+    // the longest read" — the Delta-vacuum class); ReaderEpochs makes
     // it exact for registered readers. Here the GRACE IS EXCEEDED while
     // the reader holds its plan across a refresh that retires every
     // planned generation — without the epoch the second collect loses
@@ -1049,7 +1049,7 @@ class RealProcessIsolationSpec extends AnyFunSuite {
       assert(retiredRels.nonEmpty,
         "the repair refresh must retire the planned generations")
       try {
-        spark.conf.set("spark.graft.cagg.matGraceMs", "100")
+        spark.conf.set("spark.graft.gc.graceMs", "100")
         Thread.sleep(300) // grace EXPIRES while the reader still holds
         cagg.dropMatChunks(Long.MinValue) // catalog sync -> GC pass
         retiredRels.foreach { rel =>
@@ -1066,7 +1066,7 @@ class RealProcessIsolationSpec extends AnyFunSuite {
           s"slow reader lost planned files through the GC:\n$o")
         // reader gone (its shutdown hook drops the epoch; stale-age any
         // remnant) -> the same GC now reclaims
-        val rdir = new Path(s"$dir/cagg/_mat_readers")
+        val rdir = new Path(s"$dir/cagg/_graft_readers")
         try fs.listStatus(rdir).foreach(st =>
           fs.setTimes(st.getPath, 1000L, 1000L))
         catch { case _: java.io.FileNotFoundException => () }
@@ -1075,7 +1075,7 @@ class RealProcessIsolationSpec extends AnyFunSuite {
           assert(!fs.exists(new Path(s"$dir/cagg/mat/$rel")),
             s"GC must reclaim $rel once no live reader epoch remains")
         }
-      } finally spark.conf.unset("spark.graft.cagg.matGraceMs")
+      } finally spark.conf.unset("spark.graft.gc.graceMs")
     } finally {
       if (p.isAlive) p.destroyForcibly()
     }

@@ -334,7 +334,7 @@ class GateOrderingSpec extends AnyFunSuite {
   }
   test("gcChunkDir keeps a graced-out superseded generation while a LIVE " +
     "reader epoch predates its stamp; a stale or post-stamp epoch frees it") {
-    // the raw-side reader-epoch gate (ChunkReaderEpochs / round 13): the
+    // the raw-side reader-epoch gate (ReaderEpochs / round 13): the
     // two deletion classes a manifest reader can have planned — superseded
     // generations and tombstoned dirs — wait past the grace for any live
     // epoch registered before the retirement. Foreign epochs are plain
@@ -359,7 +359,7 @@ class GateOrderingSpec extends AnyFunSuite {
     try {
       spark.conf.set("spark.graft.gc.graceMs", "50")
       Thread.sleep(120)
-      ChunkReaderEpochs.expireAll() // only the foreign FILE must count
+      ReaderEpochs.expireAll() // only the foreign FILE must count
       ht.refreshChunkCatalog()
       assert(fs.exists(oldGen),
         "a live pre-stamp reader epoch must block the superseded-gen reap")
@@ -368,7 +368,7 @@ class GateOrderingSpec extends AnyFunSuite {
       spark.conf.set("spark.graft.gc.epochSkewMs", "0")
       Hypertable.writeSmallFile(fs, epochFile,
         (System.currentTimeMillis() + 60000).toString)
-      ChunkReaderEpochs.expireAll()
+      ReaderEpochs.expireAll()
       ht.refreshChunkCatalog()
       assert(!fs.exists(oldGen),
         "a post-stamp epoch must not block the reap")
@@ -378,6 +378,38 @@ class GateOrderingSpec extends AnyFunSuite {
       fs.delete(epochFile, false)
     }
     assert(ht.read().count() === events.count())
+  }
+
+  test("mutator lease claim: a second process that claims between this " +
+    "process's liveness read and its create keeps the lease, and the " +
+    "mutation refuses naming it") {
+    // the interleaving the pre-gate lease admitted: both processes read
+    // "no lease", both write and read back their own id one after the
+    // other, and both hold the table until the next heartbeat
+    val dir = Files.createTempDirectory("graft_gate_lease_race").toString
+    val ht = Hypertable.create(spark, s"$dir/ht", "ts", chunkWidth = "7 days")
+    ht.write(events) // appends take the shared lease class only
+    Hypertable.releaseMutatorLease(spark, s"$dir/ht")
+    val fs = fsOf(dir)
+    val lease = new Path(s"$dir/ht", "_graft_mutator_lease")
+    assert(!fs.exists(lease))
+    MutationGate.claimHook = p =>
+      if (p.getName == "_graft_mutator_lease") {
+        // the second process found no lease too, claimed and read back
+        val now = System.currentTimeMillis()
+        foreignMarker(s"$dir/ht", "_graft_mutator_lease", "racing-driver",
+          now, now)
+      }
+    val e =
+      try intercept[IllegalStateException] {
+        ht.updateWhere(col("event_id") === 1L, Map("value" -> lit(0.0)))
+      } finally MutationGate.claimHook = _ => ()
+    assert(e.getMessage.contains("another process") &&
+      e.getMessage.contains("racing-driver"),
+      s"refusal must name the racing holder: ${e.getMessage}")
+    assert(Hypertable.readSmallFile(fs, lease).linesIterator.next() ===
+      "racing-driver", "the losing claimant overwrote the holder's lease")
+    fs.delete(lease, false)
   }
 }
 

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.Tables
-import graft.sources.Hypertable
+import graft.sources.{Hypertable, ReaderEpochs}
 
 /** Round 13: the cagg materialization's live-generation pointers live in
   * a versioned `_mat_catalog/v<N>.json` written at publish time (the same
@@ -98,13 +98,13 @@ class MatCatalogSpec extends AnyFunSuite {
     // within the grace: content still on disk (readers may have planned it)
     droppedDirs.foreach(d => assert(fs.exists(d), s"grace must retain $d"))
     try {
-      spark.conf.set("spark.graft.cagg.matGraceMs", "50")
+      spark.conf.set("spark.graft.gc.graceMs", "50")
       Thread.sleep(120)
       // any catalog sync GCs expired retirements (here: a no-op drop)
       cagg.dropMatChunks(Long.MinValue)
       droppedDirs.foreach(d =>
         assert(!fs.exists(d), s"expired retired chunk must be reaped: $d"))
-    } finally spark.conf.unset("spark.graft.cagg.matGraceMs")
+    } finally spark.conf.unset("spark.graft.gc.graceMs")
     assert(cagg.materialized.collect().nonEmpty)
   }
 
@@ -134,11 +134,11 @@ class MatCatalogSpec extends AnyFunSuite {
     assert(cat.retired.exists(_.rel.contains("9999999999999")),
       s"orphan must enter the retired list: ${cat.retired}")
     try {
-      spark.conf.set("spark.graft.cagg.matGraceMs", "50")
+      spark.conf.set("spark.graft.gc.graceMs", "50")
       Thread.sleep(120)
       cagg.dropMatChunks(Long.MinValue) // sync -> GC
       assert(!fs.exists(orphan), "expired orphan gen must be deleted")
-    } finally spark.conf.unset("spark.graft.cagg.matGraceMs")
+    } finally spark.conf.unset("spark.graft.gc.graceMs")
     assert(cagg.realtime.collect().toSet ===
       ht.read().groupBy(graft.functions.time_bucket("1 hour", $"ts")
           .as("bucket"), $"event_type")
@@ -150,7 +150,7 @@ class MatCatalogSpec extends AnyFunSuite {
       "or later-registered epoch does not (round-13 exactness)") {
     val (dir, _, cagg) = fresh()
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val rdir = new Path(s"$dir/cagg/${MatReaderEpochs.DIR}")
+    val rdir = new Path(s"$dir/cagg/${ReaderEpochs.DIR}")
     fs.mkdirs(rdir)
     val foreign = new Path(rdir, "r_foreign-process")
     // a foreign process's epoch registered BEFORE the drop retires dirs
@@ -161,7 +161,7 @@ class MatCatalogSpec extends AnyFunSuite {
     assert(dropped.nonEmpty)
     val droppedDirs = dropped.map(k => new Path(s"$dir/cagg/mat/_mat_chunk=$k"))
     try {
-      spark.conf.set("spark.graft.cagg.matGraceMs", "50")
+      spark.conf.set("spark.graft.gc.graceMs", "50")
       Thread.sleep(120)
       cagg.dropMatChunks(Long.MinValue) // sync -> GC pass
       droppedDirs.foreach(d => assert(fs.exists(d),
@@ -173,7 +173,7 @@ class MatCatalogSpec extends AnyFunSuite {
         s"a stale epoch must not block GC of $d"))
       // an epoch registered AFTER a retire cannot have planned it — with
       // no skew pad it does not block
-      spark.conf.set("spark.graft.cagg.matEpochSkewMs", "0")
+      spark.conf.set("spark.graft.gc.epochSkewMs", "0")
       val dropped2 = cagg.dropMatChunks(Long.MaxValue) // the remaining chunk
       assert(dropped2.nonEmpty)
       val dirs2 = dropped2.map(k => new Path(s"$dir/cagg/mat/_mat_chunk=$k"))
@@ -184,8 +184,8 @@ class MatCatalogSpec extends AnyFunSuite {
       dirs2.foreach(d => assert(!fs.exists(d),
         s"a post-retire epoch must not block GC of $d"))
     } finally {
-      spark.conf.unset("spark.graft.cagg.matGraceMs")
-      spark.conf.unset("spark.graft.cagg.matEpochSkewMs")
+      spark.conf.unset("spark.graft.gc.graceMs")
+      spark.conf.unset("spark.graft.gc.epochSkewMs")
       fs.delete(foreign, false)
     }
   }
@@ -195,19 +195,19 @@ class MatCatalogSpec extends AnyFunSuite {
     val (dir, _, cagg) = fresh()
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val f = new Path(
-      s"$dir/cagg/${MatReaderEpochs.DIR}/r_${Hypertable.processId}")
+      s"$dir/cagg/${ReaderEpochs.DIR}/r_${Hypertable.processId}")
     val df = cagg.materialized
     assert(fs.exists(f),
       "the plan must write the reader epoch before resolving the catalog")
     val ts0 = Hypertable.readSmallFile(fs, f).trim.toLong
     assert(ts0 <= System.currentTimeMillis())
     // heartbeat keeps the file while the plan is reachable
-    MatReaderEpochs.sweepNow()
+    ReaderEpochs.sweepNow()
     assert(fs.exists(f))
     assert(df.count() > 0)
     // all plans gone -> the sweep drops the file; reads still work (the
     // grace floor is the contract again)
-    MatReaderEpochs.expireAll()
+    ReaderEpochs.expireAll()
     assert(!fs.exists(f), "an emptied epoch set must drop its file")
     assert(cagg.materialized.count() > 0)
   }
