@@ -271,12 +271,10 @@ object ScaleProbe {
 
   /** Mat-catalog resolution probe (round 13, SCALE.md §18): a cagg with N
     * mat chunks (default 10⁴); resolution = `matChunks` through the
-    * `_mat_catalog` snapshot (one LIST + one GET) vs the pre-round-13
-    * physical path (the fallback: mat-root LIST + ~2 LISTs per chunk —
-    * measured under slowfs at the small point, where it is already
-    * seconds, and on local fs at full N). The cagg is BUILT on local fs
-    * and probed through `slowfs://` (same dir), like the stream-log
-    * probe. Run: `SPARK_GRAFT_MAT_PROBE=1 sbt "runMain graft.ScaleProbe"`.
+    * `_mat_catalog` snapshot (one LIST + one GET), on local fs and under
+    * slowfs. The cagg is BUILT on local fs and probed through `slowfs://`
+    * (same dir), like the stream-log probe. Run:
+    * `SPARK_GRAFT_MAT_PROBE=1 sbt "runMain graft.ScaleProbe"`.
     */
   private def matResolutionProbe(spark: SparkSession): Unit = {
     import spark.implicits._
@@ -302,17 +300,9 @@ object ScaleProbe {
           else new ContinuousAggregate(spark, s"slowfs://$dir/cagg", ht, defn)
         probe.matChunks // warm
         val (tCat, _) = timed2 { probe.matChunks.size }
-        scheme -> (tCat, probe)
+        scheme -> tCat
       }).toMap
-      // fallback contrast: the physical per-chunk listing (pre-round-13)
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/cagg/_mat_catalog"), true)
-      val (tListLocal, _) = timed { cagg.matChunks.size }
-      val tListSlow =
-        if (n > 600) -1.0 // ~2·n slowfs LISTs / 8 threads — minutes; small point only
-        else timed { results("slowfs")._2.matChunks.size }._1
-      println(f"""[scale] {"probe":"mat_resolution","chunks":$n,"build_sec":$tBuild%.1f,"catalog_local_sec":${results("file")._1}%.4f,"catalog_slowfs_sec":${results("slowfs")._1}%.4f,"fallback_local_sec":$tListLocal%.3f,"fallback_slowfs_sec":$tListSlow%.2f}""")
+      println(f"""[scale] {"probe":"mat_resolution","chunks":$n,"build_sec":$tBuild%.1f,"catalog_local_sec":${results("file")}%.4f,"catalog_slowfs_sec":${results("slowfs")}%.4f}""")
     }
   }
 
@@ -719,6 +709,11 @@ class OpCountFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def mkdirs(p: org.apache.hadoop.fs.Path,
       permission: org.apache.hadoop.fs.permission.FsPermission): Boolean =
     counted("mkdirs")(super.mkdirs(p, permission))
+  // RawLocalFileSystem answers both without the counted overloads above
+  override def mkdirs(p: org.apache.hadoop.fs.Path): Boolean =
+    counted("mkdirs")(super.mkdirs(p))
+  override def exists(p: org.apache.hadoop.fs.Path): Boolean =
+    counted("exists")(super.exists(p))
 }
 
 object OpCountFs {
@@ -732,6 +727,7 @@ object OpCountFs {
     counts.merge(op, 1, (a, b) => a + b); ()
   }
   def reset(): Unit = counts.clear()
+  def count(op: String): Int = counts.getOrDefault(op, 0)
   def total(): Int = {
     var t = 0
     counts.forEach((_, v) => t += v)

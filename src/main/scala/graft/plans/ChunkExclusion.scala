@@ -64,9 +64,9 @@ object ChunkExclusion extends Rule[LogicalPlan] {
     * relations, each matched on its own root). A gen-layout scan's roots
     * are `_chunk=K/_gen=N` dirs — one level deeper than the flat layout's
     * `_chunk=K`; both map to the chunk dir's parent (the storage root the
-    * table registered). A cagg materialization scan has the same two
-    * shapes with the mat store's column names (`_mat_chunk=K[/_mat_gen=TS]`
-    * — round 12's grace-retained generations).
+    * table registered). A cagg materialization scan has the generation
+    * shape with the mat store's names: `_mat_chunk=K/_mat_gen=N`, the
+    * materialization's GenStore generations.
     */
   private[plans] def registeredTable(roots: Seq[org.apache.hadoop.fs.Path])
       : Option[Hypertable.ExclusionInfo] = {

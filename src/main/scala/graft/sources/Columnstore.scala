@@ -352,8 +352,9 @@ object Columnstore {
     */
   private def rewriteTmp(fs: org.apache.hadoop.fs.FileSystem, chunkP: Path,
       tag: String): Path =
-    if (Hypertable.isGenPath(chunkP)) Hypertable.stageGenDir(fs, chunkP.getParent)
-    else Hypertable.registerRewriteTmp(fs,
+    if (GenStore.chunks.isGenPath(chunkP))
+      GenStore.chunks.stageGenDir(fs, chunkP.getParent)
+    else GenStore.registerRewriteTmp(fs,
       new Path(chunkP.getParent, "." + chunkP.getName + s"_${tag}_tmp"))
 
   private[sources] val DEFAULT_FILE_BYTES = 128L << 20
@@ -384,9 +385,9 @@ object Columnstore {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // re-resolve to the chunk's CURRENT live generation: the caller's
     // showChunks snapshot may predate a concurrent publish (see
-    // Hypertable.liveChunkTarget) — rewriting a superseded generation
+    // GenStore.chunks.liveChunkTarget) — rewriting a superseded generation
     // would republish stale data
-    val chunkP = Hypertable.liveChunkTarget(fs, new Path(chunkPath))
+    val chunkP = GenStore.chunks.liveChunkTarget(fs, new Path(chunkPath))
     healSwapsUnder(fs, chunkP) // a torn leaf swap must not feed this rewrite
     require(!Hypertable.chunkFrozen(fs, chunkP),
       s"cannot compact frozen chunk $chunkPath — unfreeze_chunk first")
@@ -404,7 +405,7 @@ object Columnstore {
       if (fls.size > n) Some(leaf -> n) else None
     }
     if (todo.isEmpty) return -1
-    if (Hypertable.isGenPath(chunkP)) {
+    if (GenStore.chunks.isGenPath(chunkP)) {
       // generation-copy compact: stage a COMPLETE next generation —
       // oversized leaves rewritten compact, everything else (untouched
       // leaves' files, sidecars) byte-copied across — then publish by
@@ -510,24 +511,26 @@ object Columnstore {
       publishEncoded(spark, fs, chunkP, tmp, n)
     }
 
-  /** Encode a chunk's current content into a columnstore-layout TMP dir —
+  /** Encode a chunk's current content into a columnstore-layout stage —
     * sidecars and the settings marker included — WITHOUT publishing: the
-    * caller owns the swap. [[compressChunk]] publishes via the chunk
-    * rewrite path (generation publish / flat in-place); the cagg
-    * materialization publishes the tmp as a NEW `_mat_gen` generation so
-    * cross-process readers planned against the old content are never
-    * yanked mid-read (same additive-publish contract as a cagg refresh).
-    * Returns (fs, resolved source dir, tmp dir, row count).
+    * caller owns the commit. [[compressChunk]] stages the chunk's next
+    * generation (gen layout) or a dot-prefixed tmp dir (flat) and
+    * publishes via the chunk rewrite path; the cagg materialization
+    * passes the `stage` it registered through its own generation store
+    * and commits it by its catalog write, so cross-process readers
+    * planned against the old content are never yanked mid-read.
+    * Returns (fs, resolved source dir, stage dir, row count).
     */
   private[graft] def compressEncodeTmp(spark: SparkSession, chunkPath: String,
-      opts: Options): (org.apache.hadoop.fs.FileSystem, Path, Path, Long) = {
+      opts: Options, stage: Option[Path] = None)
+      : (org.apache.hadoop.fs.FileSystem, Path, Path, Long) = {
     val fs = new Path(chunkPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // re-resolve to the chunk's CURRENT live generation: the caller's
     // showChunks snapshot may predate a concurrent publish (see
-    // Hypertable.liveChunkTarget) — rewriting a superseded generation
+    // GenStore.chunks.liveChunkTarget) — rewriting a superseded generation
     // would republish stale data
-    val chunkP = Hypertable.liveChunkTarget(fs, new Path(chunkPath))
+    val chunkP = GenStore.chunks.liveChunkTarget(fs, new Path(chunkPath))
     healSwapsUnder(fs, chunkP) // a torn leaf swap must not feed this rewrite
     require(!Hypertable.chunkFrozen(fs, chunkP),
       s"cannot modify frozen chunk $chunkPath — unfreeze_chunk first")
@@ -560,7 +563,7 @@ object Columnstore {
         // defeating both)
         df.repartitionByRange(segs.map(col): _*)
     }).sortWithinPartitions((opts.segmentBy ++ opts.orderBy).map(col): _*)
-    val tmp = rewriteTmp(fs, chunkP, "compress")
+    val tmp = stage.getOrElse(rewriteTmp(fs, chunkP, "compress"))
     var w = arranged.write.mode("overwrite")
       .option("compression", "zstd")
       .option("parquet.block.size", opts.rowGroupBytes.toString)
@@ -626,19 +629,19 @@ object Columnstore {
       publishEncoded(spark, fs, chunkP, tmp, n)
     }
 
-  /** [[compressEncodeTmp]]'s inverse: rowstore-encode into a TMP dir
+  /** [[compressEncodeTmp]]'s inverse: rowstore-encode into a stage
     * without publishing (no columnstore marker — this IS the decompress).
     */
   private[graft] def decompressEncodeTmp(spark: SparkSession,
-      chunkPath: String)
+      chunkPath: String, stage: Option[Path] = None)
       : (org.apache.hadoop.fs.FileSystem, Path, Path, Long) = {
     val fs = new Path(chunkPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // re-resolve to the chunk's CURRENT live generation: the caller's
     // showChunks snapshot may predate a concurrent publish (see
-    // Hypertable.liveChunkTarget) — rewriting a superseded generation
+    // GenStore.chunks.liveChunkTarget) — rewriting a superseded generation
     // would republish stale data
-    val chunkP = Hypertable.liveChunkTarget(fs, new Path(chunkPath))
+    val chunkP = GenStore.chunks.liveChunkTarget(fs, new Path(chunkPath))
     healSwapsUnder(fs, chunkP) // a torn leaf swap must not feed this rewrite
     require(!Hypertable.chunkFrozen(fs, chunkP),
       s"cannot modify frozen chunk $chunkPath — unfreeze_chunk first")
@@ -657,7 +660,7 @@ object Columnstore {
     val out =
       if (nParts <= df.rdd.getNumPartitions) df.coalesce(nParts)
       else df.repartition(nParts)
-    val tmp = rewriteTmp(fs, chunkP, "decompress")
+    val tmp = stage.getOrElse(rewriteTmp(fs, chunkP, "decompress"))
     var w = out.write.mode("overwrite")
     if (spacePart.nonEmpty) w = w.partitionBy(spacePart: _*)
     w.parquet(tmp.toString)
@@ -711,9 +714,9 @@ object Columnstore {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // re-resolve to the chunk's CURRENT live generation: the caller's
     // showChunks snapshot may predate a concurrent publish (see
-    // Hypertable.liveChunkTarget) — rewriting a superseded generation
+    // GenStore.chunks.liveChunkTarget) — rewriting a superseded generation
     // would republish stale data
-    val chunkP = Hypertable.liveChunkTarget(fs, new Path(chunkPath))
+    val chunkP = GenStore.chunks.liveChunkTarget(fs, new Path(chunkPath))
     healSwapsUnder(fs, chunkP) // a torn leaf swap must not feed this rewrite
     require(!Hypertable.chunkFrozen(fs, chunkP),
       s"cannot modify frozen chunk $chunkPath — unfreeze_chunk first")

@@ -282,10 +282,10 @@ class Hypertable private (
       } else Nil
     // tombstoned dirs this batch will re-ingest into, start -> (dir, gen):
     // the post-write commit marks these generations complete, then heals
-    var pendingRebirth = Map.empty[Long, (Path, Int)]
+    var pendingRebirth = Map.empty[Long, (Path, Long)]
     // routed generation per chunk (non-zero lives + rebirths); consumed by
     // the stream-log dir resolution below
-    var gensOut = Map.empty[Long, Int]
+    var gensOut = Map.empty[Long, Long]
     // with concurrent appender PROCESSES allowed, two batches re-ingesting
     // into the same tombstoned dir would race the drop-max normalization
     // (the later reader lists the earlier's committed-but-unhealed
@@ -299,7 +299,7 @@ class Hypertable private (
     try {
     if (genLayout) {
       val live = liveChunks
-        .map(c => c.startMicros -> Hypertable.genOf(new Path(c.path))).toMap
+        .map(c => c.startMicros -> GenStore.chunks.genOf(new Path(c.path))).toMap
       // a start that is LIVE again (already reborn at the primary root)
       // routes to its live generation, not the dead dir's successor
       val rebirth = tombstoned.filterNot(t => live.contains(t._1))
@@ -310,17 +310,17 @@ class Hypertable private (
           // its heal): commit it now and route into the healed live
           // generation — normalizing it dead would discard a finished
           // commit's rows
-          if (Hypertable.healRebirth(dfs, d)) {
+          if (GenStore.chunks.healRebirth(dfs, d)) {
             // loud, not silent: a dropped map entry would default the
             // routing to _gen=0 — a dead generation — losing the rows
-            val ld = Hypertable.liveDataDir(dfs, d).getOrElse(
+            val ld = GenStore.chunks.liveDataDir(dfs, d).getOrElse(
               throw new IllegalStateException(
                 s"rebirth heal of $d left no live generation"))
-            Some(start -> Hypertable.genOf(ld))
+            Some(start -> GenStore.chunks.genOf(ld))
           } else {
-            val listedMax = Hypertable.listGenDirs(dfs, d).map(_._1)
-              .maxOption.getOrElse(-1)
-            val recorded = Hypertable.readTombMax(dfs, d)
+            val listedMax = GenStore.chunks.listGenDirs(dfs, d).map(_._1)
+              .maxOption.getOrElse(-1L)
+            val recorded = GenStore.readTombMax(dfs, d)
             // normalize the tombstone's recorded drop-max UP to cover
             // every listed generation BEFORE routing: a crashed append's
             // partial (unmarked) generation in (recorded, listedMax]
@@ -331,19 +331,19 @@ class Hypertable private (
             // drop crashed between create and write). Routing then goes
             // strictly above everything dead, so healRebirth commits
             // exactly the generation this append writes.
-            val deadMax = math.max(listedMax, recorded.getOrElse(-1))
+            val deadMax = math.max(listedMax, recorded.getOrElse(-1L))
             // ALWAYS rewrite (even when the value is unchanged): the
             // fresh mtime resets the tombstone's grace clock, so the GC
             // cannot reap this dir between our job commit and our heal
             // (gcChunkDir additionally refuses while an above-max
             // generation exists — this is the belt, that the braces)
             Hypertable.writeSmallFileDirect(dfs,
-              new Path(d, Hypertable.DROP_TOMB), deadMax.toString)
+              new Path(d, GenStore.DROP_TOMB), deadMax.toString)
             pendingRebirth += start -> (d, deadMax + 1)
             Some(start -> (deadMax + 1))
           }
         }
-      val gens: Map[Long, Int] = (live.filter(_._2 != 0) ++ rebirth).toMap
+      val gens: Map[Long, Long] = (live.filter(_._2 != 0) ++ rebirth).toMap
       gensOut = gens
       out = out.withColumn(Hypertable.GEN,
         if (gens.isEmpty) lit(0)
@@ -566,12 +566,12 @@ class Hypertable private (
           .map { case (dd, g) => new Path(dd, s"${Hypertable.GEN}=$g") }
           .orElse(liveByStart.get(s).map(new Path(_)))
           .orElse(tombMap.get(s).map(dd =>
-            new Path(dd, s"${Hypertable.GEN}=${gensOut.getOrElse(s, 0)}")))
+            new Path(dd, s"${Hypertable.GEN}=${gensOut.getOrElse(s, 0L)}")))
           .getOrElse {
             val root = tsRoots.getOrElse(s, new Path(path))
             val cd = new Path(root, s"$CHUNK=$s")
             if (genLayout)
-              new Path(cd, s"${Hypertable.GEN}=${gensOut.getOrElse(s, 0)}")
+              new Path(cd, s"${Hypertable.GEN}=${gensOut.getOrElse(s, 0L)}")
             else cd
           }
         s -> d
@@ -669,9 +669,9 @@ class Hypertable private (
         val dfs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
         val genDir = new Path(d, s"${Hypertable.GEN}=$g")
         if (dfs.exists(genDir)) { // batch may hold no rows for this chunk
-          Hypertable.markRebirthComplete(dfs, genDir)
+          GenStore.markRebirthComplete(dfs, genDir)
           Hypertable.crashPoint("write.rebirth.after_mark")
-          Hypertable.healRebirth(dfs, d)
+          GenStore.chunks.healRebirth(dfs, d)
         }
       }
       Hypertable.crashPoint("write.before_sync")
@@ -1131,7 +1131,7 @@ class Hypertable private (
     // chunk may live in a tablespace dir) — take the max across roots.
     // Object-store mode keys on the stamp's embedded COUNTER instead of
     // its mtime (strictly monotonic; immune to PUT-time granularity)
-    val mtimeOk = Hypertable.mtimeReliable(spark)
+    val mtimeOk = Hypertable.mtimeReliable(fs)
     val content = (new Path(path) +: tablespaceTableDirs).map { r =>
       val rfs = r.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (mtimeOk)
@@ -1755,8 +1755,8 @@ class Hypertable private (
             val cd = new Path(d)
             val cfs = cd.getFileSystem(
               spark.sparkContext.hadoopConfiguration)
-            if (cfs.exists(cd) && !Hypertable.isTombstoned(cfs, cd))
-              Hypertable.tombstoneChunk(cfs, cd)
+            if (cfs.exists(cd) && !GenStore.isTombstoned(cfs, cd))
+              GenStore.chunks.tombstoneChunk(cfs, cd)
           }
         fs.delete(p, false)
       case _ => fs.delete(p, false)
@@ -1784,7 +1784,7 @@ class Hypertable private (
                 forceCompressed =
                   Some(Columnstore.isCompressed(spark, c.path)))
             else upper.foreach { case (ufs, up) =>
-              Hypertable.tombstoneChunk(ufs, Hypertable.chunkDirOf(up)) }
+              GenStore.chunks.tombstoneChunk(ufs, Hypertable.chunkDirOf(up)) }
           }
           fs.delete(p, false)
         case None => fs.delete(p, false)
@@ -1807,7 +1807,7 @@ class Hypertable private (
         .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$CHUNK="))
         .filterNot(s => liveDirs.contains(
           rfs.makeQualified(s.getPath).toString))
-        .filter(s => Hypertable.isTombstoned(rfs, s.getPath))
+        .filter(s => GenStore.isTombstoned(rfs, s.getPath))
         .map(s => s.getPath.getName.stripPrefix(s"$CHUNK=").toLong -> s.getPath)
     }
 
@@ -1854,7 +1854,7 @@ class Hypertable private (
     // just-written generation before its superseded stamp lands). Readers
     // heal the manifest; only the mutator collects garbage.
     if (genLayout && Hypertable.holdsMutatorLease(fs, qualifiedPath)) {
-      val grace = Hypertable.gcGraceMs(spark)
+      val grace = GenStore.graceMs(spark)
       // reader epochs live at the PRIMARY root wherever the chunk is
       // stored — one LIST per sweep, not per chunk
       val floor = ReaderEpochs.liveFloor(spark, fs, new Path(path))
@@ -1864,7 +1864,7 @@ class Hypertable private (
         if (rfs.exists(r))
           rfs.listStatus(r).toSeq
             .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$CHUNK="))
-            .foreach(s => Hypertable.gcChunkDir(rfs, s.getPath, grace,
+            .foreach(s => GenStore.chunks.gcChunkDir(rfs, s.getPath, grace,
               floor, skew))
       }
     }
@@ -1989,7 +1989,7 @@ class Hypertable private (
                       // rebirth; a tombstoned dir resolves to None)
                       val start = s.getPath.getName
                         .stripPrefix(s"$CHUNK=").toLong
-                      Hypertable.liveDataDir(rfs, s.getPath).map { d =>
+                      GenStore.chunks.liveDataDir(rfs, s.getPath).map { d =>
                         ChunkInfo(start, Hypertable.readRangeFile(rfs, d)
                           .getOrElse(defaultChunkEnd(start)), d.toString)
                       }
@@ -2070,7 +2070,7 @@ class Hypertable private (
     // heal (the root-mtime cue) is unavailable there; every COMPLETED
     // mutator still re-snapshots, and the documented recovery after a
     // writer crash remains an explicit refreshChunkCatalog().
-    if (!Hypertable.mtimeReliable(spark)) return catalogFreshByCounter()
+    if (!Hypertable.mtimeReliable(fs)) return catalogFreshByCounter()
     // a version GC'd between the listing and the stat reads as "stale"
     // (the caller re-snapshots under the catalog lock), never as an error
     val catM = manifestVersions().lastOption.map { case (_, p) =>
@@ -2095,10 +2095,11 @@ class Hypertable private (
     }
   }
 
-  /** [[catalogFresh]]'s mtime-free form (`spark.graft.fs.mtimeReliable=
-    * false`): fresh ⟺ every root's content-stamp counter is ≤ the value
-    * the latest manifest recorded. A root with a stamp the manifest has
-    * no record of reads stale (heals); an unparsable manifest likewise.
+  /** [[catalogFresh]]'s mtime-free form (stores without settable
+    * mtimes, see [[Hypertable.mtimeReliable]]): fresh ⟺ every root's
+    * content-stamp counter is ≤ the value the latest manifest recorded.
+    * A root with a stamp the manifest has no record of reads stale
+    * (heals); an unparsable manifest likewise.
     */
   private def catalogFreshByCounter(): Boolean = {
     val latest = manifestVersions().lastOption.getOrElse(return false)
@@ -2136,7 +2137,7 @@ class Hypertable private (
       .flatMap { s =>
         val start = s.getPath.getName.stripPrefix(s"$CHUNK=").toLong
         val data =
-          if (genLayout) Hypertable.liveDataDir(dfs, s.getPath)
+          if (genLayout) GenStore.chunks.liveDataDir(dfs, s.getPath)
           else Some(s.getPath)
         data.map { d =>
           val end = Hypertable.readRangeFile(dfs, d)
@@ -2198,12 +2199,12 @@ class Hypertable private (
         // behind a tombstone instead (a dropped dir already has one); the
         // commit below lifts it. A crash leaves a tombstoned dir the next
         // append normalizes dead and GC reaps.
-        if (existing.isEmpty && !Hypertable.isTombstoned(fs, chunkDir)) {
+        if (existing.isEmpty && !GenStore.isTombstoned(fs, chunkDir)) {
           fs.mkdirs(chunkDir)
-          Hypertable.tombstoneChunk(fs, chunkDir)
+          GenStore.chunks.tombstoneChunk(fs, chunkDir)
         }
-        Hypertable.stageGenDir(fs, chunkDir)
-      } else Hypertable.registerRewriteTmp(fs,
+        GenStore.chunks.stageGenDir(fs, chunkDir)
+      } else GenStore.registerRewriteTmp(fs,
         new Path(target.getParent, s".tmp_chunk_$startMicros"))
     var w = df.write.mode(SaveMode.Overwrite)
     if (compressed) w = w.option("compression", "zstd")
@@ -2229,18 +2230,12 @@ class Hypertable private (
         // unmarked generation healRebirth refuses and the next append
         // normalizes dead — the op was never acked, so the chunk staying
         // absent (or dropped) is the correct outcome
-        val chunkDir = target
-        val next = Hypertable.genOf(tmp)
-        Hypertable.listGenDirs(fs, chunkDir).foreach { case (g, d) =>
-          if (g < next && !Hypertable.isSuperseded(fs, d))
-            Hypertable.stampSuperseded(fs, d)
-        }
-        fs.delete(new Path(chunkDir, Hypertable.DROP_TOMB), false)
-        Hypertable.unregisterRewriteTmp(fs, tmp)
+        GenStore.chunks.commitStage(fs, target, tmp)
+        GenStore.unregisterRewriteTmp(fs, tmp)
         tmp
       case None =>
         require(fs.rename(tmp, target), s"rename $tmp -> $target failed")
-        Hypertable.unregisterRewriteTmp(fs, tmp)
+        GenStore.unregisterRewriteTmp(fs, tmp)
         target
     }
     refreshColumnStats(Seq(live.toString))
@@ -2321,7 +2316,7 @@ class Hypertable private (
     // delete in the flat layout as before
     cs.tail.foreach { c =>
       if (genLayout)
-        Hypertable.tombstoneChunk(fs, Hypertable.chunkDirOf(new Path(c.path)))
+        GenStore.chunks.tombstoneChunk(fs, Hypertable.chunkDirOf(new Path(c.path)))
       else fs.delete(new Path(c.path), true)
       Hypertable.crashPoint("merge.absorb_step")
     }
@@ -3050,13 +3045,12 @@ class Hypertable private (
     * files for the GC grace window — drop_chunks racing a SELECT yields
     * the pre-drop or post-drop set, never a half-listed one, the
     * reference's `dropchunks_race.spec` outcome); the flat layout hard
-    * deletes as before. `spark.graft.gc.graceMs=0` restores eager
-    * deletion.
+    * deletes as before. A zero GenStore grace restores eager deletion.
     */
   private def dropChunkDirs(dropped: Seq[ChunkInfo]): Unit =
     dropped.foreach { c =>
-      if (genLayout && Hypertable.gcGraceMs(spark) > 0)
-        Hypertable.tombstoneChunk(fs, Hypertable.chunkDirOf(new Path(c.path)))
+      if (genLayout && GenStore.graceMs(spark) > 0)
+        GenStore.chunks.tombstoneChunk(fs, Hypertable.chunkDirOf(new Path(c.path)))
       else fs.delete(Hypertable.chunkDirOf(new Path(c.path)), true)
       Hypertable.crashPoint("drop.dir_step")
     }
@@ -3236,6 +3230,9 @@ class Hypertable private (
 }
 
 object Hypertable {
+  import GenStore.{DROP_TOMB, isSuperseded, isTombstoned, stampSuperseded,
+    unregisterRewriteTmp}
+  import GenStore.chunks.{isGenPath, listGenDirs, gcChunkDir}
   val CHUNK = "_chunk"
   val SPACE = "_space"
   /** Generation partition dir inside a chunk dir (gen-layout tables). */
@@ -3311,28 +3308,6 @@ object Hypertable {
   private[sources] val CATALOG_KEEP = 4
   private[sources] val CONTENT_STAMP = "_graft_content_stamp"
 
-  // ------------------------------------------------- generational chunk dirs
-  // Gen-layout tables (catalog="table") version each chunk's CONTENT in
-  // `_gen=<n>` partition subdirs:
-  //   root/_chunk=<start>/_gen=<n>[/_space=<b>]/part-*.parquet
-  // A rewrite (DML copy-on-write, compress/decompress, merge/split,
-  // compact) writes the next generation in place (stageGenDir), then
-  // stamps the old generation `.graft_superseded` — the COMMIT POINT —
-  // and re-snapshots the manifest (publishChunkRewrite). Superseded
-  // generations stay on disk for a grace window, so a reader pinned to an
-  // older manifest keeps reading exactly the files it planned — the
-  // file-listing equivalent of the reference's MVCC snapshot
-  // (`src/ts_catalog/catalog.c` consistent chunk-set reads; every
-  // `test/isolation/specs/*.spec` reader relies on it). Liveness is the
-  // LOWEST unstamped generation: an unstamped dir ABOVE it is an
-  // in-flight stage or, once its staging marker is gone or stale, the
-  // remnant of a rewrite that crashed before its stamp (never committed),
-  // which GC rolls back. Drops write a
-  // `.graft_dropped` tombstone instead of deleting, with the same grace.
-
-  private[sources] val SUPERSEDED = ".graft_superseded"
-  private[sources] val DROP_TOMB = ".graft_dropped"
-  // rewrite-intent markers at the PRIMARY root (multi-step merge/split
   // publishes): `_graft_merging_<headStart>` (body: mergedEnd, then the
   // absorbed chunk dirs) / `_graft_splitting_<parentStart>` (body: the
   // split point). Readers derive a consistent view from a torn state
@@ -3340,17 +3315,6 @@ object Hypertable {
   // (healRewriteIntents).
   private[sources] val MERGING = "_graft_merging_"
   private[sources] val SPLITTING = "_graft_splitting_"
-  private[sources] val REBIRTH_OK = ".graft_rebirth_ok"
-
-  /** Stamp a rebirth generation COMPLETE — written by the re-ingesting
-    * append immediately after its job commit, BEFORE its heal. The marker
-    * is what lets [[healRebirth]] distinguish a finished commit from a
-    * crashed write's partial dynamic-partition job commit: committing the
-    * latter would resurrect the dropped chunk with unacked partial data.
-    */
-  private[sources] def markRebirthComplete(fs: FileSystem, genDir: Path): Unit =
-    touchFile(fs, new Path(genDir, REBIRTH_OK))
-
   // ---------------------------------------------- cross-process mutator lease
   // The in-JVM lock hierarchy above is complete for ONE driver process —
   // the deployment contract (SCALE.md §14). A second process running
@@ -3377,15 +3341,22 @@ object Hypertable {
       qualifiedRoot: String): Boolean =
     MutationGate.holds(fs, leasePath(qualifiedRoot))
 
-  /** Whether the store provides reliable, SETTABLE file mtimes (local FS,
-    * HDFS: yes; S3A/GCS: `setTimes` is a no-op and directory "mtimes"
-    * do not exist). `spark.graft.fs.mtimeReliable=false` switches the
-    * content-stamp freshness cue to a counter written INTO the stamp file,
-    * compared against the counter recorded in the manifest. See the
-    * FS-assumption matrix in SCALE.md.
+  /** Whether the store provides reliable, SETTABLE file mtimes, chosen by
+    * scheme like [[MutationGate.atomicCreateCapable]]: local FS, HDFS and
+    * viewfs do; every other store (S3A/GCS: `setTimes` is a no-op and
+    * directory "mtimes" do not exist) takes the content-stamp freshness
+    * cue from a counter written INTO the stamp file, compared against the
+    * counter recorded in the manifest. See the FS-assumption matrix in
+    * SCALE.md.
     */
-  private[graft] def mtimeReliable(spark: SparkSession): Boolean =
-    spark.conf.get("spark.graft.fs.mtimeReliable", "true").toBoolean
+  private[graft] def mtimeReliable(fs: FileSystem): Boolean =
+    !counterFreshnessForTests && (fs.getUri.getScheme match {
+      case "file" | "hdfs" | "viewfs" => true
+      case _ => false
+    })
+
+  /** Test-only: take the counter freshness cue on a local store. */
+  @volatile private[graft] var counterFreshnessForTests = false
 
   /** This process's identity in every marker it writes — one per JVM. */
   private[graft] val processId: String = java.util.UUID.randomUUID().toString
@@ -3458,17 +3429,6 @@ object Hypertable {
     if (MutationGate.holds(fs, lease)) MutationGate.releaseIfOurs(fs, lease)
   }
 
-  /** How long superseded generations / dropped chunk dirs stay readable
-    * for pinned readers before GC deletes them. A query must finish within
-    * this window of its planning (or re-plan); size it to the deployment's
-    * longest query. 0 = eager delete (pre-round-8 behavior).
-    */
-  private[graft] def gcGraceMs(spark: SparkSession): Long =
-    spark.conf.get("spark.graft.gc.graceMs", "600000").toLong
-
-  private[graft] def isGenPath(p: Path): Boolean =
-    p.getName.startsWith(s"$GEN=")
-
   /** The chunk IDENTITY dir of a data path (itself for flat layouts). */
   private[graft] def chunkDirOf(p: Path): Path =
     if (isGenPath(p)) p.getParent else p
@@ -3476,48 +3436,13 @@ object Hypertable {
   /** The storage root holding a chunk data path (primary or tablespace). */
   private[graft] def storageRootOf(p: Path): Path = chunkDirOf(p).getParent
 
-  private[sources] def genOf(p: Path): Int =
-    if (isGenPath(p)) p.getName.stripPrefix(s"$GEN=").toInt else 0
-
-  private[sources] def listGenDirs(fs: FileSystem,
-      chunkDir: Path): Seq[(Int, Path)] =
-    fs.listStatus(chunkDir).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$GEN="))
-      .map(s => s.getPath.getName.stripPrefix(s"$GEN=").toInt -> s.getPath)
-      .sortBy(_._1)
-
-  private[sources] def isSuperseded(fs: FileSystem, dir: Path): Boolean =
-    fs.exists(new Path(dir, SUPERSEDED))
-
-  private[sources] def isTombstoned(fs: FileSystem, chunkDir: Path): Boolean =
-    fs.exists(new Path(chunkDir, DROP_TOMB))
-
-  /** The LIVE data dir of a chunk dir under the GEN layout: the lowest
-    * unstamped generation (see the layout note above); None when
-    * tombstoned, fully superseded (dropped / merged away, awaiting GC),
-    * or a BARE shell with no generations at all — every live gen-table
-    * chunk is born with a `_gen=` dir (append routing, rewriteChunkDir,
-    * attachChunk all create one), so a generation-less shell is the
-    * remnant of a rewrite that crashed between `mkdirs(chunkDir)` and its
-    * publish, or a sub-millisecond commit window; listing it as a flat
-    * chunk would put a phantom (empty, default-ranged) chunk in the
-    * manifest and send later rewrites down the flat in-place-swap path
-    * inside a gen table.
-    */
-  private[sources] def liveDataDir(fs: FileSystem,
-      chunkDir: Path): Option[Path] = {
-    if (isTombstoned(fs, chunkDir)) return None
-    listGenDirs(fs, chunkDir)
-      .collectFirst { case (_, d) if !isSuperseded(fs, d) => d }
-  }
-
   /** The versioned manifest files of a catalog dir, ascending by version —
     * THE single definition of the manifest naming scheme, shared by the
     * handle's `manifestVersions()` and the static incremental patch
     * ([[syncCatalogForChunk]]) so the two paths can never disagree about
     * which version is latest.
     */
-  private[sources] def listManifests(fs: FileSystem,
+  private[graft] def listManifests(fs: FileSystem,
       catDir: Path): Seq[(Long, Path)] =
     try fs.listStatus(catDir).toSeq
       .filter(s => s.isFile && s.getPath.getName.matches("v\\d+\\.json"))
@@ -3525,38 +3450,6 @@ object Hypertable {
         s.getPath)
       .sortBy(_._1)
     catch { case _: java.io.FileNotFoundException => Nil }
-
-  /** Staging dirs of in-flight chunk rewrites (JVM scope — the mutator
-    * lease allows at most one mutating process per table, so this IS the
-    * real scope). The stale-tmp GC rule must skip them: its age heuristic
-    * reads the dir mtime, which for a Spark write is the JOB START (task
-    * files land under `_temporary/`, not the dir itself), so a rewrite
-    * outliving max(grace, 1 h) — a multi-TB chunk — would otherwise have
-    * its LIVE staging dir deleted out from under the running job by a
-    * concurrent append's catalog sync (chunk rewrites hold only the root
-    * READ lock, so table-level syncs interleave legally).
-    */
-  private val inFlightTmps =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** The cross-process in-flight marker guarding a staged rewrite dir: a
-    * heartbeated file NEXT TO the staged dir (inside it, the write job's
-    * Overwrite would wipe it). [[gcChunkDir]] refuses to reap any staged
-    * dir — staged `_gen=` dir or dot-tmp — whose marker is live,
-    * so a FOREIGN process's GC (a takeover after this process's heartbeat
-    * stalled, or any future GC-running lease class) can never delete a
-    * stage mid-write on the strength of its own JVM-local
-    * [[inFlightTmps]] view alone (round-10 advisor finding). A crashed
-    * stage's marker goes stale with its owner and the remnant reaps.
-    */
-  private[sources] def stagingMarkerPath(stagedDir: Path): Path =
-    new Path(stagedDir.getParent, s".staging_${stagedDir.getName}")
-
-  private[sources] def registerRewriteTmp(fs: FileSystem, tmp: Path): Path = {
-    inFlightTmps.add(fs.makeQualified(tmp).toString)
-    MutationGate.createMarker(fs, stagingMarkerPath(tmp))
-    tmp
-  }
 
   // --------------------------------------------------- crash injection
   // Test-only fault hook at the named multi-step publish boundaries (tmp
@@ -3571,7 +3464,7 @@ object Hypertable {
     new ThreadLocal[java.lang.Boolean] { override def initialValue = false }
   private[graft] final class InjectedCrash(val point: String)
     extends RuntimeException(s"injected crash at $point")
-  private[sources] def crashPoint(name: String): Unit = crashHook(name)
+  private[graft] def crashPoint(name: String): Unit = crashHook(name)
   // Test-only pause after each live chunk a listing resolves (apart from
   // crashHook, whose calls the crash-point fuzz counts).
   @volatile private[graft] var listingHook: () => Unit = () => ()
@@ -4059,227 +3952,6 @@ object Hypertable {
     }
   }
 
-  /** Staging target of a gen-layout chunk rewrite: the chunk's NEXT
-    * generation dir itself (above every live or dead generation),
-    * registered in flight so no GC touches it. See
-    * [[publishChunkRewrite]] for the commit. Callers hold the per-chunk
-    * serialization (table write lock or chunk monitor), so the max-gen
-    * read is stable; appends only ever write into the LIVE (lower)
-    * generation.
-    */
-  private[graft] def stageGenDir(fs: FileSystem, chunkDir: Path): Path = {
-    fs.mkdirs(chunkDir)
-    val next = listGenDirs(fs, chunkDir).map(_._1).maxOption.getOrElse(-1) + 1
-    registerRewriteTmp(fs, new Path(chunkDir, s"$GEN=$next"))
-  }
-
-  private[sources] def isInFlightTmp(fs: FileSystem, p: Path): Boolean =
-    inFlightTmps.contains(fs.makeQualified(p).toString)
-
-  private[sources] def unregisterRewriteTmp(fs: FileSystem, p: Path): Unit = {
-    inFlightTmps.remove(fs.makeQualified(p).toString)
-    MutationGate.removeMarker(fs, stagingMarkerPath(p))
-  }
-
-  /** Stamp a generation superseded — the rewrite's commit point. The
-    * stamp's mtime is GC's grace clock.
-    */
-  private[sources] def stampSuperseded(fs: FileSystem, genDir: Path): Unit =
-    touchFile(fs, new Path(genDir, SUPERSEDED))
-
-  /** Tombstone a whole chunk dir (drop/merge-away): readers pinned to a
-    * manifest that still lists its live generation keep reading it for the
-    * grace window; new manifests exclude it; GC deletes the dir after
-    * grace. The tombstone RECORDS the highest generation present at drop
-    * time, so a later re-ingest's rebirth generation is recognized
-    * structurally (gen number > recorded max) — an mtime comparison would
-    * mis-classify a drop and an append landing within one mtime tick on
-    * coarse-granularity stores, silently superseding acked rows.
-    */
-  private[sources] def tombstoneChunk(fs: FileSystem, chunkDir: Path): Unit = {
-    val deadMax = listGenDirs(fs, chunkDir).map(_._1).maxOption.getOrElse(-1)
-    writeSmallFileDirect(fs, new Path(chunkDir, DROP_TOMB),
-      deadMax.toString)
-  }
-
-  /** The tombstone's recorded drop-time max generation: Some when present
-    * and parsable, None when absent OR unreadable (a drop crashed between
-    * create and write, or a concurrent heal removed it mid-read). Callers
-    * choose the fallback — the policies genuinely differ: the write path
-    * NORMALIZES an unreadable tombstone, [[healRebirth]] treats it as
-    * nothing-to-heal, the stream's dead-set walk re-probes existence to
-    * split vanished from crashed.
-    */
-  private[sources] def readTombMax(fs: FileSystem, chunkDir: Path): Option[Int] =
-    try Some(readSmallFile(fs, new Path(chunkDir, DROP_TOMB)).trim.toInt)
-    catch { case _: Exception => None }
-
-  /** GC one chunk dir: graced-out superseded generations, graced-out
-    * tombstoned dirs, crash-remnant generations above the live one
-    * (uncommitted publishes — rolled back immediately: no manifest ever
-    * pointed at them), and stale in-flight tmp dirs. Callers hold the
-    * table's catalog lock (publish stamps also run under it, so a remnant
-    * here is never an in-flight publish).
-    */
-  private[sources] def gcChunkDir(fs: FileSystem, chunkDir: Path,
-      graceMs: Long, epochFloor: Long = Long.MaxValue,
-      epochSkewMs: Long = 0L): Unit = {
-    val now = System.currentTimeMillis()
-    // `graced` gates the two deletion classes a MANIFEST READER can have
-    // planned (superseded generations, tombstoned dirs): grace expired AND
-    // no live reader epoch predates the retirement (ReaderEpochs —
-    // callers pass the primary root's liveFloor; the default MaxValue
-    // keeps legacy callers grace-only). Crash remnants, stale tmps and
-    // bare shells below were never manifest-live and stay age-gated.
-    def graced(markFile: Path): Boolean =
-      try {
-        val mt = fs.getFileStatus(markFile).getModificationTime
-        now - mt >= graceMs && epochFloor > mt + epochSkewMs
-      } catch { case _: Exception => false }
-    if (isTombstoned(fs, chunkDir)) {
-      // an appender PROCESS is mid-rebirth into this dir (lease split:
-      // appends run concurrently with the maintenance process doing this
-      // GC) — hands off entirely; its own heal commits the rebirth
-      if (MutationGate.rebirthLockLive(fs, chunkDir)) return
-      // a write that re-ingested this range routed its rows into a fresh
-      // rebirth generation (created AFTER the tombstone); finish the
-      // rebirth if the writer crashed before its own heal ran
-      if (!healRebirth(fs, chunkDir) && graced(new Path(chunkDir, DROP_TOMB))) {
-        // never reap while ANY generation sits above the recorded max:
-        // it is either an append's just-committed rebirth racing this GC
-        // (its completion marker lands momentarily — the write path also
-        // refreshes the tombstone's grace clock at routing, so this arm
-        // needs an append older than the grace window to even arrive
-        // here) or a crashed partial the next append will normalize into
-        // the dead set. Deleting would lose the former's acked rows.
-        val deadMax = readTombMax(fs, chunkDir).getOrElse(Int.MaxValue)
-        if (!listGenDirs(fs, chunkDir).exists(_._1 > deadMax))
-          fs.delete(chunkDir, true)
-      }
-      return
-    }
-    val gens = listGenDirs(fs, chunkDir)
-    val live = gens.collectFirst { case (g, d) if !isSuperseded(fs, d) => g }
-    gens.foreach { case (g, d) =>
-      if (isSuperseded(fs, d)) {
-        if (graced(new Path(d, SUPERSEDED))) fs.delete(d, true)
-      } else if (live.exists(g > _) && !isInFlightTmp(fs, d) &&
-          !MutationGate.fileMarkerLiveAny(fs, stagingMarkerPath(d))) {
-        // crash remnant — but only when no process advertises the dir as
-        // a stage in flight: the JVM-local registration covers OUR stages,
-        // the heartbeated on-disk marker covers a FOREIGN process's
-        // stage (a lease takeover's GC must not delete a
-        // zombie rewriter's stage mid-write; the remnant reaps once the
-        // marker's heartbeat goes stale)
-        fs.delete(d, true)
-        try fs.delete(stagingMarkerPath(d), false)
-        catch { case _: java.io.IOException => () }
-      }
-    }
-    // stale dot-prefixed staging dirs (a crashed rewrite's tmp). NEVER one
-    // registered as in flight (JVM set or live on-disk staging marker):
-    // the age heuristic reads the dir mtime, which for a running Spark
-    // write is the job START — see [[registerRewriteTmp]]
-    val entries = fs.listStatus(chunkDir).toSeq
-    entries
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(".") &&
-        !isInFlightTmp(fs, s.getPath) &&
-        !MutationGate.fileMarkerLiveAny(fs, stagingMarkerPath(s.getPath)) &&
-        now - s.getModificationTime >= math.max(graceMs, 3600000L))
-      .foreach { s =>
-        fs.delete(s.getPath, true)
-        try fs.delete(stagingMarkerPath(s.getPath), false)
-        catch { case _: java.io.IOException => () }
-      }
-    // orphaned staging markers (their staged dir never appeared, or was
-    // consumed by a publish whose unregister raced a crash): reap once
-    // stale — a live one may precede its dir (registration runs before
-    // the write job creates it)
-    entries
-      .filter(s => s.isFile && s.getPath.getName.startsWith(".staging_") &&
-        !MutationGate.fileMarkerLiveAny(fs, s.getPath) &&
-        !fs.exists(new Path(chunkDir,
-          s.getPath.getName.stripPrefix(".staging_"))))
-      .foreach(s =>
-        try fs.delete(s.getPath, false)
-        catch { case _: java.io.IOException => () })
-    // a long-dead BARE shell (no generations, no tombstone, nothing but
-    // stale dot-entries — a rewrite that crashed between mkdirs and its
-    // publish; liveDataDir already refuses to list it): delete once old
-    // enough that it cannot be a commit in flight
-    if (gens.isEmpty &&
-        (try now - fs.getFileStatus(chunkDir).getModificationTime >=
-          math.max(graceMs, 3600000L)
-        catch { case _: Exception => false }) &&
-        !fs.listStatus(chunkDir).exists(s =>
-          !s.getPath.getName.startsWith(".")))
-      fs.delete(chunkDir, true)
-  }
-
-  /** Complete the rebirth of a tombstoned chunk a write re-ingested into:
-    * generations numbered ABOVE the tombstone's recorded drop-time max
-    * (the routed append created them — see [[tombstoneChunk]]; structural,
-    * no mtime comparison) AND carrying the [[REBIRTH_OK]] completion
-    * marker are the new life; everything else is dead — the dropped data
-    * at or below the recorded max, plus any UNMARKED generation above it,
-    * which can only be a crashed append's partial job commit (the write
-    * path normalizes the recorded max over every listed generation before
-    * routing, so an unmarked survivor above it is never acked data).
-    * All dead generations are stamped superseded so liveness (lowest
-    * UNstamped) lands on the marked rebirth generation, then the
-    * tombstone comes off. Ordered so a crash at any point leaves the drop
-    * in force (stamps first, tombstone last); re-ingested rows wait in
-    * the still-tombstoned dir until the next heal finishes the job.
-    * Without a marked complete rebirth nothing heals: the tombstone (and
-    * its graced GC) stays in force. Returns true when a rebirth committed.
-    */
-  private[sources] def healRebirth(fs: FileSystem, chunkDir: Path): Boolean = {
-    val deadMax = readTombMax(fs, chunkDir) match {
-      case Some(m) => m
-      case None => return false // absent or unreadable: nothing healable yet
-    }
-    val gens = listGenDirs(fs, chunkDir)
-    val ok = gens.filter { case (g, d) =>
-      g > deadMax && fs.exists(new Path(d, REBIRTH_OK))
-    }
-    if (ok.isEmpty) return false
-    // two marked generations cannot normally coexist (every append heals
-    // pending rebirths before routing new ones); if crash interleavings
-    // ever produce both, the HIGHEST marked one is the latest finished
-    // commit — everything below it is stale
-    val liveG = ok.map(_._1).max
-    gens.foreach { case (g, d) =>
-      if (g != liveG && !isSuperseded(fs, d)) stampSuperseded(fs, d)
-    }
-    fs.delete(new Path(chunkDir, DROP_TOMB), false)
-    true
-  }
-
-  /** Re-resolve a (possibly stale) gen data path to the chunk's CURRENT
-    * live generation. A caller that captured a `showChunks` snapshot, then
-    * waited on the chunk monitor while a DML publish advanced the chunk,
-    * would otherwise read the SUPERSEDED generation as its rewrite input —
-    * republishing pre-DML data and leaving the DML's generation stamped
-    * while its own sat unstamped ABOVE it, which the crash-remnant GC
-    * rule then deletes out from under any manifest pointing at it. Called
-    * INSIDE the chunk monitor + root read lock, where the live set is
-    * pinned. Tombstoned / no-live dirs return the given path (the op
-    * proceeds on graced files; the manifest no longer lists the chunk).
-    *
-    * A FLAT chunk-identity path whose dir meanwhile gained `_gen=`
-    * generations (a pre-migration `showChunks` path saved across
-    * `migrateToGenLayout`) redirects to the live generation too —
-    * otherwise the primitive would read the chunk dir itself, where
-    * Spark's file index sees only underscore-prefixed subdirs and fails
-    * with an unhelpful schema-inference error. One extra listing, paid
-    * only by flat-path calls (gen tables hand out gen paths).
-    */
-  private[graft] def liveChunkTarget(fs: FileSystem, p: Path): Path =
-    if (isGenPath(p)) liveDataDir(fs, p.getParent).getOrElse(p)
-    else if (p.getName.startsWith(s"$CHUNK=") && listGenDirs(fs, p).nonEmpty)
-      liveDataDir(fs, p).getOrElse(p)
-    else p
-
   /** The qualified PRIMARY table root owning a chunk dir: the parent
     * itself, or — for tablespace-resident chunks — the pointer-home the
     * [[PRIMARY_MARKER]] records.
@@ -4351,7 +4023,7 @@ object Hypertable {
         // tombstone — silently undoing the drop and resurrecting
         // retention-deleted rows. The drop wins: discard the rewrite.
         if (isTombstoned(fs, chunkDir)) {
-          fs.delete(tmp, true)
+          GenStore.discardStage(fs, tmp)
           return None
         }
         val gens = listGenDirs(fs, chunkDir)
@@ -4371,7 +4043,7 @@ object Hypertable {
           if (!isSuperseded(fs, d)) stampSuperseded(fs, d)
         }
         crashPoint("publish.after_stamp")
-        gcChunkDir(fs, chunkDir, gcGraceMs(spark),
+        gcChunkDir(fs, chunkDir, GenStore.graceMs(spark),
           ReaderEpochs.liveFloor(spark, pfs, new Path(primary)),
           ReaderEpochs.skewMs(spark))
         Some(tmp)

@@ -796,7 +796,7 @@ private[graft] object MutationGate {
     * stamp each other's just-committed generation dead. Exclusive claim
     * ([[claimExclusive]]) on a heartbeated marker INSIDE the chunk dir;
     * the GC also refuses to reap a dir whose rebirth lock is live
-    * ([[Hypertable.gcChunkDir]]). Returns the claimed paths; release via
+    * ([[GenStore.chunks.gcChunkDir]]). Returns the claimed paths; release via
     * [[removeMarker]]. `activityRoot` is the table's PRIMARY root — the
     * settle belt keys on table-level foreign activity.
     */

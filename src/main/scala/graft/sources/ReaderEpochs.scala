@@ -5,16 +5,15 @@ import org.apache.spark.sql.SparkSession
 
 /** Reader-epoch registration: makes grace-based GC of superseded content
   * EXACT for live readers instead of purely wall-clock (SCALE.md §15/§18).
-  * One registry serves both generational stores, keyed by root: the raw
+  * One registry serves both users of [[GenStore]], keyed by root: the raw
   * hypertable (registered by the public read surfaces — `read`,
   * `between`, `orderedRead`, `whereTimeIn` — in every storage root they
-  * may plan from; consulted by [[Hypertable.gcChunkDir]] before reaping a
-  * graced-out SUPERSEDED generation or tombstoned chunk dir) and the cagg
-  * materialization (registered by `ContinuousAggregate.readMatLive`;
-  * consulted by the generation GC in `syncMatCatalog`). Both GCs share
-  * the grace `spark.graft.gc.graceMs`. Crash remnants, stale tmps, bare
-  * shells and orphan mat generations were never snapshot-live and stay
-  * grace-only. The protocol:
+  * may plan from) and the cagg materialization (registered by
+  * `ContinuousAggregate.readMatLive` and `CaggSource.timeBounds` at the
+  * cagg root). [[GenStore.gcChunkDir]] consults it, with GenStore's
+  * grace, before reaping a graced-out SUPERSEDED generation or
+  * tombstoned chunk dir. Crash remnants, stale tmps and bare shells
+  * were never snapshot-live and stay grace-only. The protocol:
   *
   *  - before reading the snapshot it will plan from (mat catalog / chunk
   *    manifest), a reader registers an epoch (ts = now) and — when this

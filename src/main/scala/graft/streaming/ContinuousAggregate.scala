@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{functions => gf}
 import graft.expressions.TimeBucketUtil
-import graft.sources.{Columnstore, Hypertable, ReaderEpochs, TimeSource}
+import graft.sources.{Columnstore, GenStore, Hypertable, ReaderEpochs, TimeSource}
 
 /** Dimension join inside a cagg's view query — caggs-with-joins
   * (`tsl/test/sql/cagg_joins.sql`): the raw hypertable rows are enriched
@@ -370,8 +370,8 @@ class ContinuousAggregate(
     * then group cols, then aggregates — same shape as the live aggregation).
     */
   def materialized: DataFrame = {
-    // per-chunk LIVE-generation resolution (readMatLive): a refresh swap
-    // publishes new generations additively and grace-retains the old, so
+    // per-chunk LIVE-generation resolution (readMatLive): a refresh
+    // publishes new generations and grace-retains the old, so
     // this read's planned files stay on disk through its execution even
     // under a concurrent cross-process refresh. A refresh over a window
     // with no raw rows leaves no data files — return the empty frame
@@ -464,8 +464,9 @@ class ContinuousAggregate(
     * (`refresh.c:1476` — the escape hatch for suspected corruption or
     * unlogged external edits to the raw files).
     *
-    * The rewrite goes through a temp dir + per-chunk swap, so concurrent
-    * READERS of a chunk see old or new files, never a mix. Concurrent
+    * The rewrite stages each touched chunk's next generation and one
+    * catalog write commits them all, so concurrent READERS of a chunk see
+    * old or new files, never a mix. Concurrent
     * REFRESHES are serialized by a lock file (the reference takes an
     * exclusive per-cagg lock in `refresh.c`): two windows sharing an edge
     * mat-chunk would otherwise each carry over the other's pre-refresh
@@ -674,7 +675,7 @@ class ContinuousAggregate(
     val lock = new Path(path, "_refresh_lock")
     graft.sources.MutationGate.claimExclusive(spark, fs, lock, None,
       alwaysSettle = true)
-    try body
+    try { recoverMat(); body }
     finally graft.sources.MutationGate.removeMarker(fs, lock)
   }
 
@@ -709,53 +710,53 @@ class ContinuousAggregate(
         keep.unionByName(fresh)
       case _ => fresh
     }
-    // window-keyed tmp name: concurrent refreshes of DIFFERENT windows
-    // cannot collide, and a re-run of the SAME window reuses (overwrites)
-    // its own leftover dir instead of orphaning it
-    val tmp = matPath.stripSuffix("/") + s"__refresh_tmp_${s}_$e"
-    // salt the mat-chunk shuffle like Hypertable.write: plain
-    // repartition(_mat_chunk) funnels every row of a chunk through ONE
-    // writer task — a refresh touching few chunks on many cores serializes.
-    // Deterministic row-hash salt (shuffle exprs can't be nondeterministic);
-    // 8 writer tasks per mat chunk.
-    val salt = pmod(hash(combined.columns.map(col): _*), lit(8))
-    combined.repartition(col(MATCHUNK), salt)
-      .write.mode(SaveMode.Overwrite).partitionBy(MATCHUNK).parquet(tmp)
-    val tmpDirs = fs.listStatus(new Path(tmp)).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$MATCHUNK="))
-    fs.mkdirs(new Path(matPath))
-    // ADDITIVE publish (round 12): each touched chunk gains a new
-    // generation subdir; the superseded content is grace-retained so a
-    // cross-process reader planned against it is never yanked mid-read
-    // (the pre-round-12 delete+rename at the same path failed such
-    // readers with FAILED_READ, or silently dropped the bucket for a
-    // lister racing the gap — found by the three-process cagg case).
-    // Round 13: liveness is recorded in the mat CATALOG (publishSync
-    // below) — readers resolve generations from one snapshot read, and
-    // the grace clock starts at the catalog write.
-    val pubTs = System.currentTimeMillis()
-    val published = tmpDirs.map { st =>
-      val key = st.getPath.getName.stripPrefix(s"$MATCHUNK=").toLong
-      val (gen, sibs) = publishMatGen(new Path(matPath, st.getPath.getName),
-        Some(st.getPath), pubTs)
-      (key, gen, sibs, true, false)
+    // ONE generation publish of the touched mat chunks: every chunk in
+    // [chunkLo, chunkHi) the catalog knows (live, or pending GC after a
+    // drop) stages its next generation through GenStore; a chunk this
+    // window creates gets generation 0 in a fresh dir (no GC visits a key
+    // the catalog does not list, and the intent's key range covers it if
+    // this publish crashes). One write job places every row straight into
+    // its chunk's stage — no tmp dir, no rename — and one catalog write
+    // commits them all.
+    publishMatGens(Some((chunkLo, chunkHi)))(cat =>
+      (cat.chunks.map(_.key) ++ cat.gc).filter(k => k >= chunkLo && k < chunkHi)) {
+      (cat, stages) =>
+        val gens = stages.map { case (k, d) => k -> matGens.genOf(d) }
+        val keysSeen = org.apache.spark.sql.Observation(
+          "graft_mat_keys_" + java.util.UUID.randomUUID().toString.take(8))
+        // salt the mat-chunk shuffle like Hypertable.write: plain
+        // repartition(_mat_chunk) funnels every row of a chunk through ONE
+        // writer task — a refresh touching few chunks on many cores
+        // serializes. Deterministic row-hash salt (shuffle exprs can't be
+        // nondeterministic); 8 writer tasks per mat chunk.
+        val salt = pmod(hash(combined.columns.map(col): _*), lit(8))
+        combined.observe(keysSeen, collect_set(col(MATCHUNK)).as("keys"))
+          .withColumn(MATGEN,
+            if (gens.isEmpty) lit(0L)
+            else coalesce(element_at(typedLit(gens), col(MATCHUNK)), lit(0L)))
+          .repartition(col(MATCHUNK), salt)
+          .write.mode(SaveMode.Append).partitionBy(MATCHUNK, MATGEN)
+          .parquet(matPath)
+        val written = keysSeen.get("keys").asInstanceOf[scala.collection.Seq[Any]]
+          .map {
+            case l: java.lang.Long => l.longValue
+            case i: java.lang.Integer => i.longValue
+          }.toSet
+        def stageOf(k: Long) =
+          stages.getOrElse(k, new Path(matChunkDir(k), s"$MATGEN=0"))
+        // a mat-chunk in the window whose recomputed content is empty (all
+        // raw rows deleted + invalidated) gets an EMPTY generation, or
+        // materialized/realtime keep serving deleted buckets
+        val emptied = cat.chunks.collect {
+          case m if m.hasData && stages.contains(m.key) && !written(m.key) =>
+            fs.mkdirs(stages(m.key))
+            MatEntry(m.key, matRelOf(stages(m.key)), hasData = false,
+              compressed = false)
+        }
+        written.toSeq.sorted.map(k =>
+          MatEntry(k, matRelOf(stageOf(k)), hasData = true,
+            compressed = false)) ++ emptied
     }
-    // a mat-chunk in [chunkLo, chunkHi) whose recomputed content is empty
-    // (all raw rows deleted + invalidated) produces no tmp dir — publish
-    // an EMPTY generation (retiring the old content under grace, never
-    // deleting it under readers) or materialized/realtime keep serving
-    // deleted buckets
-    val writtenKeys = published.map(_._1).toSet
-    val emptied = matLiveEntries
-      .filter { case (k, _, hasData) =>
-        hasData && !writtenKeys.contains(k) && k >= chunkLo && k < chunkHi }
-      .map { case (k, _, _) =>
-        val (gen, sibs) =
-          publishMatGen(new Path(matPath, s"$MATCHUNK=$k"), None, pubTs)
-        (k, gen, sibs, false, false)
-      }
-    fs.delete(new Path(tmp), true)
-    publishSync(published ++ emptied)
     if (e > watermark) setWatermark(e)
     // propagate down the hierarchy (the reference's cagg-on-cagg
     // invalidation flow): log the CHANGED range into each child's
@@ -888,103 +889,89 @@ class ContinuousAggregate(
     widened
   }
 
-  /** Mat-chunk partition dirs as (chunk key, path), key-sorted — the
-    * PHYSICAL listing. Catalog-fallback and mutator-side scans only;
-    * reader paths resolve through [[matLiveEntries]] (one catalog read).
+  /** Chunk keys of the mat chunk dirs on disk — the PHYSICAL listing, for
+    * crash recovery and the catalog-less refusal only; readers resolve
+    * through [[matLiveEntries]] (one catalog read).
     */
-  private def matChunkDirsListed: Seq[(Long, Path)] = {
-    val mp = new Path(matPath)
-    if (!fs.exists(mp)) return Seq.empty
-    fs.listStatus(mp).toSeq
+  private def matChunkKeysListed: Seq[Long] =
+    (try fs.listStatus(new Path(matPath)).toSeq
+     catch { case _: java.io.FileNotFoundException => Nil })
       .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$MATCHUNK="))
-      .map(st => st.getPath.getName.stripPrefix(s"$MATCHUNK=").toLong -> st.getPath)
-      .sortBy(_._1)
-  }
+      .flatMap(st => matKeyOf(st.getPath.getName))
 
   /** Chunk keys (bucket-time micros / integer units) of the mat chunks. */
   def matChunks: Seq[Long] = matLiveEntries.map(_._1)
 
-  /** Generation subdirs of a mat chunk dir (publish-ts ascending). The
-    * newest is the chunk's LIVE content; older ones are grace-retained
-    * for in-flight readers; pre-round-12 chunks have none (their content
-    * sits directly in the chunk dir).
-    */
-  private def matGens(chunkDir: Path): Seq[(Long, Path)] =
-    (try fs.listStatus(chunkDir).toSeq
-     catch { case _: java.io.FileNotFoundException => Nil })
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith(s"${MATGEN}="))
-      .flatMap(st => scala.util.Try(
-        st.getPath.getName.stripPrefix(s"${MATGEN}=").toLong).toOption
-        .map(_ -> st.getPath))
-      .sortBy(_._1)
-
-  private def hasDataFiles(dir: Path): Boolean =
-    try fs.listStatus(dir).exists(st => st.isFile &&
-      st.getPath.getName.endsWith(".parquet"))
-    catch { case _: java.io.FileNotFoundException => false }
-
-  private def hasFlatFiles(dir: Path): Boolean =
-    try fs.listStatus(dir).exists(st => st.isFile &&
-      !st.getPath.getName.startsWith("."))
-    catch { case _: java.io.FileNotFoundException => false }
-
-  // ----------------------------------------------------------- mat catalog
+  // ----------------------------------------------------- mat generations
   //
-  // Round 13: the materialization's live-generation pointers live in a
-  // versioned `_mat_catalog/v<N>.json` (the same move round 5 made for raw
-  // chunks with `_graft_chunks.json`). Before this, every materialized/
-  // realtime construction paid one listStatus of the mat root plus ~2
-  // listStatus per mat chunk — eagerly, before any bucket predicate could
-  // prune: ~10-40 s of metadata latency per query at 10^4 chunks on an
-  // object store (20 ms/LIST). Now it is ONE list + ONE get. Writers all
-  // hold the refresh lock (cross-process), so read-modify-write is safe;
-  // each write is a NEW version file (no no-file window), keep-3 pruned.
+  // The materialization is a generation store ([[GenStore]], prefix
+  // `_mat_gen`): each mat chunk `mat/_mat_chunk=K` holds `_mat_gen=<n>`
+  // generations that GenStore stages, stamps superseded, tombstones and
+  // reaps exactly as it does a gen-layout hypertable's chunks. The commit
+  // point is the versioned `_mat_catalog/v<N>.json`: it names each
+  // chunk's live generation, so ONE catalog write flips every chunk a
+  // refresh touched and readers resolve from one list + one get (no
+  // per-chunk listing: ~10-40 s of metadata latency per query at 10^4
+  // chunks on an object store before the catalog). The superseded stamps
+  // and drop tombstones follow the catalog write; an intent file written
+  // before any stage names the chunks a publish touches, and the next
+  // refresh-lock holder rolls a crashed publish forward before any GC
+  // runs. The catalog also lists the chunk keys whose dirs hold content
+  // GC has yet to reap, so a publish visits O(retired) dirs, never O(mat
+  // chunks). Writers all hold the refresh lock (cross-process); each
+  // catalog write is a NEW version file (no no-file window), keep-3
+  // pruned.
 
   private def matCatalogDir = new Path(path, "_mat_catalog")
+  private def matIntentPath = new Path(path, "_mat_intent")
+  private def matChunkDir(key: Long): Path = new Path(matPath, s"$MATCHUNK=$key")
 
-  private def matCatalogVersions(): Seq[(Long, Path)] =
-    (try fs.listStatus(matCatalogDir).toSeq.filter(_.isFile)
-     catch { case _: java.io.IOException => Nil })
-      .flatMap { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("v") && n.endsWith(".json"))
-          scala.util.Try(n.stripPrefix("v").stripSuffix(".json").toLong)
-            .toOption.map(_ -> st.getPath)
-        else None
-      }.sortBy(_._1)
-
-  /** Newest catalog snapshot; None for a cagg that predates the catalog
-    * (first mutator writes it) — callers fall back to the physical
-    * listing. A version pruned between the listing and the open (several
-    * publishes raced in) re-resolves once.
+  /** Newest catalog snapshot; None for a cagg that has not materialized
+    * anything yet. A version pruned between the listing and the open
+    * (publishes raced in) re-resolves — it never reads as empty. Mat
+    * chunk dirs without a catalog are a layout older than the catalog,
+    * which is refused.
     */
   private[graft] def readMatCatalog(): Option[MatCatalog] = {
-    var attempt = 0
-    while (attempt < 2) {
-      matCatalogVersions().lastOption match {
-        case None => return None
+    var pruned = 0
+    while (true) {
+      Hypertable.listManifests(fs, matCatalogDir).lastOption match {
+        case None =>
+          if (matChunkKeysListed.nonEmpty)
+            throw new IllegalStateException(s"continuous aggregate $path " +
+              "has materialized chunks but no _mat_catalog (a layout this " +
+              "version no longer reads) — re-create the continuous " +
+              "aggregate and refresh it")
+          return None
         case Some((_, p)) =>
           try return Some(parseMatCatalog(Hypertable.readSmallFile(fs, p)))
-          catch { case _: java.io.IOException => attempt += 1 }
+          catch {
+            case e: java.io.FileNotFoundException =>
+              pruned += 1
+              if (pruned > 100) throw e
+          }
       }
     }
-    None
+    None // unreachable
   }
 
   private def parseMatCatalog(body: String): MatCatalog = {
     val t = Hypertable.jsonMapper.readTree(body)
     import scala.jdk.CollectionConverters._
-    val chunks = t.get("chunks").elements().asScala.map(n =>
+    def arr(name: String) =
+      Option(t.get(name)).toSeq.flatMap(_.elements().asScala)
+    val chunks = arr("chunks").map(n =>
       MatEntry(n.get("k").asLong, n.get("d").asText, n.get("f").asBoolean,
-        n.get("c").asBoolean)).toSeq
-    val retired = t.get("retired").elements().asScala.map(n =>
-      MatRetired(n.get("x").asText, n.get("d").asText,
-        n.get("t").asLong)).toSeq
-    MatCatalog(t.get("v").asLong, chunks, retired)
+        n.get("c").asBoolean))
+    chunks.find(e => !e.rel.contains(s"$MATGEN=")).foreach(e =>
+      throw new IllegalStateException(s"continuous aggregate $path lists " +
+        s"a flat mat chunk (${e.rel}, a layout this version no longer " +
+        "reads) — re-create the continuous aggregate and refresh it"))
+    MatCatalog(t.get("v").asLong, chunks, arr("gc").map(_.asLong),
+      arr("retired").map(_.get("d").asText))
   }
 
-  private def writeMatCatalogFile(cat: MatCatalog): Unit = {
+  private def writeMatCatalog(cat: MatCatalog): Unit = {
     val o = Hypertable.jsonMapper.createObjectNode()
     o.put("v", cat.v)
     val ca = o.putArray("chunks")
@@ -993,15 +980,12 @@ class ContinuousAggregate(
       n.put("k", e.key); n.put("d", e.rel)
       n.put("f", e.hasData); n.put("c", e.compressed)
     }
-    val ra = o.putArray("retired")
-    cat.retired.foreach { r =>
-      val n = ra.addObject()
-      n.put("x", r.kind); n.put("d", r.rel); n.put("t", r.ts)
-    }
+    val ga = o.putArray("gc")
+    cat.gc.distinct.sorted.foreach(k => ga.add(k))
     fs.mkdirs(matCatalogDir)
     Hypertable.writeSmallFile(fs,
       new Path(matCatalogDir, s"v${cat.v}.json"), o.toString)
-    matCatalogVersions().dropRight(MAT_CATALOG_KEEP)
+    Hypertable.listManifests(fs, matCatalogDir).dropRight(MAT_CATALOG_KEEP)
       .foreach { case (_, p) =>
         try fs.delete(p, false)
         catch { case _: java.io.IOException => () }
@@ -1018,169 +1002,149 @@ class ContinuousAggregate(
 
   private def matDirOf(rel: String): Path = new Path(matPath, rel)
 
-  /** Physical-listing fallback for pre-catalog caggs: live = the newest
-    * generation (or the flat dir); superseded content enters `retired` at
-    * its SUCCESSOR generation's publish ts — the round-12 grace rule, so
-    * the first catalog write GCs exactly what round 12 would have.
-    * `withCompression` gates the per-chunk columnstore probe (only the
-    * compression paths need the flag; readers skip the extra stat).
-    */
-  private def listMatState(withCompression: Boolean): MatCatalog = {
-    val entries = graft.Par.map(matChunkDirsListed) { case (k, d) =>
-      val gens = matGens(d)
-      val live = gens.lastOption.map(_._2).getOrElse(d)
-      val entry = MatEntry(k, matRelOf(live), hasDataFiles(live),
-        withCompression && Columnstore.isCompressed(spark, live.toString))
-      val retired = gens.sliding(2).collect {
-        case Seq((_, dir), (succTs, _)) =>
-          MatRetired("g", matRelOf(dir), succTs)
-      }.toSeq ++
-        (if (gens.nonEmpty && hasFlatFiles(d))
-           Seq(MatRetired("l", matRelOf(d), gens.head._1))
-         else Nil)
-      (entry, retired)
-    }
-    MatCatalog(0L, entries.map(_._1), entries.flatMap(_._2))
-  }
-
   /** (chunk key, live content dir, hasData) for every live mat chunk —
-    * ONE catalog read when the catalog exists; the physical listing only
-    * for pre-catalog caggs. The reader-side resolution for materialized/
+    * ONE catalog read. The reader-side resolution for materialized/
     * realtime/hierarchical reads: zero per-chunk listStatus.
     */
   private[streaming] def matLiveEntries: Seq[(Long, Path, Boolean)] =
-    readMatCatalog().map(_.chunks).getOrElse(listMatState(false).chunks)
+    readMatCatalog().toSeq.flatMap(_.chunks)
       .map(e => (e.key, matDirOf(e.rel), e.hasData))
       .sortBy(_._1)
 
-  private def retireOf(e: MatEntry, ts: Long): MatRetired =
-    if (e.rel.contains(s"${MATGEN}=")) MatRetired("g", e.rel, ts)
-    else MatRetired("l", e.rel, ts)
-
-  /** Delete a grace-expired retired dir, then (for a chunk no longer in
-    * the catalog — a dropped chunk) the emptied chunk-dir shell.
+  /** After a commit (or a crash around one): each key the catalog lists
+    * gets its live generation committed on disk (generations below it
+    * stamped superseded, a drop tombstone lifted); every other chunk dir
+    * is tombstoned. Idempotent, so the roll-forward of a crashed publish
+    * and the commit share it.
     */
-  private def deleteRetired(r: MatRetired, liveKeys: Set[Long]): Unit = {
-    val d = matDirOf(r.rel)
-    def chunkKeyOf(p: Path): Option[Long] = scala.util.Try(
-      p.getName.stripPrefix(s"$MATCHUNK=").toLong).toOption
-    def reapShell(chunkDir: Path): Unit =
-      if (chunkKeyOf(chunkDir).exists(k => !liveKeys.contains(k)) &&
-          (try fs.listStatus(chunkDir).isEmpty
-           catch { case _: java.io.IOException => false }))
-        fs.delete(chunkDir, false)
-    try r.kind match {
-      case "g" | "o" =>
-        fs.delete(d, true)
-        reapShell(d.getParent)
-      case _ => // "l": flat files live directly in the chunk dir
-        try fs.listStatus(d)
-          .filter(st => st.isFile && !st.getPath.getName.startsWith("."))
-          .foreach(st => fs.delete(st.getPath, false))
-        catch { case _: java.io.FileNotFoundException => () }
-        reapShell(d)
-    } catch { case _: java.io.IOException => () }
+  private def settleMat(cat: MatCatalog, keys: Iterable[Long]): Unit = {
+    val live = cat.chunks.map(e => e.key -> e.rel).toMap
+    keys.foreach { k =>
+      live.get(k) match {
+        case Some(rel) => matGens.commitStage(fs, matChunkDir(k), matDirOf(rel))
+        case None => matGens.retireChunk(fs, matChunkDir(k))
+      }
+    }
   }
 
-  /** Read-modify-write of the mat catalog — refresh-lock holders ONLY
-    * (the lock serializes publishers cross-process). GC piggybacks here:
-    * a retired dir whose grace expired is deleted from DISK first, then
-    * dropped from the list in the same write — a crash between the two
-    * re-deletes (idempotent) instead of leaking. A reader planned against
-    * a dir keeps at least `spark.graft.gc.graceMs` (the chunk store's
-    * grace) from the catalog write that retired it, because readers can
-    * only plan dirs the catalog references as live. Superseded
-    * generations are kept at all because cross-process readers resolve
-    * file paths at plan time: the pre-round-12 swap (delete + rename at
-    * the same path) yanked them mid-execution (found by the three-process
-    * cagg invalidation case).
+  /** Roll a crashed publish forward: its intent names the chunk keys it
+    * touched (and a key range for chunks a refresh may have created), the
+    * catalog on disk says which of them committed. Runs for each
+    * refresh-lock holder before anything else touches the
+    * materialization; one failed open when no intent is on disk.
     */
-  private def syncMatCatalog(mutate: MatCatalog => MatCatalog): MatCatalog = {
-    val cur = readMatCatalog().getOrElse(listMatState(true))
-    val next0 = mutate(cur)
-    val now = System.currentTimeMillis()
-    val liveKeys = next0.chunks.map(_.key).toSet
-    val liveRels = next0.chunks.map(_.rel).toSet
-    // defensive: never let a retired entry shadow a live pointer, and
-    // collapse duplicates to the LATEST retire ts (longest grace)
-    val dedup = next0.retired.filterNot(r => liveRels.contains(r.rel))
-      .groupBy(r => (r.kind, r.rel)).map(_._2.maxBy(_.ts)).toSeq
-    // exact reader protection past the wall-clock grace (ReaderEpochs,
-    // shared with the chunk store):
-    // a dir stays while any LIVE epoch file predates its retirement (the
-    // reader registered before the dir was dereferenced, so it may have
-    // planned it); the skew pad errs toward retention. A crashed reader's
-    // epoch goes stale by mtime and stops blocking — the grace floor is
-    // then the contract, exactly as before.
-    val epochFloor = ReaderEpochs.liveFloor(spark, fs, new Path(path))
-    val skew = ReaderEpochs.skewMs(spark)
-    val grace = Hypertable.gcGraceMs(spark)
-    val (expired, kept) = dedup.partition(r =>
-      now - r.ts > grace &&
-        (r.kind == "o" || epochFloor > r.ts + skew))
-    expired.foreach(r => deleteRetired(r, liveKeys))
-    val next = next0.copy(v = cur.v + 1, retired = kept)
-    writeMatCatalogFile(next)
+  private def recoverMat(): Unit = {
+    val body =
+      try Hypertable.readSmallFile(fs, matIntentPath)
+      catch { case _: java.io.FileNotFoundException => return }
+    val lines = body.split("\n")
+    def longs(i: Int) = lines.lift(i).toSeq.flatMap(_.split(","))
+      .filter(_.nonEmpty).map(_.trim.toLong)
+    val ranged = longs(1) match {
+      case Seq(lo, hi) => matChunkKeysListed.filter(k => k >= lo && k < hi)
+      case _ => Nil
+    }
+    val cat = readMatCatalog().getOrElse(MatCatalog(0L, Nil, Nil))
+    val keys = (longs(0) ++ ranged ++ legacyKeys(cat)).distinct
+    settleMat(cat, keys)
+    writeMatCatalog(cat.copy(v = cat.v + 1, gc = cat.gc ++ keys,
+      legacyRetired = Nil))
+    fs.delete(matIntentPath, false)
+  }
+
+  /** Chunk keys a parent-layout catalog's retire list names. */
+  private def legacyKeys(cat: MatCatalog): Seq[Long] =
+    cat.legacyRetired.flatMap(r => matKeyOf(r.takeWhile(_ != '/'))).distinct
+
+  /** Start a publish (refresh-lock holders only): the catalog it builds
+    * on — written empty first for a cagg with none, so no mat chunk dir
+    * ever exists without one — with a parent-layout retire list converted
+    * (its generations stamped, its dropped chunks tombstoned; their grace
+    * restarts here), and the chunk keys `pick` selects from it. GC visits
+    * the keys pending GC and the picked ones (a crash remnant above a
+    * picked chunk's live generation is reaped before the new stage goes
+    * above it). The last value says whether the returned catalog differs
+    * from the one on disk.
+    */
+  private def beginMatPublish(pick: MatCatalog => Seq[Long])
+      : (MatCatalog, Seq[Long], Boolean) = {
+    val cat = readMatCatalog().getOrElse {
+      val empty = MatCatalog(1L, Nil, Nil)
+      writeMatCatalog(empty)
+      empty
+    }
+    val legacy = legacyKeys(cat)
+    settleMat(cat, legacy)
+    val picked = pick(cat).distinct
+    val pending = (cat.gc ++ legacy).distinct
+    val left = matGens.gcChunkDirs(spark, fs,
+      (pending ++ picked).distinct.map(matChunkDir), new Path(path)).toSet
+    val gc = pending.filter(k => left(matChunkDir(k)))
+    // a picked key whose dropped dir GC just reaped is a new chunk again
+    val live = cat.chunks.map(_.key).toSet
+    val keys = picked.filter(k => live(k) || gc.contains(k))
+    (cat.copy(gc = gc, legacyRetired = Nil), keys,
+      gc != cat.gc || cat.legacyRetired.nonEmpty)
+  }
+
+  /** Announce the chunk keys a publish will touch (plus a key range for
+    * chunks a refresh may create) before any of them changes on disk.
+    */
+  private def writeMatIntent(keys: Seq[Long],
+      range: Option[(Long, Long)]): Unit =
+    Hypertable.writeSmallFile(fs, matIntentPath, keys.mkString(",") + "\n" +
+      range.fold("") { case (lo, hi) => s"$lo,$hi" })
+
+  /** The commit: ONE catalog write flips every chunk the publish touched
+    * (new live generations in, dropped chunks out), then the older
+    * generations are stamped superseded and dropped chunk dirs
+    * tombstoned, then the intent goes. A chunk that held earlier content
+    * joins the GC list.
+    */
+  private def commitMat(cat: MatCatalog, dirty: Boolean,
+      upd: Seq[MatEntry], dropped: Set[Long]): MatCatalog = {
+    if (upd.isEmpty && dropped.isEmpty && !dirty) return cat
+    val upKeys = upd.map(_.key).toSet
+    val prior = cat.chunks.map(_.key).toSet ++ cat.gc
+    val settle = upKeys.filter(prior) ++ dropped
+    val next = cat.copy(v = cat.v + 1,
+      chunks = cat.chunks.filterNot(e => upKeys(e.key) || dropped(e.key)) ++ upd,
+      gc = (cat.gc ++ settle).distinct)
+    writeMatCatalog(next)
+    Hypertable.crashPoint("mat.after_catalog")
+    settleMat(next, settle)
+    if (upKeys.nonEmpty || dropped.nonEmpty) fs.delete(matIntentPath, false)
     next
   }
 
-  /** Rename a mat chunk's staged content in as generation `ts` (None = an
-    * explicitly EMPTY generation: the recompute produced no rows for this
-    * chunk, which must retire the old content without deleting it under
-    * readers). Returns the published gen dir plus the rel paths of the
-    * OTHER generation dirs present in the chunk — the caller retires any
-    * of them the catalog doesn't already track (crash remnants of a
-    * publish whose catalog write never landed). Deletion is entirely
-    * [[syncMatCatalog]]'s job: a dir dies only the grace after the
-    * catalog write that dereferenced it.
+  /** One generation publish of the chunks `pick` selects from the
+    * catalog: the intent goes to disk, each chunk's next generation is
+    * staged through GenStore (registered in flight until the publish
+    * ends), `build` writes the stages and returns the entries to commit.
     */
-  private def publishMatGen(chunkDir: Path, staged: Option[Path],
-      ts: Long): (Path, Seq[String]) = {
-    fs.mkdirs(chunkDir)
-    // unique publish ts per chunk: two refreshes inside one millisecond
-    // (forced back-to-back) must not collide on the gen name
-    var t = ts
-    var target = new Path(chunkDir, s"${MATGEN}=$t")
-    while (fs.exists(target)) { t += 1; target = new Path(chunkDir, s"${MATGEN}=$t") }
-    staged match {
-      case Some(s) => require(fs.rename(s, target),
-        s"mat generation publish failed: $s -> $target")
-      case None => fs.mkdirs(target)
-    }
-    val qTarget = fs.makeQualified(target)
-    val siblings = matGens(chunkDir).map(_._2)
-      .filter(p => fs.makeQualified(p) != qTarget)
-      .map(matRelOf)
-    (target, siblings)
+  private def publishMatGens(range: Option[(Long, Long)])(
+      pick: MatCatalog => Seq[Long])(
+      build: (MatCatalog, Map[Long, Path]) => Seq[MatEntry]): MatCatalog = {
+    val (cat, keys, dirty) = beginMatPublish(pick)
+    if (keys.nonEmpty || range.nonEmpty) writeMatIntent(keys, range)
+    val stages = scala.collection.mutable.LinkedHashMap.empty[Long, Path]
+    try {
+      keys.foreach(k => stages(k) = matGens.stageGenDir(fs, matChunkDir(k)))
+      val upd = build(cat, stages.toMap)
+      Hypertable.crashPoint("mat.staged")
+      commitMat(cat, dirty, upd, Set.empty)
+    } finally stages.values.foreach(GenStore.unregisterRewriteTmp(fs, _))
   }
 
-  /** Fold a batch of publishes into the catalog: move each chunk's live
-    * pointer, retire the previous one (grace clock = this catalog write),
-    * and retire untracked sibling generations (crash remnants). One
-    * element per published chunk: (key, gen dir, sibling rels, hasData,
-    * compressed).
+  /** Drop the mat chunks `pick` selects: out of the catalog in one write,
+    * their dirs tombstoned right after (readers planned against them keep
+    * their files for the grace; GenStore reaps the dirs).
     */
-  private def publishSync(
-      pubs: Seq[(Long, Path, Seq[String], Boolean, Boolean)]): MatCatalog =
-    syncMatCatalog { cat =>
-      val now = System.currentTimeMillis()
-      val byKey = cat.chunks.map(e => e.key -> e).toMap
-      val tracked = (cat.chunks.map(_.rel) ++ cat.retired.map(_.rel)).toSet
-      val updated = pubs.map { case (k, gen, _, f, c) =>
-        MatEntry(k, matRelOf(gen), f, c) }
-      val updatedRels = updated.map(_.rel).toSet
-      val newRetired = pubs.flatMap { case (k, _, sibs, _, _) =>
-        // untracked siblings get kind "o" (orphan): NEVER catalog-live, so
-        // no catalog reader can have planned them — reader epochs don't
-        // block their GC (only the grace applies)
-        byKey.get(k).map(e => retireOf(e, now)).toSeq ++
-          sibs.filterNot(tracked).filterNot(updatedRels)
-            .map(MatRetired("o", _, now))
-      }
-      val upKeys = updated.map(_.key).toSet
-      cat.copy(chunks = cat.chunks.filterNot(e => upKeys(e.key)) ++ updated,
-        retired = cat.retired ++ newRetired)
-    }
+  private def dropMat(pick: MatCatalog => Seq[Long]): (Seq[Long], MatCatalog) = {
+    val (cat, drop, dirty) = beginMatPublish(pick)
+    if (drop.nonEmpty) writeMatIntent(drop, None)
+    (drop.sorted, commitMat(cat, dirty, Nil, drop.toSet))
+  }
 
   // the mat scan memo: (catalog version, scan) — like Hypertable's
   // buildScan memo, the DataFrame (and its eagerly-listed FileIndex) is
@@ -1191,11 +1155,9 @@ class ContinuousAggregate(
 
   /** The materialization's live rows (BUCKET + groups + aggs + MATCHUNK),
     * resolved per chunk to its live generation from ONE catalog read —
-    * None when no chunk holds data files. Generation-layout and legacy
-    * flat chunks read separately (their partition depths differ) and
-    * union.
-    */
-  /** `register = false` for refresh-INTERNAL reads (the carry-over scan
+    * None when no chunk holds data files.
+    *
+    * `register = false` for refresh-INTERNAL reads (the carry-over scan
     * at [[refresh]]): they plan and execute entirely under the refresh
     * lock, which already serializes them against every publish and GC —
     * an epoch there would let the refresher's own transient scans block
@@ -1205,8 +1167,8 @@ class ContinuousAggregate(
     if (!register) return readMatLiveInner()
     // reader-epoch registration BEFORE the catalog read (ReaderEpochs):
     // the epoch file is on disk first, so every dir live in the catalog
-    // this read resolves can only be retired by a later catalog write,
-    // which the live epoch then blocks from GC past the grace — a
+    // this read resolves can only be superseded by a later catalog write,
+    // whose stamps the live epoch then blocks from GC past the grace — a
     // slower-than-the-grace reader keeps its planned files exactly, not
     // just probabilistically (SCALE.md §18)
     val epoch = ReaderEpochs.begin(spark, fs, new Path(path))
@@ -1221,36 +1183,26 @@ class ContinuousAggregate(
   }
 
   private def readMatLiveInner(): Option[DataFrame] =
-    readMatCatalog() match {
-      case Some(cat) =>
-        cachedMatScan match {
-          case Some((v, df)) if v == cat.v => df
-          case _ =>
-            val df = buildMatLive(cat.chunks)
-            cachedMatScan = Some((cat.v, df))
-            df
-        }
-      case None => buildMatLive(listMatState(false).chunks)
+    readMatCatalog().flatMap { cat =>
+      cachedMatScan match {
+        case Some((v, df)) if v == cat.v => df
+        case _ =>
+          val df = buildMatLive(cat.chunks)
+          cachedMatScan = Some((cat.v, df))
+          df
+      }
     }
 
   private def buildMatLive(chunks: Seq[MatEntry]): Option[DataFrame] = {
-    val entries = chunks.filter(_.hasData)
-    if (entries.isEmpty) return None
-    val (genDirs, flatDirs) = entries.map(e => matDirOf(e.rel).toString)
-      .partition(_.contains(s"${MATGEN}="))
-    def readDirs(dirs: Seq[String]): Option[DataFrame] =
-      if (dirs.isEmpty) None
-      else Some(spark.read.option("basePath", matPath).parquet(dirs: _*)
-        .drop(MATGEN))
-    (readDirs(genDirs), readDirs(flatDirs)) match {
-      case (Some(a), Some(b)) => Some(a.unionByName(b))
-      case (a, b) => a.orElse(b)
-    }
+    val dirs = chunks.filter(_.hasData).map(e => matDirOf(e.rel).toString)
+    if (dirs.isEmpty) None
+    else Some(spark.read.option("basePath", matPath).parquet(dirs: _*)
+      .drop(MATGEN))
   }
 
   /** Chunk keys of mat chunks currently in columnstore layout. */
   def compressedMatChunks: Seq[Long] =
-    readMatCatalog().map(_.chunks).getOrElse(listMatState(true).chunks)
+    readMatCatalog().toSeq.flatMap(_.chunks)
       .collect { case e if e.compressed => e.key }.sorted
 
   /** Convert mat chunks fully older than the cutoff to columnstore layout —
@@ -1263,51 +1215,48 @@ class ContinuousAggregate(
     * A later refresh that rewrites a compressed mat-chunk (late data)
     * reverts that chunk to rowstore — the next policy pass recompresses
     * it, matching the reference's refresh-into-compressed-cagg flow.
-    * Serialized against refresh by the same lock (both swap chunk dirs).
+    * Serialized against refresh by the same lock (both publish chunk
+    * generations).
     */
   def compressMaterialization(olderThanMicros: Option[Long] = None,
       opts: Option[Columnstore.Options] = None): Seq[Long] = withRefreshLock {
     val o = opts.getOrElse(Columnstore.Options(
       segmentBy = defn.groupCols, orderBy = Seq(BUCKET)))
-    // columnstore conversion reads the chunk's LIVE content dir (its
-    // newest generation, or the legacy flat dir) and publishes the
-    // re-encoded result as a NEW generation — the same additive contract
-    // as a refresh, so a cross-process reader planned against the old
-    // layout is never yanked mid-read by the policy (an in-place swap
-    // inside the live dir would be; round 12)
-    val todo = readMatCatalog().map(_.chunks).getOrElse(listMatState(true).chunks)
-      .filter { e =>
-        olderThanMicros.forall(cut => e.key + matChunkMicros <= cut) &&
-          e.hasData && !e.compressed
-      }
-    val ts = System.currentTimeMillis()
-    val pubs = graft.Par.map(todo) { e =>
-      val chunkDir = new Path(matPath, s"$MATCHUNK=${e.key}")
-      val (_, _, tmp, _) = Columnstore.compressEncodeTmp(spark,
-        matDirOf(e.rel).toString, o)
-      val (gen, sibs) = publishMatGen(chunkDir, Some(tmp), ts)
-      (e.key, gen, sibs, e.hasData, true)
+    // columnstore conversion reads the chunk's LIVE generation and
+    // encodes into the chunk's next one — the same generation publish as
+    // a refresh, so a cross-process reader planned against the old
+    // layout is never yanked mid-read by the policy
+    def todo(cat: MatCatalog) = cat.chunks.filter { e =>
+      olderThanMicros.forall(cut => e.key + matChunkMicros <= cut) &&
+        e.hasData && !e.compressed
     }
-    publishSync(pubs)
-    todo.map(_.key)
+    var done: Seq[Long] = Nil
+    publishMatGens(None)(todo(_).map(_.key)) { (cat, stages) =>
+      done = todo(cat).map(_.key)
+      graft.Par.map(todo(cat)) { e =>
+        Columnstore.compressEncodeTmp(spark, matDirOf(e.rel).toString, o,
+          Some(stages(e.key)))
+        MatEntry(e.key, matRelOf(stages(e.key)), e.hasData, compressed = true)
+      }
+    }
+    done
   }
 
   /** Invert [[compressMaterialization]] for every compressed mat chunk —
-    * additive generation publish, like the compression itself.
+    * a generation publish, like the compression itself.
     */
   def decompressMaterialization(): Seq[Long] = withRefreshLock {
-    val todo = readMatCatalog().map(_.chunks).getOrElse(listMatState(true).chunks)
-      .filter(_.compressed)
-    val ts = System.currentTimeMillis()
-    val pubs = graft.Par.map(todo) { e =>
-      val chunkDir = new Path(matPath, s"$MATCHUNK=${e.key}")
-      val (_, _, tmp, _) = Columnstore.decompressEncodeTmp(spark,
-        matDirOf(e.rel).toString)
-      val (gen, sibs) = publishMatGen(chunkDir, Some(tmp), ts)
-      (e.key, gen, sibs, e.hasData, false)
+    def todo(cat: MatCatalog) = cat.chunks.filter(_.compressed)
+    var done: Seq[Long] = Nil
+    publishMatGens(None)(todo(_).map(_.key)) { (cat, stages) =>
+      done = todo(cat).map(_.key)
+      graft.Par.map(todo(cat)) { e =>
+        Columnstore.decompressEncodeTmp(spark, matDirOf(e.rel).toString,
+          Some(stages(e.key)))
+        MatEntry(e.key, matRelOf(stages(e.key)), e.hasData, compressed = false)
+      }
     }
-    publishSync(pubs)
-    todo.map(_.key)
+    done
   }
 
   /** Drop mat chunks fully older than the cutoff — retention applied to
@@ -1318,22 +1267,11 @@ class ContinuousAggregate(
     * dropped chunk keys.
     */
   def dropMatChunks(olderThanMicros: Long): Seq[Long] = withRefreshLock {
-    // Drop = remove from the catalog NOW (new plans exclude the chunk at
-    // once), grace-retire the content (round-12 advisor low: the previous
-    // in-place recursive delete yanked a cross-process reader's planned
-    // files — the exact failure class the additive _mat_gen publish was
-    // added to eliminate). The chunk-dir shell is reaped by the retired
-    // GC once its last content dir dies.
-    var dropped: Seq[Long] = Nil
-    syncMatCatalog { cat =>
-      val now = System.currentTimeMillis()
-      val (drop, keep) = cat.chunks.partition(e =>
-        e.key + matChunkMicros <= olderThanMicros)
-      dropped = drop.map(_.key).sorted
-      cat.copy(chunks = keep,
-        retired = cat.retired ++ drop.map(retireOf(_, now)))
-    }
-    dropped
+    // drop = remove from the catalog NOW (new plans exclude the chunk at
+    // once) and tombstone the dir: a cross-process reader's planned files
+    // stay for the grace
+    dropMat(_.chunks.collect {
+      case e if e.key + matChunkMicros <= olderThanMicros => e.key })._1
   }
 
   /** `drop_chunks(cagg, newer_than => ...)` on the materialization —
@@ -1348,15 +1286,9 @@ class ContinuousAggregate(
     * does"). Cost: one footer-level max over the LAST remaining chunk dir.
     */
   def dropMatChunksNewer(newerThanMicros: Long): Seq[Long] = withRefreshLock {
-    // same grace-retire contract as [[dropMatChunks]]
-    var dropped: Seq[Long] = Nil
-    val next = syncMatCatalog { cat =>
-      val now = System.currentTimeMillis()
-      val (drop, keep) = cat.chunks.partition(_.key >= newerThanMicros)
-      dropped = drop.map(_.key).sorted
-      cat.copy(chunks = keep,
-        retired = cat.retired ++ drop.map(retireOf(_, now)))
-    }
+    // same tombstone-and-grace contract as [[dropMatChunks]]
+    val (dropped, next) =
+      dropMat(_.chunks.collect { case e if e.key >= newerThanMicros => e.key })
     if (dropped.nonEmpty) {
       val remaining = next.chunks.filter(_.hasData)
       val wmNew =
@@ -1605,29 +1537,29 @@ object ContinuousAggregate {
   private val MATGEN = "_mat_gen"
   private val MAT_CATALOG_KEEP = 3
 
-  /** One live mat chunk in the mat catalog: chunk key, live content dir
-    * RELATIVE to the mat root (`_mat_chunk=K/_mat_gen=T`, or
-    * `_mat_chunk=K` for a legacy flat chunk), whether it holds data
-    * files, and whether that content is columnstore-encoded.
+  /** The materialization's generation store (`_mat_gen=<n>` dirs). */
+  private val matGens = new GenStore(MATGEN)
+
+  private def matKeyOf(chunkDirName: String): Option[Long] =
+    if (!chunkDirName.startsWith(s"$MATCHUNK=")) None
+    else scala.util.Try(chunkDirName.stripPrefix(s"$MATCHUNK=").toLong).toOption
+
+  /** One live mat chunk in the mat catalog: chunk key, live generation
+    * dir RELATIVE to the mat root (`_mat_chunk=K/_mat_gen=N`), whether it
+    * holds data files, and whether that content is columnstore-encoded.
     */
   private[graft] case class MatEntry(key: Long, rel: String,
       hasData: Boolean, compressed: Boolean)
 
-  /** A mat content dir no longer referenced as live. Its grace clock
-    * starts at the CATALOG WRITE that dereferenced it (`ts`) — not at the
-    * superseding generation's publish ts — so a crashed publish whose
-    * catalog write never landed cannot strand readers of the
-    * still-cataloged older generation: they keep the full grace from the
-    * moment the catalog actually moved. `kind`: "g" = a generation subdir
-    * (recursive delete), "l" = legacy flat files directly in the chunk
-    * dir (top-level file delete only — the dir itself hosts generation
-    * subdirs).
+  /** A mat catalog version: the live chunks, and `gc` — the chunk keys
+    * whose dirs still hold content GenStore must reap (superseded
+    * generations, a drop tombstone). `legacyRetired` is a catalog written
+    * before the materialization moved onto GenStore: its retire list
+    * (content dirs relative to the mat root), converted by the next
+    * refresh-lock holder.
     */
-  private[graft] case class MatRetired(kind: String, rel: String,
-      ts: Long)
-
   private[graft] case class MatCatalog(v: Long, chunks: Seq[MatEntry],
-      retired: Seq[MatRetired])
+      gc: Seq[Long], legacyRetired: Seq[String] = Nil)
 
   /** In-JVM lock serializing child registration against parent drop —
     * the cagg-side analogue of `Hypertable.caggRegistryLock`.
@@ -1652,46 +1584,14 @@ object ContinuousAggregate {
       * erasing the bounds of the chunks that still hold rows.
       *
       * Probes run OUTSIDE the refresh lock (pendingInvalidations, window
-      * derivation), so a concurrent parent refresh can swap a chunk
-      * between the listing and the footer read — retried like every other
-      * swap-window reader; the consumer (dirt clipping) tolerates a
-      * then-stale bound, so a bounded retry is enough.
+      * derivation), so a concurrent parent refresh may supersede a probed
+      * generation mid-walk: a reader epoch registered before the catalog
+      * read keeps every dir the walk resolved on disk until it ends.
       */
     override def timeBounds: Option[(Long, Long)] = {
-      var attempt = 0
-      while (true) {
-        try return timeBoundsOnce()
-        catch {
-          // Spark surfaces an executor-side FNF as a SparkException with
-          // the FNF preserved in the cause chain (local mode rethrows the
-          // task failure's cause directly) — cause-chain matching first.
-          // One NARROW message fallback: in cluster mode a task failure
-          // whose exception fails to deserialize on the driver is
-          // reconstructed from its string form, so the chain can be LOST
-          // and only the re-rendered message names the FNF — restrict the
-          // substring match to SparkExceptions (an arbitrary error whose
-          // text merely mentions FNF stays unmatched). Each retry
-          // re-reads matLiveEntries, so a chunk the swap REMOVED (not
-          // just replaced) resolves by the re-read no longer returning
-          // it. Exponential backoff to ~1.6 s total: a parent refresh's
-          // chunk swap includes a recursive delete of the old mat chunk
-          // dir, which can exceed a fixed 100 ms window for a large chunk.
-          case e: Exception if attempt < 6 && {
-              var c: Throwable = e
-              var fnf = false
-              while (c != null && !fnf) {
-                fnf = c.isInstanceOf[java.io.FileNotFoundException]
-                c = c.getCause
-              }
-              fnf || (e.isInstanceOf[org.apache.spark.SparkException] &&
-                e.getMessage != null &&
-                e.getMessage.contains("FileNotFoundException"))
-            } =>
-            Thread.sleep(25L << attempt)
-            attempt += 1
-        }
-      }
-      None // unreachable
+      val epoch = ReaderEpochs.begin(parent.spark, parent.fs,
+        new Path(parent.path))
+      try timeBoundsOnce() finally epoch.cancel()
     }
 
     private def timeBoundsOnce(): Option[(Long, Long)] = {

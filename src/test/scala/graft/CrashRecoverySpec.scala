@@ -7,7 +7,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.Hypertable
+import graft.sources.{GenStore, Hypertable}
 import graft.streaming.{CaggDef, ContinuousAggregate}
 import graft.{functions => gf}
 
@@ -53,28 +53,33 @@ class CrashRecoverySpec extends AnyFunSuite {
     assert(cagg.materialized.collect().toSet === directAgg(ht).collect().toSet)
   }
 
-  test("a refresh that died mid-materialization leaves its window-keyed tmp " +
-    "dir and an advanced threshold; the re-run overwrites both and converges") {
+  test("a refresh crash leaves staged generations; the re-run retires them") {
     val dir = Files.createTempDirectory("graft_crash_tmp").toString
     val ht = Hypertable.create(spark, s"$dir/ht", "ts", chunkWidth = "7 days")
     ht.write(events)
     val cagg = ContinuousAggregate.create(spark, s"$dir/cagg", ht, defn)
     val (s, e) = (us("2024-01-01 00:00:00"), us("2024-02-01 00:00:00"))
-    // debris of a crash after the tmp write began but before any chunk
-    // swap: a half-written window-keyed tmp dir + threshold moved (it
-    // advances at refresh START), watermark NOT moved
+    // a crash after the write job staged the window's generations but
+    // before the catalog commit: threshold moved (it advances at refresh
+    // START), watermark NOT moved, nothing readable
     val fs = fsOf(s"$dir/cagg")
-    val tmp = new Path(s"$dir/cagg/mat__refresh_tmp_${s}_$e")
-    fs.mkdirs(new Path(tmp, "_mat_chunk=0"))
-    Hypertable.writeSmallFile(fs, new Path(tmp, "_mat_chunk=0/garbage"), "not parquet")
-    cagg.setInvalidationThreshold(e)
+    Hypertable.crashHook = n =>
+      if (n == "mat.staged") throw new Hypertable.InjectedCrash(n)
+    try intercept[Hypertable.InjectedCrash](cagg.refresh(s, e, force = true))
+    finally Hypertable.crashHook = _ => ()
+    assert(cagg.invalidationThreshold === e)
     assert(cagg.watermark === Long.MinValue)
-    // refresh is idempotent: re-running the SAME window reuses (overwrites)
-    // the crashed attempt's tmp dir instead of orphaning it; force so the
-    // re-run materializes the exact window (and hence the exact tmp name)
+    assert(cagg.materialized.collect().isEmpty)
+    val it = fs.listFiles(new Path(s"$dir/cagg/mat"), true)
+    val staged = Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath)
+      .filter(_.getName.endsWith(".parquet")).map(_.getParent).toSet
+    assert(staged.nonEmpty)
+    // the re-run rolls the crashed publish back (its stages are retired
+    // under the grace, never served) and materializes the window
     cagg.refresh(s, e, force = true)
     assert(cagg.watermark === e)
-    assert(!fs.exists(tmp), "re-run did not clean the crashed tmp dir")
+    staged.foreach(d => assert(fs.exists(new Path(d, ".graft_superseded")),
+      s"re-run did not retire the crashed stage $d"))
     assert(cagg.materialized.collect().toSet === directAgg(ht).collect().toSet)
   }
 
@@ -260,12 +265,11 @@ class CrashRecoverySpec extends AnyFunSuite {
     assert(e.getMessage.contains("usurper-driver"))
   }
 
-  test("object-store mode: content-stamp COUNTERS drive catalog freshness " +
-    "(spark.graft.fs.mtimeReliable=false)") {
+  test("object-store mode: content-stamp COUNTERS drive catalog freshness") {
     // SCALE.md FS matrix: on stores without settable mtimes the freshness
     // cue is a counter embedded in the stamp file, compared against the
     // value the latest manifest recorded at sync time
-    spark.conf.set("spark.graft.fs.mtimeReliable", "false")
+    Hypertable.counterFreshnessForTests = true
     try {
       val dir = Files.createTempDirectory("graft_crash_counter").toString
       val ht = Hypertable.create(spark, s"$dir/ht", "ts",
@@ -292,7 +296,7 @@ class CrashRecoverySpec extends AnyFunSuite {
       val expected = ht.read().count()
       val c = ht.showChunks().head
       val liveP = new Path(c.path)
-      val tmp = Hypertable.stageGenDir(fs, Hypertable.chunkDirOf(liveP))
+      val tmp = GenStore.chunks.stageGenDir(fs, Hypertable.chunkDirOf(liveP))
       // the rewrite drops 5 more rows, so healing is observable by count
       val chunkRows = spark.read.parquet(c.path)
       val victims = chunkRows.select("event_id").limit(5)
@@ -304,7 +308,7 @@ class CrashRecoverySpec extends AnyFunSuite {
       val healed = Hypertable.at(spark, s"$dir/ht")
       assert(healed.read().count() === expected - victims.size,
         "counter-mode freshness missed the unsynced publish")
-    } finally spark.conf.unset("spark.graft.fs.mtimeReliable")
+    } finally Hypertable.counterFreshnessForTests = false
   }
 
   test("the lease is a gate marker: its heartbeat advances the EMBEDDED " +

@@ -29,9 +29,9 @@ class MaintenanceFuzzSpec extends AnyFunSuite {
     .select(col("event_id"), unix_micros(col("ts")))
     .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
-  // seed 57 runs the whole interleaving in OBJECT-STORE mode
-  // (mtimeReliable=false): every publish/sync in the sequence exercises
-  // the counter-based freshness cue instead of mtimes
+  // seed 57 runs the whole interleaving in OBJECT-STORE mode (the
+  // counter freshness cue of stores without settable mtimes): every
+  // publish/sync in the sequence exercises it instead of mtimes
   // seed 83 starts FLAT **and** space-partitioned: the mid-sequence
   // migration must carry `_space=` subtrees through the gen conversion
   for ((seed, startFlat, space, objectStore) <- Seq(
@@ -41,9 +41,9 @@ class MaintenanceFuzzSpec extends AnyFunSuite {
     test("maintenance-op interleavings match the expected-rowset oracle " +
       s"after every op (seed=$seed, startFlat=$startFlat, space=$space" +
       s"${if (objectStore) ", mtimeReliable=false" else ""})") {
-      if (objectStore) spark.conf.set("spark.graft.fs.mtimeReliable", "false")
+      Hypertable.counterFreshnessForTests = objectStore
       try runInterleaving(seed, startFlat, space)
-      finally if (objectStore) spark.conf.unset("spark.graft.fs.mtimeReliable")
+      finally Hypertable.counterFreshnessForTests = false
     }
 
   private def runInterleaving(seed: Long, startFlat: Boolean,

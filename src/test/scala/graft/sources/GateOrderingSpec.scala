@@ -125,7 +125,7 @@ class GateOrderingSpec extends AnyFunSuite {
     val fs = fsOf(s"$dir/ht")
     val c = ht.showChunks().sortBy(_.startMicros).head
     val chunkDir = Hypertable.chunkDirOf(new Path(c.path))
-    val liveGen = Hypertable.genOf(new Path(c.path))
+    val liveGen = GenStore.chunks.genOf(new Path(c.path))
     val staged = new Path(chunkDir, s"${Hypertable.GEN}=${liveGen + 1}")
     fs.mkdirs(staged)
     val now = System.currentTimeMillis()

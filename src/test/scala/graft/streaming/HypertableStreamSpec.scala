@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.Hypertable
+import graft.sources.{GenStore, Hypertable}
 import graft.Tables
 
 /** [[Hypertable.readStream]] — the hypertable as a Structured Streaming
@@ -274,8 +274,8 @@ class HypertableStreamSpec extends AnyFunSuite {
     // (a flat publish replaces the live dir, so its staging dir sits
     // beside it)
     val tmp =
-      if (Hypertable.isGenPath(liveP))
-        Hypertable.stageGenDir(fs, Hypertable.chunkDirOf(liveP))
+      if (GenStore.chunks.isGenPath(liveP))
+        GenStore.chunks.stageGenDir(fs, Hypertable.chunkDirOf(liveP))
       else new org.apache.hadoop.fs.Path(Hypertable.storageRootOf(liveP),
         ".tmp_unsynced_publish")
     spark.read.parquet(c.path).write.parquet(tmp.toString)
@@ -368,10 +368,10 @@ class HypertableStreamSpec extends AnyFunSuite {
             if (cs.nonEmpty) {
               val c = cs(rnd.nextInt(cs.size))
               val p = new org.apache.hadoop.fs.Path(c.path)
-              if (graft.sources.Hypertable.isGenPath(p)) {
+              if (GenStore.chunks.isGenPath(p)) {
                 ops ++= "unsynced-publish "
                 val hfs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-                val tmp = graft.sources.Hypertable.stageGenDir(hfs,
+                val tmp = GenStore.chunks.stageGenDir(hfs,
                   graft.sources.Hypertable.chunkDirOf(p))
                 val df0 = spark.read.parquet(c.path)
                 val spaceCols = df0.schema.fieldNames

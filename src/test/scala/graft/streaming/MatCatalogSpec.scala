@@ -130,9 +130,7 @@ class MatCatalogSpec extends AnyFunSuite {
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     cagg.ingest(late)
     cagg.refreshInvalidated()
-    val cat = cagg.readMatCatalog().get
-    assert(cat.retired.exists(_.rel.contains("9999999999999")),
-      s"orphan must enter the retired list: ${cat.retired}")
+    assert(!fs.exists(orphan), "the next publish must reap the orphan")
     try {
       spark.conf.set("spark.graft.gc.graceMs", "50")
       Thread.sleep(120)
@@ -212,28 +210,196 @@ class MatCatalogSpec extends AnyFunSuite {
     assert(cagg.materialized.count() > 0)
   }
 
-  test("pre-catalog cagg (round-12 layout): reads fall back to the " +
-      "physical listing; the next publish writes a catalog with correct " +
-      "compression flags") {
+  test("a catalog-less cagg with mat chunk dirs is refused") {
     val (dir, _, cagg) = fresh()
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val done = cagg.compressMaterialization(Some(us("2024-01-20 00:00:00")))
-    assert(done.nonEmpty)
-    val before = cagg.materialized.collect().toSet
-    // simulate a round-12 cagg: no catalog on disk
+    // a layout older than the catalog: chunk dirs, no `_mat_catalog`
     fs.delete(new Path(s"$dir/cagg/_mat_catalog"), true)
-    assert(cagg.readMatCatalog().isEmpty)
+    val e = intercept[IllegalStateException](cagg.materialized.collect())
+    assert(e.getMessage.contains("re-create"), e.getMessage)
+    assert(intercept[IllegalStateException](
+      cagg.refresh(us("2024-01-22 00:00:00"), us("2024-01-23 00:00:00"),
+        force = true)).getMessage.contains("re-create"))
+  }
+
+  private def matFiles(dir: String): Seq[Path] = {
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val it = fs.listFiles(new Path(s"$dir/cagg/mat"), true)
+    val out = Seq.newBuilder[Path]
+    while (it.hasNext) out += it.next().getPath
+    out.result()
+  }
+
+  private def matChunkDirs(dir: String): Seq[Path] = {
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.listStatus(new Path(s"$dir/cagg/mat")).toSeq
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("_mat_chunk="))
+      .map(_.getPath)
+  }
+
+  private def withGrace[T](ms: Long)(body: => T): T =
+    try { spark.conf.set("spark.graft.gc.graceMs", ms.toString); body }
+    finally spark.conf.unset("spark.graft.gc.graceMs")
+
+  private def armCrash(point: String): Unit =
+    Hypertable.crashHook = n =>
+      if (n == point) throw new Hypertable.InjectedCrash(n)
+
+  private def disarm(): Unit = Hypertable.crashHook = _ => ()
+
+  private def lateRow(id: Long, ts: String, value: Double) =
+    Seq((id, Timestamp.valueOf(ts), 9L, "click", value, "{}"))
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+
+  private def expected(ht: Hypertable) =
+    ht.read().groupBy(graft.functions.time_bucket("1 hour", $"ts")
+        .as("bucket"), $"event_type")
+      .agg(count(lit(1)).as("n"), max($"value").as("max_value"))
+      .collect().toSet
+
+  test("compress, decompress and a drop leave no staging marker or chunk dir") {
+    val (dir, _, cagg) = fresh()
+    assert(cagg.compressMaterialization().nonEmpty)
+    assert(cagg.decompressMaterialization().nonEmpty)
+    def markers = matFiles(dir).filter(_.getName.startsWith(".staging_"))
+    assert(markers.isEmpty, s"staging markers left behind: $markers")
+    withGrace(50) {
+      assert(cagg.dropMatChunks(Long.MaxValue).nonEmpty)
+      Thread.sleep(120)
+      cagg.dropMatChunks(Long.MinValue) // a publish: GC pass
+      assert(markers.isEmpty, s"staging markers left behind: $markers")
+      assert(matChunkDirs(dir).isEmpty,
+        s"dropped chunk dirs left behind: ${matChunkDirs(dir)}")
+    }
+  }
+
+  test("crash after staging, before the catalog write: reads unchanged, " +
+      "the next publish reaps the remnant") {
+    val (dir, ht, cagg) = fresh()
+    val before = cagg.materialized.collect().toSet
+    val catBefore = cagg.readMatCatalog().get
+    cagg.ingest(lateRow(910002L, "2024-01-03 07:30:00", 777.0))
+    armCrash("mat.staged")
+    try intercept[Hypertable.InjectedCrash](cagg.refreshInvalidated())
+    finally disarm()
+    assert(cagg.readMatCatalog().get.v === catBefore.v)
     assert(cagg.materialized.collect().toSet === before)
-    assert(cagg.compressedMatChunks.toSet === done.toSet,
-      "fallback must probe columnstore markers")
-    // first PUBLISH rebuilds the catalog — flags preserved (a clean-window
-    // refresh publishes nothing and leaves the fallback in place)
-    cagg.refresh(us("2024-01-22 00:00:00"), us("2024-01-23 00:00:00"),
-      force = true)
-    val cat = cagg.readMatCatalog()
-    assert(cat.isDefined)
-    assert(cagg.compressedMatChunks.toSet === done.toSet)
-    assert(cagg.materialized.collect().toSet === before)
+    val live = catBefore.chunks.map(_.rel).toSet
+    val remnant = matFiles(dir).filter(f => f.getName.endsWith(".parquet") &&
+      !live.exists(r => f.toString.contains(s"/$r/")))
+    assert(remnant.nonEmpty, "the crashed publish must leave its stage")
+    withGrace(50) {
+      ReaderEpochs.expireAll()
+      cagg.refreshInvalidated() // rolls back, reaps, publishes again
+      val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      remnant.foreach(f => assert(!fs.exists(f), s"remnant file kept: $f"))
+    }
+    assert(cagg.materialized.where(col("max_value") === 777.0).count() === 1)
+    assert(cagg.realtime.collect().toSet === expected(ht))
+  }
+
+  test("crash after the catalog write, before the stamps: rolled forward; " +
+      "old generations go after the grace and the last epoch") {
+    val (dir, ht, cagg) = fresh()
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val before = cagg.materialized.collect().toSet
+    val pinned = cagg.materialized // registers this process's epoch
+    val oldRels = cagg.readMatCatalog().get.chunks.map(_.rel).toSet
+    cagg.ingest(lateRow(910003L, "2024-01-03 07:30:00", 888.0))
+    armCrash("mat.after_catalog")
+    try intercept[Hypertable.InjectedCrash](cagg.refreshInvalidated())
+    finally disarm()
+    // the catalog write is the commit: readers see the repair at once
+    assert(cagg.materialized.where(col("max_value") === 888.0).count() === 1)
+    val cat = cagg.readMatCatalog().get
+    val newRels = cat.chunks.map(_.rel).filterNot(oldRels)
+    val supersededRels = oldRels -- cat.chunks.map(_.rel)
+    assert(newRels.nonEmpty && supersededRels.nonEmpty)
+    def exists(rel: String) = fs.exists(new Path(s"$dir/cagg/mat/$rel"))
+    withGrace(50) {
+      Thread.sleep(120)
+      cagg.dropMatChunks(Long.MinValue) // roll forward, then GC
+      Thread.sleep(120)
+      cagg.dropMatChunks(Long.MinValue)
+      // the live epoch of `pinned` predates the stamps: GC yields
+      supersededRels.foreach(r => assert(exists(r), s"epoch-pinned $r reaped"))
+      newRels.foreach(r => assert(exists(r), s"committed generation $r reaped"))
+      assert(pinned.collect().toSet === before)
+      ReaderEpochs.expireAll()
+      cagg.dropMatChunks(Long.MinValue)
+      supersededRels.foreach(r => assert(!exists(r), s"$r kept past the grace"))
+      newRels.foreach(r => assert(exists(r), s"committed generation $r reaped"))
+    }
+    assert(cagg.realtime.collect().toSet === expected(ht))
+  }
+
+  test("crash between a drop's catalog write and its tombstones") {
+    val (dir, _, cagg) = fresh()
+    val cut = cagg.matChunks.last
+    armCrash("mat.after_catalog")
+    try intercept[Hypertable.InjectedCrash](cagg.dropMatChunks(cut))
+    finally disarm()
+    val dropped = matChunkDirs(dir).filter(d =>
+      !cagg.matChunks.exists(k => d.getName == s"_mat_chunk=$k"))
+    assert(dropped.nonEmpty, "the drop must have left the catalog")
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    withGrace(50) {
+      ReaderEpochs.expireAll()
+      cagg.dropMatChunks(Long.MinValue) // roll forward: tombstones
+      dropped.foreach(d => assert(fs.exists(new Path(d, ".graft_dropped"))))
+      Thread.sleep(120)
+      cagg.dropMatChunks(Long.MinValue) // GC
+      dropped.foreach(d => assert(!fs.exists(d), s"dropped dir kept: $d"))
+    }
+    assert(cagg.materialized.collect().nonEmpty)
+  }
+
+  test("a cagg written with the retire-list catalog converts and reads " +
+      "the same rows") {
+    val (dir, _, cagg) = fresh()
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val cat = cagg.readMatCatalog().get
+    val Seq(a, b) = cat.chunks.take(2)
+    // the earlier layout: publish-ts generation names, and a `retired`
+    // list — an older generation of `a` and the dropped chunk `b`
+    def rename(rel: String, ts: Long): String = {
+      val to = rel.replaceAll("_mat_gen=\\d+$", s"_mat_gen=$ts")
+      assert(fs.rename(new Path(s"$dir/cagg/mat/$rel"),
+        new Path(s"$dir/cagg/mat/$to")))
+      to
+    }
+    val aLive = rename(a.rel, 1792000000000L)
+    val aOld = aLive.replace("1792000000000", "1791000000000")
+    org.apache.hadoop.fs.FileUtil.copy(fs, new Path(s"$dir/cagg/mat/$aLive"),
+      fs, new Path(s"$dir/cagg/mat/$aOld"), false, spark.sparkContext.hadoopConfiguration)
+    val bDead = rename(b.rel, 1792000000001L)
+    val chunks = cat.chunks.filterNot(_ == b).map(e =>
+      if (e == a) e.copy(rel = aLive) else e)
+    def entry(e: ContinuousAggregate.MatEntry) =
+      s"""{"k":${e.key},"d":"${e.rel}","f":${e.hasData},"c":${e.compressed}}"""
+    val body = s"""{"v":${cat.v + 1},"chunks":[${chunks.map(entry).mkString(",")}],""" +
+      s""""retired":[{"x":"g","d":"$aOld","t":1},{"x":"g","d":"$bDead","t":1}]}"""
+    Hypertable.writeSmallFile(fs,
+      new Path(s"$dir/cagg/_mat_catalog/v${cat.v + 1}.json"), body)
+    val rows = cagg.materialized.collect().toSet
+    assert(rows.nonEmpty)
+    withGrace(50) {
+      ReaderEpochs.expireAll()
+      cagg.dropMatChunks(Long.MinValue) // the first refresh-lock holder converts
+      val conv = cagg.readMatCatalog().get
+      assert(conv.legacyRetired.isEmpty && conv.gc.toSet === Set(a.key, b.key))
+      assert(fs.exists(new Path(s"$dir/cagg/mat/$aOld/.graft_superseded")))
+      assert(fs.exists(new Path(s"$dir/cagg/mat/_mat_chunk=${b.key}/.graft_dropped")))
+      assert(cagg.materialized.collect().toSet === rows)
+      Thread.sleep(120)
+      ReaderEpochs.expireAll()
+      cagg.dropMatChunks(Long.MinValue) // GC
+      assert(!fs.exists(new Path(s"$dir/cagg/mat/$aOld")))
+      assert(!fs.exists(new Path(s"$dir/cagg/mat/_mat_chunk=${b.key}")))
+      assert(fs.exists(new Path(s"$dir/cagg/mat/$aLive")))
+      assert(cagg.readMatCatalog().get.gc.isEmpty)
+    }
+    assert(cagg.materialized.collect().toSet === rows)
   }
 }
 
