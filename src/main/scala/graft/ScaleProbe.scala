@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.{functions => gf}
 import graft.operators.{Clustering, Dedup, Gapfill, Joins, Sampling}
 import graft.sources.Hypertable
-import graft.streaming.{CaggDef, ContinuousAggregate}
+import graft.streaming.{CaggDef, ContinuousAggregate, StreamLog}
 
 /** Weak-scaling probe: replicate the sf0.1 tables N× (densified — same
   * time range, N× rows, N× users, N× docs with the duplicate structure
@@ -156,8 +156,6 @@ object ScaleProbe {
     * `SPARK_GRAFT_STREAM_LOG_PROBE=1 sbt "runMain graft.ScaleProbe"`.
     */
   private def streamLogProbe(spark: SparkSession): Unit = {
-    import graft.sources.Hypertable
-    import graft.streaming.CatalogStreamCore
     spark.sparkContext.hadoopConfiguration.set(
       "fs.slowfs.impl", classOf[SlowFs].getName)
     val base = java.nio.file.Files.createTempDirectory("graft_slogprobe").toString
@@ -167,25 +165,25 @@ object ScaleProbe {
       val probePath = if (scheme == "file") table else s"slowfs://$table"
       val fs = new org.apache.hadoop.fs.Path(probePath)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val logDir = new org.apache.hadoop.fs.Path(probePath, Hypertable.STREAM_LOG)
+      val logDir = new org.apache.hadoop.fs.Path(probePath, StreamLog.STREAM_LOG)
       val now = System.currentTimeMillis()
       val spacing = (6.5 * 24 * 3600 * 1000 / n).toLong
       val (tBuild, _) = timed {
         (0 until n).foreach { i =>
           val ts = now - (n - 1 - i) * spacing
           val bucket = new org.apache.hadoop.fs.Path(logDir,
-            Hypertable.streamLogBucketOf(i))
+            StreamLog.streamLogBucketOf(i))
           val out = fs.create(new org.apache.hadoop.fs.Path(bucket,
-            Hypertable.streamEntryName(i, ts)), true)
+            StreamLog.streamEntryName(i, ts)), true)
           out.write(s"$table/_chunk=0/_gen=0/part-$i.parquet".getBytes("UTF-8"))
           out.close()
         }
       }
       val floor = n - 6L // newest 5 unprocessed — the steady-state trigger
-      CatalogStreamCore.newLogEntries(spark, probePath, floor,
+      StreamLog.newLogEntries(spark, probePath, floor,
         noSeqs) // warm
       val (tFloor, gotFloor) = timed2 {
-        CatalogStreamCore.newLogEntries(spark, probePath, floor,
+        StreamLog.newLogEntries(spark, probePath, floor,
           noSeqs)._1.size
       }
       // the floor-less pass is the CONTRAST (what a restart without a
@@ -195,7 +193,7 @@ object ScaleProbe {
       val (tFull, gotFull) =
         if (scheme == "slowfs" && n > 600) (-1.0, -1)
         else timed2 {
-          CatalogStreamCore.newLogEntries(spark, probePath, -1L,
+          StreamLog.newLogEntries(spark, probePath, -1L,
             noSeqs)._1.size
         }
       println(f"""[scale] {"probe":"stream_log_trigger","fs":"$scheme","entries":$n,"build_sec":$tBuild%.2f,"floor_pass_sec":$tFloor%.4f,"full_pass_sec":$tFull%.4f,"floor_new":$gotFloor,"full_new":$gotFull}""")
@@ -354,13 +352,13 @@ object ScaleProbe {
         spark.sparkContext.hadoopConfiguration)
       (1 to 4).foreach { i =>
         OpCountFs.reset()
-        Hypertable.appendStreamLog(spark, fs, table, Seq(s"f$i"))
+        StreamLog.appendStreamLog(spark, fs, table, Seq(s"f$i"))
         val kind = if (i == 1) "fresh" else "held"
         println(s"[claim] $label append#$i ($kind) ops=${OpCountFs.total()} " +
           s"(${OpCountFs.breakdown()})")
       }
       // release the held claim so the next mode starts fresh
-      Hypertable.releaseAllSeqClaims()
+      StreamLog.releaseAllSeqClaims()
     }
     println("[claim] mode=blind-put (no conditional-PUT backend)")
     claimOnce("blind")

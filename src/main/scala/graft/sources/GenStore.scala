@@ -130,10 +130,17 @@ private[graft] final class GenStore(val prefix: String) {
     * pointed at them), and stale in-flight tmp dirs. Callers hold the
     * table's catalog lock or the cagg's refresh lock (publish stamps also
     * run under it, so a remnant here is never an in-flight publish).
+    *
+    * One listing of the chunk dir per visit yields the tombstone, the
+    * generations, the dot-dirs and the staging markers; each generation
+    * costs one stat of its stamp (absent = unstamped, present = its mtime
+    * is the grace clock). Returns whether the dir still holds content a
+    * later pass must reap — a tombstone, a superseded generation, more
+    * than one generation, or a staging marker; false once the dir is gone.
     */
   def gcChunkDir(fs: FileSystem, chunkDir: Path,
       graceMs: Long, epochFloor: Long = Long.MaxValue,
-      epochSkewMs: Long = 0L): Unit = {
+      epochSkewMs: Long = 0L): Boolean = {
     val now = System.currentTimeMillis()
     // `graced` gates the two deletion classes a MANIFEST READER can have
     // planned (superseded generations, tombstoned dirs): grace expired AND
@@ -141,20 +148,23 @@ private[graft] final class GenStore(val prefix: String) {
     // callers pass the primary root's liveFloor; the default MaxValue
     // keeps legacy callers grace-only). Crash remnants, stale tmps and
     // bare shells below were never manifest-live and stay age-gated.
-    def graced(markFile: Path): Boolean =
-      try {
-        val mt = fs.getFileStatus(markFile).getModificationTime
-        now - mt >= graceMs && epochFloor > mt + epochSkewMs
-      } catch { case _: Exception => false }
-    if (isTombstoned(fs, chunkDir)) {
+    def graced(markMtime: Long): Boolean =
+      now - markMtime >= graceMs && epochFloor > markMtime + epochSkewMs
+    val entries =
+      try fs.listStatus(chunkDir).toSeq
+      catch { case _: java.io.FileNotFoundException => return false }
+    if (entries.exists(_.getPath.getName == DROP_TOMB)) {
       // an appender PROCESS is mid-rebirth into this dir (lease split:
       // appends run concurrently with the maintenance process doing this
       // GC) — hands off entirely; its own heal commits the rebirth
-      if (MutationGate.rebirthLockLive(fs, chunkDir)) return
+      if (MutationGate.rebirthLockLive(fs, chunkDir)) return true
       // a write that re-ingested this range routed its rows into a fresh
       // rebirth generation (created AFTER the tombstone); finish the
       // rebirth if the writer crashed before its own heal ran
-      if (!healRebirth(fs, chunkDir) && graced(new Path(chunkDir, DROP_TOMB))) {
+      if (!healRebirth(fs, chunkDir) &&
+          (try graced(fs.getFileStatus(new Path(chunkDir, DROP_TOMB))
+            .getModificationTime)
+          catch { case _: Exception => false })) {
         // never reap while ANY generation sits above the recorded max:
         // it is either an append's just-committed rebirth racing this GC
         // (its completion marker lands momentarily — the write path also
@@ -163,56 +173,70 @@ private[graft] final class GenStore(val prefix: String) {
         // here) or a crashed partial the next append will normalize into
         // the dead set. Deleting would lose the former's acked rows.
         val deadMax = readTombMax(fs, chunkDir).getOrElse(Long.MaxValue)
-        if (!listGenDirs(fs, chunkDir).exists(_._1 > deadMax))
+        if (!listGenDirs(fs, chunkDir).exists(_._1 > deadMax)) {
           fs.delete(chunkDir, true)
+          return false
+        }
       }
-      return
+      // still tombstoned, or a healed rebirth whose dead generations now
+      // carry stamps: a later pass settles it
+      return true
     }
-    val gens = listGenDirs(fs, chunkDir)
-    val live = gens.collectFirst { case (g, d) if !isSuperseded(fs, d) => g }
-    gens.foreach { case (g, d) =>
-      if (isSuperseded(fs, d)) {
-        if (graced(new Path(d, SUPERSEDED))) fs.delete(d, true)
-      } else if (live.exists(g > _) && !isInFlightTmp(fs, d) &&
-          !MutationGate.fileMarkerLiveAny(fs, stagingMarkerPath(d))) {
-        // crash remnant — but only when no process advertises the dir as
-        // a stage in flight: the JVM-local registration covers OUR stages,
-        // the heartbeated on-disk marker covers a FOREIGN process's
-        // stage (a lease takeover's GC must not delete a
-        // zombie rewriter's stage mid-write; the remnant reaps once the
-        // marker's heartbeat goes stale)
-        fs.delete(d, true)
-        try fs.delete(stagingMarkerPath(d), false)
-        catch { case _: java.io.IOException => () }
+    val gens = entries.filter(s => s.isDirectory && isGenPath(s.getPath))
+      .map(s => genOf(s.getPath) -> s.getPath).sortBy(_._1)
+      .map { case (g, d) =>
+        val stamp =
+          try Some(fs.getFileStatus(new Path(d, SUPERSEDED)).getModificationTime)
+          catch { case _: java.io.FileNotFoundException => None }
+        (g, d, stamp)
       }
+    val live = gens.collectFirst { case (g, _, None) => g }
+    val reaped = scala.collection.mutable.Set.empty[String]
+    def reap(d: Path): Unit = {
+      fs.delete(d, true)
+      try fs.delete(stagingMarkerPath(d), false)
+      catch { case _: java.io.IOException => () }
+      reaped += d.getName += stagingMarkerPath(d).getName
+    }
+    gens.foreach {
+      case (_, d, Some(stampedAt)) =>
+        if (graced(stampedAt)) { fs.delete(d, true); reaped += d.getName }
+      case (g, d, None) =>
+        if (live.exists(g > _) && !isInFlightTmp(fs, d) &&
+            !MutationGate.fileMarkerLiveAny(fs, stagingMarkerPath(d)))
+          // crash remnant — but only when no process advertises the dir
+          // as a stage in flight: the JVM-local registration covers OUR
+          // stages, the heartbeated on-disk marker covers a FOREIGN
+          // process's stage (a lease takeover's GC must not delete a
+          // zombie rewriter's stage mid-write; the remnant reaps once the
+          // marker's heartbeat goes stale)
+          reap(d)
     }
     // stale dot-prefixed staging dirs (a crashed rewrite's tmp). NEVER one
     // registered as in flight (JVM set or live on-disk staging marker):
     // the age heuristic reads the dir mtime, which for a running Spark
     // write is the job START — see [[registerRewriteTmp]]
-    val entries = fs.listStatus(chunkDir).toSeq
     entries
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(".") &&
         !isInFlightTmp(fs, s.getPath) &&
         !MutationGate.fileMarkerLiveAny(fs, stagingMarkerPath(s.getPath)) &&
         now - s.getModificationTime >= math.max(graceMs, 3600000L))
-      .foreach { s =>
-        fs.delete(s.getPath, true)
-        try fs.delete(stagingMarkerPath(s.getPath), false)
-        catch { case _: java.io.IOException => () }
-      }
+      .foreach(s => reap(s.getPath))
     // orphaned staging markers (their staged dir never appeared, or was
     // consumed by a publish whose unregister raced a crash): reap once
     // stale — a live one may precede its dir (registration runs before
     // the write job creates it)
+    val names = entries.map(_.getPath.getName).toSet -- reaped
     entries
-      .filter(s => s.isFile && s.getPath.getName.startsWith(".staging_") &&
+      .filter(s => s.isFile && names(s.getPath.getName) &&
+        s.getPath.getName.startsWith(".staging_") &&
         !MutationGate.fileMarkerLiveAny(fs, s.getPath) &&
-        !fs.exists(new Path(chunkDir,
-          s.getPath.getName.stripPrefix(".staging_"))))
-      .foreach(s =>
+        !names(s.getPath.getName.stripPrefix(".staging_")))
+      .foreach { s =>
         try fs.delete(s.getPath, false)
-        catch { case _: java.io.IOException => () })
+        catch { case _: java.io.IOException => () }
+        reaped += s.getPath.getName
+      }
     // a long-dead BARE shell (no generations, no tombstone, nothing but
     // stale dot-entries — a rewrite that crashed between mkdirs and its
     // publish; liveDataDir already refuses to list it): delete once old
@@ -221,16 +245,19 @@ private[graft] final class GenStore(val prefix: String) {
         (try now - fs.getFileStatus(chunkDir).getModificationTime >=
           math.max(graceMs, 3600000L)
         catch { case _: Exception => false }) &&
-        !fs.listStatus(chunkDir).exists(s =>
-          !s.getPath.getName.startsWith(".")))
+        !entries.exists(s => !s.getPath.getName.startsWith("."))) {
       fs.delete(chunkDir, true)
+      return false
+    }
+    val left = gens.filterNot { case (_, d, _) => reaped(d.getName) }
+    left.size > 1 || left.exists(_._3.nonEmpty) ||
+      names.exists(n => !reaped(n) && n.startsWith(".staging_"))
   }
 
   /** GC `chunkDirs` with the session's grace and the reader epochs
     * registered at `epochRoot` (one epoch read for all of them); returns
-    * the dirs that still hold content a later pass must reap — a
-    * tombstone, a superseded generation, more than one generation, or a
-    * staging marker.
+    * the dirs that still hold content a later pass must reap (see
+    * [[gcChunkDir]]).
     */
   def gcChunkDirs(spark: SparkSession, fs: FileSystem, chunkDirs: Seq[Path],
       epochRoot: Path): Seq[Path] = {
@@ -241,14 +268,8 @@ private[graft] final class GenStore(val prefix: String) {
     val skew = ReaderEpochs.skewMs(spark)
     val grace = graceMs(spark)
     chunkDirs.filter { d =>
-      try {
-        gcChunkDir(fs, d, grace, floor, skew)
-        val entries = fs.listStatus(d).toSeq
-        val gens = entries.filter(s => s.isDirectory && isGenPath(s.getPath))
-        gens.size > 1 || entries.exists(s => s.getPath.getName == DROP_TOMB ||
-          s.getPath.getName.startsWith(".staging_")) ||
-          gens.exists(s => isSuperseded(fs, s.getPath))
-      } catch { case _: java.io.FileNotFoundException => false }
+      try gcChunkDir(fs, d, grace, floor, skew)
+      catch { case _: java.io.FileNotFoundException => false }
     }
   }
 

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{functions => gf}
 import graft.expressions.TimeBucketUtil
+import graft.streaming.StreamLog
 
 /** Chunk descriptor: a time range [start, end) in epoch micros backed by one
   * partition directory (reference `src/chunk.h:63-75` — a chunk is a child
@@ -502,7 +503,7 @@ class Hypertable private (
     // probed once: the stream-log pre-listing below needs the chunk set
     // BEFORE the job, which observed metrics only give after it, so both
     // decisions must see the same answer
-    val streamLog = Hypertable.streamLogEnabled(fs, path)
+    val streamLog = StreamLog.streamLogEnabled(fs, path)
     val observeStats = tsRoots.isEmpty && (needStats || caggs.nonEmpty) && !streamLog
     if (expensiveInput && !observeStats)
       routed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -552,17 +553,16 @@ class Hypertable private (
     }
     lazy val touchedChunks: Set[Long] =
       observedStats.map(_._1).getOrElse(batchChunkStats.map(_._1).toSet)
-    // catalog-backed stream log: resolve each touched chunk's FINAL data
-    // dir (the routing above fixed it — the seal gate excludes concurrent
-    // rewrites for the batch's lifetime) and list it BEFORE the job; the
-    // post-commit listing's diff is exactly this job's files. Paid only
-    // while a stream log exists (one `exists` otherwise); O(touched
-    // chunks) small listings + one distinct action when it does.
+    // stream log: each touched chunk's FINAL data dir (the routing above
+    // fixed it — the seal gate excludes concurrent rewrites for the
+    // batch's lifetime). Resolved only while a stream log exists (the
+    // probe above otherwise, and one more at commit); O(touched chunks)
+    // small listings + one distinct action when it does.
     val tombMap = tombstoned.toMap
-    def streamLogDirs(touched: Set[Long]): Map[Long, Path] = {
+    def streamLogDirs(touched: Set[Long]): Seq[Path] = {
       val liveByStart = liveChunks.map(c => c.startMicros -> c.path).toMap
-      touched.map { s =>
-        val d = pendingRebirth.get(s)
+      touched.toSeq.map { s =>
+        pendingRebirth.get(s)
           .map { case (dd, g) => new Path(dd, s"${Hypertable.GEN}=$g") }
           .orElse(liveByStart.get(s).map(new Path(_)))
           .orElse(tombMap.get(s).map(dd =>
@@ -574,30 +574,10 @@ class Hypertable private (
               new Path(cd, s"${Hypertable.GEN}=${gensOut.getOrElse(s, 0L)}")
             else cd
           }
-        s -> d
-      }.toMap
-    }
-    var streamJournal: Path = null
-    val streamLogPre: Option[(Map[Long, Path], Map[Long, Set[String]])] =
-      if (!streamLog) None
-      else {
-        // crashed earlier batches' journaled entries first, so their
-        // files surface to tailing streams before this batch's diff
-        // (which would otherwise fold them into its own pre-listing)
-        Hypertable.healStreamLogJournals(spark, fs, path)
-        val dirs = streamLogDirs(touchedChunks)
-        val pre = dirs.map { case (s, d) =>
-          s -> Hypertable.listDataFilesRec(
-            d.getFileSystem(spark.sparkContext.hadoopConfiguration), d).toSet
-        }
-        // journal the intended entry BEFORE the job commits: a crash in
-        // the commit-to-appendStreamLog window heals forward (the next
-        // logging batch re-diffs and emits) instead of silently dropping
-        // the batch from every tailing catalog stream
-        streamJournal = Hypertable.journalStreamLog(fs, path,
-          dirs.values.toSeq, pre.values.flatten.toSet)
-        Some((dirs, pre))
       }
+    }
+    val logged = StreamLog.begin(spark, fs, path)(
+      streamLogDirs(touchedChunks), logging = streamLog)
     // CONCURRENT APPENDER PROCESSES would collide in the committer's
     // SHARED staging dir: FileOutputCommitter stages every job under
     // `<table>/_temporary/<appAttemptId>` with appAttemptId=0, and one
@@ -679,33 +659,11 @@ class Hypertable private (
       // post-write steps below consult showChunks() — the append-shaped
       // incremental patch, not the O(chunks) full re-snapshot
       syncChunkCatalogAppend()
-      // stream-log entry: exactly this job's committed files (post minus
-      // pre, at the same final dirs — relocation heals above fold INTO
-      // them, so healed stubs surface here too, which a tailing stream
-      // wants: those acked rows were otherwise lost to it)
-      streamLogPre match {
-        case Some((dirs, pre)) =>
-          val fresh = dirs.toSeq.flatMap { case (s, d) =>
-            Hypertable.listDataFilesRec(
-              d.getFileSystem(spark.sparkContext.hadoopConfiguration), d)
-              .filterNot(pre(s))
-          }
-          Hypertable.appendStreamLog(spark, fs, path, fresh)
-          if (streamJournal != null)
-            MutationGate.removeMarker(fs, streamJournal)
-        case None if Hypertable.streamLogEnabled(fs, path) =>
-          // the log was enabled WHILE this batch ran (a stream starting
-          // concurrently): no pre-listing exists, so log every file of
-          // the touched dirs — over-inclusive is safe (the source dedups
-          // by path against its snapshot/seen set), silence would lose
-          // this batch if the stream's snapshot listed before our commit
-          val all = streamLogDirs(touchedChunks).toSeq.flatMap { case (_, d) =>
-            Hypertable.listDataFilesRec(
-              d.getFileSystem(spark.sparkContext.hadoopConfiguration), d)
-          }
-          Hypertable.appendStreamLog(spark, fs, path, all)
-        case None => ()
-      }
+      // stream-log entry: exactly this job's committed files, at the
+      // same final dirs — relocation heals above fold INTO them, so
+      // healed stubs surface here too, which a tailing stream wants:
+      // those acked rows were otherwise lost to it
+      logged.commit()
       if (needStats)
         refreshColumnStats(
           showChunks().filter(c => touchedChunks(c.startMicros)).map(_.path))
@@ -1248,10 +1206,11 @@ class Hypertable private (
     * stream of the table, feeding downstream streaming caggs or CDC-style
     * pipelines ([[org.apache.spark.sql.graftstream.GraftStreamSource]]).
     *
-    * The source tails the `_graft_stream_log/` append feed: every
-    * [[write]] batch and every [[attachChunk]] appends one entry naming
-    * exactly the files it committed, so per-trigger discovery is O(new
-    * files), independent of table width (SCALE.md §16). Calling this
+    * The source tails the table's change feed
+    * ([[graft.streaming.StreamLog]]): every [[write]] batch and every
+    * [[attachChunk]] appends one entry naming exactly the files it
+    * committed, so per-trigger discovery is O(new files), independent of
+    * table width (SCALE.md §16). Calling this
     * enables the log; writers log only while it exists, and the source
     * re-checks, so a batch written between the snapshot and the first
     * trigger cannot be missed.
@@ -1285,7 +1244,7 @@ class Hypertable private (
   def readStream(schema: Option[org.apache.spark.sql.types.StructType] = None,
       startingPosition: String = "earliest"): DataFrame = {
     assertLayoutCurrent()
-    Hypertable.enableStreamLog(fs, path)
+    StreamLog.enableStreamLog(spark, path)
     var r = spark.readStream
       .format("org.apache.spark.sql.graftstream.GraftStreamSourceProvider")
       .option("path", path)
@@ -2583,13 +2542,9 @@ class Hypertable private (
         require(fs.rename(p, fresh), s"rename $p -> $fresh failed")
       }
     // tailing streams get the adopted rows as one log entry, like a
-    // write() batch; journaled first, so a crash before the entry is
-    // appended heals forward (the next logging batch or stream start
-    // lists the target and emits it)
-    val streamJournal =
-      if (Hypertable.streamLogEnabled(fs, path))
-        Some(Hypertable.journalStreamLog(fs, path, Seq(target), Set.empty))
-      else None
+    // write() batch — also when a stream starts before the rename
+    val logged = StreamLog.begin(spark, fs, path)(Seq(target))
+    Hypertable.crashPoint("attach.before_rename")
     require(fs.rename(src, target), s"rename $srcPath -> $target failed")
     // an adopted dir may carry a frozen sentinel (e.g. re-attaching a
     // previously frozen+detached chunk's data) — keep the root catalog,
@@ -2602,12 +2557,8 @@ class Hypertable private (
     refreshColumnStats(Seq(target.toString))
     invalidateCaggs(startMicros, endMicros) // new raw rows appeared
     syncChunkCatalog()
-    streamJournal.foreach { j =>
-      Hypertable.crashPoint("attach.streamlog.before_entry")
-      Hypertable.appendStreamLog(spark, fs, path,
-        Hypertable.listDataFilesRec(fs, target))
-      MutationGate.removeMarker(fs, j)
-    }
+    Hypertable.crashPoint("attach.streamlog.before_entry")
+    logged.commit()
     ChunkInfo(startMicros, endMicros, target.toString)
   }
 
@@ -3469,489 +3420,6 @@ object Hypertable {
   // crashHook, whose calls the crash-point fuzz counts).
   @volatile private[graft] var listingHook: () => Unit = () => ()
 
-  // ------------------------------------------------------ stream log
-  // The streaming source (Hypertable.readStream / GraftStreamSource)
-  // tails per-batch append entries instead of re-listing the whole
-  // table's files every micro-batch (Spark's FileStreamSource is O(files)
-  // per trigger — the measured 14 s/10k-chunk scale cliff in SCALE.md
-  // §16). write() appends one entry per batch listing EXACTLY the files
-  // its job committed (pre/post listing diff of only the touched chunk
-  // dirs), and attachChunk one entry with the adopted files, but only
-  // while the log dir exists — the first stream enables it; tables nobody
-  // tails pay one `exists` per batch and nothing else.
-
-  private[graft] val STREAM_LOG = "_graft_stream_log"
-
-  private[graft] def streamLogEnabled(fs: FileSystem, tablePath: String): Boolean =
-    fs.exists(new Path(tablePath, STREAM_LOG))
-
-  private[graft] def enableStreamLog(fs: FileSystem, tablePath: String): Unit = {
-    fs.mkdirs(new Path(tablePath, STREAM_LOG)); ()
-  }
-
-  /** Data files under a chunk data dir, recursing through `_space=` levels
-    * (never into dot/tmp dirs), qualified. Missing dir = empty.
-    */
-  private[graft] def listDataFilesRec(fs: FileSystem, dir: Path): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    def walk(d: Path): Unit =
-      try fs.listStatus(d).foreach { st =>
-        val n = st.getPath.getName
-        if (st.isDirectory && !n.startsWith(".") && n.contains("=")) walk(st.getPath)
-        else if (st.isFile && !n.startsWith(".") && !n.startsWith("_"))
-          out += fs.makeQualified(st.getPath).toString
-      } catch { case _: java.io.FileNotFoundException => () }
-    walk(dir)
-    out.toSeq
-  }
-
-  /** Entries bucket by SEQUENCE into `s<seq/512>/` subdirs. The sequence
-    * is the load-bearing change of round 12: entries used to be named and
-    * floored by each WRITER's wall clock, so an appender host skewed more
-    * than the floor window (10 min default) was silently floored out of
-    * every tailing stream — the one remaining NTP-violation → data-loss
-    * path (round-11 verdict item 1). Seqs are allocated under the
-    * `.seq_claim` exclusive marker with the entry WRITE inside the
-    * critical section, so verified entries are CONSECUTIVE (each
-    * allocation is max-visible+1) and become visible in seq order — a
-    * reader's floor of "max contiguously processed seq" is exact with no
-    * clock anywhere. Constant (not conf): readers derive each bucket's
-    * seq range from its name, so writer/reader must agree.
-    */
-  private[graft] val STREAM_LOG_BUCKET_SEQS = 512L
-
-  private[graft] def streamLogBucketOf(seq: Long): String =
-    s"s${seq / STREAM_LOG_BUCKET_SEQS}"
-
-  /** `s<idx>` → idx; anything else (dot dirs) → -1. */
-  private[graft] def streamBucketIdxOf(name: String): Long =
-    if (name.length > 1 && name.charAt(0) == 's' &&
-        name.drop(1).forall(_.isDigit)) name.drop(1).toLong
-    else -1L
-
-  /** V2 entry name: `e_<seq zero-padded>_<ts>_<rand>`. The ts is the
-    * writer's clock and feeds RETENTION ONLY (never ordering or floors).
-    */
-  private[graft] def streamEntryName(seq: Long, ts: Long): String =
-    f"e_$seq%012d_${ts}_${java.util.UUID.randomUUID().toString.take(6)}"
-
-  /** The sequence a v2 entry name embeds; -1 when unparsable. */
-  private[graft] def streamEntrySeq(name: String): Long = {
-    val s = name.stripPrefix("e_").takeWhile(_.isDigit)
-    if (s.isEmpty || !name.startsWith("e_")) -1L else s.toLong
-  }
-
-  /** The writer wall clock a v2 entry name embeds (retention only). */
-  private[graft] def streamEntryTs(name: String): Long =
-    scala.util.Try(name.split('_')(2).toLong).getOrElse(-1L)
-
-  private[graft] def streamLogRetainMs(spark: SparkSession): Long =
-    spark.conf.get("spark.graft.stream.logRetainMs", "604800000").toLong
-
-  /** Highest seq visible in the log's sequence buckets, -1 when none —
-    * walks bucket indices DESC, returning the first non-empty bucket's
-    * max (an empty higher dir is a crashed mkdirs remnant, not an
-    * allocation: seqs are allocated only by an entry existing).
-    */
-  private def maxStreamSeq(fs: FileSystem, logDir: Path,
-      bucketIdxs: Seq[Long]): Long = {
-    bucketIdxs.sorted(Ordering[Long].reverse).foreach { idx =>
-      val seqs =
-        try fs.listStatus(new Path(logDir, s"s$idx")).toSeq.filter(_.isFile)
-          .map(st => streamEntrySeq(st.getPath.getName)).filter(_ >= 0)
-        catch { case _: java.io.FileNotFoundException => Nil }
-      if (seqs.nonEmpty) return seqs.max
-    }
-    -1L
-  }
-
-  /** Highest seq ever allocated in the log: the max of the visible
-    * entries and the pruning-surviving high-water, -1 for an empty log.
-    * Every entry at or below it was written after the files it names were
-    * committed. Writers allocate the next seq from it (under the seq
-    * claim); a fresh stream reads it before its snapshot listing and
-    * starts its floor there, so its snapshot stands in for those entries.
-    *
-    * The same listing warns once per table and JVM about pre-sequence
-    * entries (root-flat `e_<ts>_*` files, `t<hour>` buckets): readers
-    * ignore them, so a checkpoint that had not consumed them must restart
-    * fresh to get their rows (from its snapshot).
-    */
-  private[graft] def streamLogHighSeq(fs: FileSystem, tablePath: String): Long = {
-    val logDir = new Path(tablePath, STREAM_LOG)
-    val top =
-      try fs.listStatus(logDir).toSeq
-      catch { case _: java.io.FileNotFoundException => Seq.empty }
-    val preSeq = top.exists { st =>
-      val n = st.getPath.getName
-      if (st.isDirectory) n.length > 1 && n.charAt(0) == 't' && n.drop(1).forall(_.isDigit)
-      else n.startsWith("e_")
-    }
-    if (preSeq && preSequenceLogWarned.add(fs.makeQualified(logDir).toString))
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"$logDir holds pre-sequence stream-log entries, which no stream " +
-          "reads any more: restart streams whose checkpoint predates the " +
-          "sequence layout with a fresh checkpoint, whose snapshot covers " +
-          "those files.")
-    val sIdxs = top.filter(_.isDirectory)
-      .map(s => streamBucketIdxOf(s.getPath.getName)).filter(_ >= 0)
-    math.max(maxStreamSeq(fs, logDir, sIdxs), readStreamHw(fs, logDir))
-  }
-
-  private val preSequenceLogWarned =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Pruning-surviving seq high-water (`_hw` in the log dir): without it,
-    * a table idle past retention would have ALL its buckets GC'd, the
-    * next writer would restart the sequence at 0, and a standing reader's
-    * floor (still at the old high seq) would silently skip every future
-    * entry. Read at allocation (seq base = max(maxVisible, hw)) and by a
-    * fresh stream's start; written MONOTONICALLY after the claim verify;
-    * raised by the GC before a bucket delete. All writes happen under the
-    * `.seq_claim` hold.
-    */
-  private def readStreamHw(fs: FileSystem, logDir: Path): Long =
-    try readSmallFile(fs, new Path(logDir, "_hw")).trim.toLong
-    catch { case _: java.io.IOException | _: NumberFormatException => -1L }
-
-  private def raiseStreamHw(fs: FileSystem, logDir: Path, seq: Long): Unit =
-    if (seq > readStreamHw(fs, logDir))
-      try writeSmallFile(fs, new Path(logDir, "_hw"), seq.toString)
-      catch { case _: java.io.IOException => () }
-
-  /** Whole-bucket retention GC, lowest bucket first, stopping at the
-    * first bucket holding a young entry (buckets fill in seq order, so
-    * everything prunable is a prefix). Entry age is the writer-named ts —
-    * the same loose contract as before (a stream down longer than
-    * retention may miss entries; writer clock skew shifts an entry's
-    * pruning time by the skew, never its DELIVERY — floors are
-    * seq-based). Runs opportunistically: writers every 64th seq, readers
-    * at checkpoint-compaction cadence. Bounded: at most `maxBuckets`
-    * bucket listings per call.
-    */
-  private[graft] def gcStreamLogBuckets(fs: FileSystem, logDir: Path,
-      retainMs: Long, maxBuckets: Int = 8): Unit = {
-    val now = System.currentTimeMillis()
-    val idxs =
-      try fs.listStatus(logDir).toSeq.filter(_.isDirectory)
-        .map(s => streamBucketIdxOf(s.getPath.getName)).filter(_ >= 0).sorted
-      catch { case _: java.io.FileNotFoundException => return }
-    var checked = 0
-    idxs.iterator.takeWhile(_ => checked < maxBuckets).foreach { idx =>
-      checked += 1
-      val d = new Path(logDir, s"s$idx")
-      val (entries, mtime) =
-        try {
-          val st = fs.listStatus(d).toSeq.filter(_.isFile)
-          (st, fs.getFileStatus(d).getModificationTime)
-        } catch { case _: java.io.FileNotFoundException => return }
-      val allOld =
-        if (entries.isEmpty) now - mtime > retainMs // crashed-mkdirs remnant
-        else entries.forall { st =>
-          val ts = streamEntryTs(st.getPath.getName)
-          ts >= 0 && now - ts > retainMs
-        }
-      if (!allOld) return // first young bucket: everything above is younger
-      // the high-water must cover every pruned seq BEFORE the delete, or
-      // a fully-idle-past-retention table would restart its sequence at 0
-      // under standing readers' floors
-      val maxSeqIn = entries.map(st => streamEntrySeq(st.getPath.getName))
-        .filter(_ >= 0).maxOption.getOrElse(-1L)
-      if (maxSeqIn >= 0) raiseStreamHw(fs, logDir, maxSeqIn)
-      try fs.delete(d, true)
-      catch { case _: java.io.IOException => () }
-    }
-  }
-
-  /** Reader-side opportunistic log GC (covers tables whose writers went
-    * away): same walk as the writers', but under a NON-BLOCKING claim —
-    * skipped when an appender holds the log (its own GC pass covers it).
-    *
-    * Also heals stale stream-log journals FIRST (round-12 advisor low):
-    * the journal heal otherwise runs only on the next WRITE to the table,
-    * so an appender that crashed mid-batch (or mid-takeover-redo) on a
-    * table that then goes permanently idle would silently lose that
-    * batch's entry. The heal runs OUTSIDE the claim —
-    * [[healStreamLogJournals]] appends via [[appendStreamLog]], which
-    * takes the seq claim itself (holding it here would self-deadlock) —
-    * and skips live foreign journals, so a mid-batch appender is never
-    * raced.
-    */
-  private[graft] def gcStreamLogOpportunistic(spark: SparkSession,
-      fs: FileSystem, tablePath: String): Unit = {
-    try healStreamLogJournals(spark, fs, tablePath)
-    catch { case scala.util.control.NonFatal(_) => () } // retried next cycle
-    val logDir = new Path(tablePath, STREAM_LOG)
-    val claim = new Path(logDir, ".seq_claim")
-    val qRoot = fs.makeQualified(new Path(tablePath)).toString
-    if (MutationGate.tryClaimExclusive(spark, fs, claim, Some((fs, qRoot))))
-      try gcStreamLogBuckets(fs, logDir, streamLogRetainMs(spark))
-      finally MutationGate.removeMarker(fs, claim)
-  }
-
-  // one appendStreamLog critical section per process per log (the
-  // exclusive claim's contract is one claimant per process)
-  private val streamLogJvmLocks = new java.util.concurrent.ConcurrentHashMap[
-    String, Object]()
-
-  /** How long an appender may keep the seq claim HELD between consecutive
-    * batches (0 disables: acquire/release per batch, the round-12
-    * behavior). Holding amortizes the claim acquire/release AND the seq
-    * re-listing across a streaming writer's back-to-back batches (the
-    * round-12 verdict's q69-class regression: ~6 small-FS ops per batch);
-    * the steady held-path cost is one `.seq_want` stat + the entry write
-    * + the ownership verify + the high-water raise. A competing appender
-    * signals with the `.seq_want` marker and is yielded to at the
-    * holder's next batch — or by the ~1 s idle releaser, whichever fires
-    * first — so a writer that stops streaming cannot starve other
-    * appenders (or the reader-side GC's non-blocking claim) until process
-    * exit. A crashed/paused holder is taken over by the normal staleness
-    * arbitration: holding changes nothing there, because the claim's
-    * heartbeat stops with the process.
-    */
-  private[graft] def seqClaimHoldMs(spark: SparkSession): Long =
-    spark.conf.get("spark.graft.stream.seqClaimHoldMs", "2000").toLong
-
-  // held-across-batches seq claims: qualified logDir ->
-  // (fs, claim path, next seq, last-used ms, hold ms)
-  private val heldSeqClaims = new java.util.concurrent.ConcurrentHashMap[
-    String, (FileSystem, Path, Long, Long, Long)]()
-
-  private def releaseIdleSeqClaims(): Unit =
-    heldSeqClaims.forEach { (k, v) =>
-      if (System.currentTimeMillis() - v._4 > v._5 &&
-          heldSeqClaims.remove(k, v))
-        MutationGate.releaseIfOurs(v._1, v._2)
-    }
-
-  /** Tests/probes: force-release every held-across-batches seq claim now
-    * (the production path releases on idle via the 500 ms daemon).
-    */
-  private[graft] def releaseAllSeqClaims(): Unit =
-    heldSeqClaims.forEach { (k, v) =>
-      if (heldSeqClaims.remove(k, v)) MutationGate.releaseIfOurs(v._1, v._2)
-    }
-
-  @volatile private var seqClaimReleaserStarted = false
-  private def ensureSeqClaimReleaser(): Unit =
-    if (!seqClaimReleaserStarted) synchronized {
-      if (!seqClaimReleaserStarted) {
-        val ex = java.util.concurrent.Executors
-          .newSingleThreadScheduledExecutor { r =>
-            val t = new Thread(r, "graft-seq-claim-releaser")
-            t.setDaemon(true); t
-          }
-        ex.scheduleWithFixedDelay(() => releaseIdleSeqClaims(),
-          500, 500, java.util.concurrent.TimeUnit.MILLISECONDS)
-        seqClaimReleaserStarted = true
-      }
-    }
-
-  /** One committed-batch entry: file paths, one per line, under the next
-    * sequence's bucket. The allocation protocol (all inside the
-    * `.seq_claim` exclusive hold):
-    *
-    *  1. list the log root's `s*` buckets;
-    *  2. `seq = maxVisibleSeq + 1` — the entry itself IS the allocation
-    *     (no counter file to clobber);
-    *  3. write the entry (tmp+rename, atomic appearance);
-    *  4. re-verify the claim is still ours. A process paused past
-    *     `gate.staleMs` loses the claim to a takeover, and its late entry
-    *     may duplicate a successor's seq or sit below the readers' floor
-    *     — so on verify failure the whole allocation REDOES under a fresh
-    *     claim (the retry entry carries the same file list; the stale
-    *     twin is harmless: readers skip processed seqs and dedup by file
-    *     path).
-    *
-    * Entry-write-before-release means verified entries appear in seq
-    * order with no gaps (each allocation is its predecessor + 1), which
-    * is what makes the reader's contiguous-seq floor exact —
-    * clock-free, unlike the pre-round-12 wall-clock floor window.
-    * Entries may still OVERLAP across appenders after crash-heals; the
-    * source dedups by path. Cost: ~6 small-FS ops on a fresh acquisition;
-    * a streaming writer's back-to-back batches keep the claim and the
-    * next seq cached ([[seqClaimHoldMs]]) and pay only the want-stat +
-    * entry write + verify + high-water raise. Serialized across the
-    * table's appender processes either way.
-    *
-    * WHY THE READER'S SEQ-KEYED SKIP CANNOT DROP A VERIFIED ENTRY
-    * (duplicate-seq twins): a twin at seq N exists only on the takeover
-    * path — the paused loser wrote its entry AFTER the successor claimed,
-    * allocated N, wrote, and VERIFIED (the loser's verify then fails and
-    * it redoes at a fresh seq). Ordering is forced by the protocol: the
-    * successor can allocate N only after the loser's claim was taken over
-    * (stale), and the loser's twin write happens after its pause — i.e.
-    * strictly after the successor's verified entry at N is already
-    * visible. So a reader listing seq N either sees the verified entry
-    * first (processes it; the later twin is skipped by
-    * `processedSeqs.contains(N)` — its files re-arrive via the loser's
-    * redo at a fresh seq, or via the journal heal, now also run from the
-    * reader-side GC pass) or sees both in one listing (processes one,
-    * dedups the other's files by path plus the redo/heal). There is no
-    * interleaving where the TWIN is processed in an earlier trigger and
-    * the VERIFIED entry at the same seq is then skipped, because the twin
-    * cannot exist before the verified entry does. Pinned by
-    * CatalogStreamSpec's winner-commits-then-loser-twin case.
-    */
-  private[graft] def appendStreamLog(spark: SparkSession, fs: FileSystem,
-      tablePath: String, files: Seq[String]): Unit = {
-    if (files.isEmpty) return
-    val logDir = new Path(tablePath, STREAM_LOG)
-    val qRoot = fs.makeQualified(new Path(tablePath)).toString
-    val qLog = fs.makeQualified(logDir).toString
-    val lock = streamLogJvmLocks.computeIfAbsent(qLog, _ => new Object)
-    lock.synchronized {
-      val claim = new Path(logDir, ".seq_claim")
-      val want = new Path(logDir, ".seq_want")
-      val holdMs = seqClaimHoldMs(spark)
-      var committed = false
-      while (!committed) {
-        // held-across-batches fast path (round 13, [[seqClaimHoldMs]]):
-        // the previous batch kept the claim and the next seq — skip both
-        // the acquire and the log re-listing. A competing appender's
-        // `.seq_want` yields the hold here; the post-write verify still
-        // guards the cached path like any other (a takeover while idle
-        // redoes under a fresh claim, the documented twin protocol).
-        val cached = Option(heldSeqClaims.remove(qLog)).flatMap {
-          case (_, _, next, _, _) =>
-            // holdMs <= 0 mid-session = holding just turned off: drop the
-            // cache and take the fresh-listing path like any contender
-            val wanted = holdMs <= 0 || {
-              try { fs.getFileStatus(want); true }
-              catch { case _: java.io.FileNotFoundException => false
-                      case _: java.io.IOException => true }
-            }
-            if (wanted) { MutationGate.releaseIfOurs(fs, claim); None }
-            else Some(next)
-        }
-        if (cached.isEmpty) {
-          // acquisition loop that keeps the yield request STANDING: the
-          // acquirer consumes `.seq_want` on winning, so a blocked
-          // claimExclusive waiter whose one-shot want was consumed by a
-          // racing winner would starve under a held claim with
-          // back-to-back batches (continuous two-writer liveness) — each
-          // loser here re-creates the want within one poll instead, and
-          // two continuous writers ALTERNATE batches. A stale want
-          // (crashed waiter) cannot pin the log in per-batch mode: the
-          // next acquirer consumes it.
-          val deadline =
-            System.currentTimeMillis() + MutationGate.timeoutMs(spark)
-          var won = false
-          while (!won) {
-            won = MutationGate.tryClaimExclusive(spark, fs, claim,
-              Some((fs, qRoot)))
-            if (!won) {
-              if (System.currentTimeMillis() > deadline)
-                throw new IllegalStateException(
-                  s"timed out contending for stream-log seq claim $claim")
-              val wantAbsent =
-                try { fs.getFileStatus(want); false }
-                catch { case _: java.io.FileNotFoundException => true
-                        case _: java.io.IOException => false }
-              if (wantAbsent)
-                try writeSmallFile(fs, want, processId)
-                catch { case _: java.io.IOException => () }
-              Thread.sleep(MutationGate.pollMs(spark))
-            }
-          }
-          try fs.delete(want, false)
-          catch { case _: java.io.IOException => () }
-        }
-        // any failure inside the hold must RELEASE (the claim is
-        // heartbeated — a leaked one from a thrown exception would block
-        // every other appender for this JVM's lifetime)
-        try {
-          val seq = cached.getOrElse(streamLogHighSeq(fs, tablePath) + 1)
-          writeSmallFile(fs,
-            new Path(new Path(logDir, streamLogBucketOf(seq)),
-              streamEntryName(seq, System.currentTimeMillis())),
-            files.mkString("\n"))
-          // a crash here: entry visible, high-water behind by one, claim
-          // released by the catch below, journal still pending — the next
-          // logging batch heals (re-emits; readers dedup by path)
-          crashPoint("write.streamlog.after_entry")
-          val stillOurs =
-            try MutationGate.parse(fs, fs.getFileStatus(claim))
-              .exists(_.owner == processId)
-            catch { case _: java.io.IOException => false }
-          if (stillOurs) {
-            committed = true
-            raiseStreamHw(fs, logDir, seq)
-            if (seq % 64 == 0)
-              gcStreamLogBuckets(fs, logDir, streamLogRetainMs(spark))
-            if (holdMs > 0) {
-              ensureSeqClaimReleaser()
-              heldSeqClaims.put(qLog,
-                (fs, claim, seq + 1, System.currentTimeMillis(), holdMs))
-            } else MutationGate.removeMarker(fs, claim)
-          } else MutationGate.disownMarker(fs, claim) // taken over: redo
-        } catch {
-          case t: Throwable =>
-            MutationGate.releaseIfOurs(fs, claim)
-            throw t
-        }
-      }
-    }
-  }
-
-  /** Journal the INTENT of a stream-log entry before the batch's write
-    * job: touched final dirs + their pre-listing, as the payload of a
-    * heartbeated marker under `_graft_stream_log/.pending/`. A crash
-    * between the parquet job commit and [[appendStreamLog]] would
-    * otherwise leave the batch's committed files permanently absent from
-    * the log — the catalog-backed source snapshots only at first start,
-    * so a catalog stream would silently diverge from the table (round-10
-    * advisor finding). [[healStreamLogJournals]] re-diffs and emits the
-    * missing entry on the next logging batch.
-    */
-  private[sources] def journalStreamLog(fs: FileSystem, tablePath: String,
-      dirs: Seq[Path], pre: Set[String]): Path = {
-    val p = new Path(new Path(tablePath, STREAM_LOG),
-      s".pending/j_${System.currentTimeMillis()}_${java.util.UUID.randomUUID().toString.take(8)}")
-    MutationGate.createMarker(fs, p, Some(
-      (dirs.map(d => s"d:$d") ++ pre.toSeq.sorted.map(f => s"f:$f"))
-        .mkString("\n")))
-    p
-  }
-
-  /** Emit the stream-log entries of crashed (or same-process failed)
-    * batches: every `.pending` journal whose owner is this process (the
-    * write lock serializes our batches, so an own journal found at batch
-    * start is never in flight) or whose heartbeat went stale is re-diffed
-    * — current files of the journaled dirs minus the journaled
-    * pre-listing — and appended as a normal entry. Over-inclusive is safe
-    * (later batches' files carry their own entries; the source dedups by
-    * path); a live FOREIGN journal is an appender mid-batch — skipped.
-    * Called once per logging batch; one listing of the tiny pending dir.
-    */
-  private[sources] def healStreamLogJournals(spark: SparkSession,
-      fs: FileSystem, tablePath: String): Unit = {
-    val dir = new Path(new Path(tablePath, STREAM_LOG), ".pending")
-    val sts =
-      try fs.listStatus(dir).toSeq.filter(_.isFile)
-      catch { case _: java.io.FileNotFoundException => return }
-    val now = System.currentTimeMillis()
-    sts.foreach { st =>
-      val m = MutationGate.parse(fs, st)
-      val ours = m.exists(_.owner == processId)
-      val live = m.exists(_.live(now, MutationGate.staleMs(spark)))
-      if (ours || !live) {
-        val lines = MutationGate.payloadOf(fs, st.getPath)
-          .linesIterator.toSeq
-        val dirs = lines.filter(_.startsWith("d:"))
-          .map(s => new Path(s.stripPrefix("d:")))
-        val pre = lines.filter(_.startsWith("f:"))
-          .map(_.stripPrefix("f:")).toSet
-        val fresh = dirs.flatMap { d =>
-          listDataFilesRec(
-            d.getFileSystem(spark.sparkContext.hadoopConfiguration), d)
-        }.filterNot(pre)
-        appendStreamLog(spark, fs, tablePath, fresh)
-        MutationGate.removeMarker(fs, st.getPath)
-      }
-    }
-  }
-
   /** The qualified PRIMARY table root owning a chunk dir: the parent
     * itself, or — for tablespace-resident chunks — the pointer-home the
     * [[PRIMARY_MARKER]] records.
@@ -4435,7 +3903,7 @@ object Hypertable {
     if (dir != null) { new java.io.File(dir, s".${f.getName}.crc").delete(); () }
   }
 
-  private[graft] def writeSmallFile(fs: FileSystem, p: Path, s: String): Unit =
+  def writeSmallFile(fs: FileSystem, p: Path, s: String): Unit =
     localFileOf(fs, p) match {
       case Some(f) =>
         val dir = f.getParentFile
@@ -4492,7 +3960,7 @@ object Hypertable {
   private[graft] def touchFile(fs: FileSystem, p: Path): Unit =
     writeSmallFileDirect(fs, p, "")
 
-  private[graft] def readSmallFile(fs: FileSystem, p: Path): String =
+  def readSmallFile(fs: FileSystem, p: Path): String =
     localFileOf(fs, p) match {
       case Some(f) =>
         try new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")

@@ -69,8 +69,8 @@ private[graft] object MutationGate {
   private[graft] def timeoutMs(spark: SparkSession): Long =
     spark.conf.get("spark.graft.gate.timeoutMs", "600000").toLong
 
-  private[graft] def pollMs(spark: SparkSession): Long =
-    spark.conf.get("spark.graft.gate.pollMs", "50").toLong
+  /** Gate wait poll interval. */
+  private[graft] val PollMs = 50L
 
   /** Settle window for exclusive-marker claims on stores without an
     * atomic create-exclusive (raw object stores): after winning the
@@ -184,7 +184,7 @@ private[graft] object MutationGate {
     try parse(fs, fs.getFileStatus(p))
     catch { case _: java.io.IOException => None }
 
-  private[sources] def parse(fs: FileSystem,
+  private[graft] def parse(fs: FileSystem,
       st: org.apache.hadoop.fs.FileStatus): Option[Marker] =
     try {
       val lines = readSmallFile(fs, st.getPath).linesIterator.toSeq
@@ -202,7 +202,7 @@ private[graft] object MutationGate {
   /** The payload lines (4th onward) of a held-style marker file; empty
     * string when none or unreadable.
     */
-  private[sources] def payloadOf(fs: FileSystem, p: Path): String =
+  private[graft] def payloadOf(fs: FileSystem, p: Path): String =
     try readSmallFile(fs, p).linesIterator.drop(3).mkString("\n")
     catch { case _: java.io.IOException => "" }
 
@@ -251,7 +251,7 @@ private[graft] object MutationGate {
     * that discovered (post-write verify) its claim was taken over: the
     * file on disk is the new holder's now.
     */
-  private[sources] def disownMarker(fs: FileSystem, p: Path): Unit = {
+  private[graft] def disownMarker(fs: FileSystem, p: Path): Unit = {
     held.remove(fs.makeQualified(p).toString); ()
   }
 
@@ -259,7 +259,7 @@ private[graft] object MutationGate {
     * process — a taken-over marker is the new holder's file and must not
     * be deleted out from under it (it is only disowned).
     */
-  private[sources] def releaseIfOurs(fs: FileSystem, p: Path): Unit = {
+  private[graft] def releaseIfOurs(fs: FileSystem, p: Path): Unit = {
     val ours =
       try readMarker(fs, p).exists(_.owner == processId)
       catch { case scala.util.control.NonFatal(_) => false }
@@ -540,7 +540,7 @@ private[graft] object MutationGate {
           if (now > deadline)
             throw new IllegalStateException(
               s"timed out waiting for exclusive marker $p held by ${m.owner}")
-          Thread.sleep(pollMs(spark))
+          Thread.sleep(PollMs)
         case other =>
           other.foreach(m => arbitrateStale(spark, fs, p, m))
           val created = System.currentTimeMillis()
@@ -579,7 +579,7 @@ private[graft] object MutationGate {
             if (System.currentTimeMillis() > deadline)
               throw new IllegalStateException(
                 s"timed out contending for exclusive marker $p")
-            Thread.sleep(pollMs(spark))
+            Thread.sleep(PollMs)
           }
       }
     }
@@ -717,7 +717,7 @@ private[graft] object MutationGate {
           s"timed out draining append intents under $dir — an appender " +
             "batch has been in flight longer than " +
             s"spark.graft.gate.timeoutMs (${timeoutMs(spark)} ms)")
-      Thread.sleep(pollMs(spark))
+      Thread.sleep(PollMs)
     }
   }
 
@@ -764,7 +764,7 @@ private[graft] object MutationGate {
                 s"timed out waiting for chunk seal(s) ${names.mkString(",")} " +
                   s"under $sealDir — a rewrite has held its seal longer " +
                   s"than spark.graft.gate.timeoutMs (${timeoutMs(spark)} ms)")
-            Thread.sleep(pollMs(spark))
+            Thread.sleep(PollMs)
           }
           intent = createMarker(fs, intentP)
         }

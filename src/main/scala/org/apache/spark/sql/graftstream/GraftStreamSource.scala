@@ -11,11 +11,12 @@ import org.apache.spark.sql.execution.streaming.runtime.{LongOffset, SerializedO
 import org.apache.spark.sql.sources.{DataSourceRegister, StreamSourceProvider}
 import org.apache.spark.sql.types.StructType
 
-import graft.streaming.CatalogStreamCore
+import graft.sources.Hypertable.{readSmallFile, writeSmallFile}
+import graft.streaming.StreamLog
 
 /** V1 Structured Streaming source that tails a graft hypertable's
-  * `_graft_stream_log/` append feed instead of re-listing the table's
-  * files every micro-batch (see [[CatalogStreamCore]] for the why; this
+  * change feed instead of re-listing the table's files every
+  * micro-batch (see [[StreamLog]] for the why and the log's format; this
   * class sits under `org.apache.spark.sql` only for the `private[sql]`
   * streaming SPI — Source, DataSource, LogicalRelation).
   *
@@ -37,9 +38,9 @@ import graft.streaming.CatalogStreamCore
   *    concurrent appenders can both list a racing file — harmless here).
   *  - BOUNDED state (round 11): Spark's commit() callback drives a
   *    rolling compaction — every `spark.graft.stream.compactEvery`
-  *    commits, the seen-set (minus entries older than log retention +
-  *    floor skew, which can never reappear in the log) is folded into
-  *    one `c<id>` file and the committed `b<id>` files are deleted, the
+  *    commits, the seen-set (minus entries older than log retention + a
+  *    writer-clock pad, which can never reappear in the log) is folded
+  *    into one `c<id>` file and the committed `b<id>` files are deleted, the
   *    FileStreamSource compact-file pattern. Restart reads the latest
   *    compact + the newer b files — and reaps any b/c orphans a
   *    compaction crash left at/below the compact id — so neither memory
@@ -59,9 +60,9 @@ import graft.streaming.CatalogStreamCore
   *    batch — batch size is bounded by arrival rate between triggers;
   *    AvailableNow latches a single target offset, which this satisfies
   *    in one pass.
-  *  - a stream down longer than `spark.graft.stream.logRetainMs` (7 days
-  *    default) can miss pruned entries — restart with a fresh checkpoint
-  *    to resnapshot.
+  *  - a stream down longer than the log's retention (7 days default,
+  *    [[StreamLog.streamLogRetainMs]]) can miss pruned entries — restart
+  *    with a fresh checkpoint to resnapshot.
   */
 class GraftStreamSourceProvider extends StreamSourceProvider
     with DataSourceRegister {
@@ -83,7 +84,7 @@ class GraftStreamSourceProvider extends StreamSourceProvider
     memo match {
       case Some((p, s, r)) if p == parameters("path") && s == schema => r
       case _ =>
-        val r = CatalogStreamCore.schemas(
+        val r = StreamLog.schemas(
           sqlContext.sparkSession, parameters("path"), schema)
         memo = Some((parameters("path"), schema, r))
         r
@@ -112,10 +113,11 @@ class GraftStreamSource(spark: classic.SparkSession, table: String,
     startingPosition: String,
     handle: Option[graft.sources.Hypertable] = None) extends Source {
 
-  private val metaFs = CatalogStreamCore.fsOf(spark, metadataPath)
+  private val metaFs = new Path(metadataPath)
+    .getFileSystem(spark.sparkContext.hadoopConfiguration)
   private val metaDir = new Path(metadataPath, "graft-batches")
   // file path -> persist-time wall clock (the age-out key: a file older
-  // than log retention + floor skew can never reappear in the log)
+  // than log retention + the writer-clock pad can never reappear in the log)
   private val seen = new java.util.concurrent.ConcurrentHashMap[
     String, java.lang.Long]()
   private var batchId: Long = -1L
@@ -136,12 +138,11 @@ class GraftStreamSource(spark: classic.SparkSession, table: String,
     spark.conf.get("spark.graft.stream.compactEvery", "10").toInt
 
   private def seenCutoff(now: Long): Long =
-    now - (CatalogStreamCore.logRetainMs(spark) +
-      CatalogStreamCore.floorSkewMs(spark))
+    now - (StreamLog.streamLogRetainMs(spark) + StreamLog.SeenAgeOutPadMs)
 
   // make sure writers start logging from now on, even before the first
   // trigger (Hypertable.readStream also enables eagerly at plan time)
-  CatalogStreamCore.enableLog(spark, table)
+  StreamLog.enableStreamLog(spark, table)
 
   // one reader-side GC + journal-heal pass at START (round-12 advisor
   // low): an appender that crashed mid-batch leaves its committed files'
@@ -151,7 +152,7 @@ class GraftStreamSource(spark: classic.SparkSession, table: String,
   // compaction cadence (compactState); here it covers the
   // restart-after-writer-death case. Bounded: one listing of the tiny
   // pending dir + ≤8 bucket listings, under a non-blocking claim.
-  try CatalogStreamCore.gcExpiredBuckets(spark, table)
+  try StreamLog.gcExpiredBuckets(spark, table)
   catch { case scala.util.control.NonFatal(_) => () }
 
   // rebuild checkpointed state: latest compact file (if any) + every
@@ -164,7 +165,7 @@ class GraftStreamSource(spark: classic.SparkSession, table: String,
     metaFs.mkdirs(metaDir)
     def readState(p: Path, defaultTs: Long): Unit = {
       var ts = defaultTs
-      CatalogStreamCore.readText(metaFs, p)
+      readSmallFile(metaFs, p)
         .linesIterator.filter(_.nonEmpty).foreach { l =>
           if (l.startsWith("#ts="))
             ts = scala.util.Try(l.stripPrefix("#ts=").toLong).getOrElse(ts)
@@ -235,10 +236,10 @@ class GraftStreamSource(spark: classic.SparkSession, table: String,
     val snapMarker = new Path(metaDir, "snapshot")
     if (latestCompact.isEmpty && existing.isEmpty &&
         !metaFs.exists(snapMarker)) {
-      floorSeq = CatalogStreamCore.logHighSeq(spark, table)
-      val snap = CatalogStreamCore.snapshotFiles(spark, table, handle)
+      floorSeq = StreamLog.logHighSeq(spark, table)
+      val snap = StreamLog.snapshotFiles(spark, table, handle)
       if (startingPosition == "latest") {
-        CatalogStreamCore.writeText(metaFs, snapMarker,
+        writeSmallFile(metaFs, snapMarker,
           (s"#seq=$floorSeq" +: snap).mkString("\n"))
         val now = System.currentTimeMillis()
         snap.foreach(f => seen.put(f, now))
@@ -246,7 +247,7 @@ class GraftStreamSource(spark: classic.SparkSession, table: String,
         // batch 0 before the marker: a crash between the two leaves a
         // batch (no re-snapshot, nothing lost), never a bare marker
         if (snap.nonEmpty) { persistBatch(0L, snap); batchId = 0L }
-        CatalogStreamCore.writeText(metaFs, snapMarker, s"#seq=$floorSeq")
+        writeSmallFile(metaFs, snapMarker, s"#seq=$floorSeq")
       }
     } else if (metaFs.exists(snapMarker)) {
       // start floor, plus the `latest`-start baseline: files of the
@@ -266,7 +267,7 @@ class GraftStreamSource(spark: classic.SparkSession, table: String,
     // the whole retained log once
     val pseqs = processedSeqs.toArray(Array.empty[java.lang.Long])
       .map(s => s"#pseq=$s").toSeq
-    CatalogStreamCore.writeText(metaFs, new Path(metaDir, s"b$id"),
+    writeSmallFile(metaFs, new Path(metaDir, s"b$id"),
       (s"#ts=$now" +: s"#seq=$floorSeq" +: (pseqs ++ files)).mkString("\n"))
     files.foreach(f => seen.put(f, now))
   }
@@ -288,7 +289,7 @@ class GraftStreamSource(spark: classic.SparkSession, table: String,
     seen.forEach { (f, ts) =>
       sb.append(ts).append('\t').append(f).append('\n')
     }
-    CatalogStreamCore.writeText(metaFs, new Path(metaDir, s"c$cid"),
+    writeSmallFile(metaFs, new Path(metaDir, s"c$cid"),
       sb.toString)
     val names =
       try metaFs.listStatus(metaDir).toSeq.filter(_.isFile)
@@ -306,29 +307,26 @@ class GraftStreamSource(spark: classic.SparkSession, table: String,
     }
     // log-side retention GC at the same cadence (writers also run it;
     // this covers tables whose writers went away)
-    try CatalogStreamCore.gcExpiredBuckets(spark, table)
+    try StreamLog.gcExpiredBuckets(spark, table)
     catch { case scala.util.control.NonFatal(_) => () }
   }
 
   override def schema: StructType = outputSchema
 
   override def getOffset: Option[Offset] = synchronized {
-    val (entries, minBucket) = CatalogStreamCore
-      .newLogEntries(spark, table, floorSeq, processedSeqs)
+    val (entries, prunedHigh) =
+      StreamLog.newLogEntries(spark, table, floorSeq, processedSeqs)
     val fresh = entries.flatMap { case (_, seq, files) =>
       processedSeqs.add(seq)
       files.filterNot(seen.containsKey)
     }.distinct
-    // retention-pruned history: buckets below the lowest existing one are
-    // gone — snap the floor there (their seqs can never surface again;
-    // this is the documented down-longer-than-retention miss, and it is
-    // what keeps a pruning-induced gap from stalling the floor forever)
-    if (minBucket >= 0) {
-      val snap = minBucket * CatalogStreamCore.bucketSeqs - 1
-      if (snap > floorSeq) {
-        floorSeq = snap
-        processedSeqs.removeIf(_ <= floorSeq)
-      }
+    // retention-pruned history: seqs at or below `prunedHigh` are gone —
+    // snap the floor there (they can never surface again; this is the
+    // documented down-longer-than-retention miss, and it is what keeps a
+    // pruning-induced gap from stalling the floor forever)
+    if (prunedHigh > floorSeq) {
+      floorSeq = prunedHigh
+      processedSeqs.removeIf(_ <= floorSeq)
     }
     // exact, clock-free floor advance: only across seqs actually processed
     // (verified entries are consecutive, so a persistent hole can only be
@@ -350,7 +348,7 @@ class GraftStreamSource(spark: classic.SparkSession, table: String,
     val from = start.map(idOf).getOrElse(-1L) + 1
     val to = idOf(end)
     val files = (from to to).flatMap { id =>
-      try CatalogStreamCore.readText(metaFs,
+      try readSmallFile(metaFs,
         new Path(metaDir, s"b$id")).linesIterator
         .filter(l => l.nonEmpty && !l.startsWith("#")).toSeq
       catch { case _: java.io.FileNotFoundException => Nil }

@@ -450,9 +450,9 @@ class RealProcessIsolationSpec extends AnyFunSuite {
       val logDir = new Path(s"$dir/ht/_graft_stream_log")
       val seqs = fs.listStatus(logDir)
         .filter(d => d.isDirectory &&
-          Hypertable.streamBucketIdxOf(d.getPath.getName) >= 0)
+          graft.streaming.StreamLog.streamBucketIdxOf(d.getPath.getName) >= 0)
         .flatMap(d => fs.listStatus(d.getPath)).filter(_.isFile)
-        .map(st => Hypertable.streamEntrySeq(st.getPath.getName))
+        .map(st => graft.streaming.StreamLog.streamEntrySeq(st.getPath.getName))
         .sorted.toSeq
       assert(seqs === (0L until seqs.size).toSeq,
         s"cross-process seq allocation must be consecutive: $seqs")

@@ -303,10 +303,10 @@ class CatalogStreamSpec extends AnyFunSuite {
     val fs = fsOf(tableDir)
     val log = logDirOf(tableDir)
     fs.listStatus(log).filter(d => d.isDirectory &&
-        Hypertable.streamBucketIdxOf(d.getPath.getName) >= 0).foreach { d =>
+        StreamLog.streamBucketIdxOf(d.getPath.getName) >= 0).foreach { d =>
       fs.listStatus(d.getPath).filter(_.isFile).foreach { st =>
         val name = st.getPath.getName
-        if (Hypertable.streamEntrySeq(name) == seq) {
+        if (StreamLog.streamEntrySeq(name) == seq) {
           val parts = name.split('_')
           val ts = parts(2).toLong + deltaMs
           fs.rename(st.getPath, new org.apache.hadoop.fs.Path(d.getPath,
@@ -332,19 +332,19 @@ class CatalogStreamSpec extends AnyFunSuite {
     val fs = fsOf(s"$dir/ht")
     val logDir = logDirOf(s"$dir/ht")
     val buckets = fs.listStatus(logDir).filter(s =>
-      s.isDirectory && Hypertable.streamBucketIdxOf(s.getPath.getName) >= 0)
+      s.isDirectory && StreamLog.streamBucketIdxOf(s.getPath.getName) >= 0)
     assert(buckets.nonEmpty, "append entries must land in seq-bucket subdirs")
     val entries = buckets.flatMap(b => fs.listStatus(b.getPath))
       .filter(_.getPath.getName.startsWith("e_"))
     val seqs = entries.map(st =>
-      Hypertable.streamEntrySeq(st.getPath.getName)).sorted.toSeq
+      StreamLog.streamEntrySeq(st.getPath.getName)).sorted.toSeq
     assert(seqs === (0L until seqs.size).toSeq,
       s"verified entries must be consecutive from 0: $seqs")
     // a pre-sequence root-flat entry with the SAME file list: only seq
     // buckets are read or allocated from, so it changes nothing
-    val body = graft.streaming.CatalogStreamCore.readText(fs,
+    val body = Hypertable.readSmallFile(fs,
       entries.last.getPath)
-    graft.streaming.CatalogStreamCore.writeText(fs,
+    Hypertable.writeSmallFile(fs,
       new org.apache.hadoop.fs.Path(logDir,
         s"e_${System.currentTimeMillis()}_legacy1"), body)
     drainTo(ht, ckpt, seen)
@@ -353,14 +353,15 @@ class CatalogStreamSpec extends AnyFunSuite {
       "the reader must not consume a pre-sequence entry")
     // a fresh-listing write (no held claim) allocates the next seq from
     // the buckets alone
-    spark.conf.set("spark.graft.stream.seqClaimHoldMs", "0")
+    StreamLog.perBatchClaimsForTests = true
+    StreamLog.releaseAllSeqClaims()
     try ht.write(late.limit(1)
       .withColumn("event_id", col("event_id") + 2000000))
-    finally spark.conf.unset("spark.graft.stream.seqClaimHoldMs")
+    finally StreamLog.perBatchClaimsForTests = false
     val seqsAfter = fs.listStatus(logDir).filter(s =>
-        s.isDirectory && Hypertable.streamBucketIdxOf(s.getPath.getName) >= 0)
+        s.isDirectory && StreamLog.streamBucketIdxOf(s.getPath.getName) >= 0)
       .flatMap(b => fs.listStatus(b.getPath))
-      .map(st => Hypertable.streamEntrySeq(st.getPath.getName)).sorted.toSeq
+      .map(st => StreamLog.streamEntrySeq(st.getPath.getName)).sorted.toSeq
     assert(seqsAfter === (0L to seqs.size.toLong).toSeq,
       s"the next entry must take the next seq: $seqsAfter")
     drainTo(ht, ckpt, seen)
@@ -428,9 +429,9 @@ class CatalogStreamSpec extends AnyFunSuite {
       val orphanB = new java.io.File(metaDir, s"b${math.max(0, cid - 1)}")
       val orphanC = new java.io.File(metaDir, s"c${math.max(0, cid - 1)}")
       val mfs = fsOf(metaDir.toString)
-      graft.streaming.CatalogStreamCore.writeText(mfs,
+      Hypertable.writeSmallFile(mfs,
         new org.apache.hadoop.fs.Path(orphanB.toString), "#ts=1\n#seq=-1")
-      graft.streaming.CatalogStreamCore.writeText(mfs,
+      Hypertable.writeSmallFile(mfs,
         new org.apache.hadoop.fs.Path(orphanC.toString), "#seq=-1")
       ht.write(slice(2))
       drainTo(ht, ckpt, seen) // restart
@@ -454,7 +455,7 @@ class CatalogStreamSpec extends AnyFunSuite {
     // per-batch claims: the test splices a synthetic frontier entry into
     // the log between writes — external log surgery a held claim's cached
     // allocation is (correctly) blind to
-    spark.conf.set("spark.graft.stream.seqClaimHoldMs", "0")
+    StreamLog.perBatchClaimsForTests = true
     try {
       def slice(k: Int) = events.where(pmod(col("event_id"), lit(4)) === k)
       ht.write(slice(0))
@@ -469,17 +470,17 @@ class CatalogStreamSpec extends AnyFunSuite {
       val fs = fsOf(s"$dir/ht")
       val logDir = logDirOf(s"$dir/ht")
       def bucketDirs = fs.listStatus(logDir).filter(d => d.isDirectory &&
-        Hypertable.streamBucketIdxOf(d.getPath.getName) >= 0)
+        StreamLog.streamBucketIdxOf(d.getPath.getName) >= 0)
       val s0entries = fs.listStatus(
         new org.apache.hadoop.fs.Path(logDir, "s0")).filter(_.isFile)
       val maxSeqBefore = s0entries
-        .map(st => Hypertable.streamEntrySeq(st.getPath.getName)).max
+        .map(st => StreamLog.streamEntrySeq(st.getPath.getName)).max
       (0L to maxSeqBefore).foreach(s =>
         skewEntry(s"$dir/ht", s, -8L * 24 * 3600 * 1000))
-      val body = graft.streaming.CatalogStreamCore.readText(fs,
+      val body = Hypertable.readSmallFile(fs,
         fs.listStatus(new org.apache.hadoop.fs.Path(logDir, "s0"))
           .filter(_.isFile).head.getPath)
-      graft.streaming.CatalogStreamCore.writeText(fs,
+      Hypertable.writeSmallFile(fs,
         new org.apache.hadoop.fs.Path(logDir,
           s"s1/${"e_%012d".format(512L)}_${System.currentTimeMillis()}_syn1"),
         body)
@@ -491,12 +492,12 @@ class CatalogStreamSpec extends AnyFunSuite {
         s"the expired bucket must be GC'd whole: ${bucketDirs.map(_.getPath).toSeq}")
       val newSeqs = bucketDirs
         .flatMap(d => fs.listStatus(d.getPath)).filter(_.isFile)
-        .map(st => Hypertable.streamEntrySeq(st.getPath.getName))
+        .map(st => StreamLog.streamEntrySeq(st.getPath.getName))
       assert(newSeqs.forall(_ >= 512L),
         s"post-frontier seqs must stay above pruned history: ${newSeqs.toSeq}")
       // the floor snaps past the pruned bucket on the next pass and the
       // standing checkpoint still receives later appends exactly once
-      val hw = graft.streaming.CatalogStreamCore.readText(fs,
+      val hw = Hypertable.readSmallFile(fs,
         new org.apache.hadoop.fs.Path(logDir, "_hw")).trim.toLong
       assert(hw >= 513L, s"high-water must cover every allocated seq: $hw")
       drainTo(ht, ckpt, seen)
@@ -507,7 +508,7 @@ class CatalogStreamSpec extends AnyFunSuite {
         "a post-GC append was floored out by a restarted sequence")
     } finally {
       spark.conf.unset("spark.graft.stream.compactEvery")
-      spark.conf.unset("spark.graft.stream.seqClaimHoldMs")
+      StreamLog.perBatchClaimsForTests = false
     }
   }
 
@@ -546,26 +547,26 @@ class CatalogStreamSpec extends AnyFunSuite {
     // (first attempt) and the verified retry, on consecutive seqs
     val entries = fs.listStatus(logDir)
       .filter(d => d.isDirectory &&
-        Hypertable.streamBucketIdxOf(d.getPath.getName) >= 0)
+        StreamLog.streamBucketIdxOf(d.getPath.getName) >= 0)
       .flatMap(d => fs.listStatus(d.getPath)).filter(_.isFile)
       .map(_.getPath)
     val bodies = entries.map(p =>
-      graft.streaming.CatalogStreamCore.readText(fs, p).linesIterator
+      Hypertable.readSmallFile(fs, p).linesIterator
         .filter(_.nonEmpty).toSet)
     // slice 0 predates the log (the snapshot covers it), so the log holds
     // exactly the first attempt (stale twin) and the verified retry, on
     // consecutive seqs with identical file lists
     assert(entries.length === 2,
       s"expected twin + retry: ${entries.map(_.getName).toSeq}")
-    assert(entries.map(p => Hypertable.streamEntrySeq(p.getName)).sorted
+    assert(entries.map(p => StreamLog.streamEntrySeq(p.getName)).sorted
       .toSeq === Seq(0L, 1L))
     assert(bodies.distinct.length === 1,
       "twin and retry must carry the same file list")
     // round 13: the redo's fresh claim may be RETAINED for amortization
-    // (seqClaimHoldMs) — released on idle; what matters is it is OURS
+    // (SeqClaimHoldMs) — released on idle; what matters is it is OURS
     // (never the stale taker-over's leftover)
     assert(!fs.exists(claim) ||
-      graft.streaming.CatalogStreamCore.readText(fs, claim)
+      Hypertable.readSmallFile(fs, claim)
         .startsWith(Hypertable.processId),
       "a retained claim must be this process's own")
     drainTo(ht, ckpt, seen)
@@ -661,14 +662,14 @@ class CatalogStreamSpec extends AnyFunSuite {
     // (write.before_sync crashes between the job commit and the append);
     // its journal is removed — the loser is PAUSED, not crashed, and its
     // redo below is the delivery path under test
-    val pre = Hypertable.listDataFilesRec(fs, root).toSet
+    val pre = StreamLog.listDataFilesRec(fs, root).toSet
     Hypertable.crashHook = name =>
       if (name == "write.before_sync")
         throw new Hypertable.InjectedCrash(name)
     try intercept[Hypertable.InjectedCrash] { ht.write(slice(2)) }
     finally Hypertable.crashHook = _ => ()
     fs.delete(new org.apache.hadoop.fs.Path(logDir, ".pending"), true)
-    val g = (Hypertable.listDataFilesRec(fs, root).toSet -- pre).toSeq.sorted
+    val g = (StreamLog.listDataFilesRec(fs, root).toSet -- pre).toSeq.sorted
     assert(g.nonEmpty, "the crashed job must have committed files")
     // the loser wakes and writes its TWIN at the winner's seq 0 — same
     // seq, DIFFERENT file list than the verified entry the reader already
@@ -676,9 +677,9 @@ class CatalogStreamSpec extends AnyFunSuite {
     // exist after the winner's verified entry was visible), so the
     // seq-keyed skip can never drop a verified entry — only the twin.
     val now = System.currentTimeMillis()
-    graft.streaming.CatalogStreamCore.writeText(fs,
+    Hypertable.writeSmallFile(fs,
       new org.apache.hadoop.fs.Path(logDir,
-        s"s0/${Hypertable.streamEntryName(0L, now)}"), g.mkString("\n"))
+        s"s0/${StreamLog.streamEntryName(0L, now)}"), g.mkString("\n"))
     drainTo(ht, ckpt, seen)
     val mid = seen.toArray(Array.empty[java.lang.Long]).map(_.toLong)
     assert(mid.length === mid.distinct.length,
@@ -687,9 +688,9 @@ class CatalogStreamSpec extends AnyFunSuite {
     assert(!mid.contains(gIds.head),
       "the twin alone delivers nothing — delivery is the redo's job")
     // the loser's REDO under a fresh claim: same files, fresh seq
-    graft.streaming.CatalogStreamCore.writeText(fs,
+    Hypertable.writeSmallFile(fs,
       new org.apache.hadoop.fs.Path(logDir,
-        s"s0/${Hypertable.streamEntryName(1L, now)}"), g.mkString("\n"))
+        s"s0/${StreamLog.streamEntryName(1L, now)}"), g.mkString("\n"))
     drainTo(ht, ckpt, seen)
     val got = seen.toArray(Array.empty[java.lang.Long]).map(_.toLong)
     assert(got.length === got.distinct.length,
@@ -747,21 +748,21 @@ class CatalogStreamSpec extends AnyFunSuite {
     val claim = new org.apache.hadoop.fs.Path(logDir, ".seq_claim")
     ht.write(slice(1)) // seq 0, fresh acquire
     assert(fs.exists(claim) &&
-      graft.streaming.CatalogStreamCore.readText(fs, claim)
+      Hypertable.readSmallFile(fs, claim)
         .startsWith(Hypertable.processId),
       "the claim must be RETAINED (held) after the batch")
     ht.write(slice(2)) // seq 1 from the cached allocation, no re-acquire
     val seqs = fs.listStatus(logDir)
       .filter(d => d.isDirectory &&
-        Hypertable.streamBucketIdxOf(d.getPath.getName) >= 0)
+        StreamLog.streamBucketIdxOf(d.getPath.getName) >= 0)
       .flatMap(d => fs.listStatus(d.getPath)).filter(_.isFile)
-      .map(st => Hypertable.streamEntrySeq(st.getPath.getName)).sorted.toSeq
+      .map(st => StreamLog.streamEntrySeq(st.getPath.getName)).sorted.toSeq
     assert(seqs === Seq(0L, 1L),
       s"held-claim batches must allocate consecutive seqs: $seqs")
     // a contender writes `.seq_want`: the holder's NEXT batch yields the
     // hold, re-contends, and still commits (the contender here is
     // simulated — nothing actually races the re-acquisition)
-    graft.streaming.CatalogStreamCore.writeText(fs,
+    Hypertable.writeSmallFile(fs,
       new org.apache.hadoop.fs.Path(logDir, ".seq_want"), "contender-1")
     ht.write(slice(3)) // must yield, re-acquire, commit seq 2
     assert(!fs.exists(new org.apache.hadoop.fs.Path(logDir, ".seq_want")),

@@ -475,4 +475,47 @@ class HypertableStreamSpec extends AnyFunSuite {
           "the journaled attach must reach the running stream exactly once")
       } finally q.stop()
     }
+
+  for (catalog <- Seq("list", "table"))
+    test("a stream that starts while attachChunk is between its log check " +
+      s"and its rename gets the attached rows exactly once (catalog=$catalog)") {
+      val dir = Files.createTempDirectory(s"graft_htstream_attstart_$catalog")
+        .toString
+      val ht = Hypertable.create(spark, s"$dir/ht", "ts",
+        chunkWidth = "7 days", catalog = catalog)
+      val events = Tables.table(spark, "/root/testdata/sf0.001", "events")
+      ht.write(events)
+      val first = ht.showChunks().minBy(_.startMicros)
+      ht.detachChunk(first.startMicros, s"$dir/detached")
+      val attached = spark.read.parquet(s"$dir/detached").select("event_id")
+        .as[Long].collect().toSeq
+      assert(attached.nonEmpty)
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+      // no stream exists when the attach checks the log; one starts, and
+      // takes its snapshot, before the adopted dir is renamed in
+      var q: org.apache.spark.sql.streaming.StreamingQuery = null
+      Hypertable.crashHook = name =>
+        if (name == "attach.before_rename" && q == null) {
+          q = ht.readStream()
+            .writeStream
+            .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+              df.select("event_id").collect().foreach(r => seen.add(r.getLong(0)))
+            }
+            .option("checkpointLocation", s"$dir/ckpt")
+            .start()
+          q.processAllAvailable()
+        }
+      try {
+        try ht.attachChunk(s"$dir/detached", first.startMicros, first.endMicros)
+        finally Hypertable.crashHook = _ => ()
+        assert(q != null, "the attach never reached its rename")
+        q.processAllAvailable()
+        val want = events.select("event_id").as[Long].collect().toSeq.sorted
+        val got = ids(seen)
+        val exactlyOnce = got == want
+        assert(exactlyOnce, s"a stream started mid-attach must get the " +
+          s"attached rows exactly once: ${want.diff(got).size} rows missing, " +
+          s"${got.diff(want).size} extra")
+      } finally if (q != null) q.stop()
+    }
 }
