@@ -269,7 +269,7 @@ object ScaleProbe {
 
   /** Mat-catalog resolution probe (round 13, SCALE.md §18): a cagg with N
     * mat chunks (default 10⁴); resolution = `matChunks` through the
-    * `_mat_catalog` snapshot (one LIST + one GET), on local fs and under
+    * materialization catalog (one LIST + one GET), on local fs and under
     * slowfs. The cagg is BUILT on local fs and probed through `slowfs://`
     * (same dir), like the stream-log probe. Run:
     * `SPARK_GRAFT_MAT_PROBE=1 sbt "runMain graft.ScaleProbe"`.

@@ -1556,7 +1556,7 @@ object SparkEntry {
     }),
 
     // §2.1 chunk catalog as a TABLE (SCALE.md cliff #1): the hypertable's
-    // chunk set lives in versioned `_graft_catalog/v<seq>.json` manifests
+    // chunk set lives in a versioned chunk manifest (VersionedCatalog)
     // instead of dir listings. The row drives ingest, merge, split-back,
     // and a chunk-boundary drop THROUGH the manifest (each mutator
     // publishes the next version), then a time-bounded aggregation whose
@@ -1579,10 +1579,10 @@ object SparkEntry {
       require((cutoff - graft.expressions.TimeBucketUtil.DEFAULT_ORIGIN_MICROS)
         % (7L * 86400000000L) == 0L, "q96 cutoff must sit on the chunk grid")
       ht.dropChunks(Some(cutoff), None)
-      val catDir = new org.apache.hadoop.fs.Path(s"$p/_graft_catalog")
-      require(catDir.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .listStatus(catDir).exists(_.getPath.getName.matches("v\\d+\\.json")),
-        "table-catalog manifest must exist")
+      val root = new org.apache.hadoop.fs.Path(p)
+      require(graft.sources.VersionedCatalog.chunks(
+        root.getFileSystem(s.sparkContext.hadoopConfiguration), root)
+        .version() >= 0, "table-catalog manifest must exist")
       Hypertable.at(s, p).read()
         .where(col("ts") < lit(tsUtc("2024-01-22 00:00:00")))
         .groupBy(col("event_type"))

@@ -81,7 +81,7 @@ class Hypertable private (
     * and reads each one's `_range` marker — O(chunks) metadata I/O per
     * QUERY, which at 10⁵ chunks on an object store is the dominant
     * planning cost. "table" (generation layout): the chunk set persists
-    * in a versioned manifest under `_graft_catalog/` (the reference's
+    * in a versioned [[ChunkManifest]] ([[VersionedCatalog]]; the reference's
     * `_timescaledb_catalog.chunk` analogue), republished at the end of
     * each mutating operation — queries read one file; the O(chunks)
     * listing runs only when the chunk set actually changes. Its crash
@@ -1100,7 +1100,7 @@ class Hypertable private (
     }.max
     // first component: the manifest VERSION (monotonic — a chunk-set
     // mutation can never reuse a stamp, regardless of mtime granularity)
-    (catalogStampNow(), m(Hypertable.SCHEMA), content)
+    (catalog.version(), m(Hypertable.SCHEMA), content)
   }
 
   /** Content-rewrite hook (DML copy-on-write): see
@@ -1474,7 +1474,7 @@ class Hypertable private (
                 MutationGate.holdsAppendLease(qualifiedPath))
               refreshChunkCatalog()
             else {
-              val s0 = catalogStampNow()
+              val s0 = catalog.version()
               val cs = listAllChunks()
               checkNoDuplicateStarts(cs)
               if (s0 != -1L) cachedCatalog = Some((s0, cs))
@@ -1484,12 +1484,11 @@ class Hypertable private (
         // parsed-catalog memo: the snapshot JSON is ~100 B/chunk, and every
         // planned query calls showChunks — at 10⁵ chunks an unmemoized
         // parse is 0.21 s/query (measured, SCALE.md §2); the memo makes the
-        // steady state one getFileStatus. Stamped BEFORE the read: a swap
-        // racing the read can only pair an old stamp with newer chunks,
-        // which the next query's stamp mismatch re-reads — never stale-as-
-        // fresh. Every mutation re-stamps the file, so the first query
-        // after one re-parses (and re-checks) exactly once.
-        val pre = catalogStampNow()
+        // steady state one listing. A miss caches the chunks under the
+        // version they were read from, so a publish racing the read is
+        // never served stale-as-fresh. Every mutation publishes a version,
+        // so the first query after one re-parses (and re-checks) once.
+        val pre = catalog.version()
         cachedCatalog match {
           case Some((s, cs)) if s == pre && pre != -1L => cs
           // sentinel: a reader's listing of a manifest-less table (writer
@@ -1501,9 +1500,9 @@ class Hypertable private (
           case Some((-2L, cs)) if pre == -1L => cs
           case _ =>
             readChunkCatalog() match {
-              case Some(cs) =>
+              case Some((v, cs)) =>
                 checkNoDuplicateStarts(cs)
-                if (pre != -1L) cachedCatalog = Some((pre, cs))
+                cachedCatalog = Some((v, cs))
                 cs
               case None =>
                 // no manifest yet: persist the first one only as the
@@ -1517,7 +1516,7 @@ class Hypertable private (
                   if (Hypertable.holdsMutatorLease(fs, qualifiedPath))
                     refreshChunkCatalog()
                   else {
-                    val s0 = catalogStampNow()
+                    val s0 = catalog.version()
                     val l = listAllChunks()
                     cachedCatalog = Some((if (s0 == -1L) -2L else s0, l))
                     l
@@ -1549,19 +1548,11 @@ class Hypertable private (
 
   @volatile private var cachedCatalog: Option[(Long, Seq[ChunkInfo])] = None
 
-  private def catalogDir: Path = new Path(path, Hypertable.CATALOG_DIR)
-
-  /** Manifest versions currently published, ascending (empty before the
-    * first refresh).
+  /** The versioned chunk manifest; its version is the memo key (immune
+    * to mtime granularity), -1 before the first refresh.
     */
-  private def manifestVersions(): Seq[(Long, Path)] =
-    Hypertable.listManifests(fs, catalogDir)
-
-  /** Monotonic catalog stamp: the highest manifest version (the memo key —
-    * immune to mtime granularity). -1 = no manifest yet.
-    */
-  private def catalogStampNow(): Long =
-    manifestVersions().lastOption.map(_._1).getOrElse(-1L)
+  private def catalog: VersionedCatalog =
+    VersionedCatalog.chunks(fs, new Path(path))
 
   /** Every chunk by PHYSICAL dir listing across all storage roots — the
     * ground truth the "table" catalog snapshots. Gen layout: a torn
@@ -1777,10 +1768,10 @@ class Hypertable private (
     * Serialized per table path within the JVM: catalog snapshots only ever
     * run on the driver (mutators and the once-per-handle crash heal), so a
     * concurrent heal from a fresh handle racing a mutator's sync would
-    * otherwise collide in the delete+rename swap and throw at a READER.
-    * The reference holds the hypertable catalog lock across the analogous
-    * update (`src/ts_catalog/catalog.c`); one JVM lock is the same scope
-    * here because chunk-set mutation is a driver-side operation.
+    * otherwise publish the same version number. The reference holds the
+    * hypertable catalog lock across the analogous update
+    * (`src/ts_catalog/catalog.c`); one JVM lock is the same scope here
+    * because chunk-set mutation is a driver-side operation.
     */
   def refreshChunkCatalog(): Seq[ChunkInfo] =
     Hypertable.catalogLock(qualifiedPath).synchronized {
@@ -1828,57 +1819,21 @@ class Hypertable private (
       }
     }
     val chunks = listAllChunks()
-    val o = Hypertable.jsonMapper.createObjectNode()
-    val arr = o.putArray("chunks")
-    chunks.foreach { c =>
-      val n = arr.addObject()
-      n.put("s", c.startMicros); n.put("e", c.endMicros); n.put("p", c.path)
-    }
-    // versioned manifest: a NEW file per refresh (pure tmp+rename — no
-    // no-file window), sequence = memo key. Old versions beyond the keep
-    // window go; a reader that listed just before this still opens its
-    // pinned version.
-    val versions = manifestVersions()
-    val next = versions.lastOption.map(_._1 + 1).getOrElse(1L)
-    o.put("v", next)
     // record each root's content-stamp counter: the mtime-free freshness
-    // cue (catalogFreshByCounter) compares live counters against these
-    val csNode = o.putObject("cs")
-    (new Path(path) +: tablespaceTableDirs).foreach { r =>
+    // cue (catalogFresh) compares live counters against these
+    val cs = (new Path(path) +: tablespaceTableDirs).flatMap { r =>
       val rfs = r.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val c = Hypertable.readContentCounter(rfs, r)
-      if (c >= 0) csNode.put(rfs.makeQualified(r).toString, c)
-    }
-    fs.mkdirs(catalogDir)
-    Hypertable.writeSmallFile(fs,
-      new Path(catalogDir, f"v$next%d.json"), o.toString)
-    versions.dropRight(Hypertable.CATALOG_KEEP - 1)
-      .foreach { case (_, p) => fs.delete(p, false) }
+      if (c >= 0) Some(rfs.makeQualified(r).toString -> c) else None
+    }.toMap
+    ChunkManifest.publish(catalog, catalog.version(), chunks, cs)
     chunks
   }
 
-  private def readChunkCatalog(): Option[Seq[ChunkInfo]] = {
-    def parse(p: Path): Seq[ChunkInfo] = {
-      val tree = Hypertable.jsonMapper.readTree(Hypertable.readSmallFile(fs, p))
-      import scala.jdk.CollectionConverters._
-      tree.get("chunks").elements().asScala.map(n =>
-        ChunkInfo(n.get("s").asLong, n.get("e").asLong, n.get("p").asText))
-        .toSeq.sortBy(_.startMicros)
-    }
-    // a concurrent refresh can GC the version between the listing and the
-    // open — re-resolve once; the caller answers a second miss by
-    // re-snapshotting
-    manifestVersions().lastOption.flatMap { case (_, p) =>
-      try Some(parse(p))
-      catch {
-        case _: java.io.FileNotFoundException =>
-          manifestVersions().lastOption.flatMap { case (_, p2) =>
-            try Some(parse(p2))
-            catch { case _: java.io.FileNotFoundException => None }
-          }
-      }
-    }
-  }
+  /** The latest manifest: (version, chunks sorted by start). */
+  private def readChunkCatalog(): Option[(Long, Seq[ChunkInfo])] =
+    catalog.latest().map { case (v, body) =>
+      v -> ChunkManifest.decode(body).chunks }
 
   /** Post-mutation hook: on the generation layout every chunk-set /
     * range-changing operation publishes a manifest; a no-op on the flat
@@ -1918,20 +1873,10 @@ class Hypertable private (
     if (!genLayout) return
     Hypertable.catalogLock(qualifiedPath).synchronized {
       MutationGate.withCatalogFsLock(spark, fs, qualifiedPath) {
-        val latest = manifestVersions().lastOption
-        val tree = latest.flatMap { case (_, p) =>
-          try Some(Hypertable.jsonMapper.readTree(
-            Hypertable.readSmallFile(fs, p)))
-          catch { case _: Exception => None }
-        }
-        tree match {
+        ChunkManifest.latest(catalog) match {
           case None => refreshChunkCatalogLocked(); ()
-          case Some(t) =>
-            import scala.jdk.CollectionConverters._
-            val prev = t.get("chunks").elements().asScala.map(n =>
-              ChunkInfo(n.get("s").asLong, n.get("e").asLong,
-                n.get("p").asText)).toSeq
-            val prevByDir: Map[String, ChunkInfo] = prev.map { c =>
+          case Some((v, prev)) =>
+            val prevByDir: Map[String, ChunkInfo] = prev.chunks.map { c =>
               val cd = Hypertable.chunkDirOf(new Path(c.path))
               cd.getFileSystem(spark.sparkContext.hadoopConfiguration)
                 .makeQualified(cd).toString -> c
@@ -1955,24 +1900,8 @@ class Hypertable private (
                     }
                 }
             }.sortBy(_.startMicros)
-            val chunks = applyRewriteIntents(listed)
-            val o = Hypertable.jsonMapper.createObjectNode()
-            val arr = o.putArray("chunks")
-            chunks.foreach { c =>
-              val n = arr.addObject()
-              n.put("s", c.startMicros); n.put("e", c.endMicros)
-              n.put("p", c.path)
-            }
-            val next = latest.map(_._1 + 1).getOrElse(1L)
-            o.put("v", next)
-            if (t.has("cs") && t.get("cs").isObject)
-              o.set[com.fasterxml.jackson.databind.JsonNode]("cs", t.get("cs"))
-            fs.mkdirs(catalogDir)
-            Hypertable.writeSmallFile(fs,
-              new Path(catalogDir, f"v$next%d.json"), o.toString)
-            manifestVersions().filter(_._1 < next)
-              .dropRight(Hypertable.CATALOG_KEEP - 1)
-              .foreach { case (_, p) => fs.delete(p, false) }
+            ChunkManifest.publish(catalog, v,
+              applyRewriteIntents(listed), prev.cs)
         }
       }
     }
@@ -2001,84 +1930,47 @@ class Hypertable private (
     }
 
   /** Crash-recovery staleness cue for the "table" catalog: every mutator
-    * commits data FIRST and snapshots the catalog AFTER, so a crash in
+    * commits data FIRST and publishes the manifest AFTER, so a crash in
     * between leaves committed chunks invisible to catalog reads (dir
-    * listing would serve them). Chunk-set changes touch each storage
-    * root's directory entry (new/removed `_chunk=` dirs; the parquet
-    * committer also rewrites `_SUCCESS` at the root on every write),
-    * bumping the root's mtime — so `root mtime > catalog mtime` means
-    * "something changed after the last snapshot": re-snapshot before
-    * serving. Checked once per handle (cost: one getFileStatus per storage
-    * root — flat in the chunk count, which is the whole point of the table
-    * catalog). Best-effort (mtime granularity is filesystem-dependent);
-    * `refreshChunkCatalog()` remains the explicit recovery step.
+    * listing would serve them): re-snapshot before serving. Checked once
+    * per handle, a few small-file ops per storage root (flat in the chunk
+    * count, which is the whole point of the table catalog);
+    * `refreshChunkCatalog()` remains the explicit recovery step. The cue
+    * follows the store's scheme ([[Hypertable.mtimeReliable]]):
     *
-    * FILESYSTEM ASSUMPTION: this cue needs directory mtimes that bump when
-    * children appear (local FS, HDFS). Object stores (S3A, GCS) have no
-    * real directories — a prefix's "mtime" never changes and `setTimes` is
-    * a no-op — so there the self-heal silently never fires and the
-    * strictly-increasing-stamp guarantee degrades to upload-time ordering.
-    * On such stores, run `refreshChunkCatalog()` explicitly after any
-    * writer crash (normal-path correctness is unaffected: every COMPLETED
-    * mutator re-snapshots the catalog itself).
+    *  - mtimes (local FS, HDFS): stale when a root's mtime (new/removed
+    *    `_chunk=` dirs; the committer's `_SUCCESS`) or its content
+    *    stamp's mtime is newer than the latest manifest's. A gen publish
+    *    lands INSIDE the chunk dir (the root's own mtime does not move)
+    *    but bumps the content stamp before its commit stamp, so a crash
+    *    between a publish and its manifest sync still reads stale.
+    *  - counters (object stores: no directory mtimes, `setTimes` a
+    *    no-op): stale when a root's content-stamp counter is above the
+    *    one the latest manifest recorded, the manifest has no record of
+    *    the root, or it does not parse. The new-chunk heal is unavailable
+    *    there; after a writer crash run `refreshChunkCatalog()`.
     */
   private def catalogFresh(): Boolean = {
-    // object-store mode: mtimes are unusable (no dir mtimes; setTimes is
-    // a no-op) — compare each root's content-stamp COUNTER against the
-    // counter the latest manifest recorded at sync time. New-chunk crash
-    // heal (the root-mtime cue) is unavailable there; every COMPLETED
-    // mutator still re-snapshots, and the documented recovery after a
-    // writer crash remains an explicit refreshChunkCatalog().
-    if (!Hypertable.mtimeReliable(fs)) return catalogFreshByCounter()
-    // a version GC'd between the listing and the stat reads as "stale"
-    // (the caller re-snapshots under the catalog lock), never as an error
-    val catM = manifestVersions().lastOption.map { case (_, p) =>
-      try fs.getFileStatus(p).getModificationTime
-      catch { case _: java.io.FileNotFoundException => return false }
-    }.getOrElse(return false)
-    val roots = new Path(path) +: tablespaceTableDirs
-    roots.forall { r =>
-      val rfs = r.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      !rfs.exists(r) || {
-        // a gen publish lands INSIDE the chunk dir (the root's own mtime
-        // does not move) but bumps the root's content stamp before its
-        // commit stamp — so a crash between a publish and its manifest
-        // sync still reads as stale here and heals
-        val rootM = rfs.getFileStatus(r).getModificationTime
-        val contentM =
-          try rfs.getFileStatus(new Path(r, Hypertable.CONTENT_STAMP))
-            .getModificationTime
-          catch { case _: Exception => -1L }
-        math.max(rootM, contentM) <= catM
-      }
-    }
-  }
-
-  /** [[catalogFresh]]'s mtime-free form (stores without settable
-    * mtimes, see [[Hypertable.mtimeReliable]]): fresh ⟺ every root's
-    * content-stamp counter is ≤ the value the latest manifest recorded.
-    * A root with a stamp the manifest has no record of reads stale
-    * (heals); an unparsable manifest likewise.
-    */
-  private def catalogFreshByCounter(): Boolean = {
-    val latest = manifestVersions().lastOption.getOrElse(return false)
-    val cs: Map[String, Long] =
-      try {
-        val n = Hypertable.jsonMapper
-          .readTree(Hypertable.readSmallFile(fs, latest._2)).get("cs")
-        if (n == null || !n.isObject) Map.empty
-        else {
-          import scala.jdk.CollectionConverters._
-          n.fields().asScala.map(e => e.getKey -> e.getValue.asLong()).toMap
+    val fresh: (FileSystem, Path) => Boolean =
+      if (Hypertable.mtimeReliable(fs)) {
+        val catM = catalog.modTime().getOrElse(return false)
+        (rfs, r) => {
+          val contentM =
+            try rfs.getFileStatus(new Path(r, Hypertable.CONTENT_STAMP))
+              .getModificationTime
+            catch { case _: Exception => -1L }
+          math.max(rfs.getFileStatus(r).getModificationTime, contentM) <= catM
         }
-      } catch { case _: Exception => return false }
-    val roots = new Path(path) +: tablespaceTableDirs
-    roots.forall { r =>
-      val rfs = r.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      !rfs.exists(r) || {
-        val c = Hypertable.readContentCounter(rfs, r)
-        c < 0 || cs.get(rfs.makeQualified(r).toString).exists(c <= _)
+      } else {
+        val cs = ChunkManifest.latest(catalog).getOrElse(return false)._2.cs
+        (rfs, r) => {
+          val c = Hypertable.readContentCounter(rfs, r)
+          c < 0 || cs.get(rfs.makeQualified(r).toString).exists(c <= _)
+        }
       }
+    (new Path(path) +: tablespaceTableDirs).forall { r =>
+      val rfs = r.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      !rfs.exists(r) || fresh(rfs, r)
     }
   }
 
@@ -3247,16 +3139,6 @@ object Hypertable {
         s"the layout migration; resolve $tmp manually")
     require(fs.rename(tmp, dst), s"rename $tmp -> $dst failed")
   }
-  /** Versioned chunk-set manifests: `_graft_catalog/v<seq>.json`. Each
-    * refresh writes a NEW file (pure tmp+rename — no delete+rename no-file
-    * window) and readers resolve the highest sequence, so the memo key is
-    * a monotonic number rather than an mtime (two swaps inside one mtime
-    * tick can no longer serve stale-as-fresh), and a reader never observes
-    * a momentarily-absent catalog. The last few versions are retained so a
-    * reader that listed just before a refresh still opens its file.
-    */
-  private[sources] val CATALOG_DIR = "_graft_catalog"
-  private[sources] val CATALOG_KEEP = 4
   private[sources] val CONTENT_STAMP = "_graft_content_stamp"
 
   // publishes): `_graft_merging_<headStart>` (body: mergedEnd, then the
@@ -3386,21 +3268,6 @@ object Hypertable {
 
   /** The storage root holding a chunk data path (primary or tablespace). */
   private[graft] def storageRootOf(p: Path): Path = chunkDirOf(p).getParent
-
-  /** The versioned manifest files of a catalog dir, ascending by version —
-    * THE single definition of the manifest naming scheme, shared by the
-    * handle's `manifestVersions()` and the static incremental patch
-    * ([[syncCatalogForChunk]]) so the two paths can never disagree about
-    * which version is latest.
-    */
-  private[graft] def listManifests(fs: FileSystem,
-      catDir: Path): Seq[(Long, Path)] =
-    try fs.listStatus(catDir).toSeq
-      .filter(s => s.isFile && s.getPath.getName.matches("v\\d+\\.json"))
-      .map(s => s.getPath.getName.stripPrefix("v").stripSuffix(".json").toLong ->
-        s.getPath)
-      .sortBy(_._1)
-    catch { case _: java.io.FileNotFoundException => Nil }
 
   // --------------------------------------------------- crash injection
   // Test-only fault hook at the named multi-step publish boundaries (tmp
@@ -3541,47 +3408,23 @@ object Hypertable {
         val proot = new Path(primary)
         val pfs = proot.getFileSystem(spark.sparkContext.hadoopConfiguration)
         MutationGate.withCatalogFsLock(spark, pfs, primary) {
-        val catDir = new Path(proot, CATALOG_DIR)
-        val versions = listManifests(pfs, catDir)
-        val qNew = fs.makeQualified(dataDir).toString
+        val cat = VersionedCatalog.chunks(pfs, proot)
         val qChunk = fs.makeQualified(chunkDir).toString
-        val patched = versions.lastOption.flatMap { case (_, vp) =>
-          try {
-            val tree = jsonMapper.readTree(readSmallFile(pfs, vp))
-            var hit = false
-            tree.get("chunks").elements().forEachRemaining { n =>
-              val entry = new Path(n.get("p").asText)
-              if (fs.makeQualified(chunkDirOf(entry)).toString == qChunk) {
-                n.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-                  .put("p", qNew)
-                hit = true
-              }
-            }
-            if (hit) Some(tree) else None
-          } catch { case _: Exception => None }
-        }
-        patched match {
-          case Some(tree) =>
-            val on = tree
-              .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-            val next = versions.last._1 + 1
-            on.put("v", next)
+        def isThis(c: ChunkInfo) =
+          fs.makeQualified(chunkDirOf(new Path(c.path))).toString == qChunk
+        ChunkManifest.latest(cat).filter(_._2.chunks.exists(isThis)) match {
+          case Some((v, prev)) =>
+            val qNew = fs.makeQualified(dataDir).toString
+            val chunks = prev.chunks.map(c =>
+              if (isThis(c)) c.copy(path = qNew) else c)
             // re-record the published chunk's ROOT counter: the publish
             // bumped it just before this sync, and the mtime-free
             // freshness cue must see this manifest as covering it
             val rootP = chunkDir.getParent
             val c = readContentCounter(fs, rootP)
-            if (c >= 0) {
-              val csN =
-                if (on.has("cs") && on.get("cs").isObject)
-                  on.get("cs")
-                    .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-                else on.putObject("cs")
-              csN.put(fs.makeQualified(rootP).toString, c)
-            }
-            writeSmallFile(pfs, new Path(catDir, s"v$next.json"), tree.toString)
-            versions.dropRight(CATALOG_KEEP - 1)
-              .foreach { case (_, p) => pfs.delete(p, false) }
+            ChunkManifest.publish(cat, v, chunks,
+              if (c >= 0) prev.cs + (fs.makeQualified(rootP).toString -> c)
+              else prev.cs)
           case None =>
             at(spark, primary).refreshChunkCatalog(); ()
         }
@@ -3868,14 +3711,6 @@ object Hypertable {
   private[sources] def writeRangeFile(fs: FileSystem, chunkDir: Path, endMicros: Long): Unit =
     writeSmallFile(fs, new Path(chunkDir, RANGE), endMicros.toString)
 
-  /** Atomic metadata write: create-then-write would expose a concurrent
-    * reader to a truncated (empty) file between `create` and `close` —
-    * observed as a NumberFormatException from a racing `showChunks` while
-    * per-chunk DML jobs re-stamp their range files. Writing a dot-prefixed
-    * tmp (invisible to Spark's file index) and renaming in means readers
-    * see the old content, no file, or the full new content — never a
-    * partial write.
-    */
   /** `file://` fast path for graft's own SMALL metadata files: Hadoop's
     * LocalFileSystem pays a forked `chmod` per create (no native lib in
     * most deployments) plus a `.crc` sidecar write — ~5–10 ms where
@@ -3903,6 +3738,14 @@ object Hypertable {
     if (dir != null) { new java.io.File(dir, s".${f.getName}.crc").delete(); () }
   }
 
+  /** Atomic metadata write: create-then-write would expose a concurrent
+    * reader to a truncated (empty) file between `create` and `close` —
+    * observed as a NumberFormatException from a racing `showChunks` while
+    * per-chunk DML jobs re-stamp their range files. Writing a dot-prefixed
+    * tmp (invisible to Spark's file index) and renaming in means readers
+    * see the old content, no file, or the full new content — never a
+    * partial write.
+    */
   def writeSmallFile(fs: FileSystem, p: Path, s: String): Unit =
     localFileOf(fs, p) match {
       case Some(f) =>
@@ -3940,19 +3783,24 @@ object Hypertable {
 
   /** Plain truncate-overwrite of a small metadata file — no tmp+rename;
     * callers that chose this form accept the in-place overwrite's torn
-    * window instead of a swap's no-file window. Same `file://` fast-path
-    * rationale as [[writeSmallFile]].
+    * window instead of a swap's no-file window. `createNew` refuses an
+    * existing file instead (IOException; atomic on POSIX). Same `file://`
+    * fast-path rationale as [[writeSmallFile]].
     */
   private[graft] def writeSmallFileDirect(fs: FileSystem, p: Path,
-      s: String): Unit =
+      s: String, createNew: Boolean = false): Unit =
     localFileOf(fs, p) match {
       case Some(f) =>
         val dir = f.getParentFile
         if (dir != null && !dir.isDirectory) dir.mkdirs()
         dropCrcSidecar(f)
-        java.nio.file.Files.write(f.toPath, s.getBytes("UTF-8")); ()
+        val opts =
+          if (createNew) Seq(java.nio.file.StandardOpenOption.CREATE_NEW,
+            java.nio.file.StandardOpenOption.WRITE)
+          else Nil
+        java.nio.file.Files.write(f.toPath, s.getBytes("UTF-8"), opts: _*); ()
       case None =>
-        val out = fs.create(p, true)
+        val out = fs.create(p, !createNew)
         out.write(s.getBytes("UTF-8")); out.close()
     }
 
@@ -4059,13 +3907,7 @@ object Hypertable {
   /** Re-open an existing hypertable from its metadata file. */
   def at(spark: SparkSession, path: String): Hypertable = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(new Path(path, META))
-    val buf = new java.io.ByteArrayOutputStream()
-    val tmp = new Array[Byte](4096)
-    var n = in.read(tmp)
-    while (n > 0) { buf.write(tmp, 0, n); n = in.read(tmp) }
-    in.close()
-    val meta = buf.toString("UTF-8")
+    val meta = readSmallFile(fs, new Path(path, META))
     def str(k: String): Option[String] =
       ("\"" + k + "\":\"([^\"]*)\"").r.findFirstMatchIn(meta).map(_.group(1))
     def num(k: String): Long =
@@ -4091,39 +3933,7 @@ object Hypertable {
     // anything reads the mixed layout (claims the mutator lease — refuses
     // loudly when another process holds the table; released again after
     // the heal if this process was not already the holder)
-    val healed =
-      if (fs.exists(new Path(path, MIGRATING))) healCrashedMigration(ht) else ht
-    // flat-layout retirement (SCALE.md §15): with
-    // `spark.graft.autoMigrateOnOpen=true`, a legacy flat table migrates
-    // to the generational layout at open — the exclusive-DDL migration,
-    // same machinery as the explicit call. Gen layout is the contract
-    // every object-store guarantee is stated against; the flag turns
-    // "migrate the stragglers" into a rollout default instead of a
-    // per-table chore. Skipped (flat handle returned) while another
-    // process holds the table — the next open after it releases migrates.
-    if (!healed.genLayout &&
-        spark.conf.get("spark.graft.autoMigrateOnOpen", "false").toBoolean &&
-        !foreignMutatorLive(spark, fs,
-          fs.makeQualified(new Path(path)).toString)) {
-      val hadLease = holdsMutatorLease(fs, healed.qualifiedPath)
-      // the foreignMutatorLive check above is advisory (TOCTOU: two
-      // processes opening the same flat table can both pass it) — the
-      // lease claim inside migrateToGenLayout is the real arbiter. The
-      // LOSER's refusal must not fail the open: the flag's contract is
-      // "skipped while another process holds the table", so fall back to
-      // the deferred flat handle (the next open after the holder releases
-      // migrates).
-      try {
-        val nh = healed.migrateToGenLayout()
-        if (!hadLease) releaseMutatorLease(spark, path)
-        nh
-      } catch {
-        case e: IllegalStateException
-            if e.getMessage != null &&
-              e.getMessage.contains("being mutated by another process") =>
-          healed
-      }
-    } else healed
+    if (fs.exists(new Path(path, MIGRATING))) healCrashedMigration(ht) else ht
   }
 }
 

@@ -86,11 +86,11 @@ private[graft] object MutationGate {
   private def settleMs(spark: SparkSession): Long =
     spark.conf.get("spark.graft.gate.settleMs", "60").toLong
 
-  /** Tests: force the blind-PUT (readback+settle) claim path even on an
-    * atomic-create-capable store, to keep the settle belt's own coverage.
+  /** Test hook: force the blind-PUT (readback+settle) claim path even on
+    * an atomic-create-capable store, to keep the settle belt's own
+    * coverage.
     */
-  private def forceBlindPut(spark: SparkSession): Boolean =
-    spark.conf.get("spark.graft.gate.forceBlindPutClaims", "false").toBoolean
+  @volatile private[graft] var blindPutClaimsForTests = false
 
   // ------------------------------------------- conditional-PUT claim hook
 
@@ -209,28 +209,10 @@ private[graft] object MutationGate {
   private def writeMarker(fs: FileSystem, p: Path, created: Long,
       payload: Option[String], overwrite: Boolean,
       owner: String = processId): Unit = {
-    val bytes = body(owner, created, System.currentTimeMillis(), payload)
-      .getBytes("UTF-8")
-    Hypertable.localFileOf(fs, p) match {
-      // file:// fast path — markers are (re)written on every claim and
-      // heartbeat; Hadoop's local create forks a chmod per call (see
-      // Hypertable.localFileOf). CREATE_NEW preserves the
-      // overwrite=false refuse-if-exists contract (atomic on POSIX).
-      case Some(f) =>
-        val dir = f.getParentFile
-        if (dir != null && !dir.isDirectory) dir.mkdirs()
-        if (dir != null) { new java.io.File(dir, s".${f.getName}.crc").delete(); () }
-        if (overwrite) java.nio.file.Files.write(f.toPath, bytes)
-        else java.nio.file.Files.write(f.toPath, bytes,
-          java.nio.file.StandardOpenOption.CREATE_NEW,
-          java.nio.file.StandardOpenOption.WRITE)
-        ()
-      case None =>
-        fs.mkdirs(p.getParent)
-        val out = fs.create(p, overwrite)
-        out.write(bytes)
-        out.close()
-    }
+    // overwrite=false refuses an existing file (IOException)
+    Hypertable.writeSmallFileDirect(fs, p,
+      body(owner, created, System.currentTimeMillis(), payload),
+      createNew = !overwrite)
   }
 
   private[graft] def createMarker(fs: FileSystem, p: Path,
@@ -393,7 +375,7 @@ private[graft] object MutationGate {
 
   private[sources] def atomicCreateCapable(spark: SparkSession,
       fs: FileSystem): Boolean =
-    !forceBlindPut(spark) && (schemeOf(fs) match {
+    !blindPutClaimsForTests && (schemeOf(fs) match {
       case "file" | "hdfs" | "viewfs" => true
       case s => conditionalPutBackends.containsKey(s)
     })
@@ -415,27 +397,19 @@ private[graft] object MutationGate {
         body(claimOwner, created, System.currentTimeMillis(), None)
           .getBytes("UTF-8"))
       catch { case _: java.io.IOException => false }
-    schemeOf(fs) match {
-      case "file" =>
-        try {
-          val f = new java.io.File(fs.makeQualified(p).toUri.getPath)
-          f.getParentFile.mkdirs()
-          val won = f.createNewFile()
-          if (won)
-            writeMarker(fs, p, created, None, overwrite = true,
-              owner = claimOwner)
-          won
-        } catch { case _: java.io.IOException => false }
-      case _ =>
-        try {
-          fs.mkdirs(p.getParent)
-          val out = fs.create(p, false) // atomic-exclusive at the namenode
-          out.write(body(claimOwner, created, System.currentTimeMillis(),
-            None).getBytes("UTF-8"))
-          out.close()
+    try Hypertable.localFileOf(fs, p) match {
+      case Some(f) =>
+        f.getParentFile.mkdirs()
+        f.createNewFile() && {
+          writeMarker(fs, p, created, None, overwrite = true,
+            owner = claimOwner)
           true
-        } catch { case _: java.io.IOException => false }
-    }
+        }
+      case None => // HDFS/viewfs: atomic-exclusive at the namenode
+        writeMarker(fs, p, created, None, overwrite = false,
+          owner = claimOwner)
+        true
+    } catch { case _: java.io.IOException => false }
   }
 
   /** Arbitrate clearing a stale (crashed-holder) or own-leftover marker —
@@ -503,7 +477,33 @@ private[graft] object MutationGate {
   }
 
   /** Claim the single-holder marker at `p`, waiting while a live foreign
-    * holder exists. The claim itself:
+    * holder exists: [[tryClaimExclusive]] until it wins, polling every
+    * [[PollMs]]. Throws after `spark.graft.gate.timeoutMs`, naming the
+    * live holder when there is one.
+    */
+  private[graft] def claimExclusive(spark: SparkSession, fs: FileSystem,
+      p: Path, activityRoot: => Option[(FileSystem, String)],
+      alwaysSettle: Boolean = false): Unit = {
+    val deadline = System.currentTimeMillis() + timeoutMs(spark)
+    while (!tryClaimExclusive(spark, fs, p, activityRoot, alwaysSettle)) {
+      val now = System.currentTimeMillis()
+      if (now > deadline)
+        throw new IllegalStateException(readMarker(fs, p)
+          .filter(m => m.owner != claimOwner && m.live(now, staleMs(spark)))
+          .fold(s"timed out contending for exclusive marker $p")(m =>
+            s"timed out waiting for exclusive marker $p held by ${m.owner}"))
+      Thread.sleep(PollMs)
+    }
+  }
+
+  // Test-only pause in [[tryClaimExclusive]] after the liveness read and
+  // before the create, where a second claimant can slip in.
+  @volatile private[graft] var claimHook: Path => Unit = _ => ()
+
+  /** One claim attempt on the single-holder marker at `p`; false when a
+    * live foreign holder exists or the claim race is lost. The mutator
+    * lease (refuse, not queue) and opportunistic work (torn-op healing)
+    * call it directly; [[claimExclusive]] waits on it. The attempt:
     *
     *  1. a stale/crashed holder's file is cleared by RENAME ARBITRATION
     *     ([[arbitrateStale]]) — never a bare delete, so no waiter can
@@ -517,115 +517,43 @@ private[graft] object MutationGate {
     *     `spark.graft.gate.settleMs` and read back AGAIN — longer than a
     *     competing create+readback round-trip, so two same-instant PUT
     *     claimants cannot both survive. Without observed contention the
-    *     second readback runs with no sleep.
+    *     second readback runs with no sleep. A lost readback leaves
+    *     nothing of ours on disk (our bytes were overwritten), so nothing
+    *     is deleted.
     *
-    * Returns when claimed; throws after `spark.graft.gate.timeoutMs`.
     * `alwaysSettle` forces the settle-confirm readback regardless of the
     * activity probe (blind-PUT path only) — for claims whose contenders
     * advertise no lease (e.g. two processes' cagg refreshes) and whose
     * hold time dwarfs the settle cost.
     */
-  private[graft] def claimExclusive(spark: SparkSession, fs: FileSystem,
-      p: Path, activityRoot: => Option[(FileSystem, String)],
-      alwaysSettle: Boolean = false): Unit = {
-    val deadline = System.currentTimeMillis() + timeoutMs(spark)
-    val atomic = atomicCreateCapable(spark, fs)
-    val me = claimOwner
-    var claimed = false
-    while (!claimed) {
-      val cur = readMarker(fs, p)
-      val now = System.currentTimeMillis()
-      cur match {
-        case Some(m) if m.owner != me && m.live(now, staleMs(spark)) =>
-          if (now > deadline)
-            throw new IllegalStateException(
-              s"timed out waiting for exclusive marker $p held by ${m.owner}")
-          Thread.sleep(PollMs)
-        case other =>
-          other.foreach(m => arbitrateStale(spark, fs, p, m))
-          val created = System.currentTimeMillis()
-          if (atomic) {
-            if (tryAtomicCreate(fs, p, created)) {
-              hold(fs, p, me, created)
-              claimed = true
-            } // lost the exclusive create: loop into the wait arm
-          } else {
-            val won =
-              try { writeMarker(fs, p, created, None, overwrite = false,
-                owner = me); true }
-              catch { case _: java.io.IOException => false } // exists: lost
-            if (won) {
-              def mine: Boolean = readMarker(fs, p).exists(_.owner == me)
-              val settle = alwaysSettle || activityRoot.exists {
-                case (afs, root) => foreignActive(spark, afs, root) }
-              val confirmed = mine && {
-                if (settle) Thread.sleep(settleMs(spark)); mine
-              }
-              if (confirmed) {
-                hold(fs, p, me, created)
-                claimed = true
-              }
-              // lost the readback: our bytes were overwritten — nothing of
-              // ours remains on disk, so do NOT delete (that would release
-              // the winner); just loop into the wait arm
-            }
-          }
-          // Lost the create (or arbitration is pending a live sidecar /
-          // another holder's revive): back off like the wait arm does.
-          // Without this the stale/other arm busy-loops FS calls — and,
-          // since the deadline was only checked in the live-foreign-holder
-          // arm, could spin past timeoutMs entirely.
-          if (!claimed) {
-            if (System.currentTimeMillis() > deadline)
-              throw new IllegalStateException(
-                s"timed out contending for exclusive marker $p")
-            Thread.sleep(PollMs)
-          }
-      }
-    }
-  }
-
-  // Test-only pause in [[tryClaimExclusive]] after the liveness read and
-  // before the create, where a second claimant can slip in.
-  @volatile private[graft] var claimHook: Path => Unit = _ => ()
-
-  /** Non-blocking [[claimExclusive]]: one attempt; false when a live
-    * foreign holder exists or the claim race is lost. Used by the
-    * mutator lease (refuse, not queue) and by opportunistic work
-    * (torn-op healing) that should skip.
-    */
   private[graft] def tryClaimExclusive(spark: SparkSession, fs: FileSystem,
-      p: Path, activityRoot: => Option[(FileSystem, String)]): Boolean = {
+      p: Path, activityRoot: => Option[(FileSystem, String)],
+      alwaysSettle: Boolean = false): Boolean = {
     val me = claimOwner
-    val cur = readMarker(fs, p)
-    val now = System.currentTimeMillis()
-    cur match {
-      case Some(m) if m.owner != me && m.live(now, staleMs(spark)) =>
+    readMarker(fs, p) match {
+      case Some(m) if m.owner != me &&
+          m.live(System.currentTimeMillis(), staleMs(spark)) =>
         false
       case other =>
         claimHook(p)
         other.foreach(m => arbitrateStale(spark, fs, p, m))
         val created = System.currentTimeMillis()
-        if (atomicCreateCapable(spark, fs)) {
-          val won = tryAtomicCreate(fs, p, created)
-          if (won) hold(fs, p, me, created)
-          won
-        } else {
-          val won =
-            try { writeMarker(fs, p, created, None, overwrite = false,
-              owner = me); true }
-            catch { case _: java.io.IOException => false }
-          won && {
-            def mine: Boolean = readMarker(fs, p).exists(_.owner == me)
-            val settle = activityRoot.exists { case (afs, root) =>
-              foreignActive(spark, afs, root) }
-            val confirmed = mine && {
-              if (settle) Thread.sleep(settleMs(spark)); mine
+        val won =
+          if (atomicCreateCapable(spark, fs)) tryAtomicCreate(fs, p, created)
+          else {
+            val put =
+              try { writeMarker(fs, p, created, None, overwrite = false,
+                owner = me); true }
+              catch { case _: java.io.IOException => false } // exists: lost
+            put && {
+              def mine: Boolean = readMarker(fs, p).exists(_.owner == me)
+              val settle = alwaysSettle || activityRoot.exists {
+                case (afs, root) => foreignActive(spark, afs, root) }
+              mine && { if (settle) Thread.sleep(settleMs(spark)); mine }
             }
-            if (confirmed) hold(fs, p, me, created)
-            confirmed
           }
-        }
+        if (won) hold(fs, p, me, created)
+        won
     }
   }
 

@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 
 import graft.{functions => gf}
 import graft.expressions.TimeBucketUtil
-import graft.sources.{Columnstore, GenStore, Hypertable, ReaderEpochs, TimeSource}
+import graft.sources.{Columnstore, GenStore, Hypertable, ReaderEpochs, TimeSource,
+  VersionedCatalog}
 
 /** Dimension join inside a cagg's view query — caggs-with-joins
   * (`tsl/test/sql/cagg_joins.sql`): the raw hypertable rows are enriched
@@ -908,9 +909,10 @@ class ContinuousAggregate(
   // `_mat_gen`): each mat chunk `mat/_mat_chunk=K` holds `_mat_gen=<n>`
   // generations that GenStore stages, stamps superseded, tombstones and
   // reaps exactly as it does a gen-layout hypertable's chunks. The commit
-  // point is the versioned `_mat_catalog/v<N>.json`: it names each
-  // chunk's live generation, so ONE catalog write flips every chunk a
-  // refresh touched and readers resolve from one list + one get (no
+  // point is the materialization catalog, a [[VersionedCatalog]] like the
+  // hypertable's chunk manifest: it names each chunk's live generation,
+  // so ONE catalog write flips every chunk a refresh touched and readers
+  // resolve from one list + one get (no
   // per-chunk listing: ~10-40 s of metadata latency per query at 10^4
   // chunks on an object store before the catalog). The superseded stamps
   // and drop tombstones follow the catalog write; an intent file written
@@ -918,11 +920,9 @@ class ContinuousAggregate(
   // refresh-lock holder rolls a crashed publish forward before any GC
   // runs. The catalog also lists the chunk keys whose dirs hold content
   // GC has yet to reap, so a publish visits O(retired) dirs, never O(mat
-  // chunks). Writers all hold the refresh lock (cross-process); each
-  // catalog write is a NEW version file (no no-file window), keep-3
-  // pruned.
+  // chunks). Writers all hold the refresh lock (cross-process).
 
-  private def matCatalogDir = new Path(path, "_mat_catalog")
+  private def matCatalog = VersionedCatalog.materialization(fs, new Path(path))
   private def matIntentPath = new Path(path, "_mat_intent")
   private def matChunkDir(key: Long): Path = new Path(matPath, s"$MATCHUNK=$key")
 
@@ -932,28 +932,17 @@ class ContinuousAggregate(
     * chunk dirs without a catalog are a layout older than the catalog,
     * which is refused.
     */
-  private[graft] def readMatCatalog(): Option[MatCatalog] = {
-    var pruned = 0
-    while (true) {
-      Hypertable.listManifests(fs, matCatalogDir).lastOption match {
-        case None =>
-          if (matChunkKeysListed.nonEmpty)
-            throw new IllegalStateException(s"continuous aggregate $path " +
-              "has materialized chunks but no _mat_catalog (a layout this " +
-              "version no longer reads) — re-create the continuous " +
-              "aggregate and refresh it")
-          return None
-        case Some((_, p)) =>
-          try return Some(parseMatCatalog(Hypertable.readSmallFile(fs, p)))
-          catch {
-            case e: java.io.FileNotFoundException =>
-              pruned += 1
-              if (pruned > 100) throw e
-          }
-      }
+  private[graft] def readMatCatalog(): Option[MatCatalog] =
+    matCatalog.latest() match {
+      case Some((_, body)) => Some(parseMatCatalog(body))
+      case None =>
+        if (matChunkKeysListed.nonEmpty)
+          throw new IllegalStateException(s"continuous aggregate $path " +
+            "has materialized chunks but no materialization catalog (a " +
+            "layout this version no longer reads) — re-create the " +
+            "continuous aggregate and refresh it")
+        None
     }
-    None // unreachable
-  }
 
   private def parseMatCatalog(body: String): MatCatalog = {
     val t = Hypertable.jsonMapper.readTree(body)
@@ -982,14 +971,7 @@ class ContinuousAggregate(
     }
     val ga = o.putArray("gc")
     cat.gc.distinct.sorted.foreach(k => ga.add(k))
-    fs.mkdirs(matCatalogDir)
-    Hypertable.writeSmallFile(fs,
-      new Path(matCatalogDir, s"v${cat.v}.json"), o.toString)
-    Hypertable.listManifests(fs, matCatalogDir).dropRight(MAT_CATALOG_KEEP)
-      .foreach { case (_, p) =>
-        try fs.delete(p, false)
-        catch { case _: java.io.IOException => () }
-      }
+    matCatalog.publish(cat.v, o.toString)
   }
 
   private def matRelOf(p: Path): String = {
@@ -1535,7 +1517,6 @@ object ContinuousAggregate {
   private val BUCKET = "_bucket"
   private val MATCHUNK = "_mat_chunk"
   private val MATGEN = "_mat_gen"
-  private val MAT_CATALOG_KEEP = 3
 
   /** The materialization's generation store (`_mat_gen=<n>` dirs). */
   private val matGens = new GenStore(MATGEN)

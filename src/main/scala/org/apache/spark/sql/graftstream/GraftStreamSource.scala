@@ -37,7 +37,7 @@ import graft.streaming.StreamLog
   *    rebuilt from those lists dedups overlapping log entries (two
   *    concurrent appenders can both list a racing file — harmless here).
   *  - BOUNDED state (round 11): Spark's commit() callback drives a
-  *    rolling compaction — every `spark.graft.stream.compactEvery`
+  *    rolling compaction — every `GraftStreamSource.CompactEvery` (10)
   *    commits, the seen-set (minus entries older than log retention + a
   *    writer-clock pad, which can never reappear in the log) is folded
   *    into one `c<id>` file and the committed `b<id>` files are deleted, the
@@ -133,9 +133,6 @@ class GraftStreamSource(spark: classic.SparkSession, table: String,
   private var floorSeq: Long = -1L
   private val processedSeqs =
     new java.util.concurrent.ConcurrentSkipListSet[java.lang.Long]()
-
-  private def compactEvery: Int =
-    spark.conf.get("spark.graft.stream.compactEvery", "10").toInt
 
   private def seenCutoff(now: Long): Long =
     now - (StreamLog.streamLogRetainMs(spark) + StreamLog.SeenAgeOutPadMs)
@@ -382,7 +379,8 @@ class GraftStreamSource(spark: classic.SparkSession, table: String,
   override def commit(end: Offset): Unit = synchronized {
     lastCommitted = math.max(lastCommitted, idOf(end))
     commitsSinceCompact += 1
-    if (commitsSinceCompact >= compactEvery && lastCommitted >= 0) {
+    if (commitsSinceCompact >= GraftStreamSource.compactEveryForTests &&
+        lastCommitted >= 0) {
       commitsSinceCompact = 0
       try compactState()
       catch { case scala.util.control.NonFatal(_) => () } // retried next cycle
@@ -392,4 +390,16 @@ class GraftStreamSource(spark: classic.SparkSession, table: String,
   override def stop(): Unit = ()
 
   override def toString: String = s"GraftStreamSource[$table]"
+}
+
+object GraftStreamSource {
+  /** Commits between checkpoint compactions (the reader-side `StreamLog`
+    * GC runs at the same cadence).
+    */
+  val CompactEvery = 10
+
+  /** Test hook: the compaction interval in force ([[CompactEvery]] outside
+    * tests).
+    */
+  @volatile var compactEveryForTests: Int = CompactEvery
 }

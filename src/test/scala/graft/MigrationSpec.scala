@@ -28,37 +28,6 @@ class MigrationSpec extends AnyFunSuite {
     ht
   }
 
-  test("autoMigrateOnOpen: a flat table migrates at Hypertable.at when the " +
-    "flag is set — and is skipped while a foreign process holds the lease") {
-    val d = Files.createTempDirectory("graft_mig_auto").toString
-    val ht = mkFlat(d)
-    val before = ht.read().select("t", "v", "s").collect().toSet
-    Hypertable.releaseMutatorLease(spark, s"$d/ht")
-    spark.conf.set("spark.graft.autoMigrateOnOpen", "true")
-    try {
-      // a live FOREIGN lease defers the migration (flat handle returned)
-      val fs = new Path(s"$d/ht")
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val lease = new Path(s"$d/ht", "_graft_mutator_lease")
-      val out = fs.create(lease, true)
-      out.write(s"other-proc\n${System.currentTimeMillis()}".getBytes("UTF-8"))
-      out.close()
-      val deferred = Hypertable.at(spark, s"$d/ht")
-      assert(!deferred.genLayout,
-        "auto-migrate must defer while another process holds the table")
-      fs.delete(lease, false)
-      // holder gone: the next open migrates and hands back a gen handle
-      val nh = Hypertable.at(spark, s"$d/ht")
-      assert(nh.genLayout, "open must return the migrated handle")
-      assert(nh.read().select("t", "v", "s").collect().toSet === before)
-      // the one-shot migration must not leave the table locked: a second
-      // process could now claim (our lease was released post-migration)
-      assert(!fs.exists(lease))
-      // idempotent: re-open of a gen table is a plain open
-      assert(Hypertable.at(spark, s"$d/ht").genLayout)
-    } finally spark.conf.unset("spark.graft.autoMigrateOnOpen")
-  }
-
   test("migration preserves rows, sidecar state, and flips the catalog") {
     val d = Files.createTempDirectory("graft_mig").toString
     val ht = mkFlat(d)

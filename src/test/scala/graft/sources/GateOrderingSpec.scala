@@ -162,7 +162,7 @@ class GateOrderingSpec extends AnyFunSuite {
       assert(ms < 1500,
         s"atomic-create claim must skip the settle window (took $ms ms)")
       // the blind-PUT path (forced) DOES pay it — the belt still exists
-      spark.conf.set("spark.graft.gate.forceBlindPutClaims", "true")
+      MutationGate.blindPutClaimsForTests = true
       val t1 = System.nanoTime()
       MutationGate.claimExclusive(spark, fs, p, None, alwaysSettle = true)
       val ms1 = (System.nanoTime() - t1) / 1000000
@@ -171,7 +171,7 @@ class GateOrderingSpec extends AnyFunSuite {
         s"forced blind-PUT claim must pay the settle window (took $ms1 ms)")
     } finally {
       spark.conf.unset("spark.graft.gate.settleMs")
-      spark.conf.unset("spark.graft.gate.forceBlindPutClaims")
+      MutationGate.blindPutClaimsForTests = false
     }
   }
 

@@ -43,7 +43,7 @@ class ListingSnapshotSpec extends AnyFunSuite {
     val q = fs.makeQualified(new Path(root)).toString
     Hypertable.releaseMutatorLease(spark, root)
     MutationGate.releaseAppendLease(fs, q)
-    fs.delete(new Path(root, Hypertable.CATALOG_DIR), true)
+    fs.delete(VersionedCatalog.chunks(fs, new Path(root)).dir, true)
     (root, n, reader)
   }
 

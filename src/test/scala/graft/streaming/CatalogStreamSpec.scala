@@ -3,6 +3,7 @@ package graft.streaming
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftstream.GraftStreamSource
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -259,7 +260,7 @@ class CatalogStreamSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft_catstream_compact").toString
     val ht = Hypertable.create(spark, s"$dir/ht", "ts",
       chunkWidth = "7 days", catalog = "table")
-    spark.conf.set("spark.graft.stream.compactEvery", "1")
+    GraftStreamSource.compactEveryForTests = 1
     try {
       def slice(k: Int) = events.where(pmod(col("event_id"), lit(6)) === k)
       ht.write(slice(0))
@@ -286,7 +287,8 @@ class CatalogStreamSpec extends AnyFunSuite {
       assert(bIds.forall(_ > cIds.max),
         s"compacted b-files must be deleted: b=${bIds.toSeq} c=${cIds.toSeq}")
       assert(cIds.length === 1, s"superseded compact files must be deleted: ${cIds.toSeq}")
-    } finally spark.conf.unset("spark.graft.stream.compactEvery")
+    } finally
+      GraftStreamSource.compactEveryForTests = GraftStreamSource.CompactEvery
   }
 
   private def logDirOf(tableDir: String) =
@@ -410,7 +412,7 @@ class CatalogStreamSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft_catstream_orphan").toString
     val ht = Hypertable.create(spark, s"$dir/ht", "ts",
       chunkWidth = "7 days", catalog = "table")
-    spark.conf.set("spark.graft.stream.compactEvery", "1")
+    GraftStreamSource.compactEveryForTests = 1
     try {
       def slice(k: Int) = events.where(pmod(col("event_id"), lit(3)) === k)
       ht.write(slice(0))
@@ -441,7 +443,8 @@ class CatalogStreamSpec extends AnyFunSuite {
       assert(got.length === got.distinct.length)
       assert(got.sorted.toSeq === events.select("event_id").collect()
         .map(_.getLong(0)).sorted.toSeq)
-    } finally spark.conf.unset("spark.graft.stream.compactEvery")
+    } finally
+      GraftStreamSource.compactEveryForTests = GraftStreamSource.CompactEvery
   }
 
   test("expired seq buckets are deleted WHOLE at compaction cadence, and " +
@@ -451,7 +454,7 @@ class CatalogStreamSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft_catstream_gc").toString
     val ht = Hypertable.create(spark, s"$dir/ht", "ts",
       chunkWidth = "7 days", catalog = "table")
-    spark.conf.set("spark.graft.stream.compactEvery", "1")
+    GraftStreamSource.compactEveryForTests = 1
     // per-batch claims: the test splices a synthetic frontier entry into
     // the log between writes — external log surgery a held claim's cached
     // allocation is (correctly) blind to
@@ -507,7 +510,7 @@ class CatalogStreamSpec extends AnyFunSuite {
         .map(_.getLong(0)).sorted.toSeq,
         "a post-GC append was floored out by a restarted sequence")
     } finally {
-      spark.conf.unset("spark.graft.stream.compactEvery")
+      GraftStreamSource.compactEveryForTests = GraftStreamSource.CompactEvery
       StreamLog.perBatchClaimsForTests = false
     }
   }
